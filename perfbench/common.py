@@ -78,11 +78,10 @@ class RssSampler:
             self.peak = max(self.peak, _tree_rss_bytes(pid))
             self._stop.wait(self.interval)
 
-    def __enter__(self):
+    def start(self):
         self._thread.start()
-        return self
 
-    def __exit__(self, *exc):
+    def stop(self):
         self._stop.set()
         self._thread.join(timeout=5)
         self.peak = max(self.peak, _tree_rss_bytes(os.getpid()))
@@ -188,6 +187,22 @@ class Ctx:
     checks: list = field(default_factory=list)  # (name, ok, detail)
     attempted: int = 0
     failed: int = 0
+    rss: RssSampler | None = None
+    peak_rss_mb: float = 0.0
+
+    def begin_timed(self):
+        """A workload calls this when its timed phase starts and
+        ``end_timed`` when it ends, before its answer checks. ``peak_rss_mb``
+        is the peak between the two: what the process tree holds while it
+        does the measured work, without set-up's transient memory (the
+        index build's JVM in search_serve) or the checks' (DuckDB twin,
+        BM25 oracle)."""
+        self.rss = RssSampler()
+        self.rss.start()
+
+    def end_timed(self):
+        self.rss.stop()
+        self.peak_rss_mb = self.rss.peak_mb
 
     def check(self, name: str, ok: bool, detail: str = ""):
         self.checks.append((name, bool(ok), detail))
@@ -269,5 +284,27 @@ def warm_workers(spark, cpus: int) -> None:
 
 
 def stop_spark(ctx: Ctx, spark) -> None:
+    """Stop the session and its JVM and wait until the JVM has exited: no
+    process outlives the run, the serve tier's memory is its own, and a
+    later session starts a fresh JVM. The JVM (and the Python workers it
+    forked) exits when its stdin closes."""
+    import subprocess
+
+    from pyspark import SparkContext
+
     ctx.tracer.spark = None
     spark.stop()
+    gw = SparkContext._gateway
+    if gw is None:
+        return
+    gw.shutdown()
+    proc = getattr(gw, "proc", None)
+    if proc is not None:
+        proc.stdin.close()
+        try:
+            proc.wait(timeout=60)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            proc.wait()
+    SparkContext._gateway = None
+    SparkContext._jvm = None

@@ -22,14 +22,6 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("percolate_scan", "filter_churn", "search_serve")
-UNITS = {
-    "setup_s": "s", "latency_ms": "ms", "peak_rss_mb": "MB",
-    "latency_p90_ms": "ms", "error_rate": "ratio",
-}
-WORK_UNITS = {
-    "percolate_scan": "docs/s", "filter_churn": "ops/s",
-    "search_serve": "queries/s",
-}
 
 
 def _load_spec() -> dict:
@@ -84,21 +76,25 @@ def main(argv=None) -> int:
 def _run(args, spec, cpus, base, work) -> int:
     import importlib
 
-    from common import Ctx, RssSampler, Tracer
+    from common import Ctx, Tracer
 
     tracer = Tracer(enabled=bool(args.trace))
     ctx = Ctx(seed=args.seed, seconds=args.seconds, work=work, tracer=tracer, cpus=cpus,
               events_dir=os.path.join(work, "events") if args.trace else None)
     mod = importlib.import_module(f"w_{args.workload}")
     t0 = time.perf_counter()
-    with RssSampler() as rss:
-        e2e = mod.run(ctx)
-    e2e["peak_rss_mb"] = rss.peak_mb
+    e2e = mod.run(ctx)
+    if not ctx.peak_rss_mb:
+        raise RuntimeError(f"w_{args.workload} never called ctx.end_timed()")
+    e2e["peak_rss_mb"] = ctx.peak_rss_mb
     e2e["error_rate"] = ctx.failed / ctx.attempted if ctx.attempted else 1.0
     wall = time.perf_counter() - t0
     correct = ctx.attempted > 0 and ctx.failed == 0
 
-    units = dict(UNITS, work_per_s=WORK_UNITS[args.workload])
+    # summary units: BENCHMARK.json's, with work_per_s named per workload
+    units = {m["name"]: m["unit"] for m in spec["end_to_end"]}
+    units.update(work_per_s=mod.WORK_UNIT, latency_p90_ms=units["latency_ms"],
+                 error_rate="ratio")
     print(f"# workload {args.workload} seed {args.seed} seconds {args.seconds:g} "
           f"trace {args.trace} cpus {cpus} wall {wall:.1f}s")
     print("# input shape: " + json.dumps(ctx.shape, sort_keys=True))
@@ -117,9 +113,8 @@ def _run(args, spec, cpus, base, work) -> int:
         import report
 
         report.print_layers(ctx, e2e, last, units)
-        names = [m["name"] for m in spec["per_layer"]]
-        metrics = {n: {"value": float(ctx.layers.get(n, 0.0)), "unit": _unit(spec["per_layer"], n)}
-                   for n in names}
+        metrics = {m["name"]: {"value": float(ctx.layers.get(m["name"], 0.0)), "unit": m["unit"]}
+                   for m in spec["per_layer"]}
     else:
         with open(last, "w") as f:
             json.dump({"seed": args.seed, "e2e": e2e}, f)
@@ -128,10 +123,6 @@ def _run(args, spec, cpus, base, work) -> int:
     print(json.dumps({"correct": correct, "attempted": ctx.attempted,
                       "failed": ctx.failed, "metrics": metrics}))
     return 0
-
-
-def _unit(metrics: list[dict], name: str) -> str:
-    return next(m["unit"] for m in metrics if m["name"] == name)
 
 
 if __name__ == "__main__":

@@ -1,13 +1,13 @@
 """filter_churn: Kuzzle-style live subscriptions, driver only (no Spark).
 
-Set-up (repeated, median taken): generate the live filter set, register it
-on a fresh ``Koncorde`` and force the first compile. Timed phase: one
-client in a closed loop; each op is one mutation (register a new filter or
-remove a live one, alternating) followed by ``test_many`` on a 64-doc
-batch. The match is part of the op because ``FilterEngine.compiled`` is
-lazy: a loop that never matched would never recompile. Answer check:
-sampled ops' ``test_many`` results equal the DuckDB twin over the live set
-of that moment.
+Set-up (repeated, median taken): generate the live filter set and the doc
+batches, register the set on a fresh ``Koncorde`` and force the first
+compile. Timed phase: one client in a closed loop; each op is one mutation
+(register a new filter or remove a live one, alternating) followed by
+``test_many`` on a 64-doc batch. The match is part of the op because
+``FilterEngine.compiled`` is lazy: a loop that never matched would never
+recompile. Answer check: sampled ops' ``test_many`` results equal the
+DuckDB twin over the live set of that moment.
 """
 
 from __future__ import annotations
@@ -23,18 +23,22 @@ from common import median, percentile, percolation_twin
 N_LIVE = 1_000
 BATCH = 64
 N_BATCHES = 40
-SETUP_REPS = 5
+SETUP_REPS = 9
 SAMPLE_EVERY = 24  # ops whose answers are checked against the twin
+WORK_UNIT = "ops/s"
 
 
 def _setup(seed: int):
+    """A fresh Koncorde holding the live set, compiled, and the doc batches
+    (as frames for the twin and as row dicts for ``test_many``)."""
     from koncorde_spark import Koncorde
 
     k = Koncorde()
     for _, f in gen.filter_set(seed, N_LIVE, gen.CHURN_MIX):
         k.register(f)
     k.compiled()
-    return k
+    frames = [gen.event_docs(seed, BATCH, id_base=i * BATCH) for i in range(N_BATCHES)]
+    return k, frames, [gen.event_dicts(f) for f in frames]
 
 
 def _twin(docs_df, dnfs: dict, cpus: int) -> list[list[str]]:
@@ -58,21 +62,19 @@ def _twin(docs_df, dnfs: dict, cpus: int) -> list[list[str]]:
 
 def run(ctx) -> dict:
     tr = ctx.tracer
-    t_all = time.perf_counter()
     reps = []
     for _ in range(SETUP_REPS):
         t0 = time.perf_counter()
-        k = _setup(ctx.seed)
+        k, frames, batches = _setup(ctx.seed)
         reps.append(time.perf_counter() - t0)
-    frames = [gen.event_docs(ctx.seed, BATCH, id_base=i * BATCH) for i in range(N_BATCHES)]
-    batches = [gen.event_dicts(f) for f in frames]
+    setup_s = median(reps)
     stream = gen.churn_stream(ctx.seed)
-    setup_s = median(reps) + (time.perf_counter() - t_all - sum(reps))
 
     engine = k.engines[None]
     lat, samples = [], []
     compile_s, test_s, compiles, n_pairs = 0.0, 0.0, 0, 0
     compiled = k.compiled()
+    ctx.begin_timed()
     t_run = time.perf_counter()
     op = 0
     while time.perf_counter() - t_run < ctx.seconds:
@@ -91,20 +93,18 @@ def run(ctx) -> dict:
         else:
             with tr.span("engine.builder:remove"):
                 k.remove(victim)
-        if tr.enabled:
-            with tr.span("engine.builder:compile"):
-                tc = time.perf_counter()
-                ci = k.compiled()
-                if ci is not compiled:
-                    compiles += 1
-                    compile_s += time.perf_counter() - tc
-                compiled = ci
-            with tr.span("engine.compiled"):
-                tt = time.perf_counter()
-                res = k.test_many(docs)
-                test_s += time.perf_counter() - tt
-        else:
+        # test_many would compile lazily; calling compiled() first times it
+        with tr.span("engine.builder:compile"):
+            tc = time.perf_counter()
+            ci = k.compiled()
+            if ci is not compiled:
+                compiles += 1
+                compile_s += time.perf_counter() - tc
+            compiled = ci
+        with tr.span("engine.compiled"):
+            tt = time.perf_counter()
             res = k.test_many(docs)
+            test_s += time.perf_counter() - tt
         lat.append(time.perf_counter() - t0)
         if op % SAMPLE_EVERY == 0:
             samples.append((op % N_BATCHES, dict(engine.filters), res))
@@ -112,6 +112,7 @@ def run(ctx) -> dict:
         op += 1
     elapsed = time.perf_counter() - t_run
     tr.op = None
+    ctx.end_timed()
 
     for bi, dnfs, res in samples:
         want = _twin(frames[bi], dnfs, ctx.cpus)

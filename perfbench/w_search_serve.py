@@ -31,6 +31,7 @@ WARM_TERMS = 1_100
 WARM_BATCH = 16
 K = 10
 N_CHECKS = 4
+WORK_UNIT = "queries/s"
 
 
 def dir_bytes(path: str) -> int:
@@ -108,8 +109,14 @@ def ask(ctx, ls, kind: str, q: str, wand: dict | None = None):
             return ls.topk(q, K, mode="all")
         if wand is not None:
             hits, stats = ls.profile_topk(q, K)
+            # a query took the pruning path on some shard iff it has segments
+            stats["queries"] = 1
+            stats["queries_pruned"] = int(bool(stats.get("segments_scored", 0)
+                                               + stats.get("segments_skipped", 0)))
             for key, v in stats.items():
                 wand[key] = wand.get(key, 0) + v
+            wand["max_query_entries"] = max(wand.get("max_query_entries", 0),
+                                            stats.get("entries_total", 0))
             return hits
         return ls.topk(q, K)
 
@@ -146,6 +153,7 @@ def run(ctx) -> dict:
     lat, answers = [], []
     i = start
     with DecodeTimer() if tr.enabled else contextlib.nullcontext() as decode:
+        ctx.begin_timed()
         t_run = time.perf_counter()
         while time.perf_counter() - t_run < ctx.seconds and i < LOG_LEN:
             kind, q = log[i]
@@ -157,6 +165,7 @@ def run(ctx) -> dict:
             i += 1
         elapsed = time.perf_counter() - t_run
     tr.op = None
+    ctx.end_timed()
     n = len(lat)
 
     corpus_pdf = synthetic_corpus_pandas(N_CORPUS, ctx.seed)
@@ -191,6 +200,12 @@ def run(ctx) -> dict:
         total = wand.get("entries_total", 0)
         segs = wand.get("segments_scored", 0) + wand.get("segments_skipped", 0)
         ctx.layers.update(serve_layers)
+        # the kernel scores a shard exhaustively while the query's postings
+        # union there is at most 2^17 entries; this corpus stays below that
+        ctx.shape.update({
+            "wand_pruned_query_share": wand.get("queries_pruned", 0) / max(wand.get("queries", 0), 1),
+            "wand_max_query_entries": wand.get("max_query_entries", 0),
+        })
         ctx.layers.update({
             "spark.session.start_s": start_s,
             "fulltext.wand.entries_scored_frac": wand.get("entries_scored", 0) / total if total else 1.0,
