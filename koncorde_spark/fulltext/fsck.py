@@ -62,15 +62,9 @@ def fsck_index(
     )
 
     # --- manifests cover every shard with matching row counts --------------
-    config = IndexConfig(
-        n_shards=int(meta["n_shards"]),
-        k1=float(meta["k1"]),
-        b=float(meta["b"]),
-        block_size=int(meta["block_size"]),
-        positions=bool(meta.get("positions", False)),
-    )
-    fp = meta.get("config", config.fingerprint())
-    n_shards = int(meta["n_shards"])
+    config = IndexConfig.from_meta(meta)
+    fp = config.fingerprint()
+    n_shards = config.n_shards
     docs = spark.read.parquet(os.path.join(index_dir, "docs"))
     postings = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(index_dir, "postings")

@@ -37,7 +37,8 @@ from pyspark.sql import functions as F
 from .codecs import delta_decode, varint_decode
 from .highlight import multiterm_scores
 from .phrase import TermOccurrences
-from .query import TOPK_SCHEMA, Bm25Index, _decode_dlpack
+from .indexer import _decode_dlpack
+from .query import TOPK_SCHEMA, Bm25Index
 from .tokenizer import tokenize_text
 from .wand import bm25_idf
 

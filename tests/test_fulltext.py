@@ -719,6 +719,34 @@ class TestDeletions:
         assert victim not in set(got["doc_id"])  # still deleted
         assert len(got) == 2  # the surviving original + the fresh append
 
+    def test_rebuild_from_corpus_drops_tombstones(self, spark, tmp_path):
+        """build_index(resume=False) rebuilds from the corpus, so a doc
+        deleted before the rebuild is indexed — and found — again;
+        resume=True repairs the same corpus and keeps the delete."""
+        from koncorde_spark.fulltext.fsck import fsck_index
+        from koncorde_spark.fulltext.indexer import (
+            IndexConfig, build_index, delete_docs,
+        )
+        from koncorde_spark.fulltext.query import Bm25Index
+        from koncorde_spark.fulltext.serve import LocalSearcher
+        from koncorde_spark.sources import synthetic_corpus_pandas
+
+        corpus = spark.createDataFrame(synthetic_corpus_pandas(n_rows=60, seed=21))
+        d = str(tmp_path / "idx")
+        cfg = IndexConfig(n_shards=2)
+        build_index(spark, corpus, d, cfg, resume=False)
+        q = "import return def"
+        victim = int(Bm25Index(spark, d).topk(q, 5).toPandas()["doc_id"].iloc[0])
+        delete_docs(spark, d, [victim])
+
+        build_index(spark, corpus, d, cfg, resume=True)
+        assert victim not in set(Bm25Index(spark, d).topk(q, 5).toPandas()["doc_id"])
+
+        build_index(spark, corpus, d, cfg, resume=False)
+        assert victim in set(Bm25Index(spark, d).topk(q, 5).toPandas()["doc_id"])
+        assert victim in {i for i, _ in LocalSearcher(d).topk(q, 5)}
+        assert fsck_index(spark, d)["ok"]
+
 
 class TestAppendSchemaGuard:
     def test_append_refuses_pre_avgdl_seg_postings(self, spark, tmp_path):
@@ -791,7 +819,7 @@ class TestDlpackWorkerCache:
         import pandas as pd
 
         from koncorde_spark.fulltext.codecs import delta_encode, varint_encode
-        from koncorde_spark.fulltext import query as q
+        from koncorde_spark.fulltext import indexer as ix
 
         ids = np.array([3, 9, 20], dtype=np.uint64)
         dls = np.array([5, 7, 11], dtype=np.uint64)
@@ -799,35 +827,35 @@ class TestDlpackWorkerCache:
             [(0, 3, delta_encode(ids), varint_encode(dls))],
             columns=["shard", "n", "doc_ids", "dls"],
         )
-        q._DLPACK_CACHE.clear()
-        a1 = q._decode_dlpack(pack, ("/idx", 0, 111))
-        a2 = q._decode_dlpack(pack, ("/idx", 0, 111))
+        ix._DLPACK_CACHE.clear()
+        a1 = ix._decode_dlpack(pack, ("/idx", 0, 111))
+        a2 = ix._decode_dlpack(pack, ("/idx", 0, 111))
         assert a1[0] is a2[0] and a1[1] is a2[1]  # cache hit, no re-decode
         assert list(a1[0]) == [3, 9, 20] and list(a1[1]) == [5.0, 7.0, 11.0]
-        a3 = q._decode_dlpack(pack, ("/idx", 0, 222))  # lineage bumped
+        a3 = ix._decode_dlpack(pack, ("/idx", 0, 222))  # lineage bumped
         assert a3[0] is not a1[0]
-        assert ("/idx", 0, 222) in q._DLPACK_CACHE
+        assert ("/idx", 0, 222) in ix._DLPACK_CACHE
         # keyless decode (no manifests): never cached
-        q._DLPACK_CACHE.clear()
-        q._decode_dlpack(pack, None)
-        assert not q._DLPACK_CACHE
+        ix._DLPACK_CACHE.clear()
+        ix._decode_dlpack(pack, None)
+        assert not ix._DLPACK_CACHE
 
     def test_cache_eviction_bounded(self):
         import numpy as np
         import pandas as pd
 
         from koncorde_spark.fulltext.codecs import delta_encode, varint_encode
-        from koncorde_spark.fulltext import query as q
+        from koncorde_spark.fulltext import indexer as ix
 
         pack = pd.DataFrame(
             [(0, 1, delta_encode(np.array([1], dtype=np.uint64)),
               varint_encode(np.array([4], dtype=np.uint64)))],
             columns=["shard", "n", "doc_ids", "dls"],
         )
-        q._DLPACK_CACHE.clear()
-        for i in range(q._DLPACK_CACHE_MAX + 10):
-            q._decode_dlpack(pack, ("/idx", i, 0))
-        assert len(q._DLPACK_CACHE) <= q._DLPACK_CACHE_MAX
+        ix._DLPACK_CACHE.clear()
+        for i in range(ix._DLPACK_CACHE_MAX + 10):
+            ix._decode_dlpack(pack, ("/idx", i, 0))
+        assert len(ix._DLPACK_CACHE) <= ix._DLPACK_CACHE_MAX
 
 
 class TestTopkFiltered:
