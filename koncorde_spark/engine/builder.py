@@ -6,6 +6,11 @@ subfilter/condition dedup by seeded content hash
 stored keyword name (`'not' + keyword`, engine/index.js:225) — then compiles
 per-keyword probe structures (storeOperands.ts equivalents) into the
 broadcast-friendly numpy layout of :mod:`.compiled`.
+
+Each deduplicated condition gets an ordinal. Subfilters store their
+condition ordinals (grouped by arity), and every probe structure maps a
+probed value to the condition ordinals it satisfies — never to subfilter
+lists, so a condition shared by many subfilters is probed and emitted once.
 """
 
 from __future__ import annotations
@@ -26,7 +31,6 @@ from .compiled import (
     SelectEntry,
     vkey,
 )
-
 
 
 class FilterEngine:
@@ -67,50 +71,60 @@ def compile_index(
 ) -> CompiledIndex:
     seed = transformer.seed
     ci = CompiledIndex()
-
-    sf_ord_by_hash: dict[str, int] = {}
-    sf_filters: list[set[str]] = []
-    # cond hash → (keyword, spec, set of sf ords)
-    conds: dict[str, tuple[str, Any, set[int]]] = {}
-    sf_cond_ids: list[set[str]] = []
-
-    fid_ord = {fid: i for i, fid in enumerate(sorted(filters))}
     ci.filter_ids = sorted(filters)
 
-    for fid in ci.filter_ids:
-        dnf = filters[fid]
-        for clause in dnf:
+    sf_ord_by_hash: dict[str, int] = {}
+    sf_filters: list[list[int]] = []  # sf ordinal → filter ordinals
+    sf_conds: list[list[int]] = []  # sf ordinal → condition ordinals
+    cond_ord_by_hash: dict[str, int] = {}
+    conds: list[tuple[str, Any]] = []  # condition ordinal → (keyword, spec)
+
+    for f_ord, fid in enumerate(ci.filter_ids):
+        for clause in filters[fid]:
             sf_hash = seeded_hash(seed, clause)
             ord_ = sf_ord_by_hash.get(sf_hash)
             if ord_ is None:
-                ord_ = len(sf_filters)
-                sf_ord_by_hash[sf_hash] = ord_
-                sf_filters.append(set())
-                sf_cond_ids.append(set())
+                ord_ = sf_ord_by_hash[sf_hash] = len(sf_conds)
+                sf_filters.append([])
+                clause_conds = set()
                 for cond in clause:
                     cond_hash = seeded_hash(seed, cond)
-                    if cond_hash not in conds:
+                    c = cond_ord_by_hash.get(cond_hash)
+                    if c is None:
+                        c = cond_ord_by_hash[cond_hash] = len(conds)
                         keyword = next(k for k in cond if k != "not")
                         stored_kw = ("not" + keyword) if cond.get("not") else keyword
-                        conds[cond_hash] = (stored_kw, cond[keyword], set())
-                    conds[cond_hash][2].add(ord_)
-                    sf_cond_ids[ord_].add(cond_hash)
-            sf_filters[ord_].add(fid)
+                        conds.append((stored_kw, cond[keyword]))
+                    clause_conds.add(c)
+                sf_conds.append(sorted(clause_conds))
+            if not sf_filters[ord_] or sf_filters[ord_][-1] != f_ord:
+                sf_filters[ord_].append(f_ord)
 
-    ci.n_sf = len(sf_filters)
-    ci.sf_counts = np.asarray([len(c) for c in sf_cond_ids], dtype=np.int32)
+    ci.n_sf = len(sf_conds)
+    ci.n_cond = len(conds)
 
-    # CSR: sf ordinal → filter ordinals
-    offsets = np.zeros(ci.n_sf + 1, dtype=np.int64)
-    data: list[int] = []
-    for i, fset in enumerate(sf_filters):
-        ords = sorted(fid_ord[f] for f in fset)
-        data.extend(ords)
-        offsets[i + 1] = len(data)
-    ci.sf_filter_offsets = offsets
-    ci._sf_filter_ord = np.asarray(data, dtype=np.int64)
+    # CSR: sf ordinal → filter ordinals (ascending: filters are visited in order)
+    ci.sf_filter_offsets = np.zeros(ci.n_sf + 1, dtype=np.int64)
+    ci.sf_filter_offsets[1:] = np.cumsum([len(f) for f in sf_filters])
+    ci.sf_filter_ord = np.asarray(
+        [f for fs in sf_filters for f in fs], dtype=np.int64
+    )
 
-    # ---- per-keyword probe structures ----------------------------------
+    # subfilters grouped by arity: (sf ordinals, their condition ordinals);
+    # a subfilter without conditions never matches
+    by_arity: dict[int, list[int]] = {}
+    for sf, cs in enumerate(sf_conds):
+        if cs:
+            by_arity.setdefault(len(cs), []).append(sf)
+    ci.sf_groups = [
+        (
+            np.asarray(sfs, dtype=np.int64),
+            np.asarray([sf_conds[sf] for sf in sfs], dtype=np.int64).reshape(len(sfs), arity),
+        )
+        for arity, sfs in sorted(by_arity.items())
+    ]
+
+    # ---- per-keyword probe structures, keyed by condition ordinal ------
 
     range_acc: dict[str, list] = {}
     notrange_acc: dict[str, list] = {}
@@ -118,111 +132,77 @@ def compile_index(
     notregexp_acc: dict[str, list] = {}
     geo_acc: dict[str, list] = {}
     notgeo_acc: dict[str, list] = {}
+    # (field, index) → {child filter id: (child dnf, condition ordinals)}
+    select_acc: dict[tuple[str, int], dict[str, tuple[list, list[int]]]] = {}
 
-    for _chash, (kw, spec, sf_set) in conds.items():
-        sfs = np.asarray(sorted(sf_set), dtype=np.int32)
-
+    for c, (kw, spec) in enumerate(conds):
         if kw == "equals":
             field = next(iter(spec))
-            _merge_vmap(ci.equals.setdefault(field, {}), vkey(spec[field]), sfs)
+            ci.equals.setdefault(field, {}).setdefault(vkey(spec[field]), []).append(c)
             ci.fields_needed.add(field)
         elif kw == "notequals":
             field = next(iter(spec))
-            _merge_vmap(ci.notequals.setdefault(field, {}), vkey(spec[field]), sfs)
+            ci.notequals.setdefault(field, {}).setdefault(vkey(spec[field]), []).append(c)
             ci.fields_needed.add(field)
         elif kw == "exists":
             ne: NormalizedExists = spec
             if ne.array:
-                _merge_vmap(ci.exists_values.setdefault(ne.path, {}), vkey(ne.value), sfs)
+                ci.exists_values.setdefault(ne.path, {}).setdefault(vkey(ne.value), []).append(c)
             else:
-                ci.exists_sfs[ne.path] = _union(ci.exists_sfs.get(ne.path), sfs)
+                ci.exists_conds.setdefault(ne.path, []).append(c)
             ci.fields_needed.add(ne.path)
         elif kw == "notexists":
             ne = spec
             if ne.array:
-                _merge_vmap(ci.notexists_values.setdefault(ne.path, {}), vkey(ne.value), sfs)
-                ci.notexists_values_all[ne.path] = _concat(
-                    ci.notexists_values_all.get(ne.path), sfs
-                )
+                ci.notexists_values.setdefault(ne.path, {}).setdefault(vkey(ne.value), []).append(c)
             else:
-                ci.notexists_sfs[ne.path] = _union(ci.notexists_sfs.get(ne.path), sfs)
+                ci.notexists_conds.setdefault(ne.path, []).append(c)
             ci.fields_needed.add(ne.path)
         elif kw == "range":
             field = next(iter(spec))
-            low, high, lo_strict, hi_strict = _bounds(spec[field])
-            range_acc.setdefault(field, []).append((low, high, lo_strict, hi_strict, sfs))
+            range_acc.setdefault(field, []).append((*_bounds(spec[field]), c))
             ci.fields_needed.add(field)
         elif kw == "notrange":
             field = next(iter(spec))
             low, high, lo_strict, hi_strict = _bounds(spec[field])
-            # complement intervals with flipped openness (storeOperands.ts:295-333)
+            # complement intervals with flipped openness (storeOperands.ts:295-333),
+            # both under the one condition ordinal
             acc = notrange_acc.setdefault(field, [])
             if low != -np.inf:
-                acc.append((-np.inf, low, False, not lo_strict, sfs))
+                acc.append((-np.inf, low, False, not lo_strict, c))
             if high != np.inf:
-                acc.append((high, np.inf, not hi_strict, False, sfs))
-            ci.notrange_all[field] = _concat(ci.notrange_all.get(field), sfs)
+                acc.append((high, np.inf, not hi_strict, False, c))
+            ci.notrange_all.setdefault(field, []).append(c)
             ci.fields_needed.add(field)
-        elif kw == "regexp":
+        elif kw in ("regexp", "notregexp"):
             field = next(iter(spec))
-            regexp_acc.setdefault(field, []).append(
-                ((spec[field]["value"], spec[field].get("flags")), sfs)
+            acc = regexp_acc if kw == "regexp" else notregexp_acc
+            acc.setdefault(field, []).append(
+                ((spec[field]["value"], spec[field].get("flags")), c)
             )
-            ci.fields_needed.add(field)
-        elif kw == "notregexp":
-            field = next(iter(spec))
-            notregexp_acc.setdefault(field, []).append(
-                ((spec[field]["value"], spec[field].get("flags")), sfs)
-            )
-            ci.notregexp_all[field] = _concat(ci.notregexp_all.get(field), sfs)
             ci.fields_needed.add(field)
         elif kw in ("geospatial", "notgeospatial"):
             shape_kw = next(iter(spec))
             field = next(iter(spec[shape_kw]))
             shape = _build_shape(shape_kw, spec[shape_kw][field])
             acc = geo_acc if kw == "geospatial" else notgeo_acc
-            acc.setdefault(field, []).append((shape, sfs))
+            acc.setdefault(field, []).append((shape, c))
             ci.geo_fields.add(field)
         elif kw == "match":
-            ci.match_patterns.append(MatchPattern(pattern=spec, sfs=sfs))
+            ci.match_patterns.append(MatchPattern(pattern=spec, cond=c))
             ci.needs_docs = True
         elif kw == "notmatch":
-            ci.notmatch_patterns.append(MatchPattern(pattern=spec, sfs=sfs))
+            ci.notmatch_patterns.append(MatchPattern(pattern=spec, cond=c))
             ci.needs_docs = True
         elif kw == "select":
             field, idx, query = spec["field"], int(spec["index"]), spec["query"]
             child_norm = transformer.normalize(query, f"{field}[{idx}]")
-            child = compile_index(
-                {child_norm.filter_id: child_norm.dnf}, transformer, f"{field}[{idx}]"
-            )
-            # merge with an existing entry for the same (field, index)
-            for se in ci.selects:
-                if se.field == field and se.index == idx:
-                    merged = dict(se.filters)
-                    merged[child_norm.filter_id] = _union(
-                        merged.get(child_norm.filter_id), sfs
-                    )
-                    # recompile child with both sub-queries
-                    all_children = dict(se._child_filters)
-                    all_children[child_norm.filter_id] = child_norm.dnf
-                    new_child = compile_index(all_children, transformer, f"{field}[{idx}]")
-                    se.child = new_child
-                    se.filters = merged
-                    se._child_filters = all_children
-                    break
-            else:
-                se = SelectEntry(
-                    field=field,
-                    index=idx,
-                    child=child,
-                    filters={child_norm.filter_id: sfs},
-                )
-                se._child_filters = {child_norm.filter_id: child_norm.dnf}
-                ci.selects.append(se)
+            children = select_acc.setdefault((field, idx), {})
+            children.setdefault(child_norm.filter_id, (child_norm.dnf, []))[1].append(c)
             ci.needs_docs = True
             ci.fields_needed.add(field)
         elif kw == "everything":
-            ci.everything_sfs = _union(ci.everything_sfs if len(ci.everything_sfs) else None, sfs)
+            ci.everything_conds.append(c)
         elif kw == "nothing" or kw.startswith("not"):
             # `nothing` and unmatched negated keywords (e.g. notselect,
             # notnothing) never match — same as the reference matcher
@@ -233,48 +213,31 @@ def compile_index(
         ci.ranges[field] = _build_rangeset(items)
     for field, items in notrange_acc.items():
         ci.notranges[field] = _build_rangeset(items)
-    for field, items in regexp_acc.items():
-        ci.regexps[field] = RegexpSet(
-            patterns=[p for p, _ in items], sf_lists=[s for _, s in items]
+    for accs, out in ((regexp_acc, ci.regexps), (notregexp_acc, ci.notregexps)):
+        for field, items in accs.items():
+            out[field] = RegexpSet(
+                patterns=[p for p, _ in items], conds=[c for _, c in items]
+            )
+    for accs, out in ((geo_acc, ci.geo), (notgeo_acc, ci.notgeo)):
+        for field, items in accs.items():
+            gs = GeoSet(shapes=[sh for sh, _ in items], conds=[c for _, c in items])
+            gs.build_cells()
+            out[field] = gs
+    for (field, idx), children in select_acc.items():
+        ci.selects.append(
+            SelectEntry(
+                field=field,
+                index=idx,
+                child=compile_index(
+                    {fid: dnf for fid, (dnf, _) in children.items()},
+                    transformer,
+                    f"{field}[{idx}]",
+                ),
+                filters={fid: cs for fid, (_, cs) in children.items()},
+            )
         )
-    for field, items in notregexp_acc.items():
-        ci.notregexps[field] = RegexpSet(
-            patterns=[p for p, _ in items], sf_lists=[s for _, s in items]
-        )
-    for field, items in geo_acc.items():
-        gs = GeoSet(shapes=[sh for sh, _ in items], sf_lists=[s for _, s in items])
-        gs.build_cells()
-        ci.geo[field] = gs
-    for field, items in notgeo_acc.items():
-        gs = GeoSet(shapes=[sh for sh, _ in items], sf_lists=[s for _, s in items])
-        gs.build_cells()
-        gs.all_sfs = np.concatenate([s for _, s in items]).astype(np.int32)
-        ci.notgeo[field] = gs
 
     return ci
-
-
-def _merge_vmap(vmap: dict, key, sfs: np.ndarray):
-    vmap[key] = _union(vmap.get(key), sfs)
-
-
-def _union(existing: np.ndarray | None, sfs: np.ndarray) -> np.ndarray:
-    if existing is None or len(existing) == 0:
-        return np.unique(sfs).astype(np.int32)
-    return np.union1d(existing, sfs).astype(np.int32)
-
-
-def _concat(existing: np.ndarray | None, sfs: np.ndarray) -> np.ndarray:
-    """MULTISET accumulation for the negative-keyword blanket arrays.
-
-    The countdown in match_batch requires one hit per CONDITION, so a
-    subfilter holding two notequals/notrange/... conditions on the same
-    field must receive two hits from that field's blanket emit — a
-    deduplicated union would under-count and the subfilter could never
-    match (review r2 finding #1)."""
-    if existing is None or len(existing) == 0:
-        return sfs.astype(np.int32)
-    return np.concatenate([existing, sfs]).astype(np.int32)
 
 
 def _bounds(spec: dict) -> tuple[float, float, bool, bool]:
@@ -292,20 +255,14 @@ def _bounds(spec: dict) -> tuple[float, float, bool, bool]:
 
 
 def _build_rangeset(items: list) -> RangeSet:
-    lows = np.asarray([i[0] for i in items], dtype=np.float64)
-    highs = np.asarray([i[1] for i in items], dtype=np.float64)
-    lo_strict = np.asarray([i[2] for i in items], dtype=bool)
-    hi_strict = np.asarray([i[3] for i in items], dtype=bool)
-    sf_lists = [i[4] for i in items]
-    offsets = np.zeros(len(items) + 1, dtype=np.int64)
-    for i, lst in enumerate(sf_lists):
-        offsets[i + 1] = offsets[i] + len(lst)
-    data = (
-        np.concatenate(sf_lists).astype(np.int32)
-        if sf_lists
-        else np.empty(0, dtype=np.int32)
+    lows, highs, lo_strict, hi_strict, conds = zip(*items)
+    return RangeSet(
+        lows=np.asarray(lows, dtype=np.float64),
+        highs=np.asarray(highs, dtype=np.float64),
+        low_strict=np.asarray(lo_strict, dtype=bool),
+        high_strict=np.asarray(hi_strict, dtype=bool),
+        conds=np.asarray(conds, dtype=np.int64),
     )
-    return RangeSet(lows, highs, lo_strict, hi_strict, offsets, data)
 
 
 def _build_shape(shape_kw: str, spec):

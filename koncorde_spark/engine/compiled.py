@@ -7,6 +7,12 @@ but the probe structures are immutable, picklable, numpy-backed objects
 designed to be ``spark.sparkContext.broadcast`` to executors and probed
 **vectorized over whole Arrow batches** instead of one document at a time.
 
+Matching a batch has two phases. Every probe structure is keyed by
+condition ordinal, so each keyword section probes a condition once and
+emits (row, condition ordinal) hits. The countdown then anchors each
+subfilter on its rarest condition in the batch and verifies the others by
+membership in the sorted hits (``CompiledIndex.match_batch``).
+
 Removal (/root/reference/lib/engine/removeOperands.js) is handled the
 Spark-idiomatic way: the authoritative state is the registered-filters dict;
 ``compile()`` derives a fresh CompiledIndex, so "remove" is just re-derive
@@ -16,18 +22,13 @@ without the filter — no in-place surgical teardown.
 from __future__ import annotations
 
 import math
-import warnings
 from dataclasses import dataclass, field as dc_field
+from itertools import chain
 from typing import Any
 
 import numpy as np
 import pandas as pd
-
-# pandas warns when str.contains gets a pattern with groups; matching
-# intent here is a plain boolean test, groups are incidental
-warnings.filterwarnings(
-    "ignore", message="This pattern is interpreted as a regular expression"
-)
+from pandas.api.types import infer_dtype
 
 from ..geo.geopoint import convert_geopoint
 from ..geo.shapes import Annulus, BBox, Circle, GeoShape, Polygon, cells_hash_for_points
@@ -113,7 +114,7 @@ class _FlatItems:
     """Factorized view of a flattened list column: typed containment per
     condition costs O(uniques) Python + O(items) numpy gathers instead of
     a per-row Python ``apply``. Bool items factorize apart from the rest
-    (True/1 Python-hash equality — same guard as ``_scalar_eq_groups``);
+    (True/1 Python-hash equality — same guard as ``_equal_pairs``);
     None/NaN items carry factorize's -1 sentinel, so ``null`` containment
     is answered from a dedicated identity-is-None mask."""
 
@@ -188,44 +189,42 @@ class _FlatItems:
 
 @dataclass
 class RangeSet:
-    """All range intervals on one field, SoA layout for broadcast tests.
+    """All range intervals on one field, SoA layout; ``conds[i]`` is the
+    condition ordinal interval ``i`` belongs to.
 
     ``notrange`` complements are inserted at build time as the two
     complement intervals with flipped bound openness, exactly like the
-    reference (/root/reference/lib/engine/storeOperands.ts:295-333).
+    reference (lib/engine/storeOperands.ts:295-333); both
+    carry the notrange condition's one ordinal.
     """
 
     lows: np.ndarray  # float64
     highs: np.ndarray  # float64
     low_strict: np.ndarray  # bool (True = open bound)
     high_strict: np.ndarray  # bool
-    sf_offsets: np.ndarray  # int64, CSR offsets into sf_data
-    sf_data: np.ndarray  # int32 subfilter ordinals
+    conds: np.ndarray  # int64 condition ordinals
 
     def probe(self, values: np.ndarray, valid: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Return (row_idx, sf_ord) hit pairs for numeric values."""
-        k = len(self.lows)
-        if k == 0:
-            return _EMPTY_PAIRS
-        rows_all = []
-        ivals_all = []
-        n = len(values)
-        # chunk so the boolean matrix stays < ~64M cells
-        chunk = max(1, (1 << 26) // max(k, 1))
+        """Return (row_idx, condition ordinal) hit pairs for numeric values:
+        the valid values are sorted once and every interval bound is
+        located by binary search, the side set by the bound's strictness."""
         vi = np.nonzero(valid)[0]
-        v = values[vi]
-        for s in range(0, len(v), chunk):
-            vv = v[s : s + chunk, None]
-            ge = np.where(self.low_strict, vv > self.lows, vv >= self.lows)
-            le = np.where(self.high_strict, vv < self.highs, vv <= self.highs)
-            r, c = np.nonzero(ge & le)
-            rows_all.append(vi[s : s + chunk][r])
-            ivals_all.append(c)
-        if not rows_all:
+        if len(self.lows) == 0 or len(vi) == 0:
             return _EMPTY_PAIRS
-        rows = np.concatenate(rows_all)
-        ivs = np.concatenate(ivals_all)
-        return _expand_csr(rows, ivs, self.sf_offsets, self.sf_data)
+        order = vi[np.argsort(values[vi], kind="stable")]
+        sv = values[order]
+        lo = np.where(
+            self.low_strict,
+            np.searchsorted(sv, self.lows, side="right"),
+            np.searchsorted(sv, self.lows, side="left"),
+        )
+        hi = np.where(
+            self.high_strict,
+            np.searchsorted(sv, self.highs, side="left"),
+            np.searchsorted(sv, self.highs, side="right"),
+        )
+        lens = np.maximum(hi - lo, 0)
+        return order[_ranges(lo, lens)], np.repeat(self.conds, lens)
 
 
 @dataclass
@@ -233,7 +232,7 @@ class RegexpSet:
     """Regex conditions on one field; compiled lazily per process."""
 
     patterns: list[tuple[str, str | None]]  # (pattern, flags)
-    sf_lists: list[np.ndarray]
+    conds: list[int]  # condition ordinal per pattern
     _compiled: list = dc_field(default_factory=list, repr=False)
 
     def compiled(self):
@@ -247,10 +246,9 @@ class GeoSet:
     """Geo shapes on one field + cell → candidate-shape prefilter maps."""
 
     shapes: list[GeoShape]
-    sf_lists: list[np.ndarray]
+    conds: list[int]  # condition ordinal per shape
     # precision → {cell_int: np.ndarray(shape indices)}
     cell_maps: dict[int, dict[int, np.ndarray]] = dc_field(default_factory=dict)
-    all_sfs: np.ndarray = dc_field(default_factory=lambda: np.empty(0, dtype=np.int32))
 
     def build_cells(self):
         per_precision: dict[int, dict[int, list[int]]] = {}
@@ -285,39 +283,54 @@ class GeoSet:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32)
         return np.concatenate(rows_out), np.concatenate(shapes_out)
 
+    def inside(self, lat: np.ndarray, lon: np.ndarray, valid: np.ndarray):
+        """Yield (shape_idx, rows inside that shape) per candidate shape."""
+        rows, shape_idx = self.candidates(lat, lon, valid)
+        for si in np.unique(shape_idx):
+            rr = rows[shape_idx == si]
+            yield int(si), rr[self.shapes[si].contains(lat[rr], lon[rr])]
 
-_EMPTY_PAIRS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int32))
+
+_EMPTY_PAIRS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
 
 
-def _expand_csr(rows, idxs, offsets, data):
-    """Expand per-(row, item) hits into (row, sf) pairs through CSR lists."""
-    if len(rows) == 0:
-        return _EMPTY_PAIRS
-    counts = (offsets[idxs + 1] - offsets[idxs]).astype(np.int64)
-    out_rows = np.repeat(rows, counts)
-    # gather sf data: build index ranges
-    starts = offsets[idxs]
-    total = int(counts.sum())
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + l)`` for every (start, length) pair."""
+    total = int(lens.sum())
     if total == 0:
-        return _EMPTY_PAIRS
-    # vectorized multi-range gather
-    flat = np.arange(total, dtype=np.int64)
-    cum = np.concatenate(([0], np.cumsum(counts)))
-    within = flat - np.repeat(cum[:-1], counts)
-    gather = np.repeat(starts, counts) + within
-    return out_rows, data[gather]
+        return np.empty(0, dtype=np.int64)
+    ends = np.cumsum(lens)
+    return np.arange(total, dtype=np.int64) + np.repeat(starts - (ends - lens), lens)
 
 
-def _csr_from_lists(sf_lists: list[np.ndarray]) -> tuple[np.ndarray, np.ndarray]:
-    offsets = np.zeros(len(sf_lists) + 1, dtype=np.int64)
-    for i, lst in enumerate(sf_lists):
-        offsets[i + 1] = offsets[i] + len(lst)
-    data = (
-        np.concatenate(sf_lists).astype(np.int32)
-        if sf_lists
-        else np.empty(0, dtype=np.int32)
-    )
-    return offsets, data
+class _Hits:
+    """The (row, condition ordinal) hits of one batch: each keyword section
+    adds one hit per row on which a condition holds."""
+
+    def __init__(self):
+        self.rows: list[np.ndarray] = []
+        self.conds: list[np.ndarray] = []
+
+    def add(self, rows: np.ndarray, conds: np.ndarray):
+        """Aligned pairs: ``conds[i]`` holds on ``rows[i]``."""
+        if len(rows):
+            self.rows.append(rows)
+            self.conds.append(conds)
+
+    def cross(self, rows, conds):
+        """Every condition in ``conds`` holds on every row in ``rows``."""
+        if len(rows) and len(conds):
+            rows = np.asarray(rows, dtype=np.int64)
+            self.rows.append(np.tile(rows, len(conds)))
+            self.conds.append(np.repeat(np.asarray(conds, dtype=np.int64), len(rows)))
+
+    def sorted_keys(self, n: int) -> np.ndarray:
+        """The hits as sorted ``cond * n + row`` keys."""
+        if not self.rows:
+            return np.empty(0, dtype=np.int64)
+        keys = np.concatenate(self.conds) * n + np.concatenate(self.rows)
+        keys.sort()
+        return keys
 
 
 # ---------------------------------------------------------------------------
@@ -413,7 +426,7 @@ class MatchPattern:
     """A `match` keyword pattern (recursive subset semantics)."""
 
     pattern: dict
-    sfs: np.ndarray
+    cond: int
 
 
 @dataclass
@@ -423,8 +436,13 @@ class SelectEntry:
     field: str
     index: int
     child: "CompiledIndex"
-    # child filter_id → parent sf ordinals
-    filters: dict[str, np.ndarray]
+    # child filter_id → parent condition ordinals
+    filters: dict[str, list[int]]
+
+
+_NULL_KEY = ("null", None)
+# infer_dtype kinds that cannot mix booleans with numbers (True == 1)
+_NO_BOOL_MIX = frozenset({"string", "boolean", "integer", "floating", "mixed-integer-float"})
 
 
 class CompiledIndex:
@@ -439,99 +457,103 @@ class CompiledIndex:
 
     def __init__(self):
         self.n_sf = 0
-        self.sf_counts = np.empty(0, dtype=np.int32)
-        self.sf_filter_offsets = np.empty(1, dtype=np.int64)
-        self.sf_filter_data: list[str] = []  # filter ids, CSR by sf ordinal
+        self.n_cond = 0
+        # per arity: (sf ordinals (m,), their condition ordinals (m, arity))
+        self.sf_groups: list[tuple[np.ndarray, np.ndarray]] = []
+        self.sf_filter_offsets = np.zeros(1, dtype=np.int64)  # CSR by sf ordinal
+        self.sf_filter_ord = np.empty(0, dtype=np.int64)
         self.filter_ids: list[str] = []
         self.fields_needed: set[str] = set()
         self.geo_fields: set[str] = set()
         self.needs_docs = False
 
-        self.equals: dict[str, dict[tuple, np.ndarray]] = {}
-        self.notequals: dict[str, dict[tuple, np.ndarray]] = {}
-        self.exists_sfs: dict[str, np.ndarray] = {}
-        self.exists_values: dict[str, dict[tuple, np.ndarray]] = {}
-        self.notexists_sfs: dict[str, np.ndarray] = {}
-        self.notexists_values: dict[str, dict[tuple, np.ndarray]] = {}
-        self.notexists_values_all: dict[str, np.ndarray] = {}
+        # every probe maps to condition ordinals
+        self.equals: dict[str, dict[tuple, list[int]]] = {}
+        self.notequals: dict[str, dict[tuple, list[int]]] = {}
+        self.exists_conds: dict[str, list[int]] = {}
+        self.exists_values: dict[str, dict[tuple, list[int]]] = {}
+        self.notexists_conds: dict[str, list[int]] = {}
+        self.notexists_values: dict[str, dict[tuple, list[int]]] = {}
         self.ranges: dict[str, RangeSet] = {}
         self.notranges: dict[str, RangeSet] = {}
-        self.notrange_all: dict[str, np.ndarray] = {}
+        self.notrange_all: dict[str, list[int]] = {}
         self.regexps: dict[str, RegexpSet] = {}
         self.notregexps: dict[str, RegexpSet] = {}
-        self.notregexp_all: dict[str, np.ndarray] = {}
         self.geo: dict[str, GeoSet] = {}
         self.notgeo: dict[str, GeoSet] = {}
         self.match_patterns: list[MatchPattern] = []
         self.notmatch_patterns: list[MatchPattern] = []
         self.selects: list[SelectEntry] = []
-        self.everything_sfs = np.empty(0, dtype=np.int32)
+        self.everything_conds: list[int] = []
 
     # -- matching ---------------------------------------------------------
 
     def match_batch(self, batch: DocBatch) -> tuple[np.ndarray, np.ndarray]:
         """Match a batch; returns deduplicated (row, filter-ordinal) pairs.
 
-        The condition countdown of the reference
-        (/root/reference/lib/engine/matcher/testTables.js:53-66) becomes a
-        single vectorized count: every keyword section emits
-        (row, sf_ordinal) hits — one per matched condition — and a subfilter
-        matches when its hit count equals its condition count.
+        Every keyword section emits (row, condition ordinal) hits, one per
+        row on which the condition holds. A subfilter matches a row iff
+        every one of its condition ordinals holds on that row — the
+        condition countdown of the reference
+        (reference lib/engine/matcher/testTables.js:53-66), run as an
+        anchor-and-verify pass over the sorted hits (``_countdown``), so
+        the work grows with condition hits, not with the number of
+        subfilters that share a condition.
         """
-        hits_r: list[np.ndarray] = []
-        hits_s: list[np.ndarray] = []
-
-        def emit(rows, sfs):
-            if len(rows):
-                hits_r.append(np.asarray(rows, dtype=np.int64))
-                hits_s.append(np.asarray(sfs, dtype=np.int32))
-
-        def emit_rows_x_sfs(rows: np.ndarray, sfs: np.ndarray):
-            if len(rows) and len(sfs):
-                hits_r.append(np.repeat(np.asarray(rows, dtype=np.int64), len(sfs)))
-                hits_s.append(np.tile(sfs, len(rows)))
-
         n = batch.n
-        all_rows = np.arange(n, dtype=np.int64)
+        hits = _Hits()
+        hits.cross(np.arange(n, dtype=np.int64), self.everything_conds)
+        self._match_equals(batch, hits)
+        self._match_exists(batch, hits)
+        self._match_ranges(batch, hits)
+        self._match_regexps(batch, hits)
+        self._match_geo(batch, hits)
+        self._match_match(batch, hits)
+        self._match_select(batch, hits)
 
-        if len(self.everything_sfs):
-            emit_rows_x_sfs(all_rows, self.everything_sfs)
-
-        self._match_equals(batch, emit, emit_rows_x_sfs)
-        self._match_exists(batch, emit, emit_rows_x_sfs)
-        self._match_ranges(batch, emit, emit_rows_x_sfs)
-        self._match_regexps(batch, emit, emit_rows_x_sfs)
-        self._match_geo(batch, emit, emit_rows_x_sfs)
-        self._match_match(batch, emit)
-        self._match_select(batch, emit)
-
-        if not hits_r:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-
-        rows = np.concatenate(hits_r)
-        sfs = np.concatenate(hits_s).astype(np.int64)
-        combined = rows * self.n_sf + sfs
-        uniq, counts = np.unique(combined, return_counts=True)
-        u_rows = uniq // self.n_sf
-        u_sfs = uniq % self.n_sf
-        ok = counts == self.sf_counts[u_sfs]
-        m_rows = u_rows[ok]
-        m_sfs = u_sfs[ok]
+        keys = hits.sorted_keys(n)
+        if len(keys) == 0:
+            return _EMPTY_PAIRS
+        m_rows, m_sfs = self._countdown(keys, n)
         # resolve sf → filters (CSR), then dedup (row, filter)
         off = self.sf_filter_offsets
-        counts_f = off[m_sfs + 1] - off[m_sfs]
-        out_rows = np.repeat(m_rows, counts_f)
-        total = int(counts_f.sum())
-        if total == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        flat = np.arange(total, dtype=np.int64)
-        cum = np.concatenate(([0], np.cumsum(counts_f)))
-        within = flat - np.repeat(cum[:-1], counts_f)
-        gather = np.repeat(off[m_sfs], counts_f) + within
-        out_fids = self._sf_filter_ord[gather]
-        pair = out_rows * len(self.filter_ids) + out_fids
-        upair = np.unique(pair)
-        return upair // len(self.filter_ids), upair % len(self.filter_ids)
+        lens = off[m_sfs + 1] - off[m_sfs]
+        fords = self.sf_filter_ord[_ranges(off[m_sfs], lens)]
+        nf = len(self.filter_ids)
+        pair = np.unique(np.repeat(m_rows, lens) * nf + fords)
+        return pair // nf, pair % nf
+
+    def _countdown(self, keys: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+        """(row, sf ordinal) pairs whose every condition holds.
+
+        ``keys`` are the batch's sorted ``cond * n + row`` hits. Each
+        subfilter is anchored on its condition with the fewest rows in this
+        batch; only the anchor's rows become candidates, and every other
+        condition is checked, rarest first, by binary-search membership of
+        its key. Memory is O(hits + candidates).
+        """
+        bounds = np.searchsorted(keys, np.arange(self.n_cond + 1, dtype=np.int64) * n)
+        counts = np.diff(bounds)
+        last = len(keys) - 1
+        out_rows: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        out_sfs: list[np.ndarray] = [np.empty(0, dtype=np.int64)]
+        for sfs, conds in self.sf_groups:
+            # each subfilter's conditions, rarest first: column 0 anchors
+            conds = np.take_along_axis(
+                conds, np.argsort(counts[conds], axis=1, kind="stable"), axis=1
+            )
+            live = counts[conds[:, 0]] > 0
+            sfs, conds = sfs[live], conds[live]
+            lens = counts[conds[:, 0]]
+            cand = np.repeat(np.arange(len(sfs)), lens)
+            rows = keys[_ranges(bounds[conds[:, 0]], lens)] % n
+            for col in range(1, conds.shape[1]):
+                probe = conds[cand, col] * n + rows
+                ok = keys[np.minimum(np.searchsorted(keys, probe), last)] == probe
+                cand, rows = cand[ok], rows[ok]
+            out_rows.append(rows)
+            out_sfs.append(sfs[cand])
+        return np.concatenate(out_rows), np.concatenate(out_sfs)
 
     def match_docs(self, docs: list[dict]) -> list[list[str]]:
         """Local (driver-side) matching of Python dict documents — the
@@ -545,96 +567,70 @@ class CompiledIndex:
 
     # -- keyword sections ---------------------------------------------------
 
-    def _series_scalar_hits(self, s: pd.Series, cond_map: dict[tuple, np.ndarray], emit):
-        """Emit (rows, sfs) for strict-equality probes over one column.
+    def _equal_pairs(
+        self, s: pd.Series, isna: np.ndarray, cond_map: dict[tuple, list[int]]
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Aligned (row, condition) pairs: the present value of ``rows[i]``
+        strictly equals the value of condition ``conds[i]``.
 
-        O(n log n): factorize to distinct values, dict-probe the (few)
-        distinct values against the condition map, then gather row groups
-        per hit value via one stable argsort — the batch analogue of the
-        reference's O(1)-per-doc Map.get
+        O(n log n): factorize to distinct values, dict-probe the distinct
+        values against the condition map, then expand every row through
+        its value's condition list — the batch analogue of the reference's
+        O(1)-per-doc Map.get
         (/root/reference/lib/engine/matcher/matchEquals.js:30-38).
         """
-        if s is None:
-            return
-        for _key, rows, sfs in self._scalar_eq_groups(s, cond_map):
-            emit(np.repeat(rows, len(sfs)), np.tile(sfs, len(rows)))
-
-    def _scalar_eq_groups(self, s: pd.Series, cond_map: dict[tuple, np.ndarray]):
-        """Yield (value_key, rows, sfs) per condition whose value occurs in
-        the column (rows = absolute row indices with that exact value;
-        the null condition yields the NA rows)."""
-        null_sfs = cond_map.get(("null", None))
-        isna = s.isna().to_numpy()
-        if null_sfs is not None and isna.any():
-            yield ("null", None), np.nonzero(isna)[0], null_sfs
         nn = np.nonzero(~isna)[0]
         if len(nn) == 0:
-            return
+            return _EMPTY_PAIRS
         sub = s.iloc[nn]
-        if sub.dtype == object:
+        if sub.dtype == object and infer_dtype(sub, skipna=True) not in _NO_BOOL_MIX:
             # Strict typing: Python hashes True==1 and False==0, so a batch
             # mixing booleans and numbers in one field would factorize them
             # into ONE code and the first-seen value's vkey would decide the
             # whole group (true !== 1 contract, reference matchEquals.js
             # strict Map keys). Split on the bool/non-bool boundary so each
             # factorize partition is type-pure w.r.t. that hash collision.
-            vals = sub.to_numpy()
             bmask = np.fromiter(
-                (isinstance(x, (bool, np.bool_)) for x in vals),
-                dtype=bool, count=len(vals),
+                (isinstance(x, (bool, np.bool_)) for x in sub.to_numpy()),
+                dtype=bool, count=len(sub),
             )
             if bmask.any() and not bmask.all():
-                yield from self._factorized_groups(nn[bmask], sub[bmask], cond_map)
-                yield from self._factorized_groups(nn[~bmask], sub[~bmask], cond_map)
-                return
-        yield from self._factorized_groups(nn, sub, cond_map)
+                parts = [
+                    self._factorized_pairs(nn[m], sub[m], cond_map) for m in (bmask, ~bmask)
+                ]
+                return np.concatenate([r for r, _ in parts]), np.concatenate([c for _, c in parts])
+        return self._factorized_pairs(nn, sub, cond_map)
 
-    def _factorized_groups(self, nn, sub, cond_map):
+    @staticmethod
+    def _factorized_pairs(nn, sub, cond_map):
         try:
             codes, uniques = pd.factorize(sub)
         except TypeError:
-            # unhashable values (lists/structs) → typed per-row fallback
-            for off, v in zip(nn, sub):
-                try:
-                    key = vkey(_coerce_np(v))
-                    sfs = cond_map.get(key)
-                except TypeError:
-                    continue
-                if sfs is not None:
-                    yield key, np.asarray([off], dtype=np.int64), sfs
-            return
-        hits = []
-        for ui, u in enumerate(uniques):
-            try:
-                key = vkey(_coerce_np(u))
-                sfs = cond_map.get(key)
-            except TypeError:
-                continue
-            if sfs is not None:
-                hits.append((ui, key, sfs))
-        if not hits:
-            return
-        order = np.argsort(codes, kind="stable")
-        sorted_codes = codes[order]
-        for ui, key, sfs in hits:
-            lo = np.searchsorted(sorted_codes, ui, side="left")
-            hi = np.searchsorted(sorted_codes, ui, side="right")
-            yield key, nn[order[lo:hi]], sfs
+            # unhashable values (lists/structs) → every row is its own value
+            codes, uniques = np.arange(len(sub)), list(sub)
+        per_value = [cond_map.get(vkey(_coerce_np(u)), ()) for u in uniques]
+        lens = np.fromiter(map(len, per_value), dtype=np.int64, count=len(per_value))
+        if not lens.any():
+            return _EMPTY_PAIRS
+        flat = np.fromiter(chain.from_iterable(per_value), dtype=np.int64, count=int(lens.sum()))
+        starts = np.cumsum(lens) - lens
+        # -1 = factorize NA sentinel: never a hit
+        row_lens = np.where(codes >= 0, lens[codes], 0)
+        return np.repeat(nn, row_lens), flat[_ranges(starts[codes], row_lens)]
 
-    def _match_equals(self, batch, emit, emit_x):
+    def _match_equals(self, batch, hits: _Hits):
         for field, cond_map in self.equals.items():
-            self._series_scalar_hits(batch.col(field), cond_map, emit)
+            s = batch.col(field)
+            if s is None:
+                continue
+            isna = s.isna().to_numpy()
+            hits.cross(np.nonzero(isna)[0], cond_map.get(_NULL_KEY, ()))
+            hits.add(*self._equal_pairs(s, isna, cond_map))
         for field, cond_map in self.notequals.items():
             s = batch.col(field)
-            # every condition gets its OWN emit (the countdown needs one
-            # hit per condition — a deduplicated union blanket would make
-            # a subfilter with two notequals on one field never match)
-            null_key = ("null", None)
-            nonnull_multi = [sfs for k2, sfs in cond_map.items() if k2 != null_key]
-            na_sfs = (
-                np.concatenate(nonnull_multi).astype(np.int32)
-                if nonnull_multi
-                else np.empty(0, dtype=np.int32)
+            value_conds = np.asarray(
+                sorted(c for k, cs in cond_map.items() if k != _NULL_KEY for c in cs),
+                dtype=np.int64,
             )
             if s is None:
                 # absent column ≡ null: matches every notequals except
@@ -643,36 +639,27 @@ class CompiledIndex:
                 # MISSING field matches notequals-null): a tabular engine
                 # conflates missing/null, and we follow the SQL-twin
                 # semantics (to_sql: IS NOT NULL) on both sides.
-                emit_x(np.arange(batch.n, dtype=np.int64), na_sfs)
+                hits.cross(np.arange(batch.n, dtype=np.int64), value_conds)
                 continue
             isna = s.isna().to_numpy()
-            emit_x(np.nonzero(isna)[0], na_sfs)
-            nn = np.nonzero(~isna)[0]
-            if len(nn) == 0:
+            hits.cross(np.nonzero(isna)[0], value_conds)
+            # a present value !== null, always
+            hits.cross(np.nonzero(~isna)[0], cond_map.get(_NULL_KEY, ()))
+            if len(value_conds) == 0 or isna.all():
                 continue
-            # per-cond equal rows (at most one cond value per row)
-            eq_map: dict[tuple, list[np.ndarray]] = {}
-            for key2, rows2, _sfs in self._scalar_eq_groups(s, cond_map):
-                eq_map.setdefault(key2, []).append(rows2)
-            for key2, sfs2 in cond_map.items():
-                if key2 == null_key:
-                    hit = nn  # present value !== null, always
-                else:
-                    eq_lists = eq_map.get(key2)
-                    if eq_lists:
-                        eq = np.concatenate(eq_lists)
-                        hit = np.setdiff1d(nn, eq, assume_unique=False)
-                    else:
-                        hit = nn
-                emit_x(hit.astype(np.int64), sfs2)
+            # every present row, except where the value equals the condition's
+            holds = np.tile(~isna, (len(value_conds), 1))
+            eq_rows, eq_conds = self._equal_pairs(s, isna, cond_map)
+            holds[np.searchsorted(value_conds, eq_conds), eq_rows] = False
+            cond_idx, rows = np.nonzero(holds)
+            hits.add(rows, value_conds[cond_idx])
 
-    def _match_exists(self, batch, emit, emit_x):
-        for path, sfs in self.exists_sfs.items():
+    def _match_exists(self, batch, hits: _Hits):
+        for path, conds in self.exists_conds.items():
             s = batch.col(path)
             if s is None:
                 continue
-            rows = np.nonzero(s.notna().to_numpy())[0]
-            emit_x(rows, sfs)
+            hits.cross(np.nonzero(s.notna().to_numpy())[0], conds)
         for path, vmap in self.exists_values.items():
             s = batch.col(path)
             if s is None:
@@ -685,43 +672,43 @@ class CompiledIndex:
             if not is_arr.any():
                 continue
             flat = _FlatItems(items, parents, batch.n)
-            for (tag, value), sfs in vmap.items():
-                emit_x(flat.rows_containing(tag, value), sfs)
-        for path, sfs in self.notexists_sfs.items():
+            for (tag, value), conds in vmap.items():
+                hits.cross(flat.rows_containing(tag, value), conds)
+        for path, conds in self.notexists_conds.items():
             s = batch.col(path)
             if s is None:
                 rows = np.arange(batch.n, dtype=np.int64)
             else:
                 rows = np.nonzero(s.isna().to_numpy())[0]
-            emit_x(rows, sfs)
+            hits.cross(rows, conds)
         for path, vmap in self.notexists_values.items():
             s = batch.col(path)
-            all_sfs = self.notexists_values_all[path]
+            all_conds = [c for conds in vmap.values() for c in conds]
             if s is None:
-                emit_x(np.arange(batch.n, dtype=np.int64), all_sfs)
+                hits.cross(np.arange(batch.n, dtype=np.int64), all_conds)
                 continue
             isna = s.isna().to_numpy()
-            emit_x(np.nonzero(isna)[0], all_sfs)
+            hits.cross(np.nonzero(isna)[0], all_conds)
             nn = np.nonzero(~isna)[0]
             if len(nn) == 0:
                 continue
             if s.dtype != object:
                 # scalar-typed column: no entry is an array, every
                 # array-value cond matches every present row
-                emit_x(nn.astype(np.int64), all_sfs)
+                hits.cross(nn, all_conds)
                 continue
             is_arr, items, parents = _flatten_object_lists(
                 s.to_numpy(dtype=object)
             )
             # non-array present value: every array-value cond matches
-            emit_x(nn[~is_arr[nn]], all_sfs)
+            hits.cross(nn[~is_arr[nn]], all_conds)
             arr_rows = np.nonzero(is_arr)[0]  # arrays are never NA rows
             if len(arr_rows) == 0:
                 continue
             flat = _FlatItems(items, parents, batch.n)
-            for (tag, value), sfs in vmap.items():
+            for (tag, value), conds in vmap.items():
                 contains = flat.row_mask(tag, value)
-                emit_x(arr_rows[~contains[arr_rows]], sfs)
+                hits.cross(arr_rows[~contains[arr_rows]], conds)
 
     def _numeric_col(self, batch, field):
         s = batch.col(field)
@@ -741,98 +728,91 @@ class CompiledIndex:
                 vals[i] = float(v)
         return vals, ~np.isnan(vals)
 
-    def _match_ranges(self, batch, emit, emit_x):
+    def _match_ranges(self, batch, hits: _Hits):
         for field, rset in self.ranges.items():
             vals, valid = self._numeric_col(batch, field)
-            if vals is None:
-                continue
-            r, s = rset.probe(vals, valid)
-            emit(r, s)
+            if vals is not None:
+                hits.add(*rset.probe(vals, valid))
         for field, rset in self.notranges.items():
-            all_sfs = self.notrange_all[field]
+            all_conds = self.notrange_all[field]
             vals, valid = self._numeric_col(batch, field)
             if vals is None:
                 # column entirely absent → non-number → all notrange match
-                emit_x(np.arange(batch.n, dtype=np.int64), all_sfs)
+                hits.cross(np.arange(batch.n, dtype=np.int64), all_conds)
                 continue
             # non-number value ⇒ matches all notrange conds on the field
-            emit_x(np.nonzero(~valid)[0], all_sfs)
-            r, s = rset.probe(vals, valid)
+            hits.cross(np.nonzero(~valid)[0], all_conds)
             # complement intervals already encode the negation — hits are matches
-            emit(r, s)
+            hits.add(*rset.probe(vals, valid))
 
     @staticmethod
-    def _string_view(s: pd.Series) -> "pd.Series | None":
-        """String-only view of a column for regexp probes.
+    def _string_codes(s: pd.Series) -> "tuple[np.ndarray, np.ndarray] | None":
+        """Factorized string-only view of a column for regexp probes:
+        ``(codes, uniques)`` with code -1 for every non-string value.
 
-        Non-string values become NA; a column whose dtype can't hold strings
-        at all (numeric/bool from a Spark schema) returns None — regexp on a
-        non-string simply doesn't match (reference regexpCondition), it must
-        never crash the mapInPandas job with a .str accessor error.
+        A column whose dtype can't hold strings at all (numeric/bool from
+        a Spark schema) returns None — regexp on a non-string simply
+        doesn't match (reference regexpCondition).
         """
         if pd.api.types.is_object_dtype(s.dtype):
-            return s.where(s.apply(lambda v: isinstance(v, str)), other=None)
+            vals = s.to_numpy()
+            is_str = np.fromiter(
+                (isinstance(v, str) for v in vals), dtype=bool, count=len(vals)
+            )
+            codes = np.full(len(vals), -1, dtype=np.int64)
+            if not is_str.any():
+                return codes, np.empty(0, dtype=object)
+            codes[is_str], uniques = pd.factorize(vals[is_str])
+            return codes, np.asarray(uniques, dtype=object)
         if pd.api.types.is_string_dtype(s.dtype):
-            return s
+            codes, uniques = pd.factorize(s)
+            return codes, np.asarray(uniques, dtype=object)
         return None
 
-    def _match_regexps(self, batch, emit, emit_x):
+    @staticmethod
+    def _regexp_mask(creg, codes: np.ndarray, uniques: np.ndarray) -> np.ndarray:
+        """Row mask of ``creg.search``, run once per distinct string."""
+        hit = np.zeros(len(uniques) + 1, dtype=bool)  # [-1]: not a string
+        hit[:-1] = np.fromiter(
+            map(bool, map(creg.search, uniques)), dtype=bool, count=len(uniques)
+        )
+        return hit[codes]
+
+    def _match_regexps(self, batch, hits: _Hits):
         for field, rx in self.regexps.items():
             s = batch.col(field)
-            if s is None:
-                continue
-            sstr = self._string_view(s)
-            if sstr is None:
-                continue  # non-string column ⇒ zero regexp hits
-            for creg, sfs in zip(rx.compiled(), rx.sf_lists):
-                hit = sstr.str.contains(creg, na=False, regex=True).to_numpy(dtype=bool)
-                emit_x(np.nonzero(hit)[0], sfs)
+            strs = None if s is None else self._string_codes(s)
+            if strs is None:
+                continue  # absent or non-string column ⇒ zero regexp hits
+            for creg, c in zip(rx.compiled(), rx.conds):
+                hits.cross(np.nonzero(self._regexp_mask(creg, *strs))[0], (c,))
         for field, rx in self.notregexps.items():
             s = batch.col(field)
-            if s is None:
-                all_sfs = self.notregexp_all[field]
-                emit_x(np.arange(batch.n, dtype=np.int64), all_sfs)
+            strs = None if s is None else self._string_codes(s)
+            if strs is None:
+                # absent or non-string column ⇒ every notregexp cond matches all rows
+                hits.cross(np.arange(batch.n, dtype=np.int64), rx.conds)
                 continue
-            sstr = self._string_view(s)
-            if sstr is None:
-                # non-string column ⇒ every notregexp cond matches all rows
-                emit_x(np.arange(batch.n, dtype=np.int64), self.notregexp_all[field])
-                continue
-            for creg, sfs in zip(rx.compiled(), rx.sf_lists):
-                hit = sstr.str.contains(creg, na=False, regex=True).to_numpy(dtype=bool)
+            for creg, c in zip(rx.compiled(), rx.conds):
                 # missing or non-matching values ⇒ match
-                emit_x(np.nonzero(~hit)[0], sfs)
+                hits.cross(np.nonzero(~self._regexp_mask(creg, *strs))[0], (c,))
 
-    def _match_geo(self, batch, emit, emit_x):
+    def _match_geo(self, batch, hits: _Hits):
         for field, gset in self.geo.items():
             lat, lon, valid = batch.geo(field)
-            rows, shape_idx = gset.candidates(lat, lon, valid)
-            if len(rows) == 0:
-                continue
-            for si in np.unique(shape_idx):
-                rr = rows[shape_idx == si]
-                inside = gset.shapes[si].contains(lat[rr], lon[rr])
-                hit_rows = rr[inside]
-                sfs = gset.sf_lists[si]
-                emit_x(hit_rows, sfs)
+            for si, rows in gset.inside(lat, lon, valid):
+                hits.cross(rows, (gset.conds[si],))
         for field, gset in self.notgeo.items():
             lat, lon, valid = batch.geo(field)
             # no/invalid geopoint ⇒ all notgeospatial conds on the field match
-            emit_x(np.nonzero(~valid)[0], gset.all_sfs)
-            vi = np.nonzero(valid)[0]
-            if len(vi) == 0:
-                continue
-            matched = np.zeros((len(gset.shapes), batch.n), dtype=bool)
-            rows, shape_idx = gset.candidates(lat, lon, valid)
-            for si in np.unique(shape_idx):
-                rr = rows[shape_idx == si]
-                inside = gset.shapes[si].contains(lat[rr], lon[rr])
-                matched[si, rr[inside]] = True
-            for si, sfs in enumerate(gset.sf_lists):
-                out_rows = vi[~matched[si, vi]]
-                emit_x(out_rows, sfs)
+            hits.cross(np.nonzero(~valid)[0], gset.conds)
+            inside = dict(gset.inside(lat, lon, valid))
+            for si, c in enumerate(gset.conds):
+                outside = valid.copy()
+                outside[inside.get(si, _EMPTY_PAIRS[0])] = False
+                hits.cross(np.nonzero(outside)[0], (c,))
 
-    def _match_match(self, batch, emit):
+    def _match_match(self, batch, hits: _Hits):
         if not self.match_patterns and not self.notmatch_patterns:
             return
         docs = batch.docs
@@ -845,19 +825,15 @@ class CompiledIndex:
                 i for i, d in enumerate(docs)
                 if isinstance(d, dict) and match_document(d, mp.pattern)
             ]
-            if rows:
-                r = np.asarray(rows, dtype=np.int64)
-                emit(np.repeat(r, len(mp.sfs)), np.tile(mp.sfs, len(r)))
+            hits.cross(rows, (mp.cond,))
         for mp in self.notmatch_patterns:
             rows = [
                 i for i, d in enumerate(docs)
                 if not (isinstance(d, dict) and match_document(d, mp.pattern))
             ]
-            if rows:
-                r = np.asarray(rows, dtype=np.int64)
-                emit(np.repeat(r, len(mp.sfs)), np.tile(mp.sfs, len(r)))
+            hits.cross(rows, (mp.cond,))
 
-    def _match_select(self, batch, emit):
+    def _match_select(self, batch, hits: _Hits):
         if not self.selects:
             return
         docs = batch.docs
@@ -888,13 +864,9 @@ class CompiledIndex:
             child_batch = batch_from_docs(elems, se.child)
             c_rows, c_fords = se.child.match_batch(child_batch)
             for cr, cf in zip(c_rows.tolist(), c_fords.tolist()):
-                child_fid = se.child.filter_ids[cf]
-                sfs = se.filters.get(child_fid)
-                if sfs is not None:
-                    emit(np.full(len(sfs), rows[cr], dtype=np.int64), sfs)
-
-    # finalize helper set by builder
-    _sf_filter_ord: np.ndarray = np.empty(0, dtype=np.int64)
+                conds = se.filters.get(se.child.filter_ids[cf])
+                if conds is not None:
+                    hits.cross((rows[cr],), conds)
 
 
 def _coerce_np(v):

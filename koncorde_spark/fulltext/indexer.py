@@ -853,8 +853,9 @@ def build_index(
     ``corpus`` must have columns (repo, path, commit, lang, content) —
     the BASELINE.json input_hint shape (Iceberg table or parquet).
 
-    ``resume=False`` rebuilds every stage and drops the tombstone table
-    (a rebuild from the corpus indexes every doc in it); ``resume=True``
+    ``resume=False`` rebuilds every stage and drops the stage manifests
+    and the tombstone table (a rebuild from the corpus indexes every doc
+    in it); ``resume=True``
     keeps every shard its manifests vouch for, and the tombstones, since
     it repairs the index of the same corpus.
     """
@@ -866,6 +867,11 @@ def build_index(
     meta_path = os.path.join(out_dir, "meta.json")
     _settle_swaps(spark, out_dir)
     if not resume:
+        # the old build's manifests must not vouch for rows this build
+        # replaces: after a crash between a stage's write and its
+        # manifests, a resume would trust them over the new rows
+        for stage in ("docs", "dlpack", "postings"):
+            fs.delete(_manifest_dir(out_dir, stage))
         fs.delete(os.path.join(out_dir, "tombstones"))
 
     # -- stage 1: docs ----------------------------------------------------

@@ -24,6 +24,8 @@ semi-join against the corpus at realistic selectivities).
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +34,12 @@ from pyspark.sql import types as T
 
 from .codecs import delta_decode
 from .indexer import sql_doc_id_col
+
+# pandas warns when str.contains gets a pattern with groups; matching
+# intent here is a plain boolean test, groups are incidental
+warnings.filterwarnings(
+    "ignore", message="This pattern is interpreted as a regular expression"
+)
 
 _IDENTITY_COLS = ("repo", "path", "commit", "lang")
 

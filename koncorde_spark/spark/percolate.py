@@ -20,7 +20,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -41,42 +41,51 @@ def _resolve_path(schema: T.StructType, path: str) -> tuple[bool, T.DataType | N
     return True, cur
 
 
-def _field_columns(df: DataFrame, ci: CompiledIndex) -> tuple[list[Column], dict[str, str]]:
-    """Build projection columns for every field the filters reference.
+def _quote_name(name: str) -> str:
+    """Backtick-quoted SQL identifier; a backtick inside it is doubled."""
+    return "`" + name.replace("`", "``") + "`"
 
-    Returns (columns, alias→path map). Missing fields become NULL literals
-    (a DataFrame has a schema, so "missing field" collapses to null — the
-    one documented divergence from the schemaless reference).
+
+def _quote(path: str) -> str:
+    """SQL reference to a dot path, every segment quoted."""
+    return ".".join(_quote_name(part) for part in path.split("."))
+
+
+def _field_exprs(df: DataFrame, ci: CompiledIndex) -> tuple[list[str], dict[str, str]]:
+    """Build projection expressions for every field the filters reference.
+
+    Returns (``selectExpr`` strings, alias→path map). Missing fields become
+    NULL (a DataFrame has a schema, so "missing field" collapses to null —
+    the one documented divergence from the schemaless reference). Plain
+    SQL strings keep the projection to one ``selectExpr`` call instead of
+    a py4j round trip per column.
     """
-    cols: list[Column] = []
+    exprs: list[str] = []
     alias_to_path: dict[str, str] = {}
-    i = 0
 
-    def add(path: str, col: Column):
-        nonlocal i
-        alias = f"__kf{i}"
-        i += 1
-        cols.append(col.alias(alias))
+    def add(path: str, expr: str):
+        alias = f"__kf{len(exprs)}"
+        exprs.append(f"{expr} AS {alias}")
         alias_to_path[alias] = path
 
     for path in sorted(ci.fields_needed):
         exists, _ = _resolve_path(df.schema, path)
-        add(path, F.col(path) if exists else F.lit(None))
+        add(path, _quote(path) if exists else "NULL")
 
     for path in sorted(ci.geo_fields):
         exists, dtype = _resolve_path(df.schema, path)
         if not exists:
-            add(path, F.lit(None))
+            add(path, "NULL")
             continue
         if isinstance(dtype, T.StructType):
             names = {f.name for f in dtype.fields}
             if {"lat", "lon"} <= names:
-                add(f"{path}.lat", F.col(f"{path}.lat"))
-                add(f"{path}.lon", F.col(f"{path}.lon"))
+                add(f"{path}.lat", _quote(f"{path}.lat"))
+                add(f"{path}.lon", _quote(f"{path}.lon"))
                 continue
-        add(path, F.col(path))  # string / array forms parsed in the matcher
+        add(path, _quote(path))  # string / array forms parsed in the matcher
 
-    return cols, alias_to_path
+    return exprs, alias_to_path
 
 
 def percolate(
@@ -94,14 +103,15 @@ def percolate(
     """
     spark = df.sparkSession
     keep_cols = list(keep_cols or [])
-    cols, alias_to_path = _field_columns(df, index)
+    exprs, alias_to_path = _field_exprs(df, index)
 
-    projection = [F.col(id_col).alias("__kid")]
-    projection += [F.col(c).alias(f"__kp{j}") for j, c in enumerate(keep_cols)]
-    projection += cols
+    projection = [f"{_quote_name(id_col)} AS __kid"]
+    projection += [f"{_quote_name(c)} AS __kp{j}" for j, c in enumerate(keep_cols)]
+    projection += exprs
     if index.needs_docs:
-        projection.append(F.struct(*[F.col(c) for c in df.columns]).alias("__kdoc"))
-    narrow = df.select(*projection)
+        columns = ", ".join(_quote_name(c) for c in df.columns)
+        projection.append(f"struct({columns}) AS __kdoc")
+    narrow = df.selectExpr(*projection)
 
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
@@ -118,6 +128,7 @@ def percolate(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ci: CompiledIndex = bc.value
+        fid_arr = np.asarray(ci.filter_ids, dtype=object)
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -128,7 +139,6 @@ def percolate(
             rows, fords = ci.match_batch(batch)
             if len(rows) == 0:
                 continue
-            fid_arr = np.asarray(ci.filter_ids, dtype=object)
             out = {
                 id_col: pdf["__kid"].to_numpy()[rows],
                 result_col: fid_arr[fords],

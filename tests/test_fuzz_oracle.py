@@ -125,8 +125,19 @@ def filters():
     return st.one_of(l, maybe_not(combo), maybe_not(nested), bool_op, same_field_negatives())
 
 
-def docs_frame(draw):
-    n = draw(st.integers(min_value=4, max_value=16))
+def _oracle_table(rows):
+    """DuckDB connection holding ``rows`` as table ``t``: numeric fields
+    typed float64 (None -> NaN -> SQL NULL), string fields object."""
+    pdf = pd.DataFrame(rows)
+    for f in NUM_FIELDS:
+        pdf[f] = pd.to_numeric(pdf[f])
+    con = duckdb.connect()
+    con.register("t", pdf)
+    return con
+
+
+def docs_frame(draw, min_rows=4, max_rows=16):
+    n = draw(st.integers(min_value=min_rows, max_value=max_rows))
     rows = []
     for i in range(n):
         row = {"doc_id": i}
@@ -162,16 +173,47 @@ def test_engine_matches_generated_oracle(data, filt):
         if fid in fids
     }
 
-    pdf = pd.DataFrame(rows)
-    # typed columns: numeric fields as float64 (None -> NaN -> SQL NULL),
-    # string fields as object
-    for f in NUM_FIELDS:
-        pdf[f] = pd.to_numeric(pdf[f])
-    con = duckdb.connect()
-    con.register("t", pdf)
+    con = _oracle_table(rows)
     oracle_hits = set(con.sql(sql).df()["doc_id"])
 
     assert engine_hits == oracle_hits, (
         f"filter={filt}\nsql={sql}\nengine={sorted(engine_hits)} "
         f"oracle={sorted(oracle_hits)}\nrows={rows}"
     )
+
+
+@settings(
+    max_examples=150,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(data=st.data(), filts=st.lists(filters(), min_size=2, max_size=12))
+def test_many_filters_share_conditions(data, filts):
+    """Several filters in ONE engine, so conditions and subfilters are
+    shared across filters and the countdown picks a per-batch anchor.
+    Each filter's hits equal its oracle; batch matching equals per-doc
+    matching and matching the batch in two halves (other row counts,
+    other anchors)."""
+    rows = docs_frame(data.draw, min_rows=4, max_rows=64)
+    docs = [{k2: v for k2, v in r.items() if k2 != "doc_id"} for r in rows]
+
+    k = Koncorde()
+    fids = sorted({k.register(f) for f in filts})
+    many = k.test_many(docs)
+    assert many == [k.test(d) for d in docs]
+    half = len(docs) // 2
+    assert many == k.test_many(docs[:half]) + k.test_many(docs[half:])
+
+    con = _oracle_table(rows)
+    for fid in fids:
+        try:
+            sql = percolation_oracle_sql({fid: k.engines[None].filters[fid]}, "t", "doc_id")
+        except NotSqlExpressible:
+            continue
+        engine_hits = {r["doc_id"] for r, got in zip(rows, many) if fid in got}
+        oracle_hits = set(con.sql(sql).df()["doc_id"])
+        assert engine_hits == oracle_hits, (
+            f"filter={fid}\nsql={sql}\nengine={sorted(engine_hits)} "
+            f"oracle={sorted(oracle_hits)}\nrows={rows}"
+        )

@@ -9,6 +9,9 @@ moved aside, staging renamed in, aside copy dropped). After the crash:
 - the documented repair — ``build_index(full_corpus, resume=True)`` for
   append, re-running ``compact_index`` for compaction — yields an index
   whose top-k on both query tiers equals a fresh build, and a clean fsck.
+
+A ``build_index(resume=False)`` over an existing index, crashed between
+its docs write and the docs manifests, is repaired the same way.
 """
 
 import os
@@ -179,3 +182,28 @@ def test_compact_crash_repaired_by_rerun(
     assert not os.path.exists(os.path.join(d, "tombstones"))
     _assert_recovered(spark, d, fresh)
 
+
+
+def test_rebuild_crash_before_docs_manifests_repaired_by_resume(
+    spark, monkeypatch, corpora, append_setup, tmp_path
+):
+    """Rebuild an index of ``base`` from ``full`` with resume=False and
+    crash right after the docs write: the old build's manifests must not
+    vouch for the new docs rows when the build is resumed."""
+    _, _, full, _, _ = corpora
+    base, fresh = append_setup
+    d = str(tmp_path / "idx")
+    shutil.copytree(base, d)
+    real_write = ix._write_manifests
+
+    def crash_on_docs(out_dir, stage, *a, **kw):
+        if stage == "docs":
+            raise Crash("docs manifests")
+        return real_write(out_dir, stage, *a, **kw)
+
+    monkeypatch.setattr(ix, "_write_manifests", crash_on_docs)
+    with pytest.raises(Crash):
+        ix.build_index(spark, spark.createDataFrame(full), d, CFG, resume=False)
+    monkeypatch.undo()
+    ix.build_index(spark, spark.createDataFrame(full), d, CFG, resume=True)
+    _assert_recovered(spark, d, fresh)

@@ -2,7 +2,7 @@
 
 Each test pins a bug verified by the round-1 advisor:
 1. factorize hash-collision between bool and num in one batch column
-   (engine/compiled.py _series_scalar_hits — true !== 1 strict contract);
+   (engine/compiled.py _equal_pairs — true !== 1 strict contract);
 2. notequals blanket-matching NA rows including the notequals-null cond;
 3. regexp/notregexp on a non-string Spark column dtype crashing mapInPandas;
 4. tokenize_arrow rendering null content as the phantom token 'none';

@@ -31,12 +31,12 @@ def struct_size(ci) -> int:
     n = 0
     for d in (ci.equals, ci.notequals, ci.exists_values, ci.notexists_values):
         n += sum(len(v) for v in d.values())
-    n += len(ci.exists_sfs) + len(ci.notexists_sfs)
+    n += len(ci.exists_conds) + len(ci.notexists_conds)
     n += len(ci.ranges) + len(ci.notranges)
     n += len(ci.regexps) + len(ci.notregexps)
     n += len(ci.geo) + len(ci.notgeo)
     n += len(ci.match_patterns) + len(ci.notmatch_patterns) + len(ci.selects)
-    n += len(ci.everything_sfs)
+    n += len(ci.everything_conds)
     return n
 
 
@@ -198,12 +198,12 @@ class TestRemovalCascade:
         fb = k.register({"equals": {"b": 2}})
         assert set(k.test({"b": 2})) == {fa, fb}
         assert k.test({"c": 3}) == [fa]
-        assert len(k.compiled().everything_sfs) == 1
+        assert len(k.compiled().everything_conds) == 1
 
         k.remove(fa)
         assert k.test({"c": 3}) == []
         assert k.test({"b": 2}) == [fb]
-        assert len(k.compiled().everything_sfs) == 0
+        assert len(k.compiled().everything_conds) == 0
 
     def test_nothing_removal(self):
         k = Koncorde()

@@ -149,6 +149,58 @@ def test_missing_column_becomes_null(spark):
 
 
 @pytest.mark.spark
+def test_quoted_and_nested_field_names(spark):
+    """Field names that need SQL quoting (hyphen, space, backtick) and a
+    three-level ``a.b.c`` path project correctly: Spark pairs equal the
+    local matcher's (no DuckDB twin: the SQL oracle accepts plain names
+    only)."""
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("my-field", T.StringType()),
+        T.StructField("with space", T.DoubleType()),
+        T.StructField("odd`name", T.StringType()),
+        T.StructField("a", T.StructType([
+            T.StructField("b", T.StructType([T.StructField("c", T.StringType())])),
+        ])),
+        T.StructField("geo-pos", T.StructType([
+            T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType()),
+        ])),
+    ])
+    docs = []
+    for i in range(40):
+        docs.append({
+            "doc_id": i,
+            "my-field": ["v1", "v2", None][i % 3],
+            "with space": float(i) if i % 5 else None,
+            "odd`name": ["p", "q"][i % 2],
+            "a": {"b": {"c": ["x", "y", None][(i // 3) % 3]}} if i % 4 else None,
+            "geo-pos": {"lat": 43.60 + (i % 2) * 10, "lon": 3.90} if i % 6 else None,
+        })
+    k = Koncorde()
+    fids = [
+        k.register({"equals": {"my-field": "v1"}}),
+        k.register({"range": {"with space": {"gte": 10, "lt": 30}}}),
+        k.register({"not": {"equals": {"odd`name": "p"}}}),
+        k.register({"equals": {"a.b.c": "x"}}),
+        k.register({"and": [{"exists": "a.b.c"}, {"missing": "my-field"}]}),
+        k.register({"geoBoundingBox": {"geo-pos": {
+            "top": 43.7, "left": 3.8, "bottom": 43.5, "right": 4.0}}}),
+        k.register({"match": {"my-field": "v2"}}),
+    ]
+    df = spark.createDataFrame(docs, schema)
+    got = percolate(df, k.compiled(), id_col="doc_id").toPandas()
+    spark_pairs = {(int(d), f) for d, f in got.itertuples(index=False)}
+    local_pairs = {
+        (d["doc_id"], fid)
+        for d, fl in zip(docs, k.test_many(docs))
+        for fid in fl
+    }
+    assert spark_pairs == local_pairs
+    # every filter matches some document, so no field silently read as NULL
+    assert {f for _, f in spark_pairs} == set(fids)
+
+
+@pytest.mark.spark
 class TestPercolateJson:
     def test_matches_typed_percolation(self, spark):
         """percolate_json over to_json(rows) must produce the identical
