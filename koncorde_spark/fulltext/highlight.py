@@ -1,8 +1,9 @@
 """Snippet (best-window) selection kernel over the positional index.
 
-Shared by ``Bm25Index.topk_highlight`` and ``LocalSearcher.highlight`` so
-both tiers pick byte-identical windows — the same discipline as the WAND
-and phrase kernels.
+Called by the per-shard bodies in serve.py (``highlight_shard``,
+``boolean_shard``, ``multiterm_shard``), which both tiers run, so both pick
+byte-identical windows — the same discipline as the WAND and phrase
+kernels.
 
 Semantics (deterministic, SQL-transcribable): for a scored doc, consider
 every query-term occurrence position p as a window anchor; the window
@@ -31,8 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .phrase import TermOccurrences, _candidate_docs, _pair_keys
-from .wand import bm25_idf  # noqa: F401  (re-exported for callers)
+from .phrase import TermOccurrences, _pair_keys
 
 _MASK32 = np.uint64(0xFFFFFFFF)
 _RANK_BASE = np.int64(1) << np.int64(33)

@@ -15,12 +15,14 @@ combined score is computed EXACTLY in a single pass — no per-field top-k
 approximation, no cross-field shuffle of candidates.
 
 Plan shape: union of the fields' pruned postings (parquet term pushdown
-per index) cogrouped with the union of their dlpacks by shard; inside
-the task each field scores with the brute multi-term kernel
-(highlight.multiterm_scores — additive over segment rows, so appended
-indexes work unchanged), contributions are weight-scaled and summed per
-doc with one np.unique/bincount, and each shard emits its top-k.
-Global sort-limit over ≤ shards·k rows.
+per index) cogrouped with the union of their dlpacks by shard. This
+module only builds that plan; the per-shard body is
+serve.multifield_shard (shared with LocalMultiFieldSearcher): each field
+scores with the brute multi-term kernel (additive over segment rows, so
+appended indexes work unchanged, rows summed in canonical term order),
+contributions are weight-scaled and summed per doc with one
+np.unique/bincount, and each shard emits its top-k. Global sort-limit
+over ≤ shards·k rows.
 
 Per-field tombstones apply to that field's contributions only (delete
 from every field index to remove a document entirely — the same
@@ -29,20 +31,16 @@ discipline as maintaining the indexes individually).
 
 from __future__ import annotations
 
-import numpy as np
+from functools import reduce
+
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codecs import delta_decode, varint_decode
-from .highlight import multiterm_scores
-from .phrase import TermOccurrences
 from .indexer import _decode_dlpack
-from .query import TOPK_SCHEMA, Bm25Index
+from .query import TOPK_SCHEMA, Bm25Index, _cogroup, _top
+from .serve import idf_for, multifield_shard, postings_columns
 from .tokenizer import tokenize_text
-from .wand import bm25_idf
-
-_NO_POS = np.empty(0, dtype=np.int64)
 
 
 class MultiFieldSearch:
@@ -80,25 +78,17 @@ class MultiFieldSearch:
         if not toks:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
 
-        params: dict[str, dict] = {}
+        params: dict[str, tuple] = {}
         posts_parts, pack_parts = [], []
         for f, idx in self.indexes.items():
-            dfs = idx._df_for(toks)
-            if not dfs:
+            idf = idf_for(idx._df_for, toks, idx.meta["n_docs"])
+            if not idf:
                 continue
-            params[f] = {
-                "idf": {
-                    t: float(bm25_idf(idx.meta["n_docs"], d))
-                    for t, d in dfs.items()
-                },
-                "avgdl": float(idx.meta["avgdl"]),
-                "weight": self.weights[f],
-                "tombs": idx.tombstones,
-            }
+            params[f] = (idf, float(idx.meta["avgdl"]), self.weights[f], idx.tombstones)
             posts_parts.append(
-                idx.postings.where(F.col("term").isin(sorted(dfs))).select(
-                    F.lit(f).alias("field"), "term", "shard", "df",
-                    "doc_ids", "tfs",
+                idx.postings.where(F.col("term").isin(sorted(idf))).select(
+                    F.lit(f).alias("field"), "shard",
+                    *postings_columns("tf", idx.postings.columns),
                 )
             )
             pack_parts.append(
@@ -109,57 +99,17 @@ class MultiFieldSearch:
         if not params:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
 
-        posts = posts_parts[0]
-        for p in posts_parts[1:]:
-            posts = posts.unionByName(p)
-        packs = pack_parts[0]
-        for p in pack_parts[1:]:
-            packs = packs.unionByName(p)
+        posts = reduce(DataFrame.unionByName, posts_parts)
+        packs = reduce(DataFrame.unionByName, pack_parts)
+        k1, b = self.k1, self.b
 
-        k_, k1_, b_ = k, self.k1, self.b
-        params_ = params
+        def fields(rows: pd.DataFrame, pack: pd.DataFrame):
+            for f, (idf, avgdl, weight, tombs) in params.items():
+                pp, pk = rows[rows["field"] == f], pack[pack["field"] == f]
+                if len(pp) and len(pk):
+                    yield pp, _decode_dlpack(pk, None), idf, avgdl, weight, tombs
 
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"),
-                 "score": pd.Series(dtype="float64")}
-            )
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return empty
-            id_parts, sc_parts = [], []
-            for f, prm in params_.items():
-                pp = post_pdf[post_pdf["field"] == f]
-                pk = pack_pdf[pack_pdf["field"] == f]
-                if len(pp) == 0 or len(pk) == 0:
-                    continue
-                dl_ids, dl_vals = _decode_dlpack(pk, None)
-                per_term, idfs = [], []
-                for _, row in pp.iterrows():
-                    n = int(row["df"])
-                    ids = delta_decode(bytes(row["doc_ids"]), n).astype(np.int64)
-                    tfs = varint_decode(bytes(row["tfs"]), n).astype(np.int64)
-                    occ_off = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-                    per_term.append(TermOccurrences(ids, occ_off, _NO_POS))
-                    idfs.append(prm["idf"][row["term"]])
-                cand, sc = multiterm_scores(
-                    per_term, idfs, k1_, b_, prm["avgdl"],
-                    dl_ids, dl_vals, prm["tombs"],
-                )
-                if len(cand):
-                    id_parts.append(cand)
-                    sc_parts.append(prm["weight"] * sc)
-            if not id_parts:
-                return empty
-            all_ids = np.concatenate(id_parts)
-            all_sc = np.concatenate(sc_parts)
-            uids, inv = np.unique(all_ids, return_inverse=True)
-            tot = np.bincount(inv, weights=all_sc)
-            order = np.lexsort((uids, -tot))[:k_]
-            return pd.DataFrame({"doc_id": uids[order], "score": tot[order]})
-
-        per_shard = (
-            posts.groupBy("shard")
-            .cogroup(packs.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_SCHEMA)
-        )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _top(_cogroup(
+            posts, packs, TOPK_SCHEMA,
+            lambda rows, pack: multifield_shard(fields(rows, pack), k1, b, k),
+        ), k)

@@ -1,8 +1,9 @@
 """Exact-phrase + proximity matching/scoring kernel (numpy, per shard).
 
-Shared by the distributed query tier (``Bm25Index.topk_phrase``) and the
-Spark-free serve tier (``LocalSearcher.phrase``) so the two answer
-rank-identically by construction — the same discipline as the WAND kernel.
+Called by serve.phrase_shard, the per-shard body both the distributed
+query tier (``Bm25Index.topk_phrase``) and the Spark-free serve tier
+(``LocalSearcher.phrase``) run, so the two answer rank-identically by
+construction — the same discipline as the WAND kernel.
 
 Semantics: a phrase occurrence is the exact query token sequence at
 consecutive token offsets (slop 0). With ``slop > 0`` the kernel runs an

@@ -1,20 +1,27 @@
-"""BM25 top-k query execution over the sharded postings index.
+"""BM25 query PLANS over the sharded postings index (the Spark tier).
 
 Plan shape (document-partitioned search, scales to any corpus size):
 
     postings scan, PushedFilters: term IN (query terms)   ← pruned scan
-      → groupBy(shard) applyInPandas(per-shard block-max WAND top-k)
+      → cogroup(shard) with the dlpack: the operator's per-shard body
       → global top-k: orderBy(score desc, doc_id asc) limit k  ← tiny
 
-Per-shard WAND needs no cross-shard state (BM25 scores are doc-local given
-global N/avgdl/df, which ride in as broadcast literals), so the heavy stage
-parallelizes by shard with no shuffle of postings bytes beyond the
-term-pruned scan itself.
+Per-shard scoring needs no cross-shard state (BM25 scores are doc-local
+given global N/avgdl/df, which ride in as broadcast literals), so the
+heavy stage parallelizes by shard with no shuffle of postings bytes beyond
+the term-pruned scan itself.
+
+This module only builds plans: which terms and ``postings_columns`` to
+scan, the one shard cogroup (``_cogroup`` / ``Bm25Index._per_shard``) and
+the global cut. Every per-shard body — segment decode, WAND, count set
+arithmetic, boolean, phrase, highlight — is owned by serve.py and shared
+with the Spark-free serve tier.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -22,18 +29,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .codecs import delta_decode, delta_encode, varint_decode
+from .codecs import delta_decode, delta_encode
 from .indexer import _decode_dlpack_ctx, read_meta
-from .phrase import decode_entry_positions, merge_term_segments, phrase_topk_shard
-from .tokenizer import tokenize_text
-from .wand import (
-    TermPostings,
-    bm25_idf,
-    check_after_cursor,
-    score_union,
-    topk_block_max_wand,
-    topk_conjunctive,
+from .serve import (
+    boolean_plan,
+    boolean_shard,
+    decode_segments,
+    highlight_shard,
+    idf_for,
+    match_ids,
+    match_terms,
+    phrase_plan,
+    phrase_shard,
+    postings_columns,
+    require_positions,
+    segment_postings,
+    vocab_fuzzy,
+    vocab_prefix,
+    wand_topk,
 )
+from .tokenizer import tokenize_text
+from .wand import TermPostings, check_after_cursor, score_union
 
 import re as _re
 
@@ -76,34 +92,7 @@ ELIG_SCHEMA = T.StructType(
     ]
 )
 
-
-def _bounded_levenshtein(a: str, b: str, max_d: int) -> int:
-    """Exact Levenshtein distance when ≤ ``max_d``, else -1 (the same
-    contract as Spark's bounded ``levenshtein(l, r, threshold)``): classic
-    two-row DP with early abandon when a whole row exceeds the budget."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > max_d:
-        return -1
-    if la == 0:
-        return lb if lb <= max_d else -1
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        ca = a[i - 1]
-        cur = [i] + [0] * lb
-        best = i
-        for j in range(1, lb + 1):
-            c = min(
-                prev[j] + 1,
-                cur[j - 1] + 1,
-                prev[j - 1] + (0 if ca == b[j - 1] else 1),
-            )
-            cur[j] = c
-            if c < best:
-                best = c
-        if best > max_d:
-            return -1
-        prev = cur
-    return prev[lb] if prev[lb] <= max_d else -1
+_PD_DTYPES = {T.LongType: "int64", T.DoubleType: "float64", T.StringType: "object"}
 
 
 def parse_expansion_query(query: str, marker: str, kind: str, expand) -> list[str]:
@@ -138,91 +127,44 @@ def _decode_shard_postings(
     cache_ctx: tuple[str, dict[int, int]] | None = None,
     allowed: np.ndarray | None = None,
 ) -> dict[str, list[TermPostings]]:
-    """Decode one shard's postings rows into per-term TermPostings LISTS.
-
-    A (term, shard) pair may own SEVERAL segment rows — one per salt from
-    a hot-term build, one per append generation — and BM25 scoring is
-    additive per posting entry, so every segment enters WAND as its own
-    posting list (collapsing them per term would silently drop all but
-    one segment). Shared by topk() and topk_many(): the expensive part
-    (varint/delta decode + tf normalization) happens once per segment,
-    and every query in a batch reuses the decoded structures.
-
-    ``tombstones`` (sorted doc_ids): deleted entries are dropped per
-    segment and the segment's block metadata is REBUILT from the
-    surviving per-entry scores — the stored block arrays are addressed by
-    entry position, so filtering without rebuilding would misalign the
-    WAND skip bounds. Rebuilt bounds are exact (no avgdl correction
-    needed: they come from the current-avgdl scores).
+    """One shard's postings rows as per-term TermPostings LISTS (one per
+    segment row — serve.decode_segments, scored by serve.segment_postings),
+    in canonical term order. Shared by every WAND-family plan: in
+    topk_many each segment is decoded once for the whole batch.
 
     ``cache_ctx`` = (index_dir, {shard: dlpack lineage_xor}): enables the
-    worker-global decoded-dlpack cache for this shard.
-
-    ``allowed`` (sorted doc_ids): when present, ONLY these docs survive —
-    the eligibility mask of a filtered search (topk_filtered). Composes
-    with ``tombstones`` (allowed minus deleted); block metadata is rebuilt
-    under the same position-addressing rule as the tombstone path."""
-    dl_ids, dl_vals = _decode_dlpack_ctx(pack_pdf, cache_ctx)
-
-    # canonical term order: a doc's float64 score is the sum of its
-    # per-term contributions in CONCATENATION order, and post_pdf arrives
-    # in shuffle-fetch order, which can differ between two Spark jobs
-    # (e.g. page 1 vs page 2 of a search_after session). Sorting by term
-    # makes the accumulation order job-independent, so boundary-score
-    # equality in the cursor filter is exact. Within-term segment order
-    # is per-doc irrelevant (segments of a term are doc-disjoint).
-    post_pdf = post_pdf.sort_values("term", kind="mergesort")
-
+    worker-global decoded-dlpack cache for this shard. ``tombstones`` /
+    ``allowed`` (sorted doc_ids): see decode_segments."""
+    dl = _decode_dlpack_ctx(pack_pdf, cache_ctx)
     out: dict[str, list[TermPostings]] = {}
-    for _, row in post_pdf.iterrows():
-        n = int(row["df"])
-        ids = delta_decode(bytes(row["doc_ids"]), n).astype(np.int64)
-        tfs = varint_decode(bytes(row["tfs"]), n).astype(np.float64)
-        dls = dl_vals[np.searchsorted(dl_ids, ids)]
-        idf = idf_map[row["term"]]
-        tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-        # block_max was computed with the segment's build-time avgdl; when
-        # appends RAISE the corpus avgdl, true tf-parts can exceed it. The
-        # sup of the ratio over all (tf, dl) is avgdl_now/avgdl_seg, so
-        # scaling by max(1, that) keeps the bound valid and WAND exact.
-        seg = row["avgdl_seg"] if "avgdl_seg" in row.index else None
-        bound_scale = max(1.0, avgdl / float(seg)) if seg and seg > 0 else 1.0
-        scores = idf * tfpart
-        keep = None
-        if tombstones is not None and len(tombstones):
-            pos = np.searchsorted(tombstones, ids)
-            alive = tombstones[np.minimum(pos, len(tombstones) - 1)] != ids
-            if not alive.all():
-                keep = alive
-        if allowed is not None:
-            if len(allowed) == 0:
-                continue
-            pos = np.searchsorted(allowed, ids)
-            elig = allowed[np.minimum(pos, len(allowed) - 1)] == ids
-            if not elig.all():
-                keep = elig if keep is None else (keep & elig)
-        if keep is not None:
-            ids, scores = ids[keep], scores[keep]
-            if len(ids) == 0:
-                continue
-            nb = (len(ids) + block_size - 1) // block_size
-            starts = np.arange(nb) * block_size
-            block_last = ids[np.minimum(starts + block_size - 1, len(ids) - 1)]
-            block_ub = np.maximum.reduceat(scores, starts)
-            out.setdefault(row["term"], []).append(
-                TermPostings(ids, scores, block_last, block_ub, block_size)
-            )
-            continue
-        out.setdefault(row["term"], []).append(
-            TermPostings(
-                doc_ids=ids,
-                scores=scores,
-                block_last=np.asarray(row["block_last"], dtype=np.int64),
-                block_ub=idf * bound_scale * np.asarray(row["block_max"], dtype=np.float64),
-                block_size=block_size,
-            )
-        )
+    for term, seg in decode_segments(
+        post_pdf, dl, k1, b, avgdl, block_size, tombstones, allowed
+    ):
+        out.setdefault(term, []).append(segment_postings(seg, idf_map[term], block_size))
     return out
+
+
+def _cogroup(posts: DataFrame, packs: DataFrame, schema: T.StructType, body) -> DataFrame:
+    """The one shard cogroup of every search plan: ``body(rows, pack)``
+    runs once per shard on that shard's postings rows and pack row(s), and
+    returns a tuple of columns in ``schema`` order, or None for no rows."""
+    names = schema.names
+    empty = {f.name: pd.Series(dtype=_PD_DTYPES[type(f.dataType)]) for f in schema.fields}
+
+    def cogrouped(rows: pd.DataFrame, pack: pd.DataFrame) -> pd.DataFrame:
+        out = body(rows, pack) if len(rows) and len(pack) else None
+        return pd.DataFrame(empty if out is None else dict(zip(names, out)))
+
+    return (
+        posts.groupBy("shard")
+        .cogroup(packs.groupBy("shard"))
+        .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=schema)
+    )
+
+
+def _top(frame: DataFrame, k: int) -> DataFrame:
+    """Global sort-limit: (score DESC, doc_id ASC), first k rows."""
+    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 class Bm25Index:
@@ -305,15 +247,29 @@ class Bm25Index:
         rows = self.terms.where(F.col("term").isin(q_terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
 
-    def _wand_columns(self) -> list[str]:
-        """Postings columns the WAND decode actually reads — explicitly
-        projected so a positions=True index never ships its dominant
-        per-entry `pos` payload through the cogroup for queries that
-        don't use positions (phrase/highlight select their own set)."""
-        cols = ["term", "shard", "df", "doc_ids", "tfs", "block_last", "block_max"]
-        if "avgdl_seg" in self.postings.columns:
-            cols.append("avgdl_seg")
-        return cols
+
+    def _per_shard(
+        self, terms, kind: str, schema: T.StructType, body, packs: DataFrame | None = None,
+    ) -> DataFrame:
+        """One pruned postings scan over ``terms`` — exactly the ``kind``
+        columns of serve.postings_columns, so a positional index's ``pos``
+        never ships to a non-positional operator — cogrouped by shard with
+        the dlpack (or ``packs``); see _cogroup."""
+        posts = self.postings.where(F.col("term").isin(list(terms))).select(
+            "shard", *postings_columns(kind, self.postings.columns)
+        )
+        return _cogroup(posts, self.dlpack if packs is None else packs, schema, body)
+
+    def _decoder(self, idf_map: dict[str, float]):
+        """_decode_shard_postings bound to this handle's statistics,
+        tombstones and dlpack cache keys — a closure that ships to
+        executors without the handle."""
+        m = self.meta
+        return partial(
+            _decode_shard_postings, idf_map=idf_map, k1=m["k1"], b=m["b"],
+            avgdl=m["avgdl"], block_size=m["block_size"],
+            tombstones=self.tombstones, cache_ctx=self._cache_ctx,
+        )
 
     def topk(
         self, query: str, k: int = 10, mode: str = "any",
@@ -338,22 +294,15 @@ class Bm25Index:
         q_terms = sorted(set(tokenize_text(query)))
         if not q_terms:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b, block_size = meta["k1"], meta["b"], meta["block_size"]
-
         # global df per query term (driver-side dict probe for small
         # vocabularies; a tiny distributed lookup otherwise)
-        dfs = self._df_for(q_terms)
-        idf_map = {t: float(bm25_idf(n_docs, df)) for t, df in dfs.items()}
+        idf_map = idf_for(self._df_for, q_terms, self.meta["n_docs"])
         if not idf_map or (mode == "all" and len(idf_map) < len(q_terms)):
             # conjunctive with a term absent from the global vocabulary can
             # match nothing — skip the job entirely
             return self.spark.createDataFrame([], TOPK_SCHEMA)
         require = len(idf_map) if mode == "all" else None
-        per_shard_topk = self._shard_topk_frame(idf_map, k, require, after)
-        return per_shard_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _top(self._shard_topk_frame(idf_map, k, require, after), k)
 
     def _shard_topk_frame(
         self,
@@ -369,38 +318,11 @@ class Bm25Index:
         length (avgdl_seg corrects the WAND bounds as usual). ``require``
         non-None switches to conjunctive semantics with that many
         required terms."""
-        relevant = self.postings.where(F.col("term").isin(list(idf_map))).select(
-            *self._wand_columns()
-        )
-        meta = self.meta
-        k1_, b_, bs_, avgdl_ = meta["k1"], meta["b"], meta["block_size"], meta["avgdl"]
-        idf_map_b = idf_map
-        k_ = k
-        tomb = self.tombstones
-        cctx = self._cache_ctx
-        require_ = require
+        decode = self._decoder(idf_map)
         after_ = check_after_cursor(after) if after is not None else None
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            by_term = _decode_shard_postings(
-                post_pdf, pack_pdf, idf_map_b, k1_, b_, avgdl_, bs_, tomb, cctx
-            )
-            if require_ is not None:
-                ids, scores = topk_conjunctive(
-                    by_term, k_, require=require_, after=after_
-                )
-            else:
-                tps = [tp for segs in by_term.values() for tp in segs]
-                ids, scores = topk_block_max_wand(tps, k_, after=after_)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        return (
-            relevant.groupBy("shard")
-            .cogroup(self.dlpack.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_SCHEMA)
+        return self._per_shard(
+            idf_map, "wand", TOPK_SCHEMA,
+            lambda rows, pack: wand_topk(decode(rows, pack), k, require, after_),
         )
 
     def collapse_topk(
@@ -426,33 +348,15 @@ class Bm25Index:
                 T.StructField("score", T.DoubleType()),
             ]
         )
-        dfs = self._df_for(q_terms)
-        if not dfs:
+        idf_map = idf_for(self._df_for, q_terms, self.meta["n_docs"])
+        if not idf_map:
             return self.spark.createDataFrame([], out_schema)
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b, block_size = meta["k1"], meta["b"], meta["block_size"]
-        idf_map = {t: float(bm25_idf(n_docs, df)) for t, df in dfs.items()}
-        relevant = self.postings.where(F.col("term").isin(list(idf_map))).select(
-            *self._wand_columns()
-        )
-        tomb, cctx = self.tombstones, self._cache_ctx
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
-            by_term = _decode_shard_postings(
-                post_pdf, pack_pdf, idf_map, k1, b, avgdl, block_size, tomb, cctx
-            )
-            tps = [tp for segs in by_term.values() for tp in segs]
-            ids, scores = score_union(tps)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        scored = (
-            relevant.groupBy("shard")
-            .cogroup(self.dlpack.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_SCHEMA)
+        decode = self._decoder(idf_map)
+        scored = self._per_shard(
+            idf_map, "wand", TOPK_SCHEMA,
+            lambda rows, pack: score_union(
+                [tp for segs in decode(rows, pack).values() for tp in segs]
+            ),
         )
         best = (
             scored.join(groups.select("doc_id", group_col), "doc_id")
@@ -467,7 +371,7 @@ class Bm25Index:
             .select(group_col, F.col("best.doc_id").alias("doc_id"),
                     F.col("best.score").alias("score"))
         )
-        return best.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _top(best, k)
 
     def topk_rescored(
         self,
@@ -498,7 +402,7 @@ class Bm25Index:
                 + F.lit(float(weight)) * F.coalesce(F.col(boost_col), F.lit(0.0))
             ).alias("score"),
         )
-        return rescored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _top(rescored, k)
 
     def suggest(
         self, term: str, max_distance: int = 2, k: int = 5,
@@ -526,60 +430,33 @@ class Bm25Index:
             .limit(k)
         )
 
+    def _match_frame(self, present: list[str], mode: str, schema: T.StructType, emit) -> DataFrame:
+        """serve.match_ids per shard over the ``present`` terms (one pruned
+        "match" scan, no dlpack), each shard's ids emitted as the
+        ``emit(ids)`` columns of ``schema``."""
+        need, tomb, names = len(present), self.tombstones, schema.names
+        posts = self.postings.where(F.col("term").isin(present)).select(
+            "shard", *postings_columns("match", ())
+        )
+        return posts.groupBy("shard").applyInPandas(
+            lambda _, pdf: pd.DataFrame(
+                dict(zip(names, emit(match_ids(pdf, mode, need, tomb))))
+            ),
+            schema=schema,
+        )
+
     def count(self, query: str, mode: str = "any") -> int:
         """Number of live documents matching the query — "any": union of
         the terms' posting lists; "all": intersection — without scoring
         or a top-k cut (the searcher's totalHits). Tombstones excluded.
         One pruned postings scan; per-shard vectorized set arithmetic;
         counts sum across shards (doc-disjoint by construction)."""
-        if mode not in ("any", "all"):
-            raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
-        toks = sorted(set(tokenize_text(query)))
-        dfs = self._df_for(toks)
-        present = [t for t in toks if t in dfs]
-        if not present or (mode == "all" and len(present) < len(toks)):
+        present = match_terms(query, mode, self._df_for)
+        if present is None:
             return 0
-        need, tomb = len(present), self.tombstones
-        mode_ = mode
-
-        def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"n": pd.Series(dtype="int64")})
-            per_term: dict[str, list[np.ndarray]] = {}
-            for _, row in pdf.iterrows():
-                per_term.setdefault(row["term"], []).append(
-                    delta_decode(bytes(row["doc_ids"]), int(row["df"])).astype(np.int64)
-                )
-            sets = [
-                np.sort(np.concatenate(v)) if len(v) > 1 else v[0]
-                for v in per_term.values()
-            ]
-            if mode_ == "all":
-                if len(per_term) < need:
-                    return pd.DataFrame({"n": [0]})
-                sets.sort(key=len)
-                cand = sets[0]
-                for ids in sets[1:]:
-                    if len(cand) == 0:
-                        break
-                    at = np.searchsorted(ids, cand)
-                    cand = cand[ids[np.minimum(at, len(ids) - 1)] == cand]
-            else:
-                cand = np.unique(np.concatenate(sets))
-            if len(tomb) and len(cand):
-                at = np.searchsorted(tomb, cand)
-                cand = cand[tomb[np.minimum(at, len(tomb) - 1)] != cand]
-            return pd.DataFrame({"n": [len(cand)]})
-
-        relevant = self.postings.where(F.col("term").isin(present)).select(
-            "term", "shard", "df", "doc_ids"
-        )
+        schema = T.StructType([T.StructField("n", T.LongType())])
         rows = (
-            relevant.groupBy("shard")
-            .applyInPandas(
-                lambda _, pdf: per_shard(pdf),
-                schema=T.StructType([T.StructField("n", T.LongType())]),
-            )
+            self._match_frame(present, mode, schema, lambda ids: ([len(ids)],))
             .agg(F.sum("n").alias("n"))
             .collect()
         )
@@ -592,51 +469,11 @@ class Bm25Index:
         metadata and ORDER BY any column), boolean filters feeding other
         jobs, and set arithmetic between queries. Same per-shard
         vectorized union/intersection as count(), emitting the ids."""
-        if mode not in ("any", "all"):
-            raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
         out_schema = T.StructType([T.StructField("doc_id", T.LongType())])
-        toks = sorted(set(tokenize_text(query)))
-        dfs = self._df_for(toks)
-        present = [t for t in toks if t in dfs]
-        if not present or (mode == "all" and len(present) < len(toks)):
+        present = match_terms(query, mode, self._df_for)
+        if present is None:
             return self.spark.createDataFrame([], out_schema)
-        need, tomb, mode_ = len(present), self.tombstones, mode
-
-        def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(pdf) == 0:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-            per_term: dict[str, list[np.ndarray]] = {}
-            for _, row in pdf.iterrows():
-                per_term.setdefault(row["term"], []).append(
-                    delta_decode(bytes(row["doc_ids"]), int(row["df"])).astype(np.int64)
-                )
-            sets = [
-                np.sort(np.concatenate(v)) if len(v) > 1 else v[0]
-                for v in per_term.values()
-            ]
-            if mode_ == "all":
-                if len(per_term) < need:
-                    return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-                sets.sort(key=len)
-                cand = sets[0]
-                for ids in sets[1:]:
-                    if len(cand) == 0:
-                        break
-                    at = np.searchsorted(ids, cand)
-                    cand = cand[ids[np.minimum(at, len(ids) - 1)] == cand]
-            else:
-                cand = np.unique(np.concatenate(sets))
-            if len(tomb) and len(cand):
-                at = np.searchsorted(tomb, cand)
-                cand = cand[tomb[np.minimum(at, len(tomb) - 1)] != cand]
-            return pd.DataFrame({"doc_id": cand})
-
-        relevant = self.postings.where(F.col("term").isin(present)).select(
-            "term", "shard", "df", "doc_ids"
-        )
-        return relevant.groupBy("shard").applyInPandas(
-            lambda _, pdf: per_shard(pdf), schema=out_schema
-        )
+        return self._match_frame(present, mode, out_schema, lambda ids: (ids,))
 
     def _terms_local_dict(self) -> dict | None:
         """The driver-side {term: df} map when the vocabulary is small
@@ -651,17 +488,15 @@ class Bm25Index:
 
         When the vocabulary is driver-cached (_df_for's TERMS_LOCAL_MAX
         policy — the same dict every query's df lookup probes), the
-        expansion is a dict scan with NO Spark job; large vocabularies
-        fall back to one tiny job over the cached terms table (startswith
-        compiles to a Catalyst StartsWith predicate with parquet
-        row-group pruning on the term-sorted files). The (df DESC, term
-        ASC) cap is the deterministic contract the SQL oracle reproduces
-        verbatim — identical on both paths by construction."""
+        expansion is serve.vocab_prefix with NO Spark job; large
+        vocabularies fall back to one tiny job over the cached terms table
+        (startswith compiles to a Catalyst StartsWith predicate with
+        parquet row-group pruning on the term-sorted files). The (df DESC,
+        term ASC) cap is the deterministic contract the SQL oracle
+        reproduces verbatim — identical on both paths by construction."""
         tl = self._terms_local_dict()
         if tl is not None:
-            hits = [(t, df) for t, df in tl.items() if t.startswith(prefix)]
-            hits.sort(key=lambda x: (-x[1], x[0]))
-            return [t for t, _ in hits[:max_expansions]]
+            return vocab_prefix(tl, prefix, max_expansions)
         rows = (
             self.terms.where(F.col("term").startswith(prefix))
             .orderBy(F.desc("df"), F.asc("term"))
@@ -696,22 +531,13 @@ class Bm25Index:
         (Levenshtein), ordered closest-first then highest-df (ties by
         ascending term), capped at ``max_expansions`` — the Lucene
         FuzzyQuery rewrite contract. When the vocabulary is driver-cached
-        (the _df_for dict), the length-banded scan + bounded edit-distance
-        run in-process with NO Spark job; large vocabularies keep the one
-        job over the cached terms table with a JVM-side levenshtein +
-        length pre-filter (|len difference| > d can never match)."""
+        (the _df_for dict), serve.vocab_fuzzy runs in-process with NO
+        Spark job; large vocabularies keep the one job over the cached
+        terms table with a JVM-side levenshtein + length pre-filter
+        (|len difference| > d can never match)."""
         tl = self._terms_local_dict()
         if tl is not None:
-            lo, hi = len(term) - max_distance, len(term) + max_distance
-            hits = []
-            for t, df in tl.items():
-                if not (lo <= len(t) <= hi):
-                    continue
-                d = _bounded_levenshtein(term, t, max_distance)
-                if d >= 0:
-                    hits.append((d, -df, t))
-            hits.sort()
-            return [t for _, _, t in hits[:max_expansions]]
+            return [t for _, _, t in vocab_fuzzy(tl, term, max_distance)[:max_expansions]]
         lit = F.lit(term)
         rows = (
             self.terms.where(
@@ -774,24 +600,18 @@ class Bm25Index:
           extra searchsorted per posting entry; selective filters shrink
           the WAND frontier and get FASTER than unfiltered topk.
         """
+        from .. import Koncorde
         from ..spark.percolate import percolate
 
         q_terms = sorted(set(tokenize_text(query)))
         if not q_terms:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b, block_size = meta["k1"], meta["b"], meta["block_size"]
-        dfs = self._df_for(q_terms)
-        idf_map = {t: float(bm25_idf(n_docs, df)) for t, df in dfs.items()}
+        idf_map = idf_for(self._df_for, q_terms, self.meta["n_docs"])
         if not idf_map:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
 
         # eligibility: percolate the docs METADATA against the one filter
         # (shard rides through keep_cols — no join back to the docs table)
-        from .. import Koncorde
-
         kon = Koncorde()
         kon.register(filters)
         elig = percolate(
@@ -813,35 +633,14 @@ class Bm25Index:
             "shard",
             "inner",
         )
+        decode = self._decoder(idf_map)
 
-        k1_, b_, bs_, avgdl_, k_ = k1, b, block_size, avgdl, k
-        idf_map_b = idf_map
-        tomb = self.tombstones
-        cctx = self._cache_ctx
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                     "score": pd.Series(dtype="float64")})
+        def body(rows: pd.DataFrame, pack_pdf: pd.DataFrame):
             prow = pack_pdf.iloc[0]
             allowed = delta_decode(bytes(prow["elig_ids"]), int(prow["elig_n"]))
-            by_term = _decode_shard_postings(
-                post_pdf, pack_pdf, idf_map_b, k1_, b_, avgdl_, bs_, tomb, cctx,
-                allowed=allowed.astype(np.int64),
-            )
-            tps = [tp for segs in by_term.values() for tp in segs]
-            ids, scores = topk_block_max_wand(tps, k_)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
+            return wand_topk(decode(rows, pack_pdf, allowed=allowed.astype(np.int64)), k)
 
-        relevant = self.postings.where(F.col("term").isin(list(idf_map))).select(
-            *self._wand_columns()
-        )
-        per_shard_topk = (
-            relevant.groupBy("shard")
-            .cogroup(packs.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_SCHEMA)
-        )
-        return per_shard_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        return _top(self._per_shard(idf_map, "wand", TOPK_SCHEMA, body, packs), k)
 
     def topk_phrase(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
         """Exact-phrase top-k over a POSITIONAL index (IndexConfig(
@@ -854,65 +653,24 @@ class Bm25Index:
         with in-slop occurrence count as tf.
 
         Plan shape mirrors topk: postings pruned to the phrase's terms
-        (parquet term pushdown), one cogroup with the dlpack per shard,
-        vectorized adjacency chaining in the kernel, global sort-limit
-        over ≤ shards·k rows. A phrase term absent from the global
-        vocabulary short-circuits to empty without a job."""
-        if not self.meta.get("positions"):
-            raise RuntimeError(
-                "phrase search requires a positional index — build with "
-                "IndexConfig(positions=True)"
-            )
-        toks = tokenize_text(phrase)
-        if not toks:
+        (parquet term pushdown), one cogroup with the dlpack per shard
+        (serve.phrase_shard), global sort-limit over ≤ shards·k rows. A
+        phrase term absent from the global vocabulary short-circuits to
+        empty without a job."""
+        require_positions(self.meta, "phrase search")
+        m = self.meta
+        plan = phrase_plan(phrase, self._df_for, m["n_docs"])
+        if plan is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        uniq = sorted(set(toks))
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b = meta["k1"], meta["b"]
-        dfs = self._df_for(uniq)
-        if len(dfs) < len(uniq):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        # repeated phrase tokens contribute one idf term per repetition
-        idf_sum = float(sum(bm25_idf(n_docs, dfs[t]) for t in toks))
-
-        toks_b, uniq_b, k_, slop_ = list(toks), set(uniq), k, slop
-        k1_, b_, avgdl_, idf_sum_ = k1, b, avgdl, idf_sum
-        tomb = self.tombstones
-        cctx = self._cache_ctx
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                  "score": pd.Series(dtype="float64")})
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for _, row in post_pdf.iterrows():
-                by_term.setdefault(row["term"], []).append(
-                    decode_entry_positions(
-                        bytes(row["doc_ids"]), bytes(row["tfs"]),
-                        bytes(row["pos"]), int(row["df"]),
-                    )
-                )
-            if len(by_term) < len(uniq_b):
-                return empty  # a phrase term missing from this shard
-            dl_ids, dl_vals = _decode_dlpack_ctx(pack_pdf, cctx)
-            merged = {t: merge_term_segments(v) for t, v in by_term.items()}
-            ids, scores = phrase_topk_shard(
-                [merged[t] for t in toks_b], idf_sum_, k1_, b_, avgdl_,
-                dl_ids, dl_vals, k_, tomb, slop=slop_,
-            )
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        relevant = self.postings.where(F.col("term").isin(uniq)).select(
-            "term", "shard", "df", "doc_ids", "tfs", "pos"
-        )
-        per_shard_topk = (
-            relevant.groupBy("shard")
-            .cogroup(self.dlpack.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_SCHEMA)
-        )
-        return per_shard_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        toks, uniq, idf_sum = plan
+        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
+        dl = partial(_decode_dlpack_ctx, cache_ctx=self._cache_ctx)
+        return _top(self._per_shard(
+            uniq, "pos", TOPK_SCHEMA,
+            lambda rows, pack: phrase_shard(
+                rows, dl(pack), toks, idf_sum, k1, b, avgdl, k, tomb, slop
+            ),
+        ), k)
 
     def topk_highlight(
         self, query: str, k: int = 10, window: int = 30
@@ -924,68 +682,19 @@ class Bm25Index:
         the standard multi-term BM25 sum — identical to ``topk`` (pinned
         by tests); terms absent from the vocabulary simply contribute
         nothing (unlike phrase, which requires all)."""
-        from .highlight import highlight_topk_shard
-
-        if not self.meta.get("positions"):
-            raise RuntimeError(
-                "highlighting requires a positional index — build with "
-                "IndexConfig(positions=True)"
-            )
-        toks = sorted(set(tokenize_text(query)))
-        dfs = self._df_for(toks)
-        present = [t for t in toks if t in dfs]
-        if not present:
+        require_positions(self.meta, "highlighting")
+        m = self.meta
+        idf = idf_for(self._df_for, sorted(set(tokenize_text(query))), m["n_docs"])
+        if not idf:
             return self.spark.createDataFrame([], HIGHLIGHT_SCHEMA)
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b = meta["k1"], meta["b"]
-        idf_by_term = {t: float(bm25_idf(n_docs, dfs[t])) for t in present}
-
-        k_, window_ = k, window
-        k1_, b_, avgdl_ = k1, b, avgdl
-        tomb = self.tombstones
-        cctx = self._cache_ctx
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                    "snip_start": pd.Series(dtype="int64"),
-                    "snip_hits": pd.Series(dtype="int64"),
-                }
-            )
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for _, row in post_pdf.iterrows():
-                by_term.setdefault(row["term"], []).append(
-                    decode_entry_positions(
-                        bytes(row["doc_ids"]), bytes(row["tfs"]),
-                        bytes(row["pos"]), int(row["df"]),
-                    )
-                )
-            dl_ids, dl_vals = _decode_dlpack_ctx(pack_pdf, cctx)
-            here = sorted(by_term)
-            per_term = [merge_term_segments(by_term[t]) for t in here]
-            ids, scores, starts, hits = highlight_topk_shard(
-                per_term, [idf_by_term[t] for t in here], k1_, b_, avgdl_,
-                dl_ids, dl_vals, k_, window_, tomb,
-            )
-            return pd.DataFrame(
-                {"doc_id": ids, "score": scores,
-                 "snip_start": starts, "snip_hits": hits}
-            )
-
-        relevant = self.postings.where(F.col("term").isin(present)).select(
-            "term", "shard", "df", "doc_ids", "tfs", "pos"
-        )
-        per_shard = (
-            relevant.groupBy("shard")
-            .cogroup(self.dlpack.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=HIGHLIGHT_SCHEMA)
-        )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
+        dl = partial(_decode_dlpack_ctx, cache_ctx=self._cache_ctx)
+        return _top(self._per_shard(
+            idf, "pos", HIGHLIGHT_SCHEMA,
+            lambda rows, pack: highlight_shard(
+                rows, dl(pack), idf, k1, b, avgdl, k, window, tomb
+            ),
+        ), k)
 
     def topk_boolean(
         self,
@@ -1001,76 +710,21 @@ class Bm25Index:
         (must_not never contributes). Clause entries are tokenized, so
         multi-word strings flatten into their terms; ``boosts`` keys are
         canonical tokens. One pruned postings scan over all three term
-        sets, per-shard exact evaluation (highlight.boolean_topk_shard),
-        global sort-limit."""
-        must_t = sorted({t for s in (must or []) for t in tokenize_text(s)})
-        should_t = sorted({t for s in (should or []) for t in tokenize_text(s)})
-        not_t = sorted({t for s in (must_not or []) for t in tokenize_text(s)})
-        score_t = sorted(set(must_t) | set(should_t))
-        if not score_t:
+        sets, per-shard exact evaluation (serve.boolean_shard), global
+        sort-limit."""
+        m = self.meta
+        plan = boolean_plan(must, should, must_not, boosts, self._df_for, m["n_docs"])
+        if plan is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        dfs = self._df_for(sorted(set(score_t) | set(not_t)))
-        if any(t not in dfs for t in must_t):
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        score_present = [t for t in score_t if t in dfs]
-        if not score_present:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b = meta["k1"], meta["b"]
-        boosts_ = {t: float((boosts or {}).get(t, 1.0)) for t in score_present}
-        idf_by_term = {
-            t: boosts_[t] * float(bm25_idf(n_docs, dfs[t])) for t in score_present
-        }
-        scan_terms = sorted(set(score_present) | {t for t in not_t if t in dfs})
-
-        must_b, score_b, not_b = list(must_t), list(score_present), list(not_t)
-        k_, k1_, b_, avgdl_ = k, k1, b, avgdl
-        tomb = self.tombstones
-        cctx = self._cache_ctx
-
-        from .highlight import boolean_topk_shard
-        from .phrase import TermOccurrences as _TO
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                  "score": pd.Series(dtype="float64")})
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return empty
-            by_term: dict[str, list] = {}
-            for _, row in post_pdf.iterrows():
-                n = int(row["df"])
-                ids = delta_decode(bytes(row["doc_ids"]), n).astype(np.int64)
-                tfs = varint_decode(bytes(row["tfs"]), n).astype(np.int64)
-                occ_off = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-                by_term.setdefault(row["term"], []).append(
-                    _TO(ids, occ_off, np.empty(0, dtype=np.int64))
-                )
-            if any(t not in by_term for t in must_b):
-                return empty  # a required term absent from this shard
-            dl_ids, dl_vals = _decode_dlpack_ctx(pack_pdf, cctx)
-            score_terms, score_idfs = [], []
-            for t in score_b:
-                for seg in by_term.get(t, []):
-                    score_terms.append(seg)
-                    score_idfs.append(idf_by_term[t])
-            ids, scores = boolean_topk_shard(
-                [by_term[t] for t in must_b],
-                score_terms, score_idfs,
-                [seg for t in not_b for seg in by_term.get(t, [])],
-                k1_, b_, avgdl_, dl_ids, dl_vals, k_, tomb,
-            )
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        relevant = self.postings.where(F.col("term").isin(scan_terms)).select(
-            "term", "shard", "df", "doc_ids", "tfs"
-        )
-        per_shard = (
-            relevant.groupBy("shard")
-            .cogroup(self.dlpack.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_SCHEMA)
-        )
-        return per_shard.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        must_t, idf, not_t, scan = plan
+        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
+        dl = partial(_decode_dlpack_ctx, cache_ctx=self._cache_ctx)
+        return _top(self._per_shard(
+            scan, "tf", TOPK_SCHEMA,
+            lambda rows, pack: boolean_shard(
+                rows, dl(pack), must_t, idf, not_t, k1, b, avgdl, k, tomb
+            ),
+        ), k)
 
     def topk_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Top-k per query for a BATCH of queries in ONE Spark job.
@@ -1094,56 +748,24 @@ class Bm25Index:
         all_terms = sorted({t for ts in q_terms.values() for t in ts})
         if not all_terms:
             return self.spark.createDataFrame([], TOPK_MANY_SCHEMA)
-
-        meta = self.meta
-        n_docs, avgdl = meta["n_docs"], meta["avgdl"]
-        k1, b, block_size = meta["k1"], meta["b"], meta["block_size"]
-        dfs = self._df_for(all_terms)
-        idf_map = {t: float(bm25_idf(n_docs, df)) for t, df in dfs.items()}
+        idf_map = idf_for(self._df_for, all_terms, self.meta["n_docs"])
         if not idf_map:
             return self.spark.createDataFrame([], TOPK_MANY_SCHEMA)
         q_terms = {
             qid: [t for t in ts if t in idf_map] for qid, ts in q_terms.items()
         }
+        decode = self._decoder(idf_map)
 
-        relevant = self.postings.where(F.col("term").isin(list(idf_map))).select(
-            *self._wand_columns()
-        )
-        k1_, b_, bs_, avgdl_, k_ = k1, b, block_size, avgdl, k
-        idf_map_b, q_terms_b = idf_map, q_terms
-        tomb = self.tombstones
-        cctx = self._cache_ctx
-
-        def cogrouped(post_pdf: pd.DataFrame, pack_pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="object"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
-            if len(post_pdf) == 0 or len(pack_pdf) == 0:
-                return empty
-            by_term = _decode_shard_postings(
-                post_pdf, pack_pdf, idf_map_b, k1_, b_, avgdl_, bs_, tomb, cctx
-            )
-            frames = []
-            for qid, ts in q_terms_b.items():
-                tps = [tp for t in ts if t in by_term for tp in by_term[t]]
-                if not tps:
-                    continue
-                ids, scores = topk_block_max_wand(tps, k_)
+        def body(rows: pd.DataFrame, pack: pd.DataFrame):
+            by_term = decode(rows, pack)
+            parts = []
+            for qid, ts in q_terms.items():
+                ids, scores = wand_topk({t: by_term[t] for t in ts if t in by_term}, k)
                 if len(ids):
-                    frames.append(
-                        pd.DataFrame({"query_id": qid, "doc_id": ids, "score": scores})
-                    )
-            return pd.concat(frames, ignore_index=True) if frames else empty
+                    parts.append((np.full(len(ids), qid, dtype=object), ids, scores))
+            return tuple(np.concatenate(c) for c in zip(*parts)) if parts else None
 
-        per_shard = (
-            relevant.groupBy("shard")
-            .cogroup(self.dlpack.groupBy("shard"))
-            .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=TOPK_MANY_SCHEMA)
-        )
+        per_shard = self._per_shard(idf_map, "wand", TOPK_MANY_SCHEMA, body)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             per_shard.withColumn("__rn", F.row_number().over(w))

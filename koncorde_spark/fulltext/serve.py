@@ -1,16 +1,28 @@
-"""Spark-free low-latency BM25 serving over a built index.
+"""Spark-free low-latency BM25 serving over a built index, and the ONE
+per-shard implementation of every search operator.
+
+Per-shard bodies live here and nowhere else: the segment decode
+(``decode_segments`` / ``segment_postings``), the any/all WAND dispatch
+(``wand_topk``), the count set arithmetic (``match_ids``), the boolean,
+phrase, highlight and multi-term / multi-field bodies (``*_shard``), the
+Levenshtein DP and the vocabulary scans. Each body takes ONE shard's
+postings rows — a pandas frame inside a Spark cogroup, a column dict here
+— sorts them by term and returns that shard's (ids, scores), plus
+snippets for highlight. ``Bm25Index`` (query.py) and ``MultiFieldSearch``
+(multifield.py) only build plans: the pruned scan of ``postings_columns``,
+the cogroup with the dlpack and the global sort-limit. ``LocalSearcher``
+and ``LocalMultiFieldSearcher`` run the same bodies in-process, so the two
+tiers are bit-identical by construction. Postings are decoded through
+this module's ``delta_decode`` / ``varint_decode`` names.
 
 The distributed job (indexer.py) builds the index; serving top-k queries
 does not need a Spark job at all — a query touches only the posting rows
 of its terms. LocalSearcher reads those rows straight from the postings
 parquet with pyarrow (dataset filter on ``term`` → row-group pruning via
-the term-sorted files) and scores them with the same block-max WAND
-kernel the distributed path uses, so results are bit-identical to
-``Bm25Index.topk`` by construction.
-
-At cluster scale this is the "searcher" tier: each searcher process maps
-a subset of shard directories; here one process serves all shards.
-p50/p95 latencies are milliseconds (vs ~1s for a Spark job round-trip).
+the term-sorted files). At cluster scale this is the "searcher" tier:
+each searcher process maps a subset of shard directories; here one
+process serves all shards. p50/p95 latencies are milliseconds (vs ~1s
+for a Spark job round-trip).
 """
 
 from __future__ import annotations
@@ -21,7 +33,14 @@ import numpy as np
 import pyarrow.dataset as ds
 
 from .codecs import delta_decode, varint_decode
-from .indexer import read_meta
+from .highlight import boolean_topk_shard, highlight_topk_shard, multiterm_scores
+from .indexer import _decode_dlpack, read_meta
+from .phrase import (
+    TermOccurrences,
+    decode_entry_positions,
+    merge_term_segments,
+    phrase_topk_shard,
+)
 from .tokenizer import tokenize_text
 from .wand import (
     TermPostings,
@@ -30,6 +49,330 @@ from .wand import (
     topk_block_max_wand,
     topk_conjunctive,
 )
+
+_NO_POS = np.empty(0, dtype=np.int64)
+
+# ---------------------------------------------------------------------------
+# per-shard operator bodies (shared by the Spark tier and the serve tier)
+# ---------------------------------------------------------------------------
+
+# postings columns each kind of body decodes — both tiers scan exactly
+# these, so a positions=True index never ships its dominant per-entry
+# `pos` payload to an operator that does not read it
+_COLUMNS = {
+    "match": ("term", "df", "doc_ids"),
+    "tf": ("term", "df", "doc_ids", "tfs"),
+    "pos": ("term", "df", "doc_ids", "tfs", "pos"),
+    "wand": ("term", "df", "doc_ids", "tfs", "block_last", "block_max"),
+}
+
+
+def postings_columns(kind: str, available) -> list[str]:
+    """Postings columns (besides ``shard``) a ``kind`` of body decodes:
+    "match" (count / matching_ids), "tf" (boolean, multi-term), "pos"
+    (phrase, highlight) or "wand" (the top-k family; plus ``avgdl_seg``
+    when the index has it)."""
+    cols = list(_COLUMNS[kind])
+    if kind == "wand" and "avgdl_seg" in available:
+        cols.append("avgdl_seg")
+    return cols
+
+
+def _rows_by_term(rows, cols: tuple[str, ...]) -> list[tuple]:
+    """One shard's postings rows as ``(term, *cols)`` tuples in canonical
+    TERM order (absent columns read None). A doc's float64 score is a sum
+    in concatenation order, and rows arrive in shuffle-fetch order (Spark,
+    different between two jobs) or file order (serve), so every body sorts
+    before it accumulates. The sort is stable; segments of one term are
+    doc-disjoint, so their relative order never changes a score."""
+    n = len(rows["term"])
+    recs = list(zip(*(rows[c] if c in rows else [None] * n for c in ("term", *cols))))
+    recs.sort(key=lambda r: r[0])
+    return recs
+
+
+def _member(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Mask of the ``ids`` present in the non-empty sorted array."""
+    at = np.searchsorted(sorted_ids, ids)
+    return sorted_ids[np.minimum(at, len(sorted_ids) - 1)] == ids
+
+
+def decode_segments(
+    rows,
+    dl: tuple[np.ndarray, np.ndarray],
+    k1: float,
+    b: float,
+    avgdl: float,
+    block_size: int,
+    tombstones: np.ndarray | None = None,
+    allowed: np.ndarray | None = None,
+) -> list[tuple[str, tuple]]:
+    """One shard's "wand" rows as idf-INDEPENDENT segments in canonical
+    term order: ``[(term, (ids, tfpart, block_last, ub_base, bscale))]``.
+
+    A (term, shard) may own SEVERAL segment rows (hot-term salts, append
+    generations); BM25 is additive per entry, so each stays its own
+    segment — collapsing them per term would drop postings.
+
+    ``tombstones`` / ``allowed`` (sorted doc_ids) drop deleted entries /
+    keep only eligible ones (a filtered search). A filtered segment's
+    block metadata is REBUILT from the surviving tf-parts (block arrays
+    are addressed by entry position, so filtering without a rebuild would
+    misalign the WAND skip bounds) and its bscale is None. Otherwise the
+    stored block_max is kept with bscale = max(1, avgdl / avgdl_seg):
+    appends that raise the corpus avgdl can lift a tf-part above the
+    build-time block max, and that ratio is the sup of the lift, so the
+    bound stays valid and WAND exact."""
+    if allowed is not None and len(allowed) == 0:
+        return []
+    dl_ids, dl_vals = dl
+    out = []
+    for term, n, ids_b, tfs_b, blast, bmax, seg in _rows_by_term(
+        rows, ("df", "doc_ids", "tfs", "block_last", "block_max", "avgdl_seg")
+    ):
+        n = int(n)
+        ids = delta_decode(bytes(ids_b), n).astype(np.int64)
+        tfs = varint_decode(bytes(tfs_b), n).astype(np.float64)
+        dls = dl_vals[np.searchsorted(dl_ids, ids)]
+        tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+        keep = None
+        if tombstones is not None and len(tombstones):
+            alive = ~_member(tombstones, ids)
+            if not alive.all():
+                keep = alive
+        if allowed is not None:
+            elig = _member(allowed, ids)
+            if not elig.all():
+                keep = elig if keep is None else (keep & elig)
+        if keep is None:
+            bscale = max(1.0, avgdl / float(seg)) if seg and seg > 0 else 1.0
+            out.append((term, (
+                ids, tfpart, np.asarray(blast, dtype=np.int64),
+                np.asarray(bmax, dtype=np.float64), bscale,
+            )))
+            continue
+        ids, tfpart = ids[keep], tfpart[keep]
+        if len(ids) == 0:
+            continue
+        starts = np.arange(0, len(ids), block_size)
+        out.append((term, (
+            ids, tfpart, ids[np.minimum(starts + block_size - 1, len(ids) - 1)],
+            np.maximum.reduceat(tfpart, starts), None,
+        )))
+    return out
+
+
+def segment_postings(seg: tuple, idf: float, block_size: int) -> TermPostings:
+    """A decoded segment scored for one idf: scores = idf·tfpart; bounds
+    = idf·ub_base for rebuilt blocks (idf·max(x) == max(idf·x) exactly: a
+    positive scalar multiply is monotone) or (idf·bscale)·block_max for
+    stored ones. Every caller goes through here, so cached and uncached
+    scoring round identically."""
+    ids, tfpart, blast, ub_base, bscale = seg
+    ub = idf * ub_base if bscale is None else (idf * bscale) * ub_base
+    return TermPostings(ids, idf * tfpart, blast, ub, block_size)
+
+
+def wand_topk(
+    by_term: dict[str, list[TermPostings]],
+    k: int,
+    require: int | None = None,
+    after: tuple[float, int] | None = None,
+    stats: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-shard top-k over ``{term: segments}`` (term-sorted): block-max
+    WAND over every segment, or — with ``require`` — the conjunctive
+    kernel over docs holding that many terms. ``after`` is a validated
+    search-after cursor; ``stats`` collects WAND pruning counters."""
+    if require is not None:
+        return topk_conjunctive(by_term, k, require=require, after=after)
+    tps = [tp for segs in by_term.values() for tp in segs]
+    return topk_block_max_wand(tps, k, after=after, stats=stats)
+
+
+def idf_for(df_for, terms: list[str], n_docs: int) -> dict[str, float]:
+    """{term: BM25 idf} for the ``terms`` that ``df_for`` finds in the
+    vocabulary, in ``terms`` order."""
+    return {t: float(bm25_idf(n_docs, df)) for t, df in df_for(terms).items()}
+
+
+def match_terms(query: str, mode: str, df_for) -> list[str] | None:
+    """Sorted present terms of a count / matching_ids query, or None when
+    nothing can match (no term in the vocabulary; in mode "all", any)."""
+    if mode not in ("any", "all"):
+        raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
+    toks = sorted(set(tokenize_text(query)))
+    dfs = df_for(toks)
+    present = [t for t in toks if t in dfs]
+    if not present or (mode == "all" and len(present) < len(toks)):
+        return None
+    return present
+
+
+def match_ids(rows, mode: str, need: int, tombstones: np.ndarray) -> np.ndarray:
+    """Sorted live doc_ids of one shard matching a query's ``need``
+    present terms: their union ("any") or their intersection ("all";
+    empty when a term is absent from the shard). No scoring."""
+    per_term: dict[str, list[np.ndarray]] = {}
+    for term, n, ids_b in _rows_by_term(rows, ("df", "doc_ids")):
+        per_term.setdefault(term, []).append(
+            delta_decode(bytes(ids_b), int(n)).astype(np.int64)
+        )
+    sets = [np.sort(np.concatenate(v)) if len(v) > 1 else v[0] for v in per_term.values()]
+    if mode == "all":
+        if len(sets) < need:
+            return np.empty(0, dtype=np.int64)
+        sets.sort(key=len)
+        cand = sets[0]
+        for ids in sets[1:]:
+            if len(cand) == 0:
+                break
+            cand = cand[_member(ids, cand)]
+    else:
+        cand = np.unique(np.concatenate(sets))
+    if len(tombstones) and len(cand):
+        cand = cand[~_member(tombstones, cand)]
+    return cand
+
+
+def _occurrences(rows, positions: bool) -> dict[str, list[TermOccurrences]]:
+    """One shard's "tf" (or, with ``positions``, "pos") rows decoded into
+    per-term segment lists, in canonical term order."""
+    out: dict[str, list[TermOccurrences]] = {}
+    if positions:
+        for term, n, ids_b, tfs_b, pos_b in _rows_by_term(rows, ("df", "doc_ids", "tfs", "pos")):
+            out.setdefault(term, []).append(
+                decode_entry_positions(bytes(ids_b), bytes(tfs_b), bytes(pos_b), int(n))
+            )
+        return out
+    for term, n, ids_b, tfs_b in _rows_by_term(rows, ("df", "doc_ids", "tfs")):
+        n = int(n)
+        tfs = varint_decode(bytes(tfs_b), n).astype(np.int64)
+        out.setdefault(term, []).append(TermOccurrences(
+            delta_decode(bytes(ids_b), n).astype(np.int64),
+            np.concatenate(([0], np.cumsum(tfs))).astype(np.int64),
+            _NO_POS,
+        ))
+    return out
+
+
+def require_positions(meta: dict, what: str) -> None:
+    if not meta.get("positions"):
+        raise RuntimeError(
+            f"{what} requires a positional index — build with "
+            "IndexConfig(positions=True)"
+        )
+
+
+def boolean_plan(must, should, must_not, boosts, df_for, n_docs: int):
+    """Term sets of a boolean query — (must terms, boost-scaled idf per
+    scored term, must_not terms, scan terms) — or None when it can match
+    nothing: no scored term, a must term outside the vocabulary, or no
+    scored term inside it. Clause strings are tokenized; ``boosts`` keys
+    are canonical tokens."""
+    must_t = sorted({t for s in (must or []) for t in tokenize_text(s)})
+    should_t = sorted({t for s in (should or []) for t in tokenize_text(s)})
+    not_t = sorted({t for s in (must_not or []) for t in tokenize_text(s)})
+    score_t = sorted(set(must_t) | set(should_t))
+    if not score_t:
+        return None
+    dfs = df_for(sorted(set(score_t) | set(not_t)))
+    score_present = [t for t in score_t if t in dfs]
+    if any(t not in dfs for t in must_t) or not score_present:
+        return None
+    idf = {
+        t: float((boosts or {}).get(t, 1.0)) * float(bm25_idf(n_docs, dfs[t]))
+        for t in score_present
+    }
+    scan = sorted(set(score_present) | {t for t in not_t if t in dfs})
+    return must_t, idf, not_t, scan
+
+
+def boolean_shard(rows, dl, must, idf, must_not, k1, b, avgdl, k, tombstones):
+    """One shard of a boolean query (highlight.boolean_topk_shard): docs
+    holding every ``must`` term and no ``must_not`` term, scored by the
+    ``idf`` (boost-scaled) terms; None when a must term misses the shard."""
+    by_term = _occurrences(rows, positions=False)
+    if any(t not in by_term for t in must):
+        return None
+    score_terms, score_idfs = [], []
+    for t, w in idf.items():
+        for seg in by_term.get(t, ()):
+            score_terms.append(seg)
+            score_idfs.append(w)
+    return boolean_topk_shard(
+        [by_term[t] for t in must], score_terms, score_idfs,
+        [seg for t in must_not for seg in by_term.get(t, ())],
+        k1, b, avgdl, *dl, k, tombstones,
+    )
+
+
+def phrase_plan(phrase: str, df_for, n_docs: int):
+    """(phrase tokens, distinct tokens, idf sum) or None when a token is
+    outside the vocabulary. A repeated token adds its idf once per
+    repetition."""
+    toks = tokenize_text(phrase)
+    if not toks:
+        return None
+    uniq = sorted(set(toks))
+    dfs = df_for(uniq)
+    if len(dfs) < len(uniq):
+        return None
+    return toks, uniq, float(sum(bm25_idf(n_docs, dfs[t]) for t in toks))
+
+
+def phrase_shard(rows, dl, toks, idf_sum, k1, b, avgdl, k, tombstones, slop):
+    """One shard of a phrase (slop 0) or proximity (slop > 0) query
+    (phrase.phrase_topk_shard); None when a token misses the shard."""
+    by_term = _occurrences(rows, positions=True)
+    if len(by_term) < len(set(toks)):
+        return None
+    merged = {t: merge_term_segments(v) for t, v in by_term.items()}
+    return phrase_topk_shard(
+        [merged[t] for t in toks], idf_sum, k1, b, avgdl, *dl, k, tombstones,
+        slop=slop,
+    )
+
+
+def highlight_shard(rows, dl, idf, k1, b, avgdl, k, window, tombstones):
+    """One shard's (ids, scores, snip_start, snip_hits) top-k
+    (highlight.highlight_topk_shard), terms in canonical order."""
+    by_term = _occurrences(rows, positions=True)
+    return highlight_topk_shard(
+        [merge_term_segments(v) for v in by_term.values()],
+        [idf[t] for t in by_term], k1, b, avgdl, *dl, k, window, tombstones,
+    )
+
+
+def multiterm_shard(rows, dl, idf, k1, b, avgdl, tombstones):
+    """(sorted candidate ids, BM25 sums) of one shard with no skipping
+    (highlight.multiterm_scores), every segment row added in canonical
+    term order — so the bits never depend on the order rows arrive."""
+    by_term = _occurrences(rows, positions=False)
+    return multiterm_scores(
+        [seg for segs in by_term.values() for seg in segs],
+        [idf[t] for t, segs in by_term.items() for _ in segs],
+        k1, b, avgdl, *dl, tombstones,
+    )
+
+
+def multifield_shard(fields, k1: float, b: float, k: int):
+    """One shard's weighted multi-field top-k: ``fields`` yields (rows,
+    dl, idf, avgdl, weight, tombstones) per field in sorted field order;
+    each field's multi-term scores are weight-scaled and summed per doc
+    (bincount adds in field order). None when no field matches."""
+    id_parts, sc_parts = [], []
+    for rows, dl, idf, avgdl, weight, tombstones in fields:
+        cand, sc = multiterm_shard(rows, dl, idf, k1, b, avgdl, tombstones)
+        if len(cand):
+            id_parts.append(cand)
+            sc_parts.append(weight * sc)
+    if not id_parts:
+        return None
+    uids, inv = np.unique(np.concatenate(id_parts), return_inverse=True)
+    tot = np.bincount(inv, weights=np.concatenate(sc_parts))
+    order = np.lexsort((uids, -tot))[:k]
+    return uids[order], tot[order]
 
 
 def _levenshtein_capped(a: str, b: str, cap: int) -> int | None:
@@ -59,6 +402,47 @@ def _levenshtein_capped(a: str, b: str, cap: int) -> int | None:
     return prev[lb] if prev[lb] <= cap else None
 
 
+def vocab_prefix(vocab: dict, prefix: str, max_expansions: int) -> list[str]:
+    """In-memory prefix expansion of a {term: df} vocabulary: (df DESC,
+    term ASC), capped — the contract the SQL oracle reproduces."""
+    hits = [(t, df) for t, df in vocab.items() if t.startswith(prefix)]
+    hits.sort(key=lambda x: (-x[1], x[0]))
+    return [t for t, _ in hits[:max_expansions]]
+
+
+def vocab_fuzzy(vocab: dict, term: str, max_distance: int) -> list[tuple]:
+    """(distance, -df, term) for the vocabulary terms within
+    ``max_distance`` edits of ``term``, sorted — closest first, then
+    highest df, then term. The length band is a lower bound on the edit
+    distance, so it skips the DP for most terms."""
+    hits = []
+    for t, df in vocab.items():
+        if abs(len(t) - len(term)) > max_distance:
+            continue
+        d = _levenshtein_capped(term, t, max_distance)
+        if d is not None:
+            hits.append((d, -df, t))
+    hits.sort()
+    return hits
+
+
+def _global_topk(parts, k: int) -> list[tuple]:
+    """The serve tier's global sort-limit: per-shard column tuples
+    (ids, scores, *extra) — None for a shard with nothing — cut to the
+    top k by (score DESC, doc_id ASC), as Python tuples."""
+    parts = [p for p in parts if p is not None]
+    if not parts:
+        return []
+    cols = [np.concatenate(c) for c in zip(*parts)]
+    order = np.lexsort((cols[0], -cols[1]))[:k]
+    return list(zip(*(c[order].tolist() for c in cols)))
+
+
+# ---------------------------------------------------------------------------
+# serve tier
+# ---------------------------------------------------------------------------
+
+
 def _local_tombstones(index_dir: str) -> "np.ndarray":
     path = os.path.join(index_dir, "tombstones")
     if not os.path.exists(path):
@@ -81,29 +465,23 @@ class LocalSearcher:
         # term → global df (small: one row per distinct term)
         tbl = ds.dataset(os.path.join(index_dir, "terms"), format="parquet").to_table()
         self._df = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-        # per-shard doc-length packs, decoded once
         self._tombstones = _local_tombstones(index_dir)
-        # decoded term-segment cache: term → [(shard, ids, tfpart, blast,
-        # ub_base)] with tombstones applied and block metadata rebuilt —
-        # everything idf-INDEPENDENT, so a query multiplies by its own idf
-        # (scores = idf·tfpart, bounds = idf·ub_base: exactly the uncached
-        # arithmetic). Same decode-once discipline as self._dl and the job
-        # tier's worker caches; bounded by _SEG_CACHE_MAX_TERMS. The cache
-        # is PER-HANDLE state — a reopened searcher (the reader-reopen
+        # decoded term-segment cache: term → [(shard, segment)], segments as
+        # decode_segments returns them (tombstones applied, block metadata
+        # rebuilt) — everything idf-INDEPENDENT, so a query scores them
+        # with its own idf through segment_postings, exactly the uncached
+        # arithmetic. Bounded by _SEG_CACHE_MAX_TERMS. The cache is
+        # PER-HANDLE state — a reopened searcher (the reader-reopen
         # contract after append/compact) starts empty.
         self._seg_cache: dict[str, list[tuple]] = {}
-        pack = ds.dataset(os.path.join(index_dir, "dlpack"), format="parquet").to_table()
-        self._dl: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for shard, n, ids_b, dls_b in zip(
-            pack["shard"].to_pylist(),
-            pack["n"].to_pylist(),
-            pack["doc_ids"].to_pylist(),
-            pack["dls"].to_pylist(),
-        ):
-            self._dl[int(shard)] = (
-                delta_decode(bytes(ids_b), int(n)).astype(np.int64),
-                varint_decode(bytes(dls_b), int(n)).astype(np.float64),
-            )
+        # per-shard doc-length packs, decoded once
+        pack = ds.dataset(
+            os.path.join(index_dir, "dlpack"), format="parquet"
+        ).to_table().to_pandas()
+        self._dl: dict[int, tuple[np.ndarray, np.ndarray]] = {
+            int(shard): _decode_dlpack(pack.iloc[[i]], None)
+            for i, shard in enumerate(pack["shard"])
+        }
 
     def _df_for(self, q_terms: list[str]) -> dict[str, int]:
         """term → global df for the present query terms — the same
@@ -111,20 +489,34 @@ class LocalSearcher:
         combined_stats treats both tiers uniformly."""
         return {t: int(self._df[t]) for t in q_terms if t in self._df}
 
+    def _shard_rows(self, terms: list[str], kind: str) -> dict[int, dict]:
+        """{shard: {column: values}} of the postings rows of ``terms``,
+        with exactly the ``kind`` columns of postings_columns — the serve
+        tier's side of the Spark shard cogroup."""
+        cols = postings_columns(kind, self._postings.schema.names)
+        tbl = self._postings.to_table(
+            filter=ds.field("term").isin(terms), columns=["shard", *cols]
+        ).to_pydict()
+        out: dict[int, dict] = {}
+        for i, shard in enumerate(tbl["shard"]):
+            rows = out.setdefault(int(shard), {c: [] for c in cols})
+            for c in cols:
+                rows[c].append(tbl[c][i])
+        return out
+
     def topk(
         self, query: str, k: int = 10, mode: str = "any",
         after: tuple[float, int] | None = None,
     ) -> list[tuple[int, float]]:
         """Top-k (doc_id, score), ties broken by ascending doc_id —
         rank-identical to the distributed Bm25Index.topk path (both
-        modes: the conjunctive path shares wand.topk_conjunctive).
-        ``after``: (score, doc_id) search-after cursor, same contract as
-        Bm25Index.topk — returns the next k ranks strictly after it."""
+        modes share wand_topk). ``after``: (score, doc_id) search-after
+        cursor, same contract as Bm25Index.topk — returns the next k
+        ranks strictly after it."""
         if mode not in ("any", "all"):
             raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
         q_terms = sorted(set(tokenize_text(query)))
-        idf = {t: float(bm25_idf(self.meta["n_docs"], self._df[t]))
-               for t in q_terms if t in self._df}
+        idf = idf_for(self._df_for, q_terms, self.meta["n_docs"])
         if not idf or (mode == "all" and len(idf) < len(q_terms)):
             return []
         return self._topk_with_idf(idf, k, mode, after)
@@ -136,8 +528,7 @@ class LocalSearcher:
         wand.topk_block_max_wand ``stats``) — WAND-skip evidence for a
         query, per process rather than per claim."""
         q_terms = sorted(set(tokenize_text(query)))
-        idf = {t: float(bm25_idf(self.meta["n_docs"], self._df[t]))
-               for t in q_terms if t in self._df}
+        idf = idf_for(self._df_for, q_terms, self.meta["n_docs"])
         if not idf:
             return [], {}
         stats: dict = {}
@@ -155,72 +546,25 @@ class LocalSearcher:
 
     def _ensure_segments(self, terms: list[str]) -> None:
         """Decode (once) the postings segments of any ``terms`` missing
-        from the per-handle cache. Stored per segment: (shard, ids,
-        tfpart, block_last, ub_base) — tombstones already applied, block
-        metadata rebuilt where filtering changed entry positions, and the
-        avgdl_seg bound correction folded into ub_base, so per-query
-        arithmetic is exactly scores = idf·tfpart / bounds = idf·ub_base
-        (bit-identical to the uncached path by associativity of the
-        scalar factor)."""
+        from the per-handle cache, with decode_segments — the Spark
+        decode's segment function."""
         missing = [t for t in terms if t not in self._seg_cache]
         if not missing:
             return
-        k1, b = self.meta["k1"], self.meta["b"]
-        avgdl, bs = self.meta["avgdl"], self.meta["block_size"]
-        cols = ["term", "shard", "df", "doc_ids", "tfs", "block_last", "block_max"]
-        if "avgdl_seg" in self._postings.schema.names:
-            cols.append("avgdl_seg")
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(missing), columns=cols
-        )
+        m = self.meta
         for t in missing:
             self._seg_cache[t] = []  # absent-from-postings terms cache []
-        tomb = self._tombstones
-        for i in range(tbl.num_rows):
-            term = tbl["term"][i].as_py()
-            shard = int(tbl["shard"][i].as_py())
-            n = int(tbl["df"][i].as_py())
-            ids = delta_decode(bytes(tbl["doc_ids"][i].as_py()), n).astype(np.int64)
-            tfs = varint_decode(bytes(tbl["tfs"][i].as_py()), n).astype(np.float64)
-            dl_ids, dl_vals = self._dl[shard]
-            dls = dl_vals[np.searchsorted(dl_ids, ids)]
-            tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-            # same avgdl-shift bound correction as the Spark path (keeps
-            # the two tiers bit-identical across appends)
-            seg = tbl["avgdl_seg"][i].as_py() if "avgdl_seg" in tbl.column_names else None
-            bscale = max(1.0, avgdl / float(seg)) if seg else 1.0
-            if len(tomb):
-                pos = np.searchsorted(tomb, ids)
-                keep = tomb[np.minimum(pos, len(tomb) - 1)] != ids
-                if not keep.all():
-                    ids, tfpart = ids[keep], tfpart[keep]
-                    if len(ids) == 0:
-                        continue
-                    # rebuild position-addressed block metadata (exact)
-                    nb = (len(ids) + bs - 1) // bs
-                    starts = np.arange(nb) * bs
-                    self._seg_cache[term].append(
-                        (
-                            shard, ids, tfpart,
-                            ids[np.minimum(starts + bs - 1, len(ids) - 1)],
-                            np.maximum.reduceat(tfpart, starts),
-                            None,
-                        )
-                    )
-                    continue
-            self._seg_cache[term].append(
-                (
-                    shard, ids, tfpart,
-                    np.asarray(tbl["block_last"][i].as_py(), dtype=np.int64),
-                    np.asarray(tbl["block_max"][i].as_py()),
-                    bscale,
-                )
-            )
+        for shard, rows in self._shard_rows(missing, "wand").items():
+            for term, seg in decode_segments(
+                rows, self._dl[shard], m["k1"], m["b"], m["avgdl"],
+                m["block_size"], self._tombstones,
+            ):
+                self._seg_cache[term].append((shard, seg))
         protected = set(terms)
 
         def total_entries():
             return sum(
-                len(seg[1]) for segs in self._seg_cache.values() for seg in segs
+                len(seg[0]) for segs in self._seg_cache.values() for _, seg in segs
             )
 
         if (
@@ -252,184 +596,50 @@ class LocalSearcher:
         bs = self.meta["block_size"]
         self._ensure_segments(list(idf))
         by_shard: dict[int, dict[str, list[TermPostings]]] = {}
-        # canonical term order — same rule as _decode_shard_postings: the
-        # per-doc float64 sum must accumulate terms in a job-independent
-        # order for cross-tier and cross-page bit-parity (segment order
-        # within a term is per-doc irrelevant: segments are doc-disjoint)
+        # canonical term order, as decode_segments hands it to the Spark tier
         for term in sorted(idf):
-            for shard, ids, tfpart, blast, ub_arr, bscale in self._seg_cache.get(term, ()):
-                # bscale None = tombstone-rebuilt bounds (reduceat of
-                # tfpart): idf·max(x) == max(idf·x) exactly (monotone
-                # scalar multiply). bscale set = stored block_max: keep
-                # the original fl(idf·bscale)·bm rounding order so bounds
-                # are bit-identical to the uncached path.
-                ub = (
-                    idf[term] * ub_arr
-                    if bscale is None
-                    else (idf[term] * bscale) * ub_arr
-                )
+            for shard, seg in self._seg_cache.get(term, ()):
                 by_shard.setdefault(shard, {}).setdefault(term, []).append(
-                    TermPostings(
-                        doc_ids=ids,
-                        scores=idf[term] * tfpart,
-                        block_last=blast,
-                        block_ub=ub,
-                        block_size=bs,
-                    )
+                    segment_postings(seg, idf[term], bs)
                 )
-
         after_ = check_after_cursor(after) if after is not None else None
-        cand_ids: list[np.ndarray] = []
-        cand_scores: list[np.ndarray] = []
-        for shard, by_term in by_shard.items():
-            if mode == "all":
-                ids, scores = topk_conjunctive(
-                    by_term, k, require=len(idf), after=after_
-                )
-            else:
-                tps = [tp for segs in by_term.values() for tp in segs]
-                ids, scores = topk_block_max_wand(
-                    tps, k, after=after_, stats=stats
-                )
-            cand_ids.append(ids)
-            cand_scores.append(scores)
-        if not cand_ids:
-            # every matching entry may be tombstoned (terms keeps its df
-            # until compaction) — by_shard ends empty, not just short
-            return []
-        ids = np.concatenate(cand_ids)
-        scores = np.concatenate(cand_scores)
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(i), float(s)) for i, s in zip(ids[order], scores[order])]
-
-    def _scored_union_by_shard(self, toks: list[str]):
-        """Per-shard (TermOccurrences list, idf list) for the present
-        query terms — the brute multiterm decode the multi-field path
-        feeds to the shared kernel (highlight.multiterm_scores)."""
-        from .phrase import TermOccurrences as _TO
-
-        present = [t for t in toks if t in self._df]
-        if not present:
-            return {}
-        idf = {t: float(bm25_idf(self.meta["n_docs"], self._df[t]))
-               for t in present}
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(present),
-            columns=["term", "shard", "df", "doc_ids", "tfs"],
+        require = len(idf) if mode == "all" else None
+        # every matching entry may be tombstoned (terms keeps its df until
+        # compaction) — by_shard then ends empty and so does the answer
+        return _global_topk(
+            [wand_topk(by_term, k, require, after_, stats) for by_term in by_shard.values()],
+            k,
         )
-        by_shard: dict[int, tuple[list, list]] = {}
-        _no_pos = np.empty(0, dtype=np.int64)
-        for i in range(tbl.num_rows):
-            shard = int(tbl["shard"][i].as_py())
-            n = int(tbl["df"][i].as_py())
-            ids = delta_decode(bytes(tbl["doc_ids"][i].as_py()), n).astype(np.int64)
-            tfs = varint_decode(bytes(tbl["tfs"][i].as_py()), n).astype(np.int64)
-            occ_off = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-            acc = by_shard.setdefault(shard, ([], []))
-            acc[0].append(_TO(ids, occ_off, _no_pos))
-            acc[1].append(idf[tbl["term"][i].as_py()])
-        return by_shard
 
     def highlight(
         self, query: str, k: int = 10, window: int = 30
     ) -> list[tuple[int, float, int, int]]:
         """Top-k with snippets over a positional index — rank- and
-        window-identical to Bm25Index.topk_highlight by the shared
-        kernel (highlight.py). Returns (doc_id, score, snip_start,
-        snip_hits) tuples."""
-        if not self.meta.get("positions"):
-            raise RuntimeError(
-                "highlighting requires a positional index — build with "
-                "IndexConfig(positions=True)"
-            )
-        from .highlight import highlight_topk_shard
-        from .phrase import decode_entry_positions, merge_term_segments
-
-        toks = sorted(set(tokenize_text(query)))
-        present = [t for t in toks if t in self._df]
-        if not present:
+        window-identical to Bm25Index.topk_highlight (highlight_shard).
+        Returns (doc_id, score, snip_start, snip_hits) tuples."""
+        require_positions(self.meta, "highlighting")
+        m = self.meta
+        idf = idf_for(self._df_for, sorted(set(tokenize_text(query))), m["n_docs"])
+        if not idf:
             return []
-        idf = {t: float(bm25_idf(self.meta["n_docs"], self._df[t])) for t in present}
-        k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
-
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(present),
-            columns=["term", "shard", "df", "doc_ids", "tfs", "pos"],
+        return _global_topk(
+            [
+                highlight_shard(rows, self._dl[shard], idf, m["k1"], m["b"],
+                                m["avgdl"], k, window, self._tombstones)
+                for shard, rows in self._shard_rows(list(idf), "pos").items()
+            ],
+            k,
         )
-        by_shard: dict[int, dict[str, list]] = {}
-        for i in range(tbl.num_rows):
-            shard = int(tbl["shard"][i].as_py())
-            by_shard.setdefault(shard, {}).setdefault(
-                tbl["term"][i].as_py(), []
-            ).append(
-                decode_entry_positions(
-                    bytes(tbl["doc_ids"][i].as_py()),
-                    bytes(tbl["tfs"][i].as_py()),
-                    bytes(tbl["pos"][i].as_py()),
-                    int(tbl["df"][i].as_py()),
-                )
-            )
-        rows: list[tuple[int, float, int, int]] = []
-        for shard, by_term in by_shard.items():
-            here = sorted(by_term)
-            per_term = [merge_term_segments(by_term[t]) for t in here]
-            dl_ids, dl_vals = self._dl[shard]
-            ids, scores, starts, hits = highlight_topk_shard(
-                per_term, [idf[t] for t in here], k1, b, avgdl,
-                dl_ids, dl_vals, k, window, self._tombstones,
-            )
-            rows.extend(
-                (int(i), float(s), int(st), int(h))
-                for i, s, st, h in zip(ids, scores, starts, hits)
-            )
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        return rows[:k]
 
     def count(self, query: str, mode: str = "any") -> int:
-        """totalHits twin of Bm25Index.count (same set semantics)."""
-        if mode not in ("any", "all"):
-            raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
-        toks = sorted(set(tokenize_text(query)))
-        present = [t for t in toks if t in self._df]
-        if not present or (mode == "all" and len(present) < len(toks)):
+        """totalHits twin of Bm25Index.count (match_ids)."""
+        present = match_terms(query, mode, self._df_for)
+        if present is None:
             return 0
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(present),
-            columns=["term", "shard", "df", "doc_ids"],
+        return sum(
+            len(match_ids(rows, mode, len(present), self._tombstones))
+            for rows in self._shard_rows(present, "match").values()
         )
-        by_shard: dict[int, dict[str, list[np.ndarray]]] = {}
-        for i in range(tbl.num_rows):
-            by_shard.setdefault(int(tbl["shard"][i].as_py()), {}).setdefault(
-                tbl["term"][i].as_py(), []
-            ).append(
-                delta_decode(
-                    bytes(tbl["doc_ids"][i].as_py()), int(tbl["df"][i].as_py())
-                ).astype(np.int64)
-            )
-        total = 0
-        for by_term in by_shard.values():
-            sets = [
-                np.sort(np.concatenate(v)) if len(v) > 1 else v[0]
-                for v in by_term.values()
-            ]
-            if mode == "all":
-                if len(by_term) < len(present):
-                    continue
-                sets.sort(key=len)
-                cand = sets[0]
-                for ids in sets[1:]:
-                    if len(cand) == 0:
-                        break
-                    at = np.searchsorted(ids, cand)
-                    cand = cand[ids[np.minimum(at, len(ids) - 1)] == cand]
-            else:
-                cand = np.unique(np.concatenate(sets))
-            tomb = self._tombstones
-            if len(tomb) and len(cand):
-                at = np.searchsorted(tomb, cand)
-                cand = cand[tomb[np.minimum(at, len(tomb) - 1)] != cand]
-            total += len(cand)
-        return total
 
     def topk_boolean(
         self,
@@ -440,82 +650,28 @@ class LocalSearcher:
         k: int = 10,
     ) -> list[tuple[int, float]]:
         """Structured boolean top-k — rank-identical to
-        Bm25Index.topk_boolean by the shared kernel
-        (highlight.boolean_topk_shard)."""
-        from .highlight import boolean_topk_shard
-        from .phrase import TermOccurrences as _TO
-
-        must_t = sorted({t for s in (must or []) for t in tokenize_text(s)})
-        should_t = sorted({t for s in (should or []) for t in tokenize_text(s)})
-        not_t = sorted({t for s in (must_not or []) for t in tokenize_text(s)})
-        score_t = sorted(set(must_t) | set(should_t))
-        if not score_t:
+        Bm25Index.topk_boolean (boolean_shard)."""
+        m = self.meta
+        plan = boolean_plan(must, should, must_not, boosts, self._df_for, m["n_docs"])
+        if plan is None:
             return []
-        if any(t not in self._df for t in must_t):
-            return []
-        score_present = [t for t in score_t if t in self._df]
-        if not score_present:
-            return []
-        n_docs = self.meta["n_docs"]
-        k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
-        boosts_ = {t: float((boosts or {}).get(t, 1.0)) for t in score_present}
-        idf = {
-            t: boosts_[t] * float(bm25_idf(n_docs, self._df[t]))
-            for t in score_present
-        }
-        scan = sorted(set(score_present) | {t for t in not_t if t in self._df})
-
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(scan),
-            columns=["term", "shard", "df", "doc_ids", "tfs"],
+        must_t, idf, not_t, scan = plan
+        return _global_topk(
+            [
+                boolean_shard(rows, self._dl[shard], must_t, idf, not_t,
+                              m["k1"], m["b"], m["avgdl"], k, self._tombstones)
+                for shard, rows in self._shard_rows(scan, "tf").items()
+            ],
+            k,
         )
-        by_shard: dict[int, dict[str, list]] = {}
-        for i in range(tbl.num_rows):
-            shard = int(tbl["shard"][i].as_py())
-            n = int(tbl["df"][i].as_py())
-            ids = delta_decode(bytes(tbl["doc_ids"][i].as_py()), n).astype(np.int64)
-            tfs = varint_decode(bytes(tbl["tfs"][i].as_py()), n).astype(np.int64)
-            occ_off = np.concatenate(([0], np.cumsum(tfs))).astype(np.int64)
-            by_shard.setdefault(shard, {}).setdefault(
-                tbl["term"][i].as_py(), []
-            ).append(_TO(ids, occ_off, np.empty(0, dtype=np.int64)))
-
-        rows: list[tuple[int, float]] = []
-        for shard, by_term in by_shard.items():
-            if any(t not in by_term for t in must_t):
-                continue
-            score_terms, score_idfs = [], []
-            for t in score_present:
-                for seg in by_term.get(t, []):
-                    score_terms.append(seg)
-                    score_idfs.append(idf[t])
-            dl_ids, dl_vals = self._dl[shard]
-            ids, scores = boolean_topk_shard(
-                [by_term[t] for t in must_t],
-                score_terms, score_idfs,
-                [seg for t in not_t for seg in by_term.get(t, [])],
-                k1, b, avgdl, dl_ids, dl_vals, k, self._tombstones,
-            )
-            rows.extend((int(i), float(s)) for i, s in zip(ids, scores))
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        return rows[:k]
 
     def expand_fuzzy(
         self, term: str, max_distance: int = 1, max_expansions: int = 50
     ) -> list[str]:
         """Vocabulary terms within ``max_distance`` edits, (distance ASC,
         df DESC, term ASC) capped — same contract as
-        Bm25Index.expand_fuzzy (in-memory scan with a length pre-filter
-        and a row-cutoff Levenshtein DP)."""
-        hits = []
-        n = len(term)
-        for t, df in self._df.items():
-            if abs(len(t) - n) > max_distance:
-                continue
-            d = _levenshtein_capped(term, t, max_distance)
-            if d is not None:
-                hits.append((d, -df, t))
-        hits.sort()
+        Bm25Index.expand_fuzzy (vocab_fuzzy)."""
+        hits = vocab_fuzzy(self._df, term, max_distance)
         return [t for _, _, t in hits[:max_expansions]]
 
     def topk_fuzzy(
@@ -541,10 +697,8 @@ class LocalSearcher:
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Vocabulary terms starting with ``prefix``, (df DESC, term ASC)
         capped — the same deterministic contract as Bm25Index.expand_prefix
-        (here an in-memory scan of the already-loaded term dict)."""
-        hits = [(t, df) for t, df in self._df.items() if t.startswith(prefix)]
-        hits.sort(key=lambda x: (-x[1], x[0]))
-        return [t for t, _ in hits[:max_expansions]]
+        (vocab_prefix over the already-loaded term dict)."""
+        return vocab_prefix(self._df, prefix, max_expansions)
 
     def suggest(
         self, term: str, max_distance: int = 2, k: int = 5
@@ -552,21 +706,10 @@ class LocalSearcher:
         """Did-you-mean suggester: (suggestion, df, distance) tuples
         within ``max_distance`` edits, ranked (distance ASC, df DESC,
         term ASC), top k — row-identical to Bm25Index.suggest."""
-        from .tokenizer import tokenize_text
-
         toks = tokenize_text(term)
         if len(toks) != 1:
             raise ValueError(f"suggest() takes one indexable token, got {term!r}")
-        t0 = toks[0]
-        n = len(t0)
-        hits = []
-        for t, df in self._df.items():
-            if abs(len(t) - n) > max_distance:
-                continue
-            d = _levenshtein_capped(t0, t, max_distance)
-            if d is not None:
-                hits.append((d, -df, t))
-        hits.sort()
+        hits = vocab_fuzzy(self._df, toks[0], max_distance)
         return [(t, -ndf, d) for d, ndf, t in hits[:k]]
 
     def topk_prefix(
@@ -589,77 +732,31 @@ class LocalSearcher:
     ) -> list[tuple[int, float]]:
         """Exact-phrase (or, with ``slop > 0``, greedy-chain proximity)
         top-k over a positional index — rank-identical to
-        Bm25Index.topk_phrase by the shared kernel (phrase.py)."""
-        if not self.meta.get("positions"):
-            raise RuntimeError(
-                "phrase search requires a positional index — build with "
-                "IndexConfig(positions=True)"
-            )
-        from .phrase import (
-            decode_entry_positions,
-            merge_term_segments,
-            phrase_topk_shard,
-        )
-
-        toks = tokenize_text(phrase)
-        if not toks:
+        Bm25Index.topk_phrase (phrase_shard)."""
+        require_positions(self.meta, "phrase search")
+        m = self.meta
+        plan = phrase_plan(phrase, self._df_for, m["n_docs"])
+        if plan is None:
             return []
-        uniq = sorted(set(toks))
-        if any(t not in self._df for t in uniq):
-            return []
-        idf_sum = float(
-            sum(bm25_idf(self.meta["n_docs"], self._df[t]) for t in toks)
+        toks, uniq, idf_sum = plan
+        return _global_topk(
+            [
+                phrase_shard(rows, self._dl[shard], toks, idf_sum, m["k1"],
+                             m["b"], m["avgdl"], k, self._tombstones, slop)
+                for shard, rows in self._shard_rows(uniq, "pos").items()
+            ],
+            k,
         )
-        k1, b, avgdl = self.meta["k1"], self.meta["b"], self.meta["avgdl"]
-
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(uniq),
-            columns=["term", "shard", "df", "doc_ids", "tfs", "pos"],
-        )
-        by_shard: dict[int, dict[str, list]] = {}
-        for i in range(tbl.num_rows):
-            shard = int(tbl["shard"][i].as_py())
-            by_shard.setdefault(shard, {}).setdefault(
-                tbl["term"][i].as_py(), []
-            ).append(
-                decode_entry_positions(
-                    bytes(tbl["doc_ids"][i].as_py()),
-                    bytes(tbl["tfs"][i].as_py()),
-                    bytes(tbl["pos"][i].as_py()),
-                    int(tbl["df"][i].as_py()),
-                )
-            )
-
-        cand_ids: list[np.ndarray] = []
-        cand_scores: list[np.ndarray] = []
-        for shard, by_term in by_shard.items():
-            if len(by_term) < len(uniq):
-                continue
-            merged = {t: merge_term_segments(v) for t, v in by_term.items()}
-            dl_ids, dl_vals = self._dl[shard]
-            ids, scores = phrase_topk_shard(
-                [merged[t] for t in toks], idf_sum, k1, b, avgdl,
-                dl_ids, dl_vals, k, self._tombstones, slop=slop,
-            )
-            cand_ids.append(ids)
-            cand_scores.append(scores)
-        if not cand_ids:
-            return []
-        ids = np.concatenate(cand_ids)
-        scores = np.concatenate(cand_scores)
-        order = np.lexsort((ids, -scores))[:k]
-        return [(int(i), float(s)) for i, s in zip(ids[order], scores[order])]
 
 
 class LocalMultiFieldSearcher:
     """Spark-free twin of multifield.MultiFieldSearch.
 
     Same invariants (shared n_shards → doc→shard co-location across field
-    indexes; one (k1, b) family), same shared kernel
-    (highlight.multiterm_scores) scoring each field with its OWN
-    statistics, weight-scaled and summed per doc within a shard — so
-    ranks and scores are identical to the distributed path by
-    construction (pinned in tests/test_serve.py)."""
+    indexes; one (k1, b) family), same per-shard body (multifield_shard)
+    scoring each field with its OWN statistics, weight-scaled and summed
+    per doc within a shard — so ranks and scores are identical to the
+    distributed path by construction (pinned in tests/test_serve.py)."""
 
     def __init__(
         self,
@@ -686,34 +783,20 @@ class LocalMultiFieldSearcher:
         (self.k1, self.b), = kb
 
     def topk(self, query: str, k: int = 10) -> list[tuple[int, float]]:
-        from .highlight import multiterm_scores
-
         toks = sorted(set(tokenize_text(query)))
         if not toks:
             return []
-        acc: dict[int, tuple[list, list]] = {}
+        per_shard: dict[int, list[tuple]] = {}
         for f, s in self.searchers.items():
-            w = self.weights[f]
-            avgdl = float(s.meta["avgdl"])
-            for shard, (per_term, idfs) in s._scored_union_by_shard(toks).items():
-                dl_ids, dl_vals = s._dl[shard]
-                cand, sc = multiterm_scores(
-                    per_term, idfs, self.k1, self.b, avgdl,
-                    dl_ids, dl_vals, s._tombstones,
+            idf = idf_for(s._df_for, toks, s.meta["n_docs"])
+            if not idf:
+                continue
+            for shard, rows in s._shard_rows(list(idf), "tf").items():
+                per_shard.setdefault(shard, []).append(
+                    (rows, s._dl[shard], idf, float(s.meta["avgdl"]),
+                     self.weights[f], s._tombstones)
                 )
-                if len(cand):
-                    parts = acc.setdefault(shard, ([], []))
-                    parts[0].append(cand)
-                    parts[1].append(w * sc)
-        rows: list[tuple[int, float]] = []
-        for shard, (idp, scp) in acc.items():
-            all_ids = np.concatenate(idp)
-            all_sc = np.concatenate(scp)
-            uids, inv = np.unique(all_ids, return_inverse=True)
-            tot = np.bincount(inv, weights=all_sc)
-            order = np.lexsort((uids, -tot))[:k]
-            rows.extend(
-                (int(i), float(v)) for i, v in zip(uids[order], tot[order])
-            )
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        return rows[:k]
+        return _global_topk(
+            [multifield_shard(fields, self.k1, self.b, k) for fields in per_shard.values()],
+            k,
+        )

@@ -78,10 +78,51 @@ def test_serve_multifield_equals_spark_path(
             for r in mf.topk(q, k).collect()
         ]
         got = local.topk(q, k)
-        assert [d for d, _ in got] == [d for d, _ in dist], q
-        assert np.allclose(
-            [x for _, x in got], [x for _, x in dist], atol=1e-12
-        ), q
+        assert got == dist, q
+
+
+def test_multiterm_scores_independent_of_row_order():
+    """The multi-term body sorts its rows by term before it accumulates:
+    every permutation of one shard's rows (and both row shapes — the
+    Spark cogroup's pandas frame, the serve tier's column dict) gives
+    bit-identical scores, although adding the same terms in another
+    order changes the bits of some docs' float64 sums."""
+    import itertools
+
+    import pandas as pd
+
+    from koncorde_spark.fulltext.codecs import delta_encode, varint_encode
+    from koncorde_spark.fulltext.highlight import multiterm_scores
+    from koncorde_spark.fulltext.serve import _occurrences, multiterm_shard
+
+    rng = np.random.default_rng(7)
+    n_docs = 2_000
+    dl = (np.arange(n_docs, dtype=np.int64), rng.integers(5, 400, n_docs).astype(np.float64))
+    rows = {"term": [], "df": [], "doc_ids": [], "tfs": []}
+    for term in ("t0", "t1", "t2", "t3"):
+        ids = np.sort(rng.choice(n_docs, 1_200, replace=False)).astype(np.uint64)
+        rows["term"].append(term)
+        rows["df"].append(len(ids))
+        rows["doc_ids"].append(delta_encode(ids))
+        rows["tfs"].append(varint_encode(rng.integers(1, 30, len(ids)).astype(np.uint64)))
+    idf = {t: float(v) for t, v in zip(rows["term"], rng.uniform(0.1, 7.0, 4))}
+
+    def permuted(order):
+        return {c: [v[i] for i in order] for c, v in rows.items()}
+
+    want_ids, want = multiterm_shard(rows, dl, idf, 1.2, 0.75, 97.3, None)
+    raw_differs = False
+    for order in itertools.permutations(range(4)):
+        for shaped in (permuted(order), pd.DataFrame(permuted(order))):
+            ids, scores = multiterm_shard(shaped, dl, idf, 1.2, 0.75, 97.3, None)
+            assert np.array_equal(ids, want_ids)
+            assert scores.tobytes() == want.tobytes(), order
+        # the same rows fed to the kernel unsorted: the order shows
+        segs = [_occurrences(permuted([i]), False)[rows["term"][i]][0] for i in order]
+        raw = multiterm_scores(segs, [idf[rows["term"][i]] for i in order],
+                               1.2, 0.75, 97.3, *dl)[1]
+        raw_differs |= raw.tobytes() != want.tobytes()
+    assert raw_differs
 
 
 def test_serve_multifield_single_field_equals_topk(bm25_index_dir):
