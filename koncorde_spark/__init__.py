@@ -13,8 +13,8 @@ Public surface:
   vectorized matcher that runs inside Spark executors.
 - :func:`koncorde_spark.spark.percolate.percolate` — DataFrame percolation:
   one zero-shuffle ``mapInPandas`` pass over any documents DataFrame.
-- :mod:`koncorde_spark.fulltext` — posting-list indexer + block-max WAND
-  BM25 top-k.
+- :mod:`koncorde_spark.fulltext` — posting-list indexer + exhaustive
+  per-shard BM25 top-k.
 - :mod:`koncorde_spark.pipeline` — dedup / similarity / text-analysis ops.
 """
 

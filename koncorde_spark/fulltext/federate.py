@@ -5,15 +5,15 @@ The web-scale deployment shape: a corpus partitioned into many indexes
 Naive federation scores each index with its LOCAL idf and merges — ranks
 then depend on where a doc landed. This module instead combines the
 global statistics first (N = Σ n_docs, df(t) = Σ df_i(t)) and pushes the
-combined idf into every index's per-shard WAND kernel, so a document
+combined idf into every index's per-shard top-k kernel, so a document
 scores identically wherever it lives. Document-length normalization
 stays per-index (each member's own corpus avgdl — the same statistic its
-segments score with when queried alone; ``avgdl_seg`` keeps WAND bounds
-exact as usual). This is Elasticsearch's cross-index shape under
-dfs_query_then_fetch: global term statistics, per-index dl statistics.
+segments score with when queried alone). This is Elasticsearch's
+cross-index shape under dfs_query_then_fetch: global term statistics,
+per-index dl statistics.
 
 Scale shape: per member index the work is the standard pruned postings
-scan + per-shard k-deep WAND (one cogroup each, no cross-index shuffle);
+scan + per-shard k-deep top-k (one cogroup each, no cross-index shuffle);
 the union of per-shard candidates is tiny (shards × k rows) before the
 single global sort-limit. Statistics combination reads only the terms
 tables' rows for the query terms.
@@ -92,7 +92,7 @@ def federated_count(indexes: list, query: str, mode: str = "any") -> int:
 class LocalFederatedSearcher:
     """Spark-free serving-tier federation: the same combined-statistics
     rule over LocalSearcher members, rank-identical to federated_topk
-    (shared WAND kernels, shared idf arithmetic). Members load once;
+    (shared top-k kernels, shared idf arithmetic). Members load once;
     per-query cost is one pruned postings read per member."""
 
     def __init__(self, index_dirs: list[str]):

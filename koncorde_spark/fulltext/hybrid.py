@@ -12,7 +12,7 @@ OpenSearch) ships RRF as its default hybrid mode.
 Scale shape: fusion operates on the LEGS' top-k outputs — a few dozen
 rows per leg regardless of corpus size — so the windows and the full
 outer join here are deliberately tiny; all the heavy lifting stays in
-the legs themselves (block-max WAND / IVF-pruned ANN), which are already
+the legs themselves (per-shard BM25 top-k / IVF-pruned ANN), which are already
 built for the 100-TB corpus. The fold order over legs is fixed so the
 floating-point sum is reproducible cross-engine.
 """

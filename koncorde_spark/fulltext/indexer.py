@@ -7,8 +7,8 @@ Layout (document-partitioned, the standard at web scale):
 - ``shard`` = doc_id % n_shards. Every posting list is split by doc shard,
   which (a) bounds the size of any single (term, shard) merge group — hot
   terms like ``import`` are additionally salted across shards (skew
-  control) — and (b) lets BM25 top-k run WAND per shard in parallel with
-  no cross-shard state (scores are doc-local).
+  control) — and (b) lets BM25 top-k run per shard in parallel with no
+  cross-shard state (scores are doc-local).
 
 Tables under ``out_dir``:
 
@@ -17,8 +17,9 @@ Tables under ``out_dir``:
 - ``dlpack``: ONE row per shard — its sorted doc ids and doc lengths,
   delta+varint packed (the query-time dl lookup);
 - ``postings``: one directory per shard; each row is a (term, shard)
-  segment of docID-sorted delta+varint ids and tfs with 128-entry
-  block-max metadata. Several segment rows per (term, shard) are legal;
+  segment of docID-sorted delta+varint ids and tfs (plus per-entry
+  positions in a positional index). Several segment rows per (term,
+  shard) are legal;
 - ``terms``: global df per term, stamped with the stats version that
   meta.json records;
 - ``_manifests/<table>/shard-<s>.json``: per-shard row and token counts
@@ -82,7 +83,6 @@ from .tokenizer import count_tokens_arrow, tokenize_arrow
 
 K1_DEFAULT = 1.2
 B_DEFAULT = 0.75
-BLOCK_SIZE = 128
 
 
 @dataclass(frozen=True)
@@ -90,7 +90,6 @@ class IndexConfig:
     n_shards: int = 8
     k1: float = K1_DEFAULT
     b: float = B_DEFAULT
-    block_size: int = BLOCK_SIZE
     # positional postings (token offsets per entry, delta+varint) — opt-in:
     # enables exact phrase search (topk_phrase / LocalSearcher.phrase) at
     # ~one extra varint per token of index size and a sort-based (instead
@@ -99,6 +98,7 @@ class IndexConfig:
 
     def fingerprint(self) -> str:
         d = asdict(self)
+        d["block_size"] = 128  # retired knob; every recorded fingerprint hashed it at 128
         if not d.get("positions"):
             # pre-positions indexes hashed a dict without the key; keep
             # their fingerprints (and thus resume) valid
@@ -114,7 +114,6 @@ class IndexConfig:
             n_shards=int(meta["n_shards"]),
             k1=float(meta["k1"]),
             b=float(meta["b"]),
-            block_size=int(meta["block_size"]),
             positions=bool(meta.get("positions", False)),
         )
         fp = config.fingerprint()
@@ -146,7 +145,6 @@ PARTIAL_SCHEMA = T.StructType(
         T.StructField("n", T.LongType()),
         T.StructField("doc_ids", T.BinaryType()),
         T.StructField("tfs", T.BinaryType()),
-        T.StructField("dls", T.BinaryType()),
     ]
 )
 
@@ -166,13 +164,6 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("df", T.LongType()),
         T.StructField("doc_ids", T.BinaryType()),
         T.StructField("tfs", T.BinaryType()),
-        T.StructField("block_last", T.ArrayType(T.LongType())),
-        T.StructField("block_max", T.ArrayType(T.DoubleType())),
-        # the avgdl the block_max upper bounds were computed with: after
-        # appends shift the corpus avgdl, query paths rescale the bound by
-        # max(1, avgdl_now / avgdl_seg) — a valid (sup-ratio) upper bound,
-        # so WAND stays exact across appends
-        T.StructField("avgdl_seg", T.DoubleType()),
     ]
 )
 
@@ -297,7 +288,7 @@ def _partials_fn(n_shards: int, positions: bool = False):
             n_docs = len(pdf)
             doc_ids = _doc_ids_series(pdf["repo"], pdf["path"], pdf["commit"])
             shards = (doc_ids % n_shards).astype(np.int64)
-            term_codes, flat_rows, term_uniques, dls = tokenize_arrow(pdf["content"])
+            term_codes, flat_rows, term_uniques, _ = tokenize_arrow(pdf["content"])
             if len(term_codes) == 0:
                 continue
             n_terms = len(term_uniques)
@@ -342,16 +333,13 @@ def _partials_fn(n_shards: int, positions: bool = False):
 
             # group by (term, salt), doc-sorted within group. One fused
             # (term, salt) key → 2-key lexsort (one fewer O(entries) sort
-            # pass), and a single u_rows[order] gather reused for ids + dls
-            # (this stage is bandwidth-bound at 32-way parallelism).
+            # pass; this stage is bandwidth-bound at 32-way parallelism).
             key = u_terms * (n_shards + 1) + salt
             e_ids = doc_ids[u_rows]
             order = np.lexsort((e_ids, key))
-            u_rows_ord = u_rows[order]
             g_salt = salt[order]
             g_ids = e_ids[order].astype(np.uint64)
             g_tf = tf[order].astype(np.uint64)
-            g_dl = dls[u_rows_ord].astype(np.uint64)
             g_key = key[order]
             g_terms = u_terms[order]
             bounds = np.nonzero(np.diff(g_key))[0] + 1
@@ -359,18 +347,16 @@ def _partials_fn(n_shards: int, positions: bool = False):
 
             ids_buf, ids_off = delta_encode_groups(g_ids, offsets)
             tf_buf, tf_off = varint_encode_groups(g_tf, offsets)
-            dl_buf, dl_off = varint_encode_groups(g_dl, offsets)
 
             starts = offsets[:-1]
             counts = np.diff(offsets)
-            ids_mv, tf_mv, dl_mv = memoryview(ids_buf), memoryview(tf_buf), memoryview(dl_buf)
+            ids_mv, tf_mv = memoryview(ids_buf), memoryview(tf_buf)
             out = {
                 "term": term_uniques[g_terms[starts]],
                 "salt": g_salt[starts].astype(np.int32),
                 "n": counts,
                 "doc_ids": [bytes(ids_mv[ids_off[i]: ids_off[i + 1]]) for i in range(len(starts))],
                 "tfs": [bytes(tf_mv[tf_off[i]: tf_off[i + 1]]) for i in range(len(starts))],
-                "dls": [bytes(dl_mv[dl_off[i]: dl_off[i + 1]]) for i in range(len(starts))],
             }
             if positions:
                 # carry each entry's position list through the entry
@@ -424,34 +410,14 @@ def _decode_segments(pdf: pd.DataFrame, counts: np.ndarray, positions: bool):
     return ids, tfs, pos, occ_off, tcodes, term_by_code
 
 
-def _encode_segments(config: IndexConfig, avgdl: float, key, shards, tcodes,
-                     term_by_code, ids, tfs, dls, pos, occ_off) -> dict:
+def _encode_segments(key, shards, tcodes, term_by_code, ids, tfs, pos, occ_off) -> dict:
     """Encode entries sorted by (group ``key``, doc id) into one POSTINGS
-    row per run of equal ``key``: block-max metadata from one
-    np.maximum.reduceat over the per-entry BM25 tf-parts at ``avgdl``,
-    then delta/varint group codecs for ids, tfs and positions."""
-    k1, b, block_size = config.k1, config.b, config.block_size
+    row per run of equal ``key``: delta/varint group codecs for ids, tfs
+    and positions."""
     bounds = np.nonzero(np.diff(key))[0] + 1
     offsets = np.concatenate(([0], bounds, [len(key)]))
     starts = offsets[:-1]
     group_n = np.diff(offsets)
-
-    tf = tfs.astype(np.float64)
-    norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dls / avgdl))
-
-    # blocks: starts at group_start + block_size*k for every group
-    nblocks = (group_n + block_size - 1) // block_size
-    block_group = np.repeat(np.arange(len(starts)), nblocks)
-    within = (
-        np.concatenate([np.arange(nb) for nb in nblocks])
-        if len(nblocks)
-        else np.empty(0, dtype=np.int64)
-    )
-    bstarts = starts[block_group] + within * block_size
-    bends = np.minimum(bstarts + block_size, offsets[1:][block_group]) - 1
-    bmax = np.maximum.reduceat(norm, bstarts) if len(bstarts) else np.empty(0)
-    blast = ids[bends] if len(bstarts) else np.empty(0, dtype=np.int64)
-    bcum = np.concatenate(([0], np.cumsum(nblocks)))
 
     ids_buf, ids_off = delta_encode_groups(ids.astype(np.uint64), offsets)
     tf_buf, tf_off = varint_encode_groups(tfs.astype(np.uint64), offsets)
@@ -462,9 +428,6 @@ def _encode_segments(config: IndexConfig, avgdl: float, key, shards, tcodes,
         "df": group_n,
         "doc_ids": [bytes(ids_mv[ids_off[i]: ids_off[i + 1]]) for i in range(len(starts))],
         "tfs": [bytes(tf_mv[tf_off[i]: tf_off[i + 1]]) for i in range(len(starts))],
-        "block_last": [blast[bcum[i]: bcum[i + 1]].tolist() for i in range(len(starts))],
-        "block_max": [bmax[bcum[i]: bcum[i + 1]].tolist() for i in range(len(starts))],
-        "avgdl_seg": np.full(len(starts), avgdl),
     }
     if pos is not None:
         pos_buf, pos_boff = delta_encode_groups(pos.astype(np.uint64), occ_off)
@@ -477,7 +440,7 @@ def _encode_segments(config: IndexConfig, avgdl: float, key, shards, tcodes,
     return out
 
 
-def _merge_partition_fn(config: IndexConfig, avgdl: float):
+def _merge_partition_fn(config: IndexConfig):
     """Merge ALL (term, salt) groups in one shuffle partition, vectorized.
 
     Rows arrive hash-partitioned by (term, salt); within the partition we
@@ -498,7 +461,6 @@ def _merge_partition_fn(config: IndexConfig, avgdl: float):
         ids, tfs, pos, occ_off, tcodes, term_by_code = _decode_segments(
             pdf, counts, config.positions
         )
-        dls = varint_decode(b"".join(pdf["dls"]), len(ids)).astype(np.float64)
         salts = np.repeat(pdf["salt"].to_numpy(dtype=np.int64), counts)
         shards = ids % n_shards
 
@@ -510,8 +472,8 @@ def _merge_partition_fn(config: IndexConfig, avgdl: float):
             pos, occ_off = gather_groups(pos, occ_off, order)
         yield pd.DataFrame(
             _encode_segments(
-                config, avgdl, key[order], shards[order], tcodes[order],
-                term_by_code, ids[order], tfs[order], dls[order], pos, occ_off,
+                key[order], shards[order], tcodes[order], term_by_code,
+                ids[order], tfs[order], pos, occ_off,
             )
         )
 
@@ -784,7 +746,7 @@ def _decode_dlpack_ctx(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Derive the worker-cache key from (index_dir, {shard: lineage}) and
     decode the shard's doc-length pack through the cache — the ONE place
-    the key shape lives (every query cogroup closure, the WAND decode path
+    the key shape lives (every query cogroup closure, the top-k decode path
     and compaction go through here)."""
     cache_key = None
     if cache_ctx is not None:
@@ -800,8 +762,8 @@ def _decode_dlpack_ctx(
 # ---------------------------------------------------------------------------
 
 
-def _salted_merge(spark: SparkSession, src: DataFrame, config: IndexConfig,
-                  avgdl: float) -> tuple[DataFrame, DataFrame]:
+def _salted_merge(spark: SparkSession, src: DataFrame,
+                  config: IndexConfig) -> tuple[DataFrame, DataFrame]:
     """Corpus rows → postings segments: (persisted partials, merged).
 
     The partials are materialized BEFORE the shuffle: fusing the Python
@@ -816,7 +778,7 @@ def _salted_merge(spark: SparkSession, src: DataFrame, config: IndexConfig,
     partials.count()
     n_merge_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     merged = partials.repartition(n_merge_parts, "term", "salt").mapInPandas(
-        _merge_partition_fn(config, avgdl),
+        _merge_partition_fn(config),
         schema=_with_pos(POSTINGS_SCHEMA, config.positions),
     )
     return partials, merged
@@ -915,7 +877,7 @@ def build_index(
                     F.array_contains(missing_arr, sql_shard_col(n_shards).cast("int"))
                 )
             with _timed(metrics, "partials_sec"):
-                partials, merged = _salted_merge(spark, src, config, avgdl)
+                partials, merged = _salted_merge(spark, src, config)
             with _timed(metrics, "merge_write_sec"):
                 # full build: static overwrite wipes the whole dir (also
                 # clears stale shard dirs from an older config); subset
@@ -982,7 +944,6 @@ def build_index(
         "k1": config.k1,
         "b": config.b,
         "n_shards": config.n_shards,
-        "block_size": config.block_size,
         "positions": config.positions,
         "config": fp,
         "stats_version": stats_v,
@@ -1091,15 +1052,12 @@ def append_index(spark: SparkSession, new_corpus: DataFrame, out_dir: str) -> di
     index per batch is not an option. Postings segments are ADDITIVE
     (multiple rows per (term, shard) are legal — scoring sums per posting
     entry), so appending writes new segment rows next to the old ones and
-    never rewrites existing postings bytes. Exactness across the corpus
-    shift is preserved by two mechanisms:
-
-    - raw tfs/dls are stored, so exact scores always use the CURRENT
-      meta avgdl at query time;
-    - each segment records ``avgdl_seg``; query tiers rescale its block-max
-      bounds by max(1, avgdl_now/avgdl_seg) — a valid upper bound (the sup
-      of the tf-part ratio over all (tf, dl) is exactly avgdl_now/avgdl_seg)
-      — so block-max WAND stays exact, merely a little less tight.
+    never rewrites existing postings bytes. Segments store raw tfs and
+    nothing derived from corpus statistics (doc lengths live in the
+    dlpack), so every query scores old and new segments alike with the
+    CURRENT meta avgdl — exact across the corpus shift. Postings written
+    with the older per-block bound columns append the same way: every scan
+    selects its columns by name, so those columns are never read.
 
     Stages (each commits before the next starts; the manifest lineage ties
     them together):
@@ -1111,7 +1069,7 @@ def append_index(spark: SparkSession, new_corpus: DataFrame, out_dir: str) -> di
       3. merge the new (doc_id, dl) pairs into the per-shard dlpack rows
          (decode + merge-sort + re-encode, swapped in by _swap_dir);
       4. build postings segments for the new docs only (the full build's
-         _salted_merge, at the NEW combined avgdl) and APPEND them to the
+         _salted_merge) and APPEND them to the
          per-shard dirs;
       5. sum-merge the term stats (swapped in by _swap_dir) and write meta.
 
@@ -1132,18 +1090,6 @@ def append_index(spark: SparkSession, new_corpus: DataFrame, out_dir: str) -> di
     metrics: dict[str, float] = {}
 
     # -- consistency prechecks -------------------------------------------
-    # an index whose postings lack avgdl_seg predates the append-era block
-    # bound bookkeeping; appending would create MIXED parquet schemas under
-    # postings/, and a reader inferring the schema from an old fragment
-    # silently drops avgdl_seg for the new segments too — then a later
-    # avgdl-raising append leaves their block-max bounds uncorrected and
-    # block-max WAND can skip true top-k docs (ADVICE r3). Refuse up front.
-    if "avgdl_seg" not in spark.read.parquet(postings_path).schema.names:
-        raise RuntimeError(
-            "existing postings lack the avgdl_seg column (index built by a "
-            "pre-append version); rebuild with build_index(full_corpus, "
-            "out_dir, resume=False) before appending"
-        )
     manifest_docs = sum(int(m.get("rows", 0)) for m in docs_man.values())
     actual_docs = _parquet_count_rows(spark, docs_path)
     if actual_docs != manifest_docs:
@@ -1198,7 +1144,7 @@ def append_index(spark: SparkSession, new_corpus: DataFrame, out_dir: str) -> di
     # never rescans of the whole postings dir (VERDICT r3 #3 — under
     # stream_append an O(index) stage per micro-batch caps index size).
     with _timed(metrics, "postings_sec"):
-        partials, merged = _salted_merge(spark, new_src, config, avgdl)
+        partials, merged = _salted_merge(spark, new_src, config)
         # localCheckpoint: the merged segments (O(new) rows) feed THREE
         # jobs — the postings append, the per-shard manifest delta, and the
         # term-stat delta — checkpointing runs the partials→merge pipeline
@@ -1348,13 +1294,13 @@ def _read_dlpack_row(dlpack_path: str, shard: int) -> pd.DataFrame:
 
 
 def _compact_group_fn(out_dir: str, lineages: dict[int, int], tombs: np.ndarray,
-                      config: IndexConfig, avgdl: float):
+                      config: IndexConfig):
     """applyInPandas body for one (shard, term-bucket) group: decode every
-    segment row, drop tombstoned entries, merge segments per term, and
-    re-encode ONE segment per term with fresh block-max bounds at the
-    post-compaction avgdl — the build's segment codec (_decode_segments /
-    _encode_segments), with doc lengths from the shard's dlpack (decoded
-    once per worker through the query tier's cache)."""
+    segment row, drop tombstoned entries, merge segments per term, check
+    every surviving entry against the shard's dlpack (decoded once per
+    worker through the query tier's cache), and re-encode ONE segment per
+    term — the build's segment codec (_decode_segments /
+    _encode_segments)."""
     positions = config.positions
     dlpack_path = os.path.join(out_dir, "dlpack")
 
@@ -1365,9 +1311,6 @@ def _compact_group_fn(out_dir: str, lineages: dict[int, int], tombs: np.ndarray,
             "df": pd.Series(dtype="int64"),
             "doc_ids": pd.Series(dtype=object),
             "tfs": pd.Series(dtype=object),
-            "block_last": pd.Series(dtype=object),
-            "block_max": pd.Series(dtype=object),
-            "avgdl_seg": pd.Series(dtype="float64"),
         }
         if positions:
             cols["pos"] = pd.Series(dtype=object)
@@ -1401,7 +1344,7 @@ def _compact_group_fn(out_dir: str, lineages: dict[int, int], tombs: np.ndarray,
                 "index corrupt; rebuild from the corpus"
             )
 
-        dl_ids, dl_vals = _decode_dlpack_ctx(
+        dl_ids, _ = _decode_dlpack_ctx(
             _read_dlpack_row(dlpack_path, shard), (out_dir, lineages)
         )
         at = np.searchsorted(dl_ids, ids)
@@ -1412,8 +1355,8 @@ def _compact_group_fn(out_dir: str, lineages: dict[int, int], tombs: np.ndarray,
             )
         return pd.DataFrame(
             _encode_segments(
-                config, avgdl, tcodes, np.full(len(ids), shard), tcodes,
-                term_by_code, ids, tfs, dl_vals[at], pos, occ_off,
+                tcodes, np.full(len(ids), shard), tcodes, term_by_code,
+                ids, tfs, pos, occ_off,
             )
         )
 
@@ -1430,10 +1373,8 @@ def compact_index(
     equivalent to a fresh ``build_index`` over the surviving corpus
     (entry-identical postings, same stats; pinned by tests): tombstoned
     docs are gone from docs/dlpack/postings, every (term, shard) owns
-    exactly ONE segment row, block-max bounds are recomputed at the
-    post-compaction avgdl (bound_scale returns to 1), corpus stats
-    (n_docs, avgdl, df) shrink to the survivors, and the tombstone table
-    is dropped.
+    exactly ONE segment row, corpus stats (n_docs, avgdl, df) shrink to
+    the survivors, and the tombstone table is dropped.
 
     Stage order keeps CONCURRENT READERS correct at every point: docs →
     dlpack → postings → terms are each replaced by _swap_dir (never in
@@ -1498,7 +1439,7 @@ def compact_index(
             .select(*sel)
             .groupBy("shard", F.pmod(F.xxhash64("term"), F.lit(n_term_buckets)).alias("__b"))
             .applyInPandas(
-                _compact_group_fn(out_dir, docs_lx, tombs, config, avgdl),
+                _compact_group_fn(out_dir, docs_lx, tombs, config),
                 schema=_with_pos(POSTINGS_SCHEMA, config.positions),
             )
         )

@@ -88,7 +88,7 @@ class MultiFieldSearch:
             posts_parts.append(
                 idx.postings.where(F.col("term").isin(sorted(idf))).select(
                     F.lit(f).alias("field"), "shard",
-                    *postings_columns("tf", idx.postings.columns),
+                    *postings_columns("tf"),
                 )
             )
             pack_parts.append(

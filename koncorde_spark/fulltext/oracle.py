@@ -1,7 +1,7 @@
 """Brute-force single-node BM25 oracle (pure pandas/numpy).
 
 Independent implementation used by tests to verify that the distributed
-index + WAND path is rank-identical (doc IDs and float64 scores) on the
+index + top-k path is rank-identical (doc IDs and float64 scores) on the
 frozen query set. Same canonical tokenizer, same frozen constants.
 """
 

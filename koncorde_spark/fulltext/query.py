@@ -13,7 +13,7 @@ the term-pruned scan itself.
 
 This module only builds plans: which terms and ``postings_columns`` to
 scan, the one shard cogroup (``_cogroup`` / ``Bm25Index._per_shard``) and
-the global cut. Every per-shard body — segment decode, WAND, count set
+the global cut. Every per-shard body — segment decode, top-k, count set
 arithmetic, boolean, phrase, highlight — is owned by serve.py and shared
 with the Spark-free serve tier.
 """
@@ -122,14 +122,13 @@ def _decode_shard_postings(
     k1: float,
     b: float,
     avgdl: float,
-    block_size: int,
     tombstones: np.ndarray | None = None,
     cache_ctx: tuple[str, dict[int, int]] | None = None,
     allowed: np.ndarray | None = None,
 ) -> dict[str, list[TermPostings]]:
     """One shard's postings rows as per-term TermPostings LISTS (one per
     segment row — serve.decode_segments, scored by serve.segment_postings),
-    in canonical term order. Shared by every WAND-family plan: in
+    in canonical term order. Shared by every top-k-family plan: in
     topk_many each segment is decoded once for the whole batch.
 
     ``cache_ctx`` = (index_dir, {shard: dlpack lineage_xor}): enables the
@@ -137,10 +136,8 @@ def _decode_shard_postings(
     ``allowed`` (sorted doc_ids): see decode_segments."""
     dl = _decode_dlpack_ctx(pack_pdf, cache_ctx)
     out: dict[str, list[TermPostings]] = {}
-    for term, seg in decode_segments(
-        post_pdf, dl, k1, b, avgdl, block_size, tombstones, allowed
-    ):
-        out.setdefault(term, []).append(segment_postings(seg, idf_map[term], block_size))
+    for term, seg in decode_segments(post_pdf, dl, k1, b, avgdl, tombstones, allowed):
+        out.setdefault(term, []).append(segment_postings(seg, idf_map[term]))
     return out
 
 
@@ -178,13 +175,7 @@ class Bm25Index:
         from .indexer import check_stats_consistency
 
         check_stats_consistency(index_dir, self.meta)
-        # mergeSchema: defense-in-depth against mixed postings fragments
-        # (append_index refuses to create them, but an index assembled by
-        # hand must not silently drop avgdl_seg because an old fragment won
-        # schema inference). Cheap here: one file per shard dir.
-        self.postings = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(index_dir, "postings")
-        )
+        self.postings = spark.read.parquet(os.path.join(index_dir, "postings"))
         self.terms = spark.read.parquet(os.path.join(index_dir, "terms")).cache()
         self.docs = spark.read.parquet(os.path.join(index_dir, "docs"))
         # per-shard packed doc lengths: one row per shard, cached — avoids
@@ -256,7 +247,7 @@ class Bm25Index:
         never ships to a non-positional operator — cogrouped by shard with
         the dlpack (or ``packs``); see _cogroup."""
         posts = self.postings.where(F.col("term").isin(list(terms))).select(
-            "shard", *postings_columns(kind, self.postings.columns)
+            "shard", *postings_columns(kind)
         )
         return _cogroup(posts, self.dlpack if packs is None else packs, schema, body)
 
@@ -267,8 +258,7 @@ class Bm25Index:
         m = self.meta
         return partial(
             _decode_shard_postings, idf_map=idf_map, k1=m["k1"], b=m["b"],
-            avgdl=m["avgdl"], block_size=m["block_size"],
-            tombstones=self.tombstones, cache_ctx=self._cache_ctx,
+            avgdl=m["avgdl"], tombstones=self.tombstones, cache_ctx=self._cache_ctx,
         )
 
     def topk(
@@ -278,7 +268,7 @@ class Bm25Index:
         """Top-k (doc_id, score) for a free-text query, rank-deterministic.
 
         ``mode``: "any" (default) ranks docs containing any query term
-        (disjunctive, block-max WAND); "all" restricts to docs containing
+        (disjunctive, every entry scored); "all" restricts to docs containing
         EVERY query term (conjunctive, intersection-driven — cost bounded
         by the rarest term's postings). Scores are mode-independent: a doc
         in the "all" result carries exactly its "any" score.
@@ -315,13 +305,12 @@ class Bm25Index:
         map — the building block topk() and federated search share. The
         caller owns the idf statistics: federation passes combined-corpus
         idf while this index's own corpus avgdl normalizes document
-        length (avgdl_seg corrects the WAND bounds as usual). ``require``
-        non-None switches to conjunctive semantics with that many
-        required terms."""
+        length. ``require`` non-None switches to conjunctive semantics
+        with that many required terms."""
         decode = self._decoder(idf_map)
         after_ = check_after_cursor(after) if after is not None else None
         return self._per_shard(
-            idf_map, "wand", TOPK_SCHEMA,
+            idf_map, "tf", TOPK_SCHEMA,
             lambda rows, pack: wand_topk(decode(rows, pack), k, require, after_),
         )
 
@@ -353,7 +342,7 @@ class Bm25Index:
             return self.spark.createDataFrame([], out_schema)
         decode = self._decoder(idf_map)
         scored = self._per_shard(
-            idf_map, "wand", TOPK_SCHEMA,
+            idf_map, "tf", TOPK_SCHEMA,
             lambda rows, pack: score_union(
                 [tp for segs in decode(rows, pack).values() for tp in segs]
             ),
@@ -386,7 +375,7 @@ class Bm25Index:
         function_score): take the top ``window`` docs by BM25, add
         ``weight *`` the per-doc signal from ``boosts`` (internal doc_id →
         ``boost_col``; docs absent from it boost 0), re-rank, return the
-        top k. The expensive ranking stays WAND-pruned at window depth;
+        top k. The expensive ranking is cut per shard at window depth;
         the rescore pass touches only ``window`` rows — the standard way
         to mix a quality/recency/popularity signal into lexical rank
         without scoring the corpus against it."""
@@ -436,7 +425,7 @@ class Bm25Index:
         ``emit(ids)`` columns of ``schema``."""
         need, tomb, names = len(present), self.tombstones, schema.names
         posts = self.postings.where(F.col("term").isin(present)).select(
-            "shard", *postings_columns("match", ())
+            "shard", *postings_columns("match")
         )
         return posts.groupBy("shard").applyInPandas(
             lambda _, pdf: pd.DataFrame(
@@ -585,9 +574,7 @@ class Bm25Index:
         contract: a doc's score is identical with and without the filter).
         The result is the EXACT top-k of the eligible subset, not a
         post-filtered cut of the unfiltered top-k: eligibility is applied
-        entry-wise at postings decode and each surviving segment's block
-        bounds are REBUILT, so block-max WAND skip logic stays admissible
-        over the masked lists.
+        entry-wise at postings decode, before any scoring.
 
         Plan shape (scales like topk):
           docs metadata scan → zero-shuffle percolation mapInPandas
@@ -598,7 +585,7 @@ class Bm25Index:
           dlpack cogroup side, so shards with ZERO eligible docs are
           pruned before any postings decode. Unselective filters cost one
           extra searchsorted per posting entry; selective filters shrink
-          the WAND frontier and get FASTER than unfiltered topk.
+          the scored union and get FASTER than unfiltered topk.
         """
         from .. import Koncorde
         from ..spark.percolate import percolate
@@ -640,7 +627,7 @@ class Bm25Index:
             allowed = delta_decode(bytes(prow["elig_ids"]), int(prow["elig_n"]))
             return wand_topk(decode(rows, pack_pdf, allowed=allowed.astype(np.int64)), k)
 
-        return _top(self._per_shard(idf_map, "wand", TOPK_SCHEMA, body, packs), k)
+        return _top(self._per_shard(idf_map, "tf", TOPK_SCHEMA, body, packs), k)
 
     def topk_phrase(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
         """Exact-phrase top-k over a POSITIONAL index (IndexConfig(
@@ -765,7 +752,7 @@ class Bm25Index:
                     parts.append((np.full(len(ids), qid, dtype=object), ids, scores))
             return tuple(np.concatenate(c) for c in zip(*parts)) if parts else None
 
-        per_shard = self._per_shard(idf_map, "wand", TOPK_MANY_SCHEMA, body)
+        per_shard = self._per_shard(idf_map, "tf", TOPK_MANY_SCHEMA, body)
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             per_shard.withColumn("__rn", F.row_number().over(w))

@@ -2,7 +2,7 @@
 per-shard implementation of every search operator.
 
 Per-shard bodies live here and nowhere else: the segment decode
-(``decode_segments`` / ``segment_postings``), the any/all WAND dispatch
+(``decode_segments`` / ``segment_postings``), the any/all top-k dispatch
 (``wand_topk``), the count set arithmetic (``match_ids``), the boolean,
 phrase, highlight and multi-term / multi-field bodies (``*_shard``), the
 Levenshtein DP and the vocabulary scans. Each body takes ONE shard's
@@ -46,8 +46,8 @@ from .wand import (
     TermPostings,
     bm25_idf,
     check_after_cursor,
-    topk_block_max_wand,
     topk_conjunctive,
+    topk_disjunctive,
 )
 
 _NO_POS = np.empty(0, dtype=np.int64)
@@ -63,19 +63,14 @@ _COLUMNS = {
     "match": ("term", "df", "doc_ids"),
     "tf": ("term", "df", "doc_ids", "tfs"),
     "pos": ("term", "df", "doc_ids", "tfs", "pos"),
-    "wand": ("term", "df", "doc_ids", "tfs", "block_last", "block_max"),
 }
 
 
-def postings_columns(kind: str, available) -> list[str]:
+def postings_columns(kind: str) -> list[str]:
     """Postings columns (besides ``shard``) a ``kind`` of body decodes:
-    "match" (count / matching_ids), "tf" (boolean, multi-term), "pos"
-    (phrase, highlight) or "wand" (the top-k family; plus ``avgdl_seg``
-    when the index has it)."""
-    cols = list(_COLUMNS[kind])
-    if kind == "wand" and "avgdl_seg" in available:
-        cols.append("avgdl_seg")
-    return cols
+    "match" (count / matching_ids), "tf" (the top-k family, boolean,
+    multi-term) or "pos" (phrase, highlight)."""
+    return list(_COLUMNS[kind])
 
 
 def _rows_by_term(rows, cols: tuple[str, ...]) -> list[tuple]:
@@ -103,74 +98,48 @@ def decode_segments(
     k1: float,
     b: float,
     avgdl: float,
-    block_size: int,
     tombstones: np.ndarray | None = None,
     allowed: np.ndarray | None = None,
 ) -> list[tuple[str, tuple]]:
-    """One shard's "wand" rows as idf-INDEPENDENT segments in canonical
-    term order: ``[(term, (ids, tfpart, block_last, ub_base, bscale))]``.
+    """One shard's "tf" rows as idf-INDEPENDENT segments in canonical
+    term order: ``[(term, (ids, tfpart))]``.
 
     A (term, shard) may own SEVERAL segment rows (hot-term salts, append
     generations); BM25 is additive per entry, so each stays its own
     segment — collapsing them per term would drop postings.
 
     ``tombstones`` / ``allowed`` (sorted doc_ids) drop deleted entries /
-    keep only eligible ones (a filtered search). A filtered segment's
-    block metadata is REBUILT from the surviving tf-parts (block arrays
-    are addressed by entry position, so filtering without a rebuild would
-    misalign the WAND skip bounds) and its bscale is None. Otherwise the
-    stored block_max is kept with bscale = max(1, avgdl / avgdl_seg):
-    appends that raise the corpus avgdl can lift a tf-part above the
-    build-time block max, and that ratio is the sup of the lift, so the
-    bound stays valid and WAND exact."""
+    keep only eligible ones (a filtered search); a segment left empty is
+    dropped."""
     if allowed is not None and len(allowed) == 0:
         return []
     dl_ids, dl_vals = dl
     out = []
-    for term, n, ids_b, tfs_b, blast, bmax, seg in _rows_by_term(
-        rows, ("df", "doc_ids", "tfs", "block_last", "block_max", "avgdl_seg")
-    ):
+    for term, n, ids_b, tfs_b in _rows_by_term(rows, ("df", "doc_ids", "tfs")):
         n = int(n)
         ids = delta_decode(bytes(ids_b), n).astype(np.int64)
         tfs = varint_decode(bytes(tfs_b), n).astype(np.float64)
         dls = dl_vals[np.searchsorted(dl_ids, ids)]
         tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-        keep = None
+        keep = np.ones(n, dtype=bool)
         if tombstones is not None and len(tombstones):
-            alive = ~_member(tombstones, ids)
-            if not alive.all():
-                keep = alive
+            keep &= ~_member(tombstones, ids)
         if allowed is not None:
-            elig = _member(allowed, ids)
-            if not elig.all():
-                keep = elig if keep is None else (keep & elig)
-        if keep is None:
-            bscale = max(1.0, avgdl / float(seg)) if seg and seg > 0 else 1.0
-            out.append((term, (
-                ids, tfpart, np.asarray(blast, dtype=np.int64),
-                np.asarray(bmax, dtype=np.float64), bscale,
-            )))
-            continue
-        ids, tfpart = ids[keep], tfpart[keep]
-        if len(ids) == 0:
-            continue
-        starts = np.arange(0, len(ids), block_size)
-        out.append((term, (
-            ids, tfpart, ids[np.minimum(starts + block_size - 1, len(ids) - 1)],
-            np.maximum.reduceat(tfpart, starts), None,
-        )))
+            keep &= _member(allowed, ids)
+        if not keep.all():
+            ids, tfpart = ids[keep], tfpart[keep]
+            if len(ids) == 0:
+                continue
+        out.append((term, (ids, tfpart)))
     return out
 
 
-def segment_postings(seg: tuple, idf: float, block_size: int) -> TermPostings:
-    """A decoded segment scored for one idf: scores = idf·tfpart; bounds
-    = idf·ub_base for rebuilt blocks (idf·max(x) == max(idf·x) exactly: a
-    positive scalar multiply is monotone) or (idf·bscale)·block_max for
-    stored ones. Every caller goes through here, so cached and uncached
-    scoring round identically."""
-    ids, tfpart, blast, ub_base, bscale = seg
-    ub = idf * ub_base if bscale is None else (idf * bscale) * ub_base
-    return TermPostings(ids, idf * tfpart, blast, ub, block_size)
+def segment_postings(seg: tuple, idf: float) -> TermPostings:
+    """A decoded segment scored for one idf: scores = idf·tfpart. Every
+    caller goes through here, so cached and uncached scoring round
+    identically."""
+    ids, tfpart = seg
+    return TermPostings(ids, idf * tfpart)
 
 
 def wand_topk(
@@ -180,14 +149,15 @@ def wand_topk(
     after: tuple[float, int] | None = None,
     stats: dict | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-shard top-k over ``{term: segments}`` (term-sorted): block-max
-    WAND over every segment, or — with ``require`` — the conjunctive
-    kernel over docs holding that many terms. ``after`` is a validated
-    search-after cursor; ``stats`` collects WAND pruning counters."""
+    """Per-shard top-k over ``{term: segments}`` (term-sorted): the
+    disjunctive kernel over every segment, or — with ``require`` — the
+    conjunctive kernel over docs holding that many terms. ``after`` is a
+    validated search-after cursor; ``stats`` collects the disjunctive
+    kernel's entry counters."""
     if require is not None:
         return topk_conjunctive(by_term, k, require=require, after=after)
     tps = [tp for segs in by_term.values() for tp in segs]
-    return topk_block_max_wand(tps, k, after=after, stats=stats)
+    return topk_disjunctive(tps, k, after=after, stats=stats)
 
 
 def idf_for(df_for, terms: list[str], n_docs: int) -> dict[str, float]:
@@ -467,13 +437,15 @@ class LocalSearcher:
         self._df = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
         self._tombstones = _local_tombstones(index_dir)
         # decoded term-segment cache: term → [(shard, segment)], segments as
-        # decode_segments returns them (tombstones applied, block metadata
-        # rebuilt) — everything idf-INDEPENDENT, so a query scores them
-        # with its own idf through segment_postings, exactly the uncached
-        # arithmetic. Bounded by _SEG_CACHE_MAX_TERMS. The cache is
+        # decode_segments returns them (tombstones applied) — everything
+        # idf-INDEPENDENT, so a query scores them with its own idf through
+        # segment_postings, exactly the uncached arithmetic. Bounded by
+        # _SEG_CACHE_MAX_TERMS and _SEG_CACHE_MAX_ENTRIES; _seg_entries is
+        # the running count of decoded entries it holds. The cache is
         # PER-HANDLE state — a reopened searcher (the reader-reopen
         # contract after append/compact) starts empty.
         self._seg_cache: dict[str, list[tuple]] = {}
+        self._seg_entries = 0
         # per-shard doc-length packs, decoded once
         pack = ds.dataset(
             os.path.join(index_dir, "dlpack"), format="parquet"
@@ -493,7 +465,7 @@ class LocalSearcher:
         """{shard: {column: values}} of the postings rows of ``terms``,
         with exactly the ``kind`` columns of postings_columns — the serve
         tier's side of the Spark shard cogroup."""
-        cols = postings_columns(kind, self._postings.schema.names)
+        cols = postings_columns(kind)
         tbl = self._postings.to_table(
             filter=ds.field("term").isin(terms), columns=["shard", *cols]
         ).to_pydict()
@@ -524,9 +496,9 @@ class LocalSearcher:
     def profile_topk(
         self, query: str, k: int = 10
     ) -> tuple[list[tuple[int, float]], dict]:
-        """topk plus the kernel's measured pruning counters (see
-        wand.topk_block_max_wand ``stats``) — WAND-skip evidence for a
-        query, per process rather than per claim."""
+        """topk plus the kernel's measured entry counters (see
+        wand.topk_disjunctive ``stats``): how many postings entries the
+        query scored, per process rather than per claim."""
         q_terms = sorted(set(tokenize_text(query)))
         idf = idf_for(self._df_for, q_terms, self.meta["n_docs"])
         if not idf:
@@ -536,13 +508,13 @@ class LocalSearcher:
         return hits, stats
 
     # cache budget: decoded segments for this many DISTINCT terms AND at
-    # most this many decoded posting entries across them (~24 B/entry:
-    # int64 ids + float64 tfpart + block arrays) — a term cap alone would
-    # let a few stopword-grade terms pin GBs. FIFO eviction that NEVER
-    # evicts the terms of the query currently executing (evicting a warm
-    # term mid-query would silently drop its postings from scoring).
+    # most this many decoded posting entries across them (16 B/entry:
+    # int64 ids + float64 tfpart) — a term cap alone would let a few
+    # stopword-grade terms pin GBs. FIFO eviction that NEVER evicts the
+    # terms of the query currently executing (evicting a warm term
+    # mid-query would silently drop its postings from scoring).
     _SEG_CACHE_MAX_TERMS = 1024
-    _SEG_CACHE_MAX_ENTRIES = 16_000_000  # ≈ 400 MB decoded
+    _SEG_CACHE_MAX_ENTRIES = 16_000_000  # ≈ 256 MB decoded
 
     def _ensure_segments(self, terms: list[str]) -> None:
         """Decode (once) the postings segments of any ``terms`` missing
@@ -554,31 +526,25 @@ class LocalSearcher:
         m = self.meta
         for t in missing:
             self._seg_cache[t] = []  # absent-from-postings terms cache []
-        for shard, rows in self._shard_rows(missing, "wand").items():
+        for shard, rows in self._shard_rows(missing, "tf").items():
             for term, seg in decode_segments(
-                rows, self._dl[shard], m["k1"], m["b"], m["avgdl"],
-                m["block_size"], self._tombstones,
+                rows, self._dl[shard], m["k1"], m["b"], m["avgdl"], self._tombstones,
             ):
                 self._seg_cache[term].append((shard, seg))
-        protected = set(terms)
+                self._seg_entries += len(seg[0])
 
-        def total_entries():
-            return sum(
-                len(seg[0]) for segs in self._seg_cache.values() for _, seg in segs
+        def over_budget():
+            return (
+                len(self._seg_cache) > self._SEG_CACHE_MAX_TERMS
+                or self._seg_entries > self._SEG_CACHE_MAX_ENTRIES
             )
 
-        if (
-            len(self._seg_cache) > self._SEG_CACHE_MAX_TERMS
-            or total_entries() > self._SEG_CACHE_MAX_ENTRIES
-        ):
-            evictable = [t for t in self._seg_cache if t not in protected]
-            for t in evictable:
-                if (
-                    len(self._seg_cache) <= self._SEG_CACHE_MAX_TERMS
-                    and total_entries() <= self._SEG_CACHE_MAX_ENTRIES
-                ):
+        if over_budget():
+            protected = set(terms)
+            for t in [t for t in self._seg_cache if t not in protected]:
+                if not over_budget():
                     break
-                self._seg_cache.pop(t)
+                self._seg_entries -= sum(len(seg[0]) for _, seg in self._seg_cache.pop(t))
 
     def _topk_with_idf(
         self,
@@ -593,14 +559,13 @@ class LocalSearcher:
         Bm25Index._shard_topk_frame). Conjunctive ``require`` is the full
         injected vocabulary size, so a member missing a term contributes
         nothing in mode='all'."""
-        bs = self.meta["block_size"]
         self._ensure_segments(list(idf))
         by_shard: dict[int, dict[str, list[TermPostings]]] = {}
         # canonical term order, as decode_segments hands it to the Spark tier
         for term in sorted(idf):
             for shard, seg in self._seg_cache.get(term, ()):
                 by_shard.setdefault(shard, {}).setdefault(term, []).append(
-                    segment_postings(seg, idf[term], bs)
+                    segment_postings(seg, idf[term])
                 )
         after_ = check_after_cursor(after) if after is not None else None
         require = len(idf) if mode == "all" else None

@@ -2,7 +2,7 @@
 
 The web-scale crawl loop: new documents arrive continuously; each
 micro-batch is folded into the existing index through
-``indexer.append_index`` (additive postings segments, exact WAND across
+``indexer.append_index`` (additive postings segments, exact top-k across
 the avgdl shift). ``foreachBatch`` is the right integration point —
 append_index is a batch job with its own write topology (docs append,
 dlpack swap, per-shard postings append), which a streaming sink cannot

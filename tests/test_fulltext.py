@@ -19,7 +19,7 @@ from koncorde_spark.fulltext.codecs import (
 )
 from koncorde_spark.fulltext.oracle import bm25_oracle_topk
 from koncorde_spark.fulltext.tokenizer import tokenize_text
-from koncorde_spark.fulltext.wand import TermPostings, bm25_idf, topk_block_max_wand
+from koncorde_spark.fulltext.wand import TermPostings, bm25_idf, topk_disjunctive
 
 
 class TestCodecs:
@@ -71,8 +71,9 @@ class TestTokenizer:
         assert got.tolist() == want
 
 
-def _mk_postings(rng, n_docs, n_terms, k1=1.2, b=0.75, block_size=8):
-    """Random postings with correct block metadata for the WAND test."""
+def _mk_postings(rng, n_docs, n_terms, k1=1.2, b=0.75):
+    """Random BM25 postings plus their brute {doc_id: score} sums (added
+    in term order, as the kernel accumulates)."""
     terms = []
     universe = np.sort(rng.choice(np.arange(1, 10**9), size=n_docs, replace=False))
     dls = rng.integers(10, 500, size=n_docs).astype(np.float64)
@@ -87,18 +88,7 @@ def _mk_postings(rng, n_docs, n_terms, k1=1.2, b=0.75, block_size=8):
         idf = float(bm25_idf(n, cnt))
         tfpart = tfs * (k1 + 1) / (tfs + k1 * (1 - b + b * dls[sel] / avgdl))
         scores = idf * tfpart
-        nb = (cnt + block_size - 1) // block_size
-        bl = np.array([ids[min((i + 1) * block_size, cnt) - 1] for i in range(nb)])
-        bm = np.array([scores[i * block_size : (i + 1) * block_size].max() for i in range(nb)])
-        terms.append(
-            TermPostings(
-                doc_ids=ids.astype(np.int64),
-                scores=scores,
-                block_last=bl.astype(np.int64),
-                block_ub=bm,
-                block_size=block_size,
-            )
-        )
+        terms.append(TermPostings(doc_ids=ids.astype(np.int64), scores=scores))
         for d, s in zip(ids, scores):
             truth[d] = truth.get(d, 0.0) + s
     return terms, truth
@@ -109,26 +99,67 @@ class TestWand:
     def test_wand_equals_exhaustive(self, seed):
         rng = np.random.default_rng(seed)
         terms, truth = _mk_postings(rng, n_docs=400, n_terms=4)
-        ids, scores = topk_block_max_wand(terms, 10)
+        ids, scores = topk_disjunctive(terms, 10)
         exp = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:10]
         assert list(ids) == [d for d, _ in exp]
         assert np.allclose(scores, [s for _, s in exp], atol=1e-12)
 
-    def test_wand_pruning_path(self):
-        # force the non-exhaustive branch: > 2^17 total entries
+    def test_disjunctive_large_union_exact(self):
+        """Scale check of the one disjunctive kernel: a 3-term union of
+        ~340k entries (df N/3, N/20, N/500 over N = 0.9M; Zipf tfs) — the
+        top-k and three search_after pages equal the brute ranking bit for
+        bit, and every entry is counted as scored."""
         rng = np.random.default_rng(7)
-        n = 140_000
-        ids = np.sort(rng.choice(np.arange(1, 10**9), size=n, replace=False)).astype(np.int64)
-        scores = rng.random(n) * 5
-        bs = 128
-        nb = (n + bs - 1) // bs
-        bl = np.array([ids[min((i + 1) * bs, n) - 1] for i in range(nb)], dtype=np.int64)
-        bm = np.array([scores[i * bs : (i + 1) * bs].max() for i in range(nb)])
-        t = TermPostings(ids, scores, bl, bm, bs)
-        got_ids, got_scores = topk_block_max_wand([t], 25)
-        order = np.lexsort((ids, -scores))[:25]
-        assert list(got_ids) == list(ids[order])
-        assert np.allclose(got_scores, scores[order], atol=0)
+        n = 900_000
+        universe = np.cumsum(rng.integers(1, 10**6, size=n))  # sorted, distinct
+        dls = rng.integers(10, 500, size=n).astype(np.float64)
+        avgdl = dls.mean()
+        terms, truth = [], {}
+        for df in (n // 3, n // 20, n // 500):
+            sel = np.sort(rng.choice(n, size=df, replace=False))
+            tfs = np.minimum(rng.zipf(1.8, size=df), 200).astype(np.float64)
+            tfpart = tfs * 2.2 / (tfs + 1.2 * (0.25 + 0.75 * dls[sel] / avgdl))
+            scores = float(bm25_idf(n, df)) * tfpart
+            terms.append(TermPostings(universe[sel].astype(np.int64), scores))
+            for d, sc in zip(universe[sel].tolist(), scores.tolist()):
+                truth[d] = truth.get(d, 0.0) + sc
+        total = sum(len(t.doc_ids) for t in terms)
+        assert total >= 300_000
+        brute = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))
+
+        stats: dict = {}
+        ids, scores = topk_disjunctive(terms, 25, stats=stats)
+        assert list(zip(ids.tolist(), scores.tolist())) == brute[:25]
+        assert stats == {"entries_total": total, "entries_scored": total}
+        for start in (25, 50, 10_000):
+            after = (brute[start - 1][1], brute[start - 1][0])
+            ids, scores = topk_disjunctive(terms, 25, after=after)
+            assert list(zip(ids.tolist(), scores.tolist())) == brute[start:start + 25]
+
+
+class TestIndexConfigFingerprint:
+    # IndexConfig().fingerprint() and IndexConfig(positions=True)
+    # .fingerprint() of indexes written while the config still carried
+    # block_size=128: meta.json records these, and open / append /
+    # compact / resume verify against them
+    PINNED = {False: "660ff3c4d84e8a29", True: "748a811937329d52"}
+
+    @pytest.mark.parametrize("positions", [False, True])
+    def test_fingerprint_pinned(self, positions):
+        from koncorde_spark.fulltext.indexer import IndexConfig
+
+        assert IndexConfig(positions=positions).fingerprint() == self.PINNED[positions]
+
+    @pytest.mark.parametrize("positions", [False, True])
+    def test_from_meta_accepts_block_size_era_meta(self, positions):
+        from koncorde_spark.fulltext.indexer import IndexConfig
+
+        meta = {"n_docs": 10, "avgdl": 5.0, "k1": 1.2, "b": 0.75, "n_shards": 8,
+                "block_size": 128, "positions": positions,
+                "config": self.PINNED[positions]}
+        config = IndexConfig.from_meta(meta)
+        assert config == IndexConfig(positions=positions)
+        assert config.fingerprint() == self.PINNED[positions]
 
 
 @pytest.mark.spark
@@ -378,27 +409,21 @@ class TestMultiSegmentDecode:
     def test_segments_are_additive_not_collapsed(self):
         """A (term, shard) pair owning SEVERAL segment rows (salted hot
         term / append generation) must contribute ALL its postings: the
-        decode helper returns per-term segment LISTS and WAND scores the
-        union (a per-term dict would silently drop all but one segment)."""
+        decode helper returns per-term segment LISTS and the disjunctive
+        kernel scores the union (a per-term dict would silently drop all
+        but one segment)."""
         import pandas as pd
 
         from koncorde_spark.fulltext.codecs import delta_encode, varint_encode
         from koncorde_spark.fulltext.query import _decode_shard_postings
-        from koncorde_spark.fulltext.wand import topk_block_max_wand
 
-        def seg(ids, tfs, avgdl_seg=10.0):
-            ids_a = np.array(ids, dtype=np.uint64)
-            tf_a = np.array(tfs, dtype=np.uint64)
-            norm = tf_a * 2.2 / (tf_a + 1.2)  # any valid upper bound
+        def seg(ids, tfs):
             return {
                 "term": "hot",
                 "shard": 0,
                 "df": len(ids),
-                "doc_ids": delta_encode(ids_a),
-                "tfs": varint_encode(tf_a),
-                "block_last": [int(ids[-1])],
-                "block_max": [float(norm.max())],
-                "avgdl_seg": avgdl_seg,
+                "doc_ids": delta_encode(np.array(ids, dtype=np.uint64)),
+                "tfs": varint_encode(np.array(tfs, dtype=np.uint64)),
             }
 
         post_pdf = pd.DataFrame([seg([1, 5], [2, 1]), seg([3, 9], [1, 4])])
@@ -412,10 +437,10 @@ class TestMultiSegmentDecode:
             }]
         )
         by_term = _decode_shard_postings(
-            post_pdf, pack_pdf, {"hot": 1.0}, 1.2, 0.75, 10.0, 128
+            post_pdf, pack_pdf, {"hot": 1.0}, 1.2, 0.75, 10.0
         )
         assert len(by_term["hot"]) == 2  # both segments survive
-        ids, scores = topk_block_max_wand(
+        ids, scores = topk_disjunctive(
             [tp for segs in by_term.values() for tp in segs], 10
         )
         assert sorted(ids.tolist()) == [1, 3, 5, 9]  # postings from BOTH segments
@@ -456,8 +481,8 @@ class TestAppendIndex:
             "alpha beta gamma delta import return merge spark index shard".split()
         )
         docs_a = self._mk_docs(rng, 60, words, 12)
-        # batch B is 10x LONGER: the corpus avgdl RISES sharply, exercising
-        # the avgdl_seg bound correction (stale bounds would break WAND)
+        # batch B is 10x LONGER: the corpus avgdl RISES sharply, so the old
+        # segments must score with the new avgdl, not their build-time one
         docs_b = self._mk_docs(rng, 40, words, 120)
 
         base_a, _ = self._corpus(spark, docs_a)
@@ -565,8 +590,9 @@ class TestAppendIndex:
 
     def test_two_sequential_appends_match_full_build(self, spark, tmp_path):
         """append(A); append(B); append(C-chain): multi-generation segment
-        accumulation (3 avgdl_seg values live side-by-side) still answers
-        identically to one build over everything."""
+        accumulation (segments built at 3 different corpus avgdls live
+        side-by-side) still answers identically to one build over
+        everything."""
         from koncorde_spark.fulltext.indexer import IndexConfig, append_index, build_index
         from koncorde_spark.fulltext.query import Bm25Index
 
@@ -748,38 +774,108 @@ class TestDeletions:
         assert fsck_index(spark, d)["ok"]
 
 
-class TestAppendSchemaGuard:
-    def test_append_refuses_pre_avgdl_seg_postings(self, spark, tmp_path):
-        """Appending to an index whose postings lack avgdl_seg would create
-        MIXED parquet schemas; schema inference from an old fragment then
-        silently drops the column for the new segments too and block-max
-        WAND can skip true top-k docs after an avgdl-raising append
-        (ADVICE r3). append_index must refuse up front."""
-        import numpy as np
+class TestParentFormatCompat:
+    def test_block_max_era_postings_open_append_delete_compact(self, spark, tmp_path):
+        """Indexes written before the per-block bounds were dropped carry
+        three more postings columns (block_last, block_max, avgdl_seg).
+        Scans select their columns by name, so such an index still opens
+        on both tiers, appends (the new segments lack the columns), deletes
+        and compacts — answering, after every step, exactly as a fresh
+        build of the same documents — and passes fsck."""
+        import glob
 
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from koncorde_spark.fulltext.fsck import fsck_index
         from koncorde_spark.fulltext.indexer import (
             IndexConfig,
             append_index,
             build_index,
+            compact_index,
+            delete_docs,
+            doc_id_of,
+            read_meta,
+        )
+        from koncorde_spark.fulltext.query import Bm25Index
+        from koncorde_spark.fulltext.serve import LocalSearcher
+
+        rng = np.random.default_rng(17)
+        words = np.array(
+            "alpha beta gamma delta import return merge spark index shard".split()
         )
 
-        rng = np.random.default_rng(11)
-        words = np.array("aa bb cc dd".split())
-        corpus, _ = TestAppendIndex._corpus(
-            spark, TestAppendIndex._mk_docs(rng, 10, words, 6)
-        )
+        def batch(tag, n, length):
+            docs = TestAppendIndex._mk_docs(rng, n, words, length)
+            return pd.DataFrame({
+                "repo": [f"r{i % 3}" for i in range(n)],
+                "path": [f"{tag}/{i}.py" for i in range(n)],
+                "commit": [tag] * n,
+                "lang": ["py"] * n,
+                "content": docs,
+            })
+
+        # batch B is 10x longer: the append raises the corpus avgdl
+        pdf_a, pdf_b = batch("a", 40, 12), batch("b", 30, 120)
+        cfg = IndexConfig(n_shards=2)
+        n = [0]
+
+        def fresh(pdf):
+            n[0] += 1
+            out = str(tmp_path / f"fresh{n[0]}")
+            build_index(spark, spark.createDataFrame(pdf), out, cfg, resume=False)
+            return out
+
         d = str(tmp_path / "idx")
-        build_index(spark, corpus, d, IndexConfig(n_shards=2), resume=False)
-        # simulate a pre-append-era index: rewrite postings without the column
-        ppath = os.path.join(d, "postings")
-        old = spark.read.parquet(ppath).drop("avgdl_seg").toPandas()
-        import shutil
+        build_index(spark, spark.createDataFrame(pdf_a), d, cfg, resume=False)
+        # rewrite every postings file in the older format: the same rows
+        # plus the three per-block bound columns
+        avgdl = read_meta(d)["avgdl"]
+        files = glob.glob(os.path.join(d, "postings", "shard=*", "*.parquet"))
+        assert files
+        for f in files:
+            t = pq.read_table(f)
+            last = [[int(x)] for x in range(t.num_rows)]
+            t = t.append_column("block_last", pa.array(last, pa.list_(pa.int64())))
+            t = t.append_column("block_max", pa.array([[1.0]] * t.num_rows, pa.list_(pa.float64())))
+            t = t.append_column("avgdl_seg", pa.array([avgdl] * t.num_rows, pa.float64()))
+            pq.write_table(t, f)
+            crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+            if os.path.exists(crc):  # Hadoop's checksum of the old bytes
+                os.remove(crc)
+            assert pq.read_schema(f).names[-3:] == ["block_last", "block_max", "avgdl_seg"]
+        spark.catalog.refreshByPath(os.path.join(d, "postings"))
 
-        shutil.rmtree(ppath)
-        spark.createDataFrame(old).write.partitionBy("shard").parquet(ppath)
-        spark.catalog.refreshByPath(ppath)
-        with pytest.raises(RuntimeError, match="avgdl_seg"):
-            append_index(spark, corpus, d)
+        queries = ["alpha beta", "import merge spark", "gamma", "shard index return"]
+        k = 12
+
+        def hits(index_dir, q, depth=k):
+            local = LocalSearcher(index_dir).topk(q, depth)
+            pdf = Bm25Index(spark, index_dir).topk(q, depth).toPandas()
+            spark_hits = list(zip(pdf["doc_id"].tolist(), pdf["score"].tolist()))
+            assert local == spark_hits, (index_dir, q)
+            return local
+
+        def check(want_dir, dropped=()):
+            for q in queries:
+                want = [h for h in hits(want_dir, q, k + len(dropped)) if h[0] not in dropped]
+                assert hits(d, q) == want[:k], q
+            assert fsck_index(spark, d)["ok"]
+
+        check(fresh(pdf_a))
+        append_index(spark, spark.createDataFrame(pdf_b), d)
+        assert read_meta(d)["avgdl"] > avgdl
+        union = pd.concat([pdf_a, pdf_b], ignore_index=True)
+        fresh_union = fresh(union)
+        check(fresh_union)
+        victims = [doc for doc, _ in LocalSearcher(d).topk("import merge spark", 3)]
+        delete_docs(spark, d, victims)
+        # tombstones keep the corpus statistics until compaction
+        check(fresh_union, dropped=set(victims))
+        compact_index(spark, d, n_term_buckets=2)
+        ids = [doc_id_of(r, p, c) for r, p, c in zip(union["repo"], union["path"], union["commit"])]
+        survivors = union[[i not in set(victims) for i in ids]].reset_index(drop=True)
+        check(fresh(survivors))
 
 
 class TestTombstoneBudget:
@@ -940,7 +1036,7 @@ class TestTopkFiltered:
 
     def test_composes_with_tombstones(self, spark, tmp_path):
         """Filtered search over an index with deletions: eligibility mask
-        AND tombstones both apply; block bounds rebuilt over survivors."""
+        AND tombstones both apply before scoring."""
         from koncorde_spark.fulltext.indexer import IndexConfig, build_index, delete_docs
         from koncorde_spark.fulltext.query import Bm25Index
         from koncorde_spark.sources import synthetic_corpus_pandas
@@ -1429,10 +1525,6 @@ class TestCompaction:
         with _warnings.catch_warnings():
             _warnings.simplefilter("error")
             assert len(ix.read_tombstones(spark, d)) == 0
-        # every segment carries the post-compaction avgdl (bound_scale 1)
-        avgdl = ix.read_meta(d)["avgdl"]
-        segs = posts.select("avgdl_seg").distinct().collect()
-        assert len(segs) == 1 and abs(segs[0][0] - avgdl) < 1e-9
 
     def test_positional_compact_preserves_phrase_and_proximity(self, spark, tmp_path):
         from koncorde_spark.fulltext import indexer as ix

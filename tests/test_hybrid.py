@@ -119,7 +119,7 @@ class TestRrfFuse:
 
 class TestHybridProductLegs:
     def test_indexed_bm25_plus_ann(self, spark, tmp_path):
-        """Fusion over the REAL legs: block-max-WAND topk on a built
+        """Fusion over the REAL legs: per-shard BM25 topk on a built
         index + Catalyst LSH ANN. The fused head must contain the
         lexical rank-1 and the semantic rank-1 docs."""
         from pyspark.sql import functions as F

@@ -12,12 +12,7 @@ import pytest
 
 from koncorde_spark.fulltext.oracle import bm25_oracle_topk
 from koncorde_spark.fulltext.serve import LocalSearcher
-from koncorde_spark.fulltext.wand import (
-    TermPostings,
-    _score_all,
-    score_union,
-    topk_block_max_wand,
-)
+from koncorde_spark.fulltext.wand import TermPostings, score_union, topk_disjunctive
 
 Q = "import ident_00001 return"
 
@@ -100,21 +95,15 @@ def test_search_after_cursor_inside_tie_group(spark, tmp_path):
     assert len(flat) == len(set(flat))
 
 
-def _mk_postings(rng, n_docs, n_entries, block_size=8):
+def _mk_postings(rng, n_docs, n_entries):
     ids = np.sort(rng.choice(n_docs, size=n_entries, replace=False)).astype(np.int64)
-    scores = rng.uniform(0.1, 5.0, size=n_entries)
-    nb = (n_entries + block_size - 1) // block_size
-    starts = np.arange(nb) * block_size
-    return TermPostings(
-        ids, scores,
-        ids[np.minimum(starts + block_size - 1, n_entries - 1)],
-        np.maximum.reduceat(scores, starts), block_size,
-    )
+    return TermPostings(ids, rng.uniform(0.1, 5.0, size=n_entries))
 
 
 def test_wand_after_kernel_tiles_brute():
-    """Kernel-level: WAND with an after cursor returns exactly the next k
-    ranks of brute full scoring, page after page until exhaustion."""
+    """Kernel-level: the disjunctive kernel with an after cursor returns
+    exactly the next k ranks of brute full scoring, page after page until
+    exhaustion."""
     rng = np.random.default_rng(7)
     terms = [_mk_postings(rng, 500, n) for n in (220, 160, 90)]
     ids, acc = score_union(terms)
@@ -122,15 +111,15 @@ def test_wand_after_kernel_tiles_brute():
     brute = list(zip(ids[order].tolist(), acc[order].tolist()))
     k, got, after = 13, [], None
     while True:
-        pids, pscores = topk_block_max_wand(terms, k, after=after)
+        pids, pscores = topk_disjunctive(terms, k, after=after)
         if len(pids) == 0:
             break
         got.extend(zip(pids.tolist(), pscores.tolist()))
         after = (float(pscores[-1]), int(pids[-1]))
     assert got == brute
-    # _score_all agrees with the streaming path on the same cursor
+    # a cursor taken mid-ranking (not from a page end) starts right after it
     mid = brute[20]
-    a_ids, a_sc = _score_all(terms, 9, after=(mid[1], mid[0]))
+    a_ids, a_sc = topk_disjunctive(terms, 9, after=(mid[1], mid[0]))
     assert list(zip(a_ids.tolist(), a_sc.tolist())) == brute[21:30]
 
 
@@ -398,34 +387,36 @@ def test_search_after_fuzz_duplicate_heavy(spark, tmp_path):
     run()
 
 
-def test_wand_stats_skipping_fires_and_results_exact():
-    """On a large skewed union the block-max path must SKIP segments
-    (measured, not claimed) while returning exactly the brute ranking;
-    stats add up (scored + skipped segments, entries partitioned)."""
+def test_disjunctive_stats_and_after_pages_exact_at_scale():
+    """On a large skewed union (one common low-score term of 300k entries
+    + two rare high-idf terms) the disjunctive kernel's top-k and its
+    search_after pages equal the brute score_union ranking exactly, and
+    its stats count every entry as scored."""
     rng = np.random.default_rng(23)
-    n_docs = 400_000
-    # one dominant common term + two rare high-idf terms: the classic
-    # shape where WAND skips most of the common term's blocks
-    common = _mk_postings(rng, n_docs, 180_000, block_size=64)
+    n_docs = 600_000
+    common = _mk_postings(rng, n_docs, 300_000)
     common.scores *= 0.05  # low per-entry score
-    common.block_ub = np.maximum.reduceat(
-        common.scores, np.arange(0, len(common.scores), 64)
-    )
-    rare1 = _mk_postings(rng, n_docs, 3_000, block_size=64)
-    rare2 = _mk_postings(rng, n_docs, 2_000, block_size=64)
-    terms = [common, rare1, rare2]
+    terms = [common, _mk_postings(rng, n_docs, 3_000), _mk_postings(rng, n_docs, 2_000)]
+    total = sum(len(t.doc_ids) for t in terms)
 
-    stats = {}
-    ids, scores = topk_block_max_wand(terms, 10, stats=stats)
     bids, bacc = score_union(terms)
-    order = np.lexsort((bids, -bacc))[:10]
-    assert ids.tolist() == bids[order].tolist()
-    assert np.allclose(scores, bacc[order], atol=0)
+    order = np.lexsort((bids, -bacc))
+    brute = list(zip(bids[order].tolist(), bacc[order].tolist()))
+    stats: dict = {}
+    ids, scores = topk_disjunctive(terms, 10, stats=stats)
+    assert list(zip(ids.tolist(), scores.tolist())) == brute[:10]
+    assert stats["entries_total"] == total
+    assert stats["entries_scored"] == stats["entries_total"]
 
-    assert stats.get("exhaustive", 0) == 0  # streaming path ran
-    assert stats["segments_skipped"] > 0    # pruning actually fired
-    assert stats["entries_scored"] < stats["entries_total"]
-    assert stats["segments_scored"] > 0
+    got, after = [], None
+    for _ in range(3):
+        ids, scores = topk_disjunctive(terms, 10, after=after)
+        got.extend(zip(ids.tolist(), scores.tolist()))
+        after = (float(scores[-1]), int(ids[-1]))
+    assert got == brute[:30]
+    deep = brute[250_000]
+    ids, scores = topk_disjunctive(terms, 10, after=(deep[1], deep[0]))
+    assert list(zip(ids.tolist(), scores.tolist())) == brute[250_001:250_011]
 
 
 @pytest.mark.spark
@@ -433,6 +424,5 @@ def test_profile_topk_counters(bm25_index_dir):
     s = LocalSearcher(bm25_index_dir)
     hits, stats = s.profile_topk(Q, 5)
     assert hits == s.topk(Q, 5)
-    # small fixture: the exhaustive fallback path is the expected shape
-    assert stats.get("entries_total", 0) > 0
-    assert stats.get("entries_scored", 0) <= stats["entries_total"]
+    assert stats["entries_total"] > 0
+    assert stats["entries_scored"] == stats["entries_total"]

@@ -176,3 +176,34 @@ def test_serve_segment_cache_eviction_never_breaks_current_query(bm25_index_dir)
     for q in ("import return", "def function import", "import ident_00001 return"):
         assert s.topk(q, 10) == fresh.topk(q, 10), q
     assert len(s._seg_cache) >= 1
+
+
+def test_serve_segment_cache_running_count_matches_recount(bm25_index_dir):
+    """The cache's running entry count (_seg_entries, updated on insert
+    and on eviction) equals a fresh recount after every query of a random
+    sequence that crosses BOTH caps — the term cap on runs of mid-df
+    terms, the entry cap on runs of hot ones — and every answer equals a
+    fresh handle's."""
+    s = LocalSearcher(bm25_index_dir)
+    s._SEG_CACHE_MAX_TERMS = 8
+    s._SEG_CACHE_MAX_ENTRIES = 1500
+    fresh = LocalSearcher(bm25_index_dir)
+    by_df = sorted(s._df, key=lambda t: (-s._df[t], t))
+    hot, mid = by_df[:20], by_df[200:240]
+    rng = np.random.default_rng(5)
+    fired = {"terms": 0, "entries": 0}
+    for i in range(80):
+        pool = hot if (i // 10) % 2 else mid
+        q = " ".join(rng.choice(pool, size=int(rng.integers(1, 4)), replace=False))
+        before = set(s._seg_cache)
+        assert s.topk(q, 10) == fresh.topk(q, 10), q
+        assert s._seg_entries == sum(
+            len(seg[0]) for segs in s._seg_cache.values() for _, seg in segs
+        )
+        if before - set(s._seg_cache):
+            # an eviction stopped at the first cap it satisfied both
+            full = len(s._seg_cache) == s._SEG_CACHE_MAX_TERMS
+            fired["terms" if full else "entries"] += 1
+        assert len(s._seg_cache) <= s._SEG_CACHE_MAX_TERMS
+        assert s._seg_entries <= s._SEG_CACHE_MAX_ENTRIES
+    assert fired["terms"] and fired["entries"], fired

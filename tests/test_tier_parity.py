@@ -3,8 +3,8 @@
 The Spark tier (Bm25Index) and the serve tier (LocalSearcher) run the same
 per-shard bodies (fulltext/serve.py), so every operator must return the
 same (doc_id, score[, snippet]) tuples, bit for bit — also when terms own
-several segments (an append generation) and tombstones force the decode
-to rebuild block metadata.
+several segments (an append generation) and tombstones filter entries at
+decode.
 """
 
 import pandas as pd
