@@ -1046,22 +1046,29 @@ def _q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_tokstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return text.token_stats(docs)
+    return text.text_features(docs).select(
+        "doc_id", "n_tokens", "n_unique_tokens", "n_chars", "n_ws_tokens"
+    )
 
 
 def _q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return text.quality_score(docs)
+    return text.text_features(docs).select(
+        "doc_id", "n_chars", "n_tokens",
+        "punct_ratio", "stopword_ratio", "lexical_diversity",
+    )
 
 
 def _q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return text.language_id(docs)
+    return text.text_features(docs).select(
+        "doc_id", *[f"score_{g}" for g in text.FEATURE_LANGS], "pred_lang"
+    )
 
 
 def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return text.fingerprint(docs)
+    return text.text_features(docs).select("doc_id", "fp_md5", "fp_int")
 
 
 def _q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,25 +1131,24 @@ def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII-shaped span redaction (emails / IPv4 / phone runs), pure
-    Catalyst regexp_count + regexp_replace — Java/RE2-safe shared
-    patterns. Oracle: pii_scrub_sql."""
+    """PII-shaped span redaction (emails / IPv4 / phone runs): one Arrow
+    mapInPandas pass, re2 count_substring_regex + replace_substring_regex
+    over shared RE2/Java-safe patterns. Oracle: pii_scrub_sql."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return text.pii_scrub(docs)
 
 
 def _q_pii_scrub_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-re2 PII scrub (the scale path): identical output to
-    pii_scrub from one mapInPandas pass — count_substring_regex +
-    replace_substring_regex chained in the same fixed order.
-    Oracle: pii_scrub_sql (same patterns; DuckDB is RE2 too)."""
+    """The pii_scrub query under its older name (text.pii_scrub_arrow is an
+    alias of text.pii_scrub). Oracle: pii_scrub_sql."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return text.pii_scrub_arrow(docs)
 
 
 def _q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style composite corpus cleaning with auditable per-rule
-    reasons. Oracle: quality_filter_sql, same metric SQL + rule order."""
+    reasons from the text_features metrics. Oracle: quality_filter_sql,
+    same metric SQL (text_features_sql) + rule order."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     return text.quality_filter(docs)
 

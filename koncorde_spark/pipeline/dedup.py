@@ -3,10 +3,10 @@
 Scale design notes (100 TB):
 - exact: one hash-aggregate on sha256(text) — map-side combine, no skew
   (hashes are uniform).
-- MinHash: signatures are computed entirely with Catalyst higher-order
-  functions (token shingles → 60-bit md5 ids → affine-permutation mins) —
-  JVM-side, codegen'd, and *bit-identical* to the DuckDB oracle because
-  the permutation constants are frozen literals in both SQL dialects.
+- MinHash: signatures come from one narrow Arrow ``mapInPandas`` pass
+  (re2 tokenize → 60-bit md5 token ids → Horner shingles →
+  affine-permutation mins in numpy), *bit-identical* to the DuckDB
+  oracle because the permutation constants are frozen literals in both.
 - LSH: band signatures → groupBy(band, sig) bucket join; candidate pairs
   only within buckets (the standard shuffle-bounded near-dup pipeline);
   exact Jaccard verify on the candidates.
@@ -188,8 +188,8 @@ def minhash_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """(id, mh_0..mh_{n-1}) minhash signature columns, bit-identical to the
-    SQL twin and to ``minhash_signatures_catalyst`` (parity-tested). Docs
-    with < k tokens get null signatures.
+    SQL twin ``minhash_signatures_sql`` (parity-tested). Docs with < k
+    tokens (null text included) get null signatures.
 
     Scale path: a narrow ``mapInPandas`` — no explode, no shuffle, no join;
     each Arrow batch is tokenized once (re2) and md5 touches only the
@@ -213,35 +213,6 @@ def minhash_signatures(
             yield pd.DataFrame(cols)
 
     return df.select(id_col, text_col).mapInPandas(fn, schema)
-
-
-def minhash_signatures_catalyst(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """Pure-Catalyst twin of ``minhash_signatures`` (identical output):
-    one projection — per-token md5 → Horner shingles → ``array_min`` per
-    permutation. Zero shuffle/join (``array_min([])`` is already null).
-    Used as an independent in-Spark oracle for the Arrow path; slower at
-    scale only because Spark's regex ``split`` is (tokenizer-bound)."""
-    params = minhash_params(num_perm, seed)
-    p = MINHASH_PRIME
-    proj = (
-        df.select(F.col(id_col), tokens_col(text_col).alias("__toks"))
-        .select(F.col(id_col), _token_hashes_spark("__toks").alias("__th"))
-        .select(F.col(id_col), _shingles_from_hashes("__th", shingle_k).alias("__sh"))
-    )
-    cols = [
-        F.array_min(
-            F.expr(f"transform(__sh, x -> ({a}L * x + {b}L) % {p}L)")
-        ).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(params)
-    ]
-    return proj.select(F.col(id_col), *cols)
 
 
 def _shingles_sql(text_col: str, k: int, distinct: bool = False) -> str:

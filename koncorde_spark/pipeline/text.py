@@ -1,9 +1,12 @@
 """Text-analysis operators for training-data pipelines.
 
-All hot paths are Catalyst built-ins / higher-order functions (JVM-side,
-whole-stage codegen) — no Python in the per-row path. Each operator has a
-DuckDB-SQL twin used by the driver's correctness gate; the constants and
-token rule are shared so both engines compute identical values.
+Each operator has one Spark implementation and one DuckDB-SQL twin, the
+spec its ``oracle_sql()`` check compares it against. The per-document
+featurizers (``text_features``, ``repetition_stats``, ``pii_scrub``) are
+narrow ``mapInPandas`` passes over Arrow batches (re2 regexes, numpy
+counts); corpus-level statistics (``vocab_topk``) stay Catalyst
+aggregates. The constants and token rule are shared so every engine
+computes identical values.
 """
 
 from __future__ import annotations
@@ -13,16 +16,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..fulltext.tokenizer import SPLIT_PATTERN
-from ..rounding import round_away
 
 # Frozen stopword lists (lowercase) for the n-gram/stopword language-ID
 # heuristic. Deliberately small + embedded as literals so the same lists
 # appear verbatim in the DuckDB oracle SQL.
-# One whitespace class shared VERBATIM by Java regex (Spark), RE2 (Arrow,
-# DuckDB): Java \s lacks Unicode but includes \x0B, RE2's \s excludes
-# \x0B — an explicit class is the only spelling all three engines agree
-# on (a vertical tab in a document otherwise flips n_ws_tokens /
-# punct_ratio / fingerprints across engines).
+# One whitespace class shared VERBATIM by RE2 (Arrow, DuckDB) and any
+# Java regex (Spark): Java \s lacks Unicode but includes \x0B, RE2's \s
+# excludes \x0B — an explicit class is the only spelling all three
+# engines agree on (a vertical tab in a document otherwise flips
+# n_ws_tokens / punct_ratio / fingerprints across engines).
 WS_RUN = r"[ \t\n\x0B\f\r]+"
 NONPUNCT_CLASS = r"[a-zA-Z0-9_ \t\n\x0B\f\r]"
 PUNCT_CLASS = r"[^a-zA-Z0-9_ \t\n\x0B\f\r]"
@@ -62,21 +64,9 @@ def tokens_sql(text_col: str) -> str:
     )
 
 
-def token_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Per-doc token counting + basic quality ratios (pure Catalyst)."""
-    toks = tokens_col(text_col)
-    return df.select(
-        F.col(id_col),
-        toks.alias("__t"),
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.col(text_col).alias("__x"),
-    ).select(
-        id_col,
-        F.size("__t").cast("long").alias("n_tokens"),
-        F.size(F.array_distinct("__t")).cast("long").alias("n_unique_tokens"),
-        "n_chars",
-        F.size(F.split("__x", WS_RUN)).cast("long").alias("n_ws_tokens"),
-    )
+# DuckDB specs of the column subsets of text_features that the tokstats /
+# quality / langid / fingerprint queries select. Unlike text_features,
+# they propagate NULL text instead of reading it as ''.
 
 
 def token_stats_sql(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:
@@ -88,38 +78,6 @@ def token_stats_sql(table: str, text_col: str = "text", id_col: str = "doc_id") 
            len(string_split_regex({text_col}, '{WS_RUN}'))::BIGINT AS n_ws_tokens
     FROM {table}
     """
-
-
-def quality_score(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Heuristic quality metrics: length, punctuation + stopword ratios,
-    lexical diversity. All Catalyst expressions."""
-    toks = tokens_col(text_col)
-    en_stop = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
-    punct = F.length(F.regexp_replace(F.col(text_col), NONPUNCT_CLASS, ""))
-    return (
-        df.select(
-            F.col(id_col),
-            toks.alias("__t"),
-            F.length(F.col(text_col)).alias("n_chars"),
-            punct.alias("n_punct"),
-        )
-        .select(
-            id_col,
-            "n_chars",
-            F.size("__t").cast("long").alias("n_tokens"),
-            round_away(F.col("n_punct") / F.greatest(F.col("n_chars"), F.lit(1)), 6).alias(
-                "punct_ratio"
-            ),
-            round_away(
-                F.size(F.filter("__t", lambda t: F.array_contains(en_stop, t)))
-                / F.greatest(F.size("__t"), F.lit(1)),
-                6,
-            ).alias("stopword_ratio"),
-            round_away(
-                F.size(F.array_distinct("__t")) / F.greatest(F.size("__t"), F.lit(1)), 6
-            ).alias("lexical_diversity"),
-        )
-    )
 
 
 def quality_score_sql(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:
@@ -136,39 +94,6 @@ def quality_score_sql(table: str, text_col: str = "text", id_col: str = "doc_id"
            round(len(list_distinct({t})) / greatest(len({t}), 1), 6) AS lexical_diversity
     FROM {table}
     """
-
-
-def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Stopword-hit language ID: argmax over per-language hit counts.
-
-    Ties break by language code ascending (deterministic). 'und' when no
-    list hits. Pure Catalyst higher-order functions.
-
-    Deliberately simple O(tokens × Σ|stoplists|) expression: this variant
-    exists as the oracle-checkable per-op twin; the declared SCALE path is
-    the fused Arrow featurizer (text_features), which computes language
-    scores with one vectorized dict probe per batch (Catalyst offers no
-    hashed literal lookup — a literal-map element_at is also a linear
-    scan, so rewriting this would churn the oracle for no asymptotic win).
-    """
-    toks = tokens_col(text_col)
-    base = df.select(F.col(id_col), toks.alias("__t"))
-
-    def _score(lang: str):
-        stoplist = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        return F.size(F.filter("__t", lambda t: F.array_contains(stoplist, t)))
-
-    scores = [_score(lang).alias(f"score_{lang}") for lang in sorted(STOPWORDS)]
-    scored = base.select(id_col, *scores)
-    langs = sorted(STOPWORDS)
-    best = F.greatest(*[F.col(f"score_{g}") for g in langs])
-    pred = F.when(best <= 0, F.lit("und"))
-    for g in langs:  # first (alphabetical) language attaining the max wins
-        pred = pred.when(F.col(f"score_{g}") == best, F.lit(g))
-    return scored.select(
-        id_col, *[F.col(f"score_{g}").cast("long").alias(f"score_{g}") for g in langs],
-        pred.alias("pred_lang"),
-    )
 
 
 def language_id_sql(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:
@@ -192,21 +117,6 @@ def language_id_sql(table: str, text_col: str = "text", id_col: str = "doc_id") 
     """
 
 
-def fingerprint(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalized lowercase text.
-
-    (The rolling-hash / winnowing variant lives in dedup.simhash — this is
-    the cheap exact-normalized fingerprint, identical in both engines.)
-    """
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), WS_RUN, " "))
-    h = F.md5(norm)
-    return df.select(
-        F.col(id_col),
-        h.alias("fp_md5"),
-        F.conv(F.substring(h, 1, 15), 16, 10).cast("long").alias("fp_int"),
-    )
-
-
 def fingerprint_sql(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:
     norm = f"trim(regexp_replace(lower({text_col}), '{WS_RUN}', ' ', 'g'))"
     return f"""
@@ -218,7 +128,7 @@ def fingerprint_sql(table: str, text_col: str = "text", id_col: str = "doc_id") 
 
 
 # ---------------------------------------------------------------------------
-# Fused one-pass featurizer (scale path)
+# Fused one-pass featurizer
 # ---------------------------------------------------------------------------
 
 FEATURE_LANGS = sorted(STOPWORDS)
@@ -242,7 +152,7 @@ def _round6_half_up(x: "np.ndarray") -> "np.ndarray":
     round() does for doubles (inputs here are non-negative ratios, so the
     plain floor form suffices). Spark's F.round is HALF_UP on the decimal
     string and diverges (see koncorde_spark/rounding.py); numpy's own
-    round is half-even. The Catalyst twins use rounding.round_away."""
+    round is half-even."""
     import numpy as np
 
     return np.floor(x * 1e6 + 0.5) / 1e6
@@ -339,15 +249,15 @@ def text_features(df: DataFrame, text_col: str = "text", id_col: str = "doc_id")
     """One-pass fused featurizer: token stats + quality ratios + language
     scores + fingerprints from a SINGLE tokenize of each Arrow batch.
 
-    The individual Catalyst ops (token_stats / quality_score / language_id
-    / fingerprint) each re-tokenize with Spark's regex ``split`` — correct,
-    but java.util.regex plus per-token UTF8String churn makes tokenization
-    ~100× the cost of the cached scan (measured 25.6 s vs 0.22 s for 20k
-    code docs at local[32]). This narrow ``mapInPandas`` path tokenizes
-    once with Arrow's re2 and computes every feature column from that one
-    pass — the shape a 100-TB featurization job needs (zero shuffle, one
-    scan, one tokenize). Feature semantics are identical to the Catalyst
-    ops (parity-tested) except that null text is treated as '' here."""
+    The only Spark implementation of these per-document features: callers
+    that need a subset (the tokstats / quality / langid / fingerprint
+    queries, quality_filter) select columns from it. A narrow
+    ``mapInPandas`` tokenizes once with Arrow's re2 and computes every
+    column from that pass (zero shuffle, one scan, one tokenize); Spark's
+    regex ``split`` measured ~100× the cost of the cached scan (25.6 s vs
+    0.22 s for 20k code docs at local[32]). Null text is treated as ''.
+    Spec: text_features_sql, and token_stats_sql / quality_score_sql /
+    language_id_sql / fingerprint_sql for the column subsets."""
     schema = f"{id_col} {dict(df.dtypes)[id_col]}, " + _FEATURES_SCHEMA_TAIL
 
     def fn(batches):
@@ -488,13 +398,13 @@ def quality_filter(
 ) -> DataFrame:
     """C4-style corpus cleaning: (id, kept, reason) per document.
 
-    Rules compose from the quality_score metrics; the FIRST failing rule
-    (fixed order: tokens → punct → stopword → diversity) names the
-    reason, 'ok' when kept — so the filter is auditable (per-reason drop
-    counts are one groupBy away). Thresholds override QUALITY_DEFAULTS.
-    One Catalyst pass, no UDF."""
+    Rules compose from the text_features metrics (null text reads as '',
+    so it fails on too_few_tokens); the FIRST failing rule (fixed order:
+    tokens → punct → stopword → diversity) names the reason, 'ok' when
+    kept — so the filter is auditable (per-reason drop counts are one
+    groupBy away). Thresholds override QUALITY_DEFAULTS."""
     th = {**QUALITY_DEFAULTS, **thresholds}
-    q = quality_score(df, text_col, id_col)
+    q = text_features(df, text_col, id_col)
     reason = (
         F.when(F.col("n_tokens") < th["min_tokens"], "too_few_tokens")
         .when(F.col("punct_ratio") > th["max_punct_ratio"], "too_much_punct")
@@ -514,7 +424,7 @@ def quality_filter_sql(
 ) -> str:
     """DuckDB twin of quality_filter (same metrics SQL, same rule order)."""
     th = {**QUALITY_DEFAULTS, **thresholds}
-    qs = quality_score_sql(table, text_col, id_col)
+    qs = text_features_sql(table, text_col, id_col)
     return f"""
     SELECT {id_col},
            CASE
@@ -705,11 +615,11 @@ def repetition_stats_sql(
 
 
 # ---------------------------------------------------------------------------
-# PII scrubbing (pure Catalyst, shared Java/RE2-safe patterns)
+# PII scrubbing (Arrow re2, shared RE2/Java-safe patterns)
 # ---------------------------------------------------------------------------
 
 # Patterns deliberately restricted to constructs with IDENTICAL semantics
-# in java.util.regex (Spark) and RE2 (DuckDB): explicit character classes
+# in RE2 (Arrow, DuckDB) and java.util.regex: explicit character classes
 # only — no \\s (Java includes \\x0B, RE2 does not), no alternation under
 # repeats, no backreferences/lookarounds. Match order is fixed:
 # emails → ipv4 → phone-like digit runs.
@@ -719,59 +629,21 @@ PII_PHONE = r"\+?[0-9][0-9()\- ]{7,}[0-9]"
 
 
 def pii_scrub(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    engine: str = "arrow",
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Redact PII-shaped spans: (id, n_emails, n_ipv4, n_phones, scrubbed).
 
-    Counts are over the ORIGINAL text per category (independent, so both
-    engines agree regardless of replacement interactions); the scrubbed
-    text applies the replacements in fixed order (emails → IPv4 → phone
-    runs) with <EMAIL> / <IP> / <PHONE> markers.
+    Counts are over the ORIGINAL text per category (independent, so they
+    do not depend on replacement interactions); the scrubbed text applies
+    the replacements in fixed order (emails → IPv4 → phone runs) with
+    <EMAIL> / <IP> / <PHONE> markers. Null text is treated as ''.
 
-    ``engine``: "arrow" (default) delegates to :func:`pii_scrub_arrow` —
-    one narrow re2 mapInPandas pass, measured ~6-7x the chained
-    java.util.regex projections on code text, bit-identical output
-    (parity-pinned); "catalyst" keeps the pure-Catalyst expression form
-    (regexp_count + regexp_replace inside whole-stage codegen — the
-    shape the DuckDB oracle twin transcribes, and the right choice when
-    a deployment cannot run Python workers)."""
-    if engine == "arrow":
-        return pii_scrub_arrow(df, text_col, id_col)
-    if engine != "catalyst":
-        raise ValueError(f"engine must be 'arrow' or 'catalyst', got {engine!r}")
-    c = F.coalesce(F.col(text_col), F.lit(""))
-    scrubbed = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(c, PII_EMAIL, "<EMAIL>"), PII_IPV4, "<IP>"
-        ),
-        PII_PHONE,
-        "<PHONE>",
-    )
-    return df.select(
-        F.col(id_col),
-        F.regexp_count(c, F.lit(PII_EMAIL)).cast("long").alias("n_emails"),
-        F.regexp_count(c, F.lit(PII_IPV4)).cast("long").alias("n_ipv4"),
-        F.regexp_count(c, F.lit(PII_PHONE)).cast("long").alias("n_phones"),
-        scrubbed.alias("scrubbed"),
-    )
-
-
-def pii_scrub_arrow(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Arrow-re2 variant of :func:`pii_scrub` — identical output, identical
-    shared patterns, one ``mapInPandas`` pass instead of chained
-    java.util.regex projections.
-
-    java.util.regex re-scans the UTF8String per pattern with per-match
-    object churn (CLAUDE.md measured ~100× Arrow re2 on code text); here
-    the whole batch stays in Arrow: ``count_substring_regex`` for the
-    per-category counts over the ORIGINAL text, ``replace_substring_regex``
-    chained in the same fixed order (emails → IPv4 → phones). RE2 and
-    java.util.regex agree on these patterns by construction (explicit
-    classes only — see the pattern comment above), and the DuckDB oracle
-    (also RE2) pins both. The Catalyst form stays as the oracle twin.
+    One narrow ``mapInPandas`` pass: the whole batch stays in Arrow —
+    ``count_substring_regex`` for the per-category counts,
+    ``replace_substring_regex`` chained in the fixed order. Not Spark's
+    regexp_count / regexp_replace: chained java.util.regex projections
+    measured ~5× this pass on code text. Spec: pii_scrub_sql (DuckDB is
+    RE2 too).
 
     100-TB shape: column-pruned scan → narrow mapInPandas → write; no
     shuffle, no driver traffic."""
@@ -813,6 +685,9 @@ def pii_scrub_arrow(
             yield out
 
     return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+
+
+pii_scrub_arrow = pii_scrub
 
 
 def pii_scrub_sql(table: str, text_col: str = "text", id_col: str = "doc_id") -> str:

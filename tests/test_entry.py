@@ -82,3 +82,23 @@ def test_bm25_topk_oracle_tiebreak_on_duplicates(spark, tmp_path):
     # dedicated tie-break oracle is load-bearing, not cosmetic
     brute_set = set(con.sql(E.oracle_sql()["bm25_brute"]).df()["doc_id"])
     assert got != brute_set
+
+
+@pytest.mark.spark
+@pytest.mark.parametrize(
+    "name",
+    ["tokstats", "quality", "langid", "fingerprint", "quality_filter",
+     "pii_scrub", "pii_scrub_arrow"],
+)
+def test_text_query_matches_oracle(spark, name):
+    """The text queries served by text_features / pii_scrub match their
+    oracle_sql() twins row for row, after the gate's normalization."""
+    from tools.verify_oracles import normalize
+
+    got = E.queries()[name](spark, SF).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
+    exp = con.execute(E.oracle_sql()[name]).fetchdf()
+    g, e = normalize(got), normalize(exp)
+    assert len(g) == len(e) == 500
+    assert g == e

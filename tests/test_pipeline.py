@@ -53,10 +53,12 @@ class TestMinhashLsh:
         sigs = dedup.minhash_signatures(docs_df, num_perm=16).toPandas().set_index("doc_id")
         assert sigs.loc[6].isna().all()
 
-    def test_arrow_path_matches_catalyst_path(self, spark):
-        """The mapInPandas scale path and the pure-Catalyst projection must
-        produce bit-identical signatures (both are also DuckDB-oracled),
-        including null text, sub-shingle docs, and exactly-k tokens."""
+    def test_arrow_path_matches_sql_twin(self, spark):
+        """The mapInPandas path must produce signatures bit-identical to
+        minhash_signatures_sql in DuckDB, including null text, sub-shingle
+        docs, and exactly-k tokens."""
+        import duckdb
+
         pdf = pd.DataFrame(
             {
                 "doc_id": [1, 2, 3, 4, 5],
@@ -74,10 +76,14 @@ class TestMinhashLsh:
             dedup.minhash_signatures(df, num_perm=16)
             .toPandas().sort_values("doc_id").reset_index(drop=True)
         )
+        con = duckdb.connect()
+        con.register("documents", pdf)
         b = (
-            dedup.minhash_signatures_catalyst(df, num_perm=16)
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
+            con.execute(dedup.minhash_signatures_sql("documents", num_perm=16))
+            .df().sort_values("doc_id").reset_index(drop=True)
         )
+        assert list(a.columns) == list(b.columns)
+        assert a["mh_0"].isna().tolist() == [False, False, True, True, False]
         for col in a.columns:
             assert a[col].astype("Int64").equals(b[col].astype("Int64")), col
 
@@ -253,19 +259,19 @@ class TestSimilarity:
 
 class TestText:
     def test_token_stats(self, docs_df):
-        out = text.token_stats(docs_df).toPandas().set_index("doc_id")
+        out = text.text_features(docs_df).toPandas().set_index("doc_id")
         assert out.loc[0, "n_tokens"] == 9
         assert out.loc[6, "n_tokens"] == 1
 
     def test_langid(self, docs_df):
-        out = text.language_id(docs_df).toPandas().set_index("doc_id")
+        out = text.text_features(docs_df).toPandas().set_index("doc_id")
         assert out.loc[0, "pred_lang"] == "en"
         assert out.loc[3, "pred_lang"] == "de"
         assert out.loc[4, "pred_lang"] == "fr"
         assert out.loc[6, "pred_lang"] == "und"
 
     def test_quality(self, docs_df):
-        out = text.quality_score(docs_df).toPandas().set_index("doc_id")
+        out = text.text_features(docs_df).toPandas().set_index("doc_id")
         assert out.loc[7, "stopword_ratio"] == 1.0
         assert out.loc[5, "stopword_ratio"] < 0.5
         assert out.loc[0, "lexical_diversity"] == pytest.approx(8 / 9, abs=1e-6)
@@ -274,37 +280,56 @@ class TestText:
         df = spark.createDataFrame(
             pd.DataFrame({"doc_id": [0, 1], "text": ["a  b\tc", "A B C"]})
         )
-        out = text.fingerprint(df).toPandas()
+        out = text.text_features(df).toPandas()
         assert out.loc[0, "fp_md5"] == out.loc[1, "fp_md5"]
 
-    def test_fused_features_match_catalyst_ops(self, docs_df):
+    def test_fused_features_match_sql_twins(self, docs_df):
         """The one-pass Arrow featurizer must agree column-for-column with
-        the four individual Catalyst ops (which are themselves DuckDB-
-        oracled) on non-null text."""
+        the four per-op DuckDB twins and with text_features_sql."""
+        import duckdb
+
         fused = text.text_features(docs_df).toPandas().set_index("doc_id").sort_index()
-        ts = text.token_stats(docs_df).toPandas().set_index("doc_id").sort_index()
-        qs = text.quality_score(docs_df).toPandas().set_index("doc_id").sort_index()
-        li = text.language_id(docs_df).toPandas().set_index("doc_id").sort_index()
-        fp = text.fingerprint(docs_df).toPandas().set_index("doc_id").sort_index()
-        for col in ["n_tokens", "n_unique_tokens", "n_chars", "n_ws_tokens"]:
-            assert fused[col].tolist() == ts[col].tolist(), col
-        for col in ["punct_ratio", "stopword_ratio", "lexical_diversity"]:
-            assert fused[col].tolist() == qs[col].tolist(), col
-        for col in [f"score_{g}" for g in text.FEATURE_LANGS] + ["pred_lang"]:
-            assert fused[col].tolist() == li[col].tolist(), col
-        for col in ["fp_md5", "fp_int"]:
-            assert fused[col].tolist() == fp[col].tolist(), col
+        con = duckdb.connect()
+        con.register("documents", docs_df.toPandas())
+
+        def twin(sql):
+            return con.execute(sql).df().set_index("doc_id").sort_index()
+
+        checks = [
+            (text.token_stats_sql("documents"),
+             ["n_tokens", "n_unique_tokens", "n_chars", "n_ws_tokens"]),
+            (text.quality_score_sql("documents"),
+             ["n_chars", "n_tokens", "punct_ratio", "stopword_ratio",
+              "lexical_diversity"]),
+            (text.language_id_sql("documents"),
+             [f"score_{g}" for g in text.FEATURE_LANGS] + ["pred_lang"]),
+            (text.fingerprint_sql("documents"), ["fp_md5", "fp_int"]),
+            (text.text_features_sql("documents"), list(fused.columns)),
+        ]
+        for sql, cols in checks:
+            want = twin(sql)
+            assert want.index.tolist() == fused.index.tolist()
+            for col in cols:
+                assert fused[col].tolist() == want[col].tolist(), col
 
     def test_fused_features_null_text_contract(self, spark):
-        """Null text is treated as '' (documented divergence from the
-        per-op Catalyst paths, which propagate null)."""
-        df = spark.createDataFrame(
-            pd.DataFrame({"doc_id": [0, 1], "text": [None, ""]})
-        )
-        out = text.text_features(df).toPandas().set_index("doc_id")
+        """Null text is treated as '' — by text_features and by its
+        DuckDB twin text_features_sql, which coalesces."""
+        import duckdb
+
+        pdf = pd.DataFrame({"doc_id": [0, 1], "text": [None, ""]})
+        out = text.text_features(spark.createDataFrame(pdf)).toPandas().set_index("doc_id")
         assert out.loc[0].tolist() == out.loc[1].tolist()
         assert out.loc[0, "n_tokens"] == 0
         assert out.loc[0, "pred_lang"] == "und"
+        con = duckdb.connect()
+        con.register("documents", pdf)
+        want = (
+            con.execute(text.text_features_sql("documents"))
+            .df().set_index("doc_id").sort_index()
+        )
+        for col in out.columns:
+            assert out[col].tolist() == want[col].tolist(), col
 
 
 class TestMultimodal:
@@ -643,23 +668,37 @@ class TestVocabAndQualityFilter:
         assert m == {"a b": 2, "b a": 1}
 
     def test_quality_filter_reasons(self, spark):
+        import duckdb
+
         pdf = pd.DataFrame(
             {
-                "doc_id": [1, 2, 3],
+                "doc_id": [1, 2, 3, 4, 5],
                 "text": [
                     "the quick brown fox jumps over a lazy dog today fine",
                     "a b",  # too few tokens
                     "w " * 50,  # 50 identical tokens -> low diversity
+                    None,  # null text reads as '' -> too few tokens
+                    "",
                 ],
             }
         )
         out = (
             text.quality_filter(spark.createDataFrame(pdf))
-            .toPandas().set_index("doc_id")
+            .toPandas().set_index("doc_id").sort_index()
         )
         assert bool(out.loc[1, "kept"]) and out.loc[1, "reason"] == "ok"
         assert out.loc[2, "reason"] == "too_few_tokens"
         assert out.loc[3, "reason"] == "low_diversity"
+        assert out.loc[4, "reason"] == "too_few_tokens" and not bool(out.loc[4, "kept"])
+        assert out.loc[5, "reason"] == "too_few_tokens" and not bool(out.loc[5, "kept"])
+        con = duckdb.connect()
+        con.register("documents", pdf)
+        want = (
+            con.execute(text.quality_filter_sql("documents"))
+            .df().set_index("doc_id").sort_index()
+        )
+        assert out["reason"].tolist() == want["reason"].tolist()
+        assert out["kept"].astype(bool).tolist() == want["kept"].astype(bool).tolist()
 
     def test_quality_filter_threshold_override(self, spark):
         pdf = pd.DataFrame({"doc_id": [1], "text": ["one two three"]})
@@ -850,10 +889,11 @@ class TestPiiScrub:
             "",
         ]
         pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-        got = (
-            text.pii_scrub(spark.createDataFrame(pdf))
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
+        sdf = spark.createDataFrame(pdf)
+        out = text.pii_scrub(sdf)
+        assert out.schema["doc_id"].dataType == sdf.schema["doc_id"].dataType
+        got = out.toPandas().sort_values("doc_id").reset_index(drop=True)
+        assert got["doc_id"].dtype == np.int64
         assert int(got.loc[0, "n_emails"]) == 2
         assert "<EMAIL>" in got.loc[0, "scrubbed"] and "@" not in got.loc[0, "scrubbed"]
         assert int(got.loc[1, "n_ipv4"]) == 2
@@ -893,41 +933,6 @@ class TestPiiScrub:
         )
         for c in ["n_emails", "n_ipv4", "n_phones", "scrubbed"]:
             assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
-
-    def test_arrow_variant_identical(self, spark):
-        """pii_scrub_arrow (the re2 scale path) is bit-identical to the
-        Catalyst form on crafted PII AND on the documents domain —
-        counts, scrub markers, null/empty handling, id dtype."""
-        texts = [
-            "contact me at jane.doe+x@example.com or bob@corp.co.uk today",
-            "server 192.168.1.200 and 10.0.0.1 rebooted",
-            "call +1 (555) 123-4567 now",
-            "mixed: a@b.io 8.8.8.8 and 0123456789",
-            None,
-            "",
-        ]
-        pdf = pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
-        sdf = spark.createDataFrame(pdf)
-        a = (
-            text.pii_scrub(sdf, engine="catalyst")
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
-        b = (
-            text.pii_scrub_arrow(sdf)
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
-        assert a.equals(b)
-
-        docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        a = (
-            text.pii_scrub(docs, engine="catalyst")
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
-        b = (
-            text.pii_scrub_arrow(docs)
-            .toPandas().sort_values("doc_id").reset_index(drop=True)
-        )
-        assert a.equals(b)
 
 
 class TestCrossDocDup:

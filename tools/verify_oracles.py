@@ -8,11 +8,13 @@ Usage: python tools/verify_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
-
-import numpy as np
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+import numpy as np
+
+# the checkout this script belongs to, so a copy of the repo checks itself
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import pandas as pd
