@@ -306,7 +306,8 @@ def _q_bm25_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Indexed path: build (or reuse) the sharded posting index over the
-    documents-derived corpus, run block-max WAND, map back to doc_id."""
+    documents-derived corpus, run the exhaustive per-shard BM25 top-k,
+    map back to doc_id."""
     from koncorde_spark.fulltext.indexer import IndexConfig, build_index
     from koncorde_spark.fulltext.query import Bm25Index
     from koncorde_spark.sources import corpus_from_documents
@@ -1226,9 +1227,9 @@ def _q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs: LSH bucket (frozen literal
-    hyperplanes, cross-engine bit-identical) -> capped bucket join ->
-    exact cosine >= threshold."""
+    """Embedding-cosine near-dup pairs: Arrow LSH bucket kernel (frozen
+    literal hyperplanes, bit-identical to the DuckDB twin) -> capped
+    bucket join -> exact cosine >= threshold."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     return similarity.embedding_near_dup_pairs(emb)
 
@@ -1301,11 +1302,12 @@ def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalyst-expressed LSH ANN (frozen literal hyperplanes) — the
-    oracle-checkable twin of the float32-matmul scale path
-    (similarity.ann_topk, pytest recall-checked)."""
+    """Hyperplane-LSH ANN: Arrow bucket kernel (frozen literal planes,
+    sequential float64 fold) → query bucket + Hamming-1 probes → exact
+    cosine top-k. Oracle: ann_topk_sql (same planes, same fold, so the
+    buckets are bit-identical)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.ann_topk_catalyst(emb, ANN_QUERY_VEC, ANN_K, bits=6)
+    return similarity.ann_topk(emb, ANN_QUERY_VEC, ANN_K, bits=6)
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,7 +1702,7 @@ def oracle_sql() -> dict[str, str]:
             rrf_k=HYBRID_RRF_K,
         ),
         "ann_ivf": similarity.ivf_topk_sql("embeddings", ANN_QUERY_VEC, ANN_K, nprobe=4),
-        "ann_lsh": similarity.ann_topk_catalyst_sql(
+        "ann_lsh": similarity.ann_topk_sql(
             "embeddings", ANN_QUERY_VEC, ANN_K, bits=6
         ),
         "media_features": _media_features_sql(),

@@ -70,13 +70,6 @@ def _item_matches(item: Any, tag: str, value: Any) -> bool:
     return False
 
 
-def typed_contains(lst: Any, tag: str, value: Any) -> bool:
-    """Strict containment of a typed scalar in a (possibly non-list) value."""
-    if not isinstance(lst, (list, tuple, np.ndarray)):
-        return False
-    return any(_item_matches(item, tag, value) for item in lst)
-
-
 def _flatten_object_lists(vals: np.ndarray):
     """One-pass decomposition of an object array's list entries.
 

@@ -256,28 +256,71 @@ def minhash_signatures_sql(
 LSH_BUCKET_CAP = 64  # max bucket size joined all-pairs; larger → star pattern
 
 
+def capped_bucket_pairs(
+    frame: DataFrame,
+    keys: list[str],
+    id_col: str,
+    payload: list[str],
+    bucket_cap: int,
+) -> DataFrame:
+    """Capped bucket self-join: (id_a, id_b, <p>_a, <p>_b per payload
+    column) for every two rows of ``frame`` that share the ``keys``.
+
+    Buckets of at most ``bucket_cap`` rows emit all pairs with id_a < id_b.
+    Larger buckets (a crawl corpus with millions of identical boilerplate
+    docs would otherwise produce O(N²) pairs in one bucket) emit only the
+    star pattern: the bucket-min id paired with every other member — O(N)
+    pairs, deterministically (no sampling), so each DuckDB twin reproduces
+    the exact pair set. The window carries the hub's payload in
+    ``min(struct(id, *payload))``, so star edges need no hub re-join.
+
+    The windowed frame feeds both join sides and the star leg; it is
+    eagerly localCheckpointed so the upstream scan, bucketing kernel and
+    window shuffle run once instead of once per reference."""
+    w = Window.partitionBy(*keys)
+    stats = (
+        frame.withColumn("__n", F.count(F.lit(1)).over(w))
+        .withColumn("__m", F.min(F.struct(id_col, *payload)).over(w))
+        .localCheckpoint(eager=True)
+    )
+    small = stats.where(F.col("__n") <= bucket_cap)
+    cond = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    for k in keys:
+        cond = cond & (F.col(f"l.{k}") == F.col(f"r.{k}"))
+    all_pairs = small.alias("l").join(small.alias("r"), cond).select(
+        F.col(f"l.{id_col}").alias("id_a"),
+        F.col(f"r.{id_col}").alias("id_b"),
+        *[F.col(f"l.{p}").alias(f"{p}_a") for p in payload],
+        *[F.col(f"r.{p}").alias(f"{p}_b") for p in payload],
+    )
+    star_pairs = stats.where(
+        (F.col("__n") > bucket_cap) & (F.col(id_col) != F.col(f"__m.{id_col}"))
+    ).select(
+        F.col(f"__m.{id_col}").alias("id_a"),
+        F.col(id_col).alias("id_b"),
+        *[F.col(f"__m.{p}").alias(f"{p}_a") for p in payload],
+        *[F.col(p).alias(f"{p}_b") for p in payload],
+    )
+    return all_pairs.unionByName(star_pairs)
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     num_perm: int = 16,
     bands: int = 4,
     bucket_cap: int = LSH_BUCKET_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash-LSH: band the signature, bucket-join, emit candidate pairs.
 
-    Pairs (a < b) that collide in ≥1 band. Degenerate buckets (a crawl
-    corpus with millions of identical boilerplate docs would otherwise
-    produce O(N²) pairs in one bucket) are capped: buckets larger than
-    ``bucket_cap`` emit only the star pattern (bucket-min id paired with
-    every other member) — O(N) pairs, deterministically (no sampling), so
-    the DuckDB oracle reproduces the exact pair set. Connectivity note:
-    the star keeps the bucket connected only PRE-threshold — the Jaccard
-    filter sits between candidates and clustering, so if the hub is
-    dissimilar to some spokes those edges drop and clusters that uncapped
-    all-pairs would join can split; capping trades recall in degenerate
-    buckets (engine and oracle stay consistent either way). Null
-    signatures (docs too short to shingle) are excluded.
+    Pairs (a < b) that collide in ≥1 band, bucket-capped by
+    :func:`capped_bucket_pairs`. Connectivity note: the star keeps an
+    over-cap bucket connected only PRE-threshold — the Jaccard filter sits
+    between candidates and clustering, so if the hub is dissimilar to some
+    spokes those edges drop and clusters that uncapped all-pairs would
+    join can split; capping trades recall in degenerate buckets (engine
+    and oracle stay consistent either way). Null signatures (docs too
+    short to shingle) are excluded.
     """
     rows_per_band = num_perm // bands
     band_cols = []
@@ -291,32 +334,7 @@ def lsh_candidate_pairs(
         .select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bb"))
         .select(id_col, F.col("bb.band").alias("band"), F.col("bb.sig").alias("sig"))
     )
-    w = Window.partitionBy("band", "sig")
-    stats = exploded.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
-        "mid", F.min(id_col).over(w)
-    )
-    if materialize:
-        # stats feeds BOTH bucket-join sides and the star leg; the barrier
-        # keeps the upstream signature mapInPandas AND the window shuffle
-        # from re-executing per reference (same pattern as jaccard_pairs)
-        stats = stats.localCheckpoint(eager=True)
-    small = stats.where(F.col("n") <= bucket_cap)
-    left = small.alias("l")
-    right = small.alias("r")
-    all_pairs = left.join(
-        right,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.sig") == F.col("r.sig"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-    )
-    star_pairs = (
-        stats.where((F.col("n") > bucket_cap) & (F.col(id_col) != F.col("mid")))
-        .select(F.col("mid").alias("id_a"), F.col(id_col).alias("id_b"))
-    )
-    return all_pairs.unionByName(star_pairs).distinct()
+    return capped_bucket_pairs(exploded, ["band", "sig"], id_col, [], bucket_cap).distinct()
 
 
 def lsh_pairs_sql(
@@ -375,7 +393,6 @@ def jaccard_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_k: int = 3,
-    materialize_pairs: bool = True,
 ) -> DataFrame:
     """Exact token-shingle Jaccard for candidate pairs (verification step).
 
@@ -386,15 +403,13 @@ def jaccard_pairs(
     (VERDICT r2 'What's wrong' #2). The shingle projection is built once
     on the pruned set and referenced by both aliases.
 
-    ``materialize_pairs`` (default) first cuts the candidate lineage with
-    an eager ``localCheckpoint``: the id sets used by the two semi-joins
-    and the probe side then all read the materialized pairs instead of
-    re-running the whole candidate-generation pipeline three times — the
-    same barrier pattern ``cluster_pairs`` uses. Pass False only for
-    pure-plan inspection of unmaterialized inputs.
+    The candidate lineage is first cut with an eager ``localCheckpoint``:
+    the id sets used by the two semi-joins and the probe side then all
+    read the materialized pairs instead of re-running the whole
+    candidate-generation pipeline three times — the same barrier pattern
+    ``cluster_pairs`` uses.
     """
-    if materialize_pairs:
-        pairs = pairs.localCheckpoint(eager=True)
+    pairs = pairs.localCheckpoint(eager=True)
     cand_ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
@@ -700,34 +715,23 @@ def simhash_candidate_pairs(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     bucket_cap: int = SIMHASH_BUCKET_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Band the 60-bit simhash into 4×15-bit chunks; by pigeonhole any pair
     with Hamming ≤ 3 collides in ≥1 chunk. Verify with bit_count.
 
-    ``materialize`` (default) eagerly localCheckpoints the tiny
-    (id, simhash, 4 chunk) projection first: the plan references it ~12×
-    (4 chunks × window + both join sides + star leg), and without the
-    barrier the upstream signature mapInPandas would re-execute for every
-    reference — measured 23 s → ~1 s at 2k docs, and catastrophic at
-    100 TB. Pass False only for plan inspection.
-
     Each chunk has only 2^15 distinct values, so even benign corpora put
     Θ(N²/2^15) pairs through an uncapped within-chunk join (~3·10^13
     candidates at 10^9 docs) and identical-boilerplate corpora are strictly
-    worse. Buckets larger than ``bucket_cap`` therefore emit only the
-    deterministic star pattern — the bucket-min id paired with every other
-    member, O(N) pairs — exactly like ``lsh_candidate_pairs``. Recall note:
-    as with the LSH cap, spoke↔spoke pairs of an over-cap bucket only
-    survive if some ≤-cap chunk bucket also contains them; within-cap
-    behavior and the Hamming filter are unchanged, and the cap rule is
-    reproduced verbatim by the DuckDB twin (``simhash_pairs_sql``).
+    worse. The chunk buckets therefore go through
+    :func:`capped_bucket_pairs`, exactly like ``lsh_candidate_pairs``.
+    Recall note: as with the LSH cap, spoke↔spoke pairs of an over-cap
+    bucket only survive if some ≤-cap chunk bucket also contains them; the
+    cap rule is reproduced verbatim by the DuckDB twin
+    (``simhash_pairs_sql``).
     """
-    # ONE exploded (id, simhash, chunk, c) frame replaces four per-chunk
-    # window+self-join rounds (4 window shuffles + 4 joins + 3 unions →
-    # 1 window + 1 join + 1 union) — the exact shape the DuckDB twin's
-    # `chunks` CTE already defines, so the pair set is unchanged by
-    # construction (pairs were per-chunk tagged then deduped either way).
+    # ONE exploded (id, simhash, chunk, c) frame: one window + one join
+    # for all four chunks — the shape the DuckDB twin's `chunks` CTE
+    # defines (pairs are per-chunk tagged, then deduped).
     chunk_structs = [
         F.struct(
             F.lit(i).alias("chunk"),
@@ -740,42 +744,13 @@ def simhash_candidate_pairs(
     e = sigs.select(
         id_col, "simhash", F.explode(F.array(*chunk_structs)).alias("cc")
     ).select(id_col, "simhash", F.col("cc.chunk").alias("chunk"), F.col("cc.c").alias("c"))
-    if materialize:
-        e = e.localCheckpoint(eager=True)
-    w = Window.partitionBy("chunk", "c")
-    # min over (id, simhash) struct = bucket-min id plus ITS signature,
-    # so star edges can compute hamming without a hub re-join.
-    stats = e.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
-        "m", F.min(F.struct(F.col(id_col), F.col("simhash"))).over(w)
-    )
-    small = stats.where(F.col("n") <= bucket_cap)
-    l, r = small.alias("l"), small.alias("r")
-    all_pairs = l.join(
-        r,
-        (F.col("l.chunk") == F.col("r.chunk"))
-        & (F.col("l.c") == F.col("r.c"))
-        & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-    ).select(
-        F.col(f"l.{id_col}").alias("id_a"),
-        F.col(f"r.{id_col}").alias("id_b"),
-        F.bit_count(
-            F.col("l.simhash").bitwiseXOR(F.col("r.simhash"))
-        ).alias("hamming"),
-    )
-    star_pairs = (
-        stats.where(
-            (F.col("n") > bucket_cap) & (F.col(id_col) != F.col(f"m.{id_col}"))
-        )
-        .select(
-            F.col(f"m.{id_col}").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-            F.bit_count(
-                F.col("m.simhash").bitwiseXOR(F.col("simhash"))
-            ).alias("hamming"),
-        )
-    )
+    pairs = capped_bucket_pairs(e, ["chunk", "c"], id_col, ["simhash"], bucket_cap)
     return (
-        all_pairs.unionByName(star_pairs)
+        pairs.select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).alias("hamming"),
+        )
         .where(F.col("hamming") <= max_hamming)
         .distinct()
     )

@@ -3,9 +3,13 @@
 - Brute-force cosine top-k: dot products via Catalyst higher-order
   functions (zip_with + aggregate) — JVM-side, no UDF — then sort-limit.
   Correct baseline at any scale; O(N·d) scan.
-- LSH-bucketed ANN: random-hyperplane signatures (vectorized Arrow UDF)
-  → bucket equality pre-filter → exact cosine only within probed buckets.
-  The scale path: the bucket join prunes the candidate set by ~2^bits.
+- Random-hyperplane buckets come from ONE per-batch Arrow kernel,
+  ``lsh_signatures``: frozen 6-decimal literal planes and a sequential
+  float64 fold, bit-identical to the DuckDB twin ``_bucket_code_sql``.
+  LSH ANN probes the query bucket and its Hamming-1 neighbours, then runs
+  the exact cosine top-k on the candidates; embedding near-dup joins
+  within buckets (``dedup.capped_bucket_pairs``).
+- IVF ANN: coarse quantizer → probe the nearest lists → exact cosine.
 """
 
 from __future__ import annotations
@@ -17,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..rounding import round_away
+from .dedup import capped_bucket_pairs
 
 
 def _dot_expr(vec_col: str, q: list[float]):
@@ -80,9 +85,30 @@ def cosine_topk_sql(
 # ---------------------------------------------------------------------------
 
 
-def hyperplanes(dim: int, bits: int = 16, seed: int = 42) -> np.ndarray:
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((bits, dim))
+def _literal_planes(dim: int, bits: int, seed: int) -> list[list[float]]:
+    """Seeded Gaussian hyperplanes rounded to 6 decimals → stable literals
+    shared by the Arrow kernel and the DuckDB SQL twin."""
+    planes = np.random.default_rng(seed).standard_normal((bits, dim))
+    return [[float(x) for x in np.round(row, 6)] for row in planes]
+
+
+def _bucket_codes(vecs: pd.Series, planes: np.ndarray) -> np.ndarray:
+    """Sign-bit bucket per vector: bit b set iff the dot with plane b is
+    > 0. Each dot is a sequential float64 fold over the dimensions — the
+    summation order of DuckDB's list_aggregate, so buckets are
+    bit-identical to ``_bucket_code_sql`` (a BLAS matmul may reorder the
+    sum, depending on the batch shape, and flip the sign of a near-zero
+    dot). A null vector gets bucket 0, as in the twin."""
+    codes = np.zeros(len(vecs), dtype=np.int64)
+    valid = vecs.notna().to_numpy()
+    if not valid.any():
+        return codes
+    X = np.stack(vecs[valid].to_numpy()).astype(np.float64)
+    acc = np.zeros((len(X), len(planes)))
+    for j in range(X.shape[1]):
+        acc = acc + X[:, j, None] * planes[:, j]
+    codes[valid] = (acc > 0) @ (1 << np.arange(len(planes), dtype=np.int64))
+    return codes
 
 
 def lsh_signatures(
@@ -93,17 +119,28 @@ def lsh_signatures(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Sign-bit bucket per vector (vectorized Arrow UDF, one matmul/batch)."""
-    planes = hyperplanes(dim, bits, seed)
+    """(id, vec, bucket): hyperplane bucket per vector, one vectorized
+    Arrow UDF call per batch (see ``_bucket_codes``)."""
+    planes = np.asarray(_literal_planes(dim, bits, seed))
 
     @F.pandas_udf(T.LongType())
     def bucket(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy())
-        signs = (mat @ planes.T) > 0
-        weights = (1 << np.arange(bits)).astype(np.int64)
-        return pd.Series(signs @ weights)
+        return pd.Series(_bucket_codes(vecs, planes))
 
     return df.select(F.col(id_col), F.col(vec_col), bucket(F.col(vec_col)).alias("bucket"))
+
+
+def _probes_for(query_vec: list[float], planes: list[list[float]]) -> list[int]:
+    """Query bucket + its Hamming-1 neighbours, sequential-sum signs
+    (computed once driver-side; embedded as literals in both engines)."""
+    qbucket = 0
+    for b, plane in enumerate(planes):
+        s = 0.0
+        for x, y in zip(plane, query_vec):
+            s += x * y
+        if s > 0:
+            qbucket |= 1 << b
+    return [qbucket] + [qbucket ^ (1 << i) for i in range(len(planes))]
 
 
 def ann_topk(
@@ -114,84 +151,18 @@ def ann_topk(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    multiprobe_hamming: int = 1,
 ) -> DataFrame:
-    """ANN top-k: probe the query's bucket (+ Hamming-1 neighbors), exact
-    cosine within candidates. Recall/latency knob = bits & multiprobe.
-
-    This is the scale path (one float32 matmul per Arrow batch). For the
-    oracle-checkable variant with frozen literal hyperplanes, see
-    :func:`ann_topk_catalyst`."""
+    """ANN top-k: probe the query's bucket and its Hamming-1 neighbours,
+    exact cosine within the candidates. Recall/latency knob = bits.
+    Row-for-row equal to ``ann_topk_sql`` (same planes, same fold)."""
     dim = len(query_vec)
-    planes = hyperplanes(dim, bits, seed)
-    signs = (planes @ np.asarray(query_vec)) > 0
-    weights = (1 << np.arange(bits)).astype(np.int64)
-    qbucket = int(signs @ weights)
-    probes = [qbucket]
-    if multiprobe_hamming >= 1:
-        probes += [qbucket ^ (1 << i) for i in range(bits)]
+    probes = _probes_for(query_vec, _literal_planes(dim, bits, seed))
     sigs = lsh_signatures(df, dim, bits, seed, vec_col, id_col)
     cand = sigs.where(F.col("bucket").isin(probes))
     return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
 
-# ---------------------------------------------------------------------------
-# Catalyst-expressed LSH ANN (oracle-checkable: frozen literal hyperplanes)
-# ---------------------------------------------------------------------------
-
-
-def _literal_planes(dim: int, bits: int, seed: int) -> list[list[float]]:
-    """Hyperplanes rounded to 6 decimals → stable literals embedded
-    identically in the Spark plan and the DuckDB SQL twin."""
-    return [
-        [float(x) for x in np.round(row, 6)]
-        for row in hyperplanes(dim, bits, seed)
-    ]
-
-
-def _probes_for(query_vec: list[float], planes: list[list[float]], multiprobe: int) -> list[int]:
-    """Query bucket + Hamming-`multiprobe` neighbors, sequential-sum signs
-    (computed once driver-side; embedded as literals in both engines)."""
-    bits = len(planes)
-    qbucket = 0
-    for b, plane in enumerate(planes):
-        s = 0.0
-        for x, y in zip(plane, query_vec):
-            s += x * y
-        if s > 0:
-            qbucket |= 1 << b
-    probes = [qbucket]
-    if multiprobe >= 1:
-        probes += [qbucket ^ (1 << i) for i in range(bits)]
-    return probes
-
-
-def ann_topk_catalyst(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    bits: int = 6,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    multiprobe_hamming: int = 1,
-) -> DataFrame:
-    """ANN top-k entirely in Catalyst: per-row bucket = sign bits of dots
-    against frozen literal hyperplanes (sequential aggregate fold — the
-    same summation order DuckDB's list_aggregate uses, so buckets are
-    bit-identical cross-engine), bucket IN (probes) pre-filter, exact
-    cosine among candidates."""
-    dim = len(query_vec)
-    planes = _literal_planes(dim, bits, seed)
-    probes = _probes_for(query_vec, planes, multiprobe_hamming)
-    code = _bucket_code_expr(planes, vec_col)
-    cand = df.select(F.col(id_col), F.col(vec_col), code.alias("bucket")).where(
-        F.col("bucket").isin(probes)
-    )
-    return cosine_topk(cand, query_vec, k, vec_col, id_col)
-
-
-def ann_topk_catalyst_sql(
+def ann_topk_sql(
     table: str,
     query_vec: list[float],
     k: int = 10,
@@ -199,12 +170,11 @@ def ann_topk_catalyst_sql(
     seed: int = 42,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    multiprobe_hamming: int = 1,
 ) -> str:
-    """DuckDB twin of ann_topk_catalyst (same literals, same fold order)."""
+    """DuckDB twin of ann_topk (same literals, same fold order)."""
     dim = len(query_vec)
     planes = _literal_planes(dim, bits, seed)
-    probes = _probes_for(query_vec, planes, multiprobe_hamming)
+    probes = _probes_for(query_vec, planes)
     code = _bucket_code_sql(planes, vec_col)
     q = "[" + ", ".join(f"{x!r}::DOUBLE" for x in query_vec) + "]"
     qn = float(np.sqrt(np.dot(query_vec, query_vec)))
@@ -229,16 +199,6 @@ def ann_topk_catalyst_sql(
 # ---------------------------------------------------------------------------
 
 
-def _bucket_code_expr(planes: list[list[float]], vec_col: str):
-    """Catalyst sign-bit bucket against frozen literal hyperplanes
-    (sequential fold — same summation order as DuckDB's list_aggregate,
-    so buckets are bit-identical cross-engine)."""
-    code = F.lit(0).cast("long")
-    for b, plane in enumerate(planes):
-        code = code + F.when(_dot_expr(vec_col, plane) > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return code
-
-
 def _plane_dot_sql(vec_col: str, plane: list[float]) -> str:
     p = "[" + ", ".join(f"{x!r}::DOUBLE" for x in plane) + "]"
     return (
@@ -248,7 +208,7 @@ def _plane_dot_sql(vec_col: str, plane: list[float]) -> str:
 
 
 def _bucket_code_sql(planes: list[list[float]], vec_col: str) -> str:
-    """DuckDB twin of ``_bucket_code_expr`` (same literals, same fold)."""
+    """DuckDB twin of ``_bucket_codes`` (same literals, same fold)."""
     return " + ".join(
         f"(CASE WHEN {_plane_dot_sql(vec_col, plane)} > 0 THEN {1 << b} ELSE 0 END)"
         for b, plane in enumerate(planes)
@@ -264,75 +224,24 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     bucket_cap: int = 256,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs: LSH bucket → capped within-bucket
-    join → exact cosine ≥ threshold. The embedding-space sibling of
-    MinHash near-dedup (same bucket-join shape, same star-pattern cap for
-    degenerate buckets — a corpus with millions of identical embeddings
-    stays O(N) pairs per bucket, not O(N²)).
-
-    ``materialize`` (default) eagerly localCheckpoints the windowed bucket
-    stats: they feed both small-bucket join sides and both star-join sides,
-    and without the barrier the scan + bucket projection + window shuffle
-    re-execute per reference (4× at 100 TB). Pass False for plan
-    inspection of the unmaterialized shape.
-
-    Buckets come from the Catalyst literal-hyperplane expression so the
-    DuckDB twin reproduces the exact pair set; candidate volume is pruned
-    ~2^bits before any cosine is computed. Returns (id_a, id_b, cosine)
-    with id_a < id_b, cosine rounded to 9 (cross-engine stable)."""
-    from pyspark.sql import Window
-
-    planes = _literal_planes(dim, bits, seed)
-    e = df.select(
-        F.col(id_col), F.col(vec_col), _bucket_code_expr(planes, vec_col).alias("bucket")
-    )
-    w = Window.partitionBy("bucket")
-    stats = e.withColumn("n", F.count(F.lit(1)).over(w)).withColumn(
-        "mid", F.min(id_col).over(w)
-    )
-    if materialize:
-        stats = stats.localCheckpoint(eager=True)
-    small = stats.where(F.col("n") <= bucket_cap)
-    pairs = (
-        small.alias("l")
-        .join(
-            small.alias("r"),
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col(f"l.{vec_col}").alias("__va"),
-            F.col(f"r.{vec_col}").alias("__vb"),
-        )
-    )
-    big = stats.where(F.col("n") > bucket_cap)
-    star = (
-        big.alias("l")
-        .join(
-            big.alias("r"),
-            (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col(f"l.{id_col}") == F.col("r.mid"))
-            & (F.col(f"r.{id_col}") != F.col("r.mid")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.col(f"l.{vec_col}").alias("__va"),
-            F.col(f"r.{vec_col}").alias("__vb"),
-        )
-    )
-    both = pairs.unionByName(star)
+    """Embedding-cosine near-dup pairs: LSH bucket (``lsh_signatures``) →
+    capped within-bucket join (``dedup.capped_bucket_pairs``: a corpus
+    with millions of identical embeddings stays O(N) pairs per bucket, not
+    O(N²)) → exact cosine ≥ threshold. The embedding-space sibling of
+    MinHash near-dedup; candidate volume is pruned ~2^bits before any
+    cosine is computed. Returns (id_a, id_b, cosine) with id_a < id_b,
+    cosine rounded to 9 (cross-engine stable)."""
+    e = lsh_signatures(df, dim, bits, seed, vec_col, id_col)
+    pairs = capped_bucket_pairs(e, ["bucket"], id_col, [vec_col], bucket_cap)
+    va, vb = f"{vec_col}_a", f"{vec_col}_b"
     dot = F.expr(
-        "aggregate(zip_with(__va, __vb, (x, y) -> cast(x as double) * cast(y as double)),"
+        f"aggregate(zip_with({va}, {vb}, (x, y) -> cast(x as double) * cast(y as double)),"
         " cast(0.0 as double), (acc, v) -> acc + v)"
     )
-    cos = round_away(dot / (_norm_expr("__va") * _norm_expr("__vb")), 9)
+    cos = round_away(dot / (_norm_expr(va) * _norm_expr(vb)), 9)
     return (
-        both.select("id_a", "id_b", cos.alias("cosine"))
+        pairs.select("id_a", "id_b", cos.alias("cosine"))
         .where(F.col("cosine") >= threshold)
     )
 
@@ -508,17 +417,10 @@ def ivf_topk(
     if centroids is None:
         centroids = ivf_random_centroids(len(query_vec))
     probes = ivf_probe_lists(query_vec, centroids, nprobe)
-    qn = float(np.sqrt(np.dot(query_vec, query_vec)))
     cand = ivf_assign(df, centroids, vec_col, id_col).where(
         F.col("list_id").isin(probes)
     )
-    scored = cand.select(
-        F.col(id_col),
-        round_away(
-            _dot_expr(vec_col, query_vec) / (_norm_expr(vec_col) * F.lit(qn)), 9
-        ).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
+    return cosine_topk(cand, query_vec, k, vec_col, id_col)
 
 
 def ivf_topk_sql(

@@ -44,6 +44,36 @@ class TestExactDedup:
         assert sorted(out["doc_id"]) == [0, 2, 3, 4, 5, 6, 7]
 
 
+def _duck(sql: str, **tables) -> pd.DataFrame:
+    import duckdb
+
+    con = duckdb.connect()
+    for name, pdf in tables.items():
+        con.register(name, pdf)
+    return con.execute(sql).df()
+
+
+def _mixed_bucket_docs(over: int, groups: list[int], seed: int = 0) -> pd.DataFrame:
+    """One over-cap group of ``over`` identical docs, under-cap groups of
+    identical docs (sizes ``groups``), near-copies and unrelated docs —
+    ids shuffled so no bucket's min id is its first row."""
+    rng = np.random.default_rng(seed)
+    words = [f"w{i}" for i in range(400)]
+
+    def doc(n=12):
+        return " ".join(rng.choice(words, n))
+
+    texts = ["the same boilerplate header body footer text"] * over
+    for g in groups:
+        texts += [doc()] * g
+    for _ in range(4):  # near-copies: one token changed
+        base = doc().split()
+        texts += [" ".join(base), " ".join(base[:-1] + ["zz"])]
+    texts += [doc() for _ in range(6)]
+    ids = rng.permutation(len(texts)) * 3 + 1
+    return pd.DataFrame({"doc_id": ids.astype(np.int64), "text": texts})
+
+
 class TestMinhashLsh:
     def test_signature_identical_for_identical_docs(self, docs_df):
         sigs = dedup.minhash_signatures(docs_df, num_perm=16).toPandas().set_index("doc_id")
@@ -131,6 +161,22 @@ class TestMinhashLsh:
         got = dedup.lsh_candidate_pairs(sigs, num_perm=16, bands=4, bucket_cap=64).toPandas()
         assert len(got) == 6  # C(4,2) — below the cap keeps exhaustive pairs
 
+    def test_mixed_buckets_match_sql_twin(self, spark):
+        """One over-cap bucket beside several under-cap buckets: the
+        verified pair set equals lsh_pairs_sql row for row."""
+        pdf = _mixed_bucket_docs(over=7, groups=[2, 3, 4])
+        df = spark.createDataFrame(pdf).repartition(3)
+        sigs = dedup.minhash_signatures(df, num_perm=16)
+        cand = dedup.lsh_candidate_pairs(sigs, num_perm=16, bands=4, bucket_cap=4)
+        key = ["id_a", "id_b"]
+        got = dedup.jaccard_pairs(df, cand).toPandas().sort_values(key).reset_index(drop=True)
+        want = (
+            _duck(dedup.lsh_pairs_sql("documents", bucket_cap=4), documents=pdf)
+            .sort_values(key).reset_index(drop=True)
+        )
+        assert (got["jaccard"] == 1.0).sum() > 6  # over- and under-cap pairs both present
+        assert got.values.tolist() == want.values.tolist()
+
     def test_minhash_jaccard_estimate(self, spark):
         """MinHash property: signature agreement ≈ true Jaccard."""
         a = "w" + " w".join(str(i) for i in range(200))
@@ -147,6 +193,50 @@ class TestMinhashLsh:
 
         true_j = len(sh(a) & sh(b)) / len(sh(a) | sh(b))
         assert abs(agree - true_j) < 0.15
+
+
+class TestCappedBucketPairs:
+    CAP = 4
+
+    @pytest.mark.parametrize("id_kind", ["int", "str"])
+    def test_matches_cap_rule_enumeration(self, spark, id_kind):
+        """capped_bucket_pairs == a pure-Python enumeration of the cap rule
+        (≤ cap: all pairs id_a < id_b; > cap: bucket-min hub × every other
+        member, never hub × hub) on buckets of size 1, cap-1, cap, cap+1,
+        keyed on two columns (buckets that share only one key stay apart)."""
+        rng = np.random.default_rng(11 if id_kind == "int" else 12)
+        cap = self.CAP
+        sizes = [1, cap - 1, cap, cap + 1] * 3
+        n = sum(sizes)
+        raw = rng.choice(np.arange(1, 10 * n), size=n, replace=False)
+        # str ids order lexicographically ("d17" < "d9"), not numerically
+        ids = [int(x) for x in raw] if id_kind == "int" else [f"d{x}" for x in raw]
+        rows, pos = [], 0
+        for b, size in enumerate(sizes):
+            for _ in range(size):
+                rows.append((ids[pos], b % 3, b // 3, f"p{ids[pos]}"))
+                pos += 1
+        rows = [rows[i] for i in rng.permutation(len(rows))]
+        pdf = pd.DataFrame(rows, columns=["id", "g", "h", "pay"])
+        frame = spark.createDataFrame(pdf).repartition(3)
+
+        got = dedup.capped_bucket_pairs(frame, ["g", "h"], "id", ["pay"], cap).toPandas()
+        got = sorted(map(tuple, got[["id_a", "id_b", "pay_a", "pay_b"]].values.tolist()))
+
+        want = []
+        for _, grp in pdf.groupby(["g", "h"]):
+            members = sorted(zip(grp["id"], grp["pay"]))
+            if len(members) <= cap:
+                want += [
+                    (a, b, pa, pb)
+                    for i, (a, pa) in enumerate(members)
+                    for (b, pb) in members[i + 1:]
+                ]
+            else:
+                hub, hp = members[0]
+                want += [(hub, b, hp, pb) for b, pb in members[1:]]
+        assert got == sorted(want)
+        assert len(got) == 3 * ((cap - 1) * (cap - 2) // 2 + cap * (cap - 1) // 2 + cap)
 
 
 class TestSimhash:
@@ -196,6 +286,23 @@ class TestSimhash:
         key = lambda d: sorted(map(tuple, d.itertuples(index=False)))
         assert key(uncapped) == key(capped)
 
+    def test_mixed_buckets_match_sql_twin(self, spark):
+        """One over-cap chunk bucket beside several under-cap ones (and
+        Hamming-1 near-copies): the pair set equals simhash_pairs_sql."""
+        pdf = _mixed_bucket_docs(over=6, groups=[2, 3, 4], seed=1)
+        df = spark.createDataFrame(pdf).repartition(3)
+        key = ["id_a", "id_b"]
+        got = (
+            dedup.simhash_candidate_pairs(dedup.simhash(df), max_hamming=3, bucket_cap=4)
+            .toPandas().sort_values(key).reset_index(drop=True)
+        )
+        want = (
+            _duck(dedup.simhash_pairs_sql("documents", bucket_cap=4), documents=pdf)
+            .sort_values(key).reset_index(drop=True)
+        )
+        assert len(got) > 10
+        assert got.astype("int64").values.tolist() == want.astype("int64").values.tolist()
+
     def test_pairs_duckdb_parity(self, docs_df):
         """Spark pair set == DuckDB twin (simhash_pairs_sql), bit-for-bit."""
         import duckdb
@@ -236,22 +343,87 @@ class TestSimilarity:
         assert list(got["vec_id"]) == list(order)
         assert got.iloc[0]["vec_id"] == 0 and got.iloc[0]["cosine"] == pytest.approx(1.0)
 
-    def test_ann_catalyst_matches_fast_path(self, emb_df):
-        """The oracle-checkable Catalyst ANN and the float32-matmul scale
-        path bucket identically away from sign boundaries — same top-k on
-        the same data (literal rounding only shifts dots by <1e-6)."""
+    def test_bucket_codes_match_sql_twin(self, spark):
+        """Hyperplane buckets equal _bucket_code_sql in DuckDB bit for bit:
+        random float32 vectors, vectors within 1e-6 of a plane, and
+        vectors whose dot with a plane cancels exactly while a tiny term
+        is absorbed by the sequential fold (any other summation order,
+        such as a BLAS matmul, leaves that term and flips the bit).
+        Buckets must not depend on the Arrow batch shape either: the
+        whole frame through Spark and each row alone give the same bits."""
+        # plane 11 of this seed has two equal-magnitude entries, 27 and 47
+        dim, bits, seed, r, ia, ib = 64, 16, 69, 11, 27, 47
+        planes = similarity._literal_planes(dim, bits, seed)
+        P = np.asarray(planes)
+        assert abs(P[r, ia]) == abs(P[r, ib])
+        rng = np.random.default_rng(2)
+        rand = rng.standard_normal((100, dim))
+        near = rng.standard_normal((100, dim))
+        for i, v in enumerate(near):
+            p = P[i % bits]
+            v -= (v @ p) / (p @ p) * p
+            v += rng.uniform(-1e-6, 1e-6) * p / np.linalg.norm(p)
+        cancel = np.zeros((dim - 2, dim))
+        for row, c in zip(cancel, [c for c in range(dim) if c not in (ia, ib)]):
+            x = rng.uniform(0.5, 2.0)
+            row[ia], row[ib] = x, -x * np.sign(P[r, ia] * P[r, ib])
+            row[c] = 1e-18 / P[r, c]
+        vecs = np.vstack([rand, near, cancel]).astype(np.float32)
+        pdf = pd.DataFrame({"vec_id": range(len(vecs)), "embedding": list(vecs)})
+        want = _duck(
+            f"SELECT vec_id, ({similarity._bucket_code_sql(planes, 'e')})::BIGINT AS bucket"
+            " FROM (SELECT vec_id, embedding::FLOAT[] AS e FROM emb) ORDER BY vec_id",
+            emb=pdf,
+        )["bucket"].tolist()
+        df = spark.createDataFrame(
+            pdf.assign(embedding=[v.tolist() for v in vecs]),
+            "vec_id long, embedding array<float>",
+        ).repartition(4)
+        got = (
+            similarity.lsh_signatures(df, dim, bits, seed)
+            .toPandas().sort_values("vec_id")["bucket"].tolist()
+        )
+        one_row = [
+            int(similarity._bucket_codes(pd.Series([v]), P)[0]) for v in vecs
+        ]
+        assert got == want
+        assert one_row == want
+
+    @pytest.mark.parametrize("bits", [4, 6])
+    def test_ann_matches_sql_twin(self, emb_df, bits):
+        """ann_topk == ann_topk_sql row for row (ids and cosines)."""
         df, vecs = emb_df
-        q = vecs[0].astype(np.float64)
-        fast = similarity.ann_topk(df, q.tolist(), 10, bits=4).toPandas()
-        cata = similarity.ann_topk_catalyst(df, q.tolist(), 10, bits=4).toPandas()
-        assert list(fast["vec_id"]) == list(cata["vec_id"])
+        q = vecs[0].astype(np.float64).tolist()
+        got = similarity.ann_topk(df, q, 10, bits=bits).toPandas()
+        pdf = pd.DataFrame({"vec_id": range(len(vecs)), "embedding": [v.tolist() for v in vecs]})
+        want = _duck(similarity.ann_topk_sql("embeddings", q, 10, bits=bits), embeddings=pdf)
+        assert got["vec_id"].tolist() == want["vec_id"].tolist()
+        assert got["cosine"].tolist() == want["cosine"].tolist()
+
+    def test_null_embedding_gets_bucket_zero(self, spark):
+        """A null embedding neither fails ann_topk nor
+        embedding_near_dup_pairs; it lands in bucket 0, as in the twin."""
+        rng = np.random.default_rng(6)
+        vecs = [v.tolist() for v in rng.standard_normal((20, 8)).astype(np.float32)]
+        vecs[5] = None
+        df = spark.createDataFrame(
+            pd.DataFrame({"vec_id": range(20), "embedding": vecs}),
+            "vec_id long, embedding array<float>",
+        )
+        sigs = similarity.lsh_signatures(df, 8, bits=4).toPandas().set_index("vec_id")
+        assert sigs.loc[5, "bucket"] == 0
+        q = vecs[0]
+        assert len(similarity.ann_topk(df, q, 5, bits=4).collect()) == 5
+        pairs = similarity.embedding_near_dup_pairs(df, dim=8, bits=2, threshold=-1.0).toPandas()
+        assert len(pairs) > 0
+        assert 5 not in set(pairs["id_a"]) | set(pairs["id_b"])
 
     def test_ann_recall(self, emb_df):
         df, vecs = emb_df
         q = vecs[0].astype(np.float64)
         exact = set(similarity.cosine_topk(df, q.tolist(), 10).toPandas()["vec_id"])
         ann = set(similarity.ann_topk(df, q.tolist(), 10, bits=4).toPandas()["vec_id"])
-        # LSH with 4 bits + multiprobe-1 probes 5/16 of the space; recall
+        # LSH with 4 bits + Hamming-1 probes 5/16 of the space; recall
         # must at least find the identical vector and some neighbors
         assert 0 in ann
         assert len(exact & ann) >= 3
@@ -442,6 +614,30 @@ class TestEmbeddingNearDup:
             df, dim=2, bits=2, threshold=0.99
         ).toPandas()
         assert set(zip(pairs["id_a"], pairs["id_b"])) == {(0, 1)}
+
+    def test_mixed_buckets_match_sql_twin(self, spark):
+        """Over-cap and under-cap buckets side by side (star leg
+        included): the pair set and cosines equal
+        embedding_near_dup_pairs_sql row for row."""
+        rng = np.random.default_rng(8)
+        vecs = rng.standard_normal((60, 8)).astype(np.float32)
+        vecs[40:52] = vecs[40]  # 12 identical vectors: one over-cap bucket
+        ids = rng.permutation(60) * 2 + 5
+        pdf = pd.DataFrame({"vec_id": ids, "embedding": [v.tolist() for v in vecs]})
+        df = spark.createDataFrame(pdf).repartition(3)
+        kw = dict(dim=8, bits=3, threshold=-1.0, bucket_cap=10)
+        key = ["id_a", "id_b"]
+        got = (
+            similarity.embedding_near_dup_pairs(df, **kw)
+            .toPandas().sort_values(key).reset_index(drop=True)
+        )
+        want = (
+            _duck(similarity.embedding_near_dup_pairs_sql("embeddings", **kw), embeddings=pdf)
+            .sort_values(key).reset_index(drop=True)
+        )
+        hub = int(ids[40:52].min())
+        assert ((got["id_a"] == hub) & (got["cosine"] == 1.0)).sum() >= 11
+        assert got.values.tolist() == want.values.tolist()
 
     def test_near_dedup_survivors(self, spark):
         n = 50

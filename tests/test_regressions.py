@@ -265,8 +265,9 @@ class TestMultiNegativeConditionsOneField:
 
 class TestFlatItemsArrayMatcher:
     """The vectorized list-membership probe (one flatten + one factorize
-    per column, per-unique typed checks) must keep the exact semantics of
-    the former per-row typed_contains apply."""
+    per column, per-unique typed checks) must keep strict typed
+    containment: a list matches only an item of the same type tag
+    (True is not 1, "1" is not 1) and equal value."""
 
     def test_typed_collisions_and_null_in_arrays(self):
         k = Koncorde()

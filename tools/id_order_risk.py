@@ -25,10 +25,12 @@ Usage: python tools/id_order_risk.py [n_filters] [seed]
 
 from __future__ import annotations
 
+import os
 import random
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script belongs to, so a copy of the repo measures itself
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from koncorde_spark.normalize import Transformer
 from koncorde_spark.normalize import espresso as esp

@@ -6,8 +6,11 @@ import os
 import sys
 import zipfile
 
+# the checkout this script belongs to
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def make_zip(out_path: str = "/tmp/koncorde_spark.zip", repo: str = "/root/repo") -> str:
+
+def make_zip(out_path: str = "/tmp/koncorde_spark.zip", repo: str = REPO) -> str:
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
         pkg = os.path.join(repo, "koncorde_spark")
         for dirpath, _dirs, files in os.walk(pkg):

@@ -31,7 +31,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script belongs to, so a copy of the repo measures itself
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def run_single(cpus: int, n_rows: int) -> dict:

@@ -25,7 +25,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, "/root/repo")
+# the checkout this script belongs to, so a copy of the repo measures itself
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bwprobe import cpu_window, probe, read_cpu_stat, single_baseline
 from scaling import run_subprocess
