@@ -1217,13 +1217,13 @@ def _q_mix_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-prefiltered decontamination: compact m-bit filter over the
-    eval shingles gates the train scan, exact verification on survivors —
-    output EXACTLY equals contamination_pairs (no false negatives by
-    construction), so it shares that oracle."""
+    """The contamination query under its older name (the query set keeps
+    it). It runs contamination_pairs itself: a Bloom pre-filter in front
+    of the exact join cannot save work, since that join still broadcasts
+    the full eval shingle set. Oracle: contamination_pairs_sql."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     ev = docs.where(F.col("doc_id") % 25 == 0)
-    return sampling.bloom_contamination_pairs(docs, ev)
+    return sampling.contamination_pairs(docs, ev)
 
 
 def _q_emb_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1658,7 +1658,7 @@ def oracle_sql() -> dict[str, str]:
         "contamination": sampling.contamination_pairs_sql(
             "documents", "(SELECT * FROM documents WHERE doc_id % 25 = 0)"
         ),
-        # Bloom prefilter + exact verify == the exact op, so same oracle
+        # the contamination query under its older name
         "bloom_contamination": sampling.contamination_pairs_sql(
             "documents", "(SELECT * FROM documents WHERE doc_id % 25 = 0)"
         ),

@@ -788,7 +788,9 @@ def _write_postings(segments: DataFrame, path: str, n_shards: int, mode: str) ->
     """Postings layout: one directory per shard (partitionBy). The
     repartition by shard keeps the commit cheap — n_shards writer tasks ×
     1 file each, not n_merge_parts × n_shards tiny files — and the local
-    sort restores term order inside each file for row-group pruning."""
+    sort puts each file in term order. A shard's file stays one row group
+    until it outgrows the writer's 128 MB row-group size, so a term filter
+    usually prunes no row group; it drops rows after the read."""
     (
         segments.repartition(n_shards, "shard")
         .sortWithinPartitions("term")

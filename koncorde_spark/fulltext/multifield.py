@@ -18,11 +18,11 @@ Plan shape: union of the fields' pruned postings (parquet term pushdown
 per index) cogrouped with the union of their dlpacks by shard. This
 module only builds that plan; the per-shard body is
 serve.multifield_shard (shared with LocalMultiFieldSearcher): each field
-scores with the brute multi-term kernel (additive over segment rows, so
-appended indexes work unchanged, rows summed in canonical term order),
-contributions are weight-scaled and summed per doc with one
-np.unique/bincount, and each shard emits its top-k. Global sort-limit
-over ≤ shards·k rows.
+scores exactly as topk does (decode_segments + score_union, additive over
+segment rows, so appended indexes work unchanged, rows summed in
+canonical term order), contributions are weight-scaled and summed per doc
+by score_union in field order, and each shard emits its top-k. Global
+sort-limit over ≤ shards·k rows.
 
 Per-field tombstones apply to that field's contributions only (delete
 from every field index to remove a document entirely — the same

@@ -479,8 +479,8 @@ class Bm25Index:
         policy — the same dict every query's df lookup probes), the
         expansion is serve.vocab_prefix with NO Spark job; large
         vocabularies fall back to one tiny job over the cached terms table
-        (startswith compiles to a Catalyst StartsWith predicate with
-        parquet row-group pruning on the term-sorted files). The (df DESC,
+        (a Catalyst StartsWith filter over every terms row: the terms files
+        are unsorted groupBy output, so no row group is pruned). The (df DESC,
         term ASC) cap is the deterministic contract the SQL oracle
         reproduces verbatim — identical on both paths by construction."""
         tl = self._terms_local_dict()

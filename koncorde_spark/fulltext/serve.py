@@ -4,22 +4,28 @@ per-shard implementation of every search operator.
 Per-shard bodies live here and nowhere else: the segment decode
 (``decode_segments`` / ``segment_postings``), the any/all top-k dispatch
 (``wand_topk``), the count set arithmetic (``match_ids``), the boolean,
-phrase, highlight and multi-term / multi-field bodies (``*_shard``), the
-Levenshtein DP and the vocabulary scans. Each body takes ONE shard's
-postings rows — a pandas frame inside a Spark cogroup, a column dict here
-— sorts them by term and returns that shard's (ids, scores), plus
-snippets for highlight. ``Bm25Index`` (query.py) and ``MultiFieldSearch``
-(multifield.py) only build plans: the pruned scan of ``postings_columns``,
-the cogroup with the dlpack and the global sort-limit. ``LocalSearcher``
-and ``LocalMultiFieldSearcher`` run the same bodies in-process, so the two
+phrase, highlight and multi-field bodies (``*_shard``), the Levenshtein
+DP and the vocabulary scans. Every scored body but phrase takes each
+entry's score from ``_segment``'s tf part times the term's idf
+(``segment_postings``) and sums a doc's entries in canonical term order
+(``score_union`` / ``wand_topk``), so a doc scores the same bits in
+every operator. Each body takes ONE shard's postings rows — a pandas
+frame inside a Spark cogroup, a column dict here — sorts them by term
+and returns that shard's (ids, scores), plus snippets for highlight.
+``Bm25Index`` (query.py) and ``MultiFieldSearch`` (multifield.py) only
+build plans: the pruned scan of ``postings_columns``, the cogroup with
+the dlpack and the global sort-limit. ``LocalSearcher`` and
+``LocalMultiFieldSearcher`` run the same bodies in-process, so the two
 tiers are bit-identical by construction. Postings are decoded through
 this module's ``delta_decode`` / ``varint_decode`` names.
 
 The distributed job (indexer.py) builds the index; serving top-k queries
 does not need a Spark job at all — a query touches only the posting rows
 of its terms. LocalSearcher reads those rows straight from the postings
-parquet with pyarrow (dataset filter on ``term`` → row-group pruning via
-the term-sorted files). At cluster scale this is the "searcher" tier:
+parquet with pyarrow (a dataset filter on ``term``; a shard's file is
+term-sorted, but stays one row group until it outgrows the writer's
+128 MB row-group size, so the filter drops rows after the read rather
+than pruning row groups). At cluster scale this is the "searcher" tier:
 each searcher process maps a subset of shard directories; here one
 process serves all shards. p50/p95 latencies are milliseconds (vs ~1s
 for a Spark job round-trip).
@@ -33,7 +39,7 @@ import numpy as np
 import pyarrow.dataset as ds
 
 from .codecs import delta_decode, varint_decode
-from .highlight import boolean_topk_shard, highlight_topk_shard, multiterm_scores
+from .highlight import best_windows
 from .indexer import _decode_dlpack, read_meta
 from .phrase import (
     TermOccurrences,
@@ -46,11 +52,10 @@ from .wand import (
     TermPostings,
     bm25_idf,
     check_after_cursor,
+    score_union,
     topk_conjunctive,
     topk_disjunctive,
 )
-
-_NO_POS = np.empty(0, dtype=np.int64)
 
 # ---------------------------------------------------------------------------
 # per-shard operator bodies (shared by the Spark tier and the serve tier)
@@ -69,7 +74,7 @@ _COLUMNS = {
 def postings_columns(kind: str) -> list[str]:
     """Postings columns (besides ``shard``) a ``kind`` of body decodes:
     "match" (count / matching_ids), "tf" (the top-k family, boolean,
-    multi-term) or "pos" (phrase, highlight)."""
+    multi-field) or "pos" (phrase, highlight)."""
     return list(_COLUMNS[kind])
 
 
@@ -92,6 +97,27 @@ def _member(sorted_ids: np.ndarray, ids: np.ndarray) -> np.ndarray:
     return sorted_ids[np.minimum(at, len(sorted_ids) - 1)] == ids
 
 
+def _segment(ids, tfs, dl, k1, b, avgdl, tombstones=None, allowed=None) -> tuple | None:
+    """One postings segment (sorted doc ``ids``, their ``tfs``) as an
+    idf-INDEPENDENT ``(ids, tfpart)``, deleted / ineligible entries
+    dropped; None when none is left. The one place a BM25 tf part is
+    computed — every scored operator but phrase reads it."""
+    dl_ids, dl_vals = dl
+    tfs = tfs.astype(np.float64)
+    dls = dl_vals[np.searchsorted(dl_ids, ids)]
+    tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
+    keep = np.ones(len(ids), dtype=bool)
+    if tombstones is not None and len(tombstones):
+        keep &= ~_member(tombstones, ids)
+    if allowed is not None:
+        keep &= _member(allowed, ids)
+    if not keep.all():
+        ids, tfpart = ids[keep], tfpart[keep]
+        if len(ids) == 0:
+            return None
+    return ids, tfpart
+
+
 def decode_segments(
     rows,
     dl: tuple[np.ndarray, np.ndarray],
@@ -101,8 +127,8 @@ def decode_segments(
     tombstones: np.ndarray | None = None,
     allowed: np.ndarray | None = None,
 ) -> list[tuple[str, tuple]]:
-    """One shard's "tf" rows as idf-INDEPENDENT segments in canonical
-    term order: ``[(term, (ids, tfpart))]``.
+    """One shard's "tf" rows as idf-INDEPENDENT segments (``_segment``) in
+    canonical term order: ``[(term, (ids, tfpart))]``.
 
     A (term, shard) may own SEVERAL segment rows (hot-term salts, append
     generations); BM25 is additive per entry, so each stays its own
@@ -113,24 +139,15 @@ def decode_segments(
     dropped."""
     if allowed is not None and len(allowed) == 0:
         return []
-    dl_ids, dl_vals = dl
     out = []
     for term, n, ids_b, tfs_b in _rows_by_term(rows, ("df", "doc_ids", "tfs")):
         n = int(n)
-        ids = delta_decode(bytes(ids_b), n).astype(np.int64)
-        tfs = varint_decode(bytes(tfs_b), n).astype(np.float64)
-        dls = dl_vals[np.searchsorted(dl_ids, ids)]
-        tfpart = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
-        keep = np.ones(n, dtype=bool)
-        if tombstones is not None and len(tombstones):
-            keep &= ~_member(tombstones, ids)
-        if allowed is not None:
-            keep &= _member(allowed, ids)
-        if not keep.all():
-            ids, tfpart = ids[keep], tfpart[keep]
-            if len(ids) == 0:
-                continue
-        out.append((term, (ids, tfpart)))
+        seg = _segment(
+            delta_decode(bytes(ids_b), n).astype(np.int64),
+            varint_decode(bytes(tfs_b), n), dl, k1, b, avgdl, tombstones, allowed,
+        )
+        if seg is not None:
+            out.append((term, seg))
     return out
 
 
@@ -205,24 +222,14 @@ def match_ids(rows, mode: str, need: int, tombstones: np.ndarray) -> np.ndarray:
     return cand
 
 
-def _occurrences(rows, positions: bool) -> dict[str, list[TermOccurrences]]:
-    """One shard's "tf" (or, with ``positions``, "pos") rows decoded into
-    per-term segment lists, in canonical term order."""
+def _occurrences(rows) -> dict[str, list[TermOccurrences]]:
+    """One shard's "pos" rows decoded into per-term segment lists, in
+    canonical term order."""
     out: dict[str, list[TermOccurrences]] = {}
-    if positions:
-        for term, n, ids_b, tfs_b, pos_b in _rows_by_term(rows, ("df", "doc_ids", "tfs", "pos")):
-            out.setdefault(term, []).append(
-                decode_entry_positions(bytes(ids_b), bytes(tfs_b), bytes(pos_b), int(n))
-            )
-        return out
-    for term, n, ids_b, tfs_b in _rows_by_term(rows, ("df", "doc_ids", "tfs")):
-        n = int(n)
-        tfs = varint_decode(bytes(tfs_b), n).astype(np.int64)
-        out.setdefault(term, []).append(TermOccurrences(
-            delta_decode(bytes(ids_b), n).astype(np.int64),
-            np.concatenate(([0], np.cumsum(tfs))).astype(np.int64),
-            _NO_POS,
-        ))
+    for term, n, ids_b, tfs_b, pos_b in _rows_by_term(rows, ("df", "doc_ids", "tfs", "pos")):
+        out.setdefault(term, []).append(
+            decode_entry_positions(bytes(ids_b), bytes(tfs_b), bytes(pos_b), int(n))
+        )
     return out
 
 
@@ -259,22 +266,25 @@ def boolean_plan(must, should, must_not, boosts, df_for, n_docs: int):
 
 
 def boolean_shard(rows, dl, must, idf, must_not, k1, b, avgdl, k, tombstones):
-    """One shard of a boolean query (highlight.boolean_topk_shard): docs
+    """One shard of a boolean query (Lucene BooleanQuery semantics): docs
     holding every ``must`` term and no ``must_not`` term, scored by the
-    ``idf`` (boost-scaled) terms; None when a must term misses the shard."""
-    by_term = _occurrences(rows, positions=False)
-    if any(t not in by_term for t in must):
+    ``idf`` (boost-scaled) terms exactly as topk scores them; None when a
+    must term misses the shard."""
+    segs = decode_segments(rows, dl, k1, b, avgdl, tombstones)
+    if not set(must) <= {t for t, _ in segs}:
         return None
-    score_terms, score_idfs = [], []
-    for t, w in idf.items():
-        for seg in by_term.get(t, ()):
-            score_terms.append(seg)
-            score_idfs.append(w)
-    return boolean_topk_shard(
-        [by_term[t] for t in must], score_terms, score_idfs,
-        [seg for t in must_not for seg in by_term.get(t, ())],
-        k1, b, avgdl, *dl, k, tombstones,
-    )
+    ids, scores = score_union([segment_postings(seg, idf[t]) for t, seg in segs if t in idf])
+    # a term's segments are doc-disjoint: a doc hits at most one per term
+    n_must, hit_not = np.zeros(len(ids), dtype=np.int64), np.zeros(len(ids), dtype=bool)
+    for t, (seg_ids, _) in segs:
+        if t in must:
+            n_must += _member(seg_ids, ids)
+        if t in must_not:
+            hit_not |= _member(seg_ids, ids)
+    keep = (n_must == len(must)) & ~hit_not
+    ids, scores = ids[keep], scores[keep]
+    order = np.lexsort((ids, -scores))[:k]
+    return ids[order], scores[order]
 
 
 def phrase_plan(phrase: str, df_for, n_docs: int):
@@ -294,7 +304,7 @@ def phrase_plan(phrase: str, df_for, n_docs: int):
 def phrase_shard(rows, dl, toks, idf_sum, k1, b, avgdl, k, tombstones, slop):
     """One shard of a phrase (slop 0) or proximity (slop > 0) query
     (phrase.phrase_topk_shard); None when a token misses the shard."""
-    by_term = _occurrences(rows, positions=True)
+    by_term = _occurrences(rows)
     if len(by_term) < len(set(toks)):
         return None
     merged = {t: merge_term_segments(v) for t, v in by_term.items()}
@@ -305,44 +315,44 @@ def phrase_shard(rows, dl, toks, idf_sum, k1, b, avgdl, k, tombstones, slop):
 
 
 def highlight_shard(rows, dl, idf, k1, b, avgdl, k, window, tombstones):
-    """One shard's (ids, scores, snip_start, snip_hits) top-k
-    (highlight.highlight_topk_shard), terms in canonical order."""
-    by_term = _occurrences(rows, positions=True)
-    return highlight_topk_shard(
-        [merge_term_segments(v) for v in by_term.values()],
-        [idf[t] for t in by_term], k1, b, avgdl, *dl, k, window, tombstones,
-    )
-
-
-def multiterm_shard(rows, dl, idf, k1, b, avgdl, tombstones):
-    """(sorted candidate ids, BM25 sums) of one shard with no skipping
-    (highlight.multiterm_scores), every segment row added in canonical
-    term order — so the bits never depend on the order rows arrive."""
-    by_term = _occurrences(rows, positions=False)
-    return multiterm_scores(
-        [seg for segs in by_term.values() for seg in segs],
-        [idf[t] for t, segs in by_term.items() for _ in segs],
-        k1, b, avgdl, *dl, tombstones,
-    )
+    """One shard's (ids, scores, snip_start, snip_hits) top-k: the
+    positional rows decoded once, each segment scored from its tfs
+    (``_segment``) and ranked by wand_topk — so ids and scores are topk's
+    — then the winners' best windows (highlight.best_windows). None when
+    no live doc matches."""
+    by_term = _occurrences(rows)
+    scored: dict[str, list[TermPostings]] = {}
+    for term, occs in by_term.items():
+        for occ in occs:
+            seg = _segment(occ.doc_ids, np.diff(occ.occ_off), dl, k1, b, avgdl, tombstones)
+            if seg is not None:
+                scored.setdefault(term, []).append(segment_postings(seg, idf[term]))
+    ids, scores = wand_topk(scored, k)
+    if len(ids) == 0:
+        return None
+    starts, hits = best_windows([o for occs in by_term.values() for o in occs], ids, window)
+    return ids, scores, starts, hits
 
 
 def multifield_shard(fields, k1: float, b: float, k: int):
     """One shard's weighted multi-field top-k: ``fields`` yields (rows,
     dl, idf, avgdl, weight, tombstones) per field in sorted field order;
-    each field's multi-term scores are weight-scaled and summed per doc
-    (bincount adds in field order). None when no field matches."""
-    id_parts, sc_parts = [], []
+    each field scores as topk does (score_union in canonical term order),
+    then the weight-scaled field scores are summed per doc by score_union
+    in field order. None when no field matches."""
+    parts = []
     for rows, dl, idf, avgdl, weight, tombstones in fields:
-        cand, sc = multiterm_shard(rows, dl, idf, k1, b, avgdl, tombstones)
-        if len(cand):
-            id_parts.append(cand)
-            sc_parts.append(weight * sc)
-    if not id_parts:
+        ids, sc = score_union([
+            segment_postings(seg, idf[t])
+            for t, seg in decode_segments(rows, dl, k1, b, avgdl, tombstones)
+        ])
+        if len(ids):
+            parts.append(TermPostings(ids, weight * sc))
+    if not parts:
         return None
-    uids, inv = np.unique(np.concatenate(id_parts), return_inverse=True)
-    tot = np.bincount(inv, weights=np.concatenate(sc_parts))
-    order = np.lexsort((uids, -tot))[:k]
-    return uids[order], tot[order]
+    ids, tot = score_union(parts)
+    order = np.lexsort((ids, -tot))[:k]
+    return ids[order], tot[order]
 
 
 def _levenshtein_capped(a: str, b: str, cap: int) -> int | None:

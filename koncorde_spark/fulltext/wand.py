@@ -4,11 +4,14 @@ Operates on decoded postings for the query's terms within one doc shard.
 ``topk_disjunctive`` (ANY term) scores the whole union of the terms'
 postings exhaustively with ``score_union`` — one concatenate, one
 ``np.unique`` and one ordered accumulation — then cuts the top k;
-``topk_conjunctive`` (ALL terms) intersects before it sums. There is no
-block-max skipping: on synthetic Zipf-tf postings of 77k–1.5M entries a
-per-block WAND loop was slower than this exhaustive pass at every size
-while still scoring most entries, so the index stores no per-block
-bounds.
+``topk_conjunctive`` (ALL terms) intersects before it sums. Both add a
+doc's per-term scores in the order of their input terms, so a doc's
+float64 score is the same bits in either mode, and in every operator
+that sums through ``score_union`` (boolean, highlight, multi-field,
+collapse, filtered). There is no block-max skipping: on synthetic
+Zipf-tf postings of 77k–1.5M entries a per-block WAND loop was slower
+than this exhaustive pass at every size while still scoring most
+entries, so the index stores no per-block bounds.
 
 Scores use frozen BM25 constants: idf = ln(1 + (N - df + 0.5)/(df + 0.5)),
 tf part = tf*(k1+1)/(tf + k1*(1 - b + b*dl/avgdl)); ties break by
@@ -66,8 +69,9 @@ def topk_conjunctive(
 ) -> tuple[np.ndarray, np.ndarray]:
     """ALL-terms (AND-semantics) top-k within one shard: a doc qualifies
     only if it carries EVERY query term; qualifying docs score exactly as
-    in the disjunctive path (sum of per-term scores), so a doc's score is
-    mode-independent. ``require`` = number of query terms present in the
+    in the disjunctive path (per-term scores added in ``by_term`` order,
+    as score_union adds them), so a doc's score bits are mode-independent.
+    ``require`` = number of query terms present in the
     GLOBAL vocabulary — a shard missing any of them (len(by_term) <
     require) can contain no qualifying doc and short-circuits to empty.
 
@@ -87,15 +91,16 @@ def topk_conjunctive(
             order = np.argsort(ids, kind="stable")
             ids, sc = ids[order], sc[order]
         merged.append((ids, sc))
-    merged.sort(key=lambda p: len(p[0]))
-    cand = merged[0][0]
-    for ids, _ in merged[1:]:
+    shortest = sorted(merged, key=lambda p: len(p[0]))
+    cand = shortest[0][0]
+    for ids, _ in shortest[1:]:
         if len(cand) == 0:
             return empty
         pos = np.searchsorted(ids, cand)
         cand = cand[ids[np.minimum(pos, len(ids) - 1)] == cand]
     if len(cand) == 0:
         return empty
+    # summed in ``by_term`` order, as score_union adds: the same bits
     total = np.zeros(len(cand), dtype=np.float64)
     for ids, sc in merged:
         total += sc[np.searchsorted(ids, cand)]

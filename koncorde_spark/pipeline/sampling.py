@@ -411,195 +411,6 @@ def stratified_sample_sql(
     return f"SELECT * FROM {table} WHERE {case}"
 
 
-# ---------------------------------------------------------------------------
-# Bloom-filter decontamination (scale path for large eval sets)
-# ---------------------------------------------------------------------------
-#
-# contamination_pairs broadcasts the eval shingle SET; at very large eval
-# suites that broadcast dominates. The Bloom path compresses it to m bits
-# (~10 bits/shingle at 1% FPR — 100x smaller than 64-bit ids in a hash
-# set), pre-filters the train scan to docs with at least one PROBABLE
-# shingle collision (no false negatives by construction), and runs the
-# exact pairs join only on the survivors — so the end-to-end result is
-# EXACTLY contamination_pairs' output, at a broadcast size independent of
-# the id width and a train-side join input shrunk by the true-negative
-# rate.
-
-
-def bloom_params(n_items: int, fp_rate: float = 0.01) -> tuple[int, int]:
-    """(m_bits, n_hashes) sized for ``n_items`` at ``fp_rate`` — the
-    standard m = -n ln p / ln^2 2, k = (m/n) ln 2, floored to sane
-    minimums."""
-    import math
-
-    n = max(1, n_items)
-    m = int(math.ceil(-n * math.log(fp_rate) / (math.log(2) ** 2)))
-    m = max(64, m)
-    k = max(1, int(round(m / n * math.log(2))))
-    return m, min(k, 16)
-
-
-def _bloom_positions(shingles, m_bits: int, n_hashes: int):
-    """(len, n_hashes) bit positions by double hashing the int64 shingle
-    ids (Kirsch-Mitzenmacher: h1 + i*h2 keeps the FP guarantee of k
-    independent hashes). uint64 arithmetic, no Python loop."""
-    import numpy as np
-
-    s = shingles.astype(np.uint64)
-    m = np.uint64(m_bits)
-    h1 = s % m
-    h2 = np.uint64(1) + (s >> np.uint64(17)) % (m - np.uint64(1))
-    i = np.arange(n_hashes, dtype=np.uint64)
-    return (h1[:, None] + i[None, :] * h2[:, None]) % m
-
-
-def _shingled_arrays(df: DataFrame, id_col: str, text_col: str, k: int):
-    return (
-        df.select(F.col(id_col), tokens_col(text_col).alias("__t"))
-        .select(F.col(id_col), _token_hashes_spark("__t").alias("__th"))
-        .select(
-            F.col(id_col),
-            F.array_distinct(_shingles_from_hashes("__th", k)).alias("__sh"),
-        )
-    )
-
-
-def build_shingle_bloom(
-    test: DataFrame,
-    text_col: str = "text",
-    shingle_k: int = 3,
-    m_bits: int | None = None,
-    n_hashes: int | None = None,
-    expected_items: int | None = None,
-    fp_rate: float = 0.01,
-) -> tuple[bytes, int, int]:
-    """Distributed Bloom build over the eval set's shingles: executors
-    fold their partition's shingles into a packed m-bit bitmap (one
-    mapInPandas, shingle hashing stays in Catalyst), the driver ORs the
-    per-partition bitmaps. Returns (bitmap bytes, m_bits, n_hashes).
-
-    Sizing: pass m_bits/n_hashes explicitly, or expected_items (+
-    fp_rate) to use the standard formulas; by default a count of the
-    distinct-per-doc shingles is used as expected_items (one extra
-    cheap job)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    sh = _shingled_arrays(test, test.columns[0], text_col, shingle_k).select(
-        F.explode("__sh").alias("s")
-    )
-    if m_bits is None or n_hashes is None:
-        if expected_items is None:
-            expected_items = sh.count()
-        m_bits, n_hashes = bloom_params(expected_items, fp_rate)
-    if m_bits % 8:
-        m_bits += 8 - (m_bits % 8)
-    mb, nh = int(m_bits), int(n_hashes)
-
-    def per_partition(batches):
-        bitmap = np.zeros(mb // 8, dtype=np.uint8)
-        seen = False
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            seen = True
-            pos = _bloom_positions(
-                pdf["s"].to_numpy(dtype=np.int64), mb, nh
-            ).ravel()
-            np.bitwise_or.at(bitmap, pos >> 3, np.uint8(1) << (pos & 7).astype(np.uint8))
-        if seen:
-            yield pd.DataFrame({"bm": [bitmap.tobytes()]})
-
-    parts = sh.mapInPandas(
-        per_partition, schema=T.StructType([T.StructField("bm", T.BinaryType())])
-    ).collect()
-    bitmap = np.zeros(mb // 8, dtype=np.uint8)
-    for r in parts:
-        bitmap |= np.frombuffer(bytes(r["bm"]), dtype=np.uint8)
-    return bitmap.tobytes(), mb, nh
-
-
-def bloom_probable_ids(
-    train: DataFrame,
-    bloom: bytes,
-    m_bits: int,
-    n_hashes: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Train ids with AT LEAST ONE shingle whose every Bloom bit is set —
-    a superset of the truly-colliding ids (no false negatives; false
-    positives at the filter's design rate). One narrow mapInPandas pass,
-    vectorized probes, zero shuffle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    mb, nh = int(m_bits), int(n_hashes)
-    bloom_arr = np.frombuffer(bloom, dtype=np.uint8)
-    id_field = _shingled_arrays(train, id_col, text_col, shingle_k).schema[id_col]
-
-    def probe(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lens = pdf["__sh"].map(len).to_numpy(dtype=np.int64)
-            keep_rows = lens > 0
-            if not keep_rows.any():
-                continue
-            flat = np.concatenate(
-                [np.asarray(a, dtype=np.int64) for a in pdf["__sh"][keep_rows]]
-            )
-            pos = _bloom_positions(flat, mb, nh)
-            bits = (bloom_arr[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-            hit = bits.all(axis=1)  # all n_hashes bits set => probable
-            offsets = np.concatenate(([0], np.cumsum(lens[keep_rows])[:-1]))
-            doc_hit = np.maximum.reduceat(hit.astype(np.int8), offsets) > 0
-            # reduceat on an empty slice can't occur: lens>0 filtered
-            ids = pdf[id_col][keep_rows].to_numpy()[doc_hit]
-            if len(ids):
-                yield pd.DataFrame({id_col: ids})
-
-    return _shingled_arrays(train, id_col, text_col, shingle_k).mapInPandas(
-        probe, schema=T.StructType([id_field])
-    )
-
-
-def bloom_contamination_pairs(
-    train: DataFrame,
-    test: DataFrame,
-    text_col: str = "text",
-    train_id: str = "doc_id",
-    test_id: str = "doc_id",
-    shingle_k: int = 3,
-    min_overlap_frac: float = 0.5,
-    fp_rate: float = 0.01,
-) -> DataFrame:
-    """EXACTLY contamination_pairs' output via the Bloom pre-filter:
-    build the filter over the eval shingles, keep only probable train
-    docs (left-semi on the flagged ids), then run the exact check on the
-    survivors. False positives only cost verification work; false
-    negatives cannot occur, so the result set is identical — pinned by
-    the shared DuckDB oracle."""
-    bloom, mb, nh = build_shingle_bloom(
-        test, text_col=text_col, shingle_k=shingle_k, fp_rate=fp_rate
-    )
-    probable = bloom_probable_ids(
-        train, bloom, mb, nh,
-        text_col=text_col, id_col=train_id, shingle_k=shingle_k,
-    )
-    survivors = train.join(
-        F.broadcast(probable.select(train_id).distinct()), train_id, "left_semi"
-    )
-    return contamination_pairs(
-        survivors, test,
-        text_col=text_col, train_id=train_id, test_id=test_id,
-        shingle_k=shingle_k, min_overlap_frac=min_overlap_frac,
-    )
-
-
 def mix_by_token_budget(
     df: DataFrame,
     budgets: dict[str, int],

@@ -1087,16 +1087,62 @@ class TestTopkConjunctive:
         assert np.allclose(got["score"], exp["score"], atol=1e-9)
 
     def test_scores_mode_independent(self, spark, small_corpus_pdf, bm25_index_dir):
+        """A doc in the "all" result carries its "any" score bit for bit
+        (topk_conjunctive sums in term order, as score_union does), so the
+        "all" ranking is the "any" ranking restricted to the all-set — on
+        both tiers, for 2- to 4-term queries."""
         from koncorde_spark.fulltext.query import Bm25Index
+        from koncorde_spark.fulltext.serve import LocalSearcher
 
         idx = Bm25Index(spark, bm25_index_dir)
-        q = "import ident_00042"
-        any_ = idx.topk(q, len(small_corpus_pdf)).toPandas()
-        ref = dict(zip(any_["doc_id"], any_["score"]))
-        all_ = idx.topk(q, 10, mode="all").toPandas()
-        assert len(all_) > 0
-        for r in all_.itertuples():
-            assert abs(ref[r.doc_id] - r.score) < 1e-12
+        searcher = LocalSearcher(bm25_index_dir)
+        n = len(small_corpus_pdf)
+        for q in ("import ident_00042", "import return def", "def function import return"):
+            any_ = [(int(r.doc_id), float(r.score)) for r in idx.topk(q, n).toPandas().itertuples()]
+            all_ = [
+                (int(r.doc_id), float(r.score))
+                for r in idx.topk(q, n, mode="all").toPandas().itertuples()
+            ]
+            assert len(all_) > 0, q
+            in_all = {d for d, _ in all_}
+            assert all_ == [h for h in any_ if h[0] in in_all], q
+            assert searcher.topk(q, n, mode="all") == all_, q
+
+    def test_kernel_sums_like_score_union(self):
+        """topk_conjunctive adds each doc's per-term scores in ``by_term``
+        order — score_union's order — so on the intersection its scores
+        are score_union's bytes, with multi-segment terms, 3-5 terms of
+        unequal lengths (intersection runs shortest first) and an exact
+        search-after cursor taken from score_union's sums."""
+        from koncorde_spark.fulltext.wand import score_union, topk_conjunctive
+
+        rng = np.random.default_rng(11)
+        n = 400
+        for trial in range(200):
+            n_terms = int(rng.integers(3, 6))
+            by_term = {}
+            for i in range(n_terms):
+                ids = np.sort(rng.choice(n, int(rng.integers(150, 390)), replace=False))
+                sc = rng.uniform(0.01, 9.0, len(ids))
+                seg = rng.integers(0, 1 + trial % 3, len(ids))  # 1-3 segments
+                by_term[f"t{i}"] = [
+                    TermPostings(ids[seg == j], sc[seg == j])
+                    for j in range(3) if (seg == j).any()
+                ]
+            uniq, acc = score_union([tp for segs in by_term.values() for tp in segs])
+            inter = np.ones(len(uniq), dtype=bool)
+            for segs in by_term.values():
+                inter &= np.isin(uniq, np.concatenate([tp.doc_ids for tp in segs]))
+            ids, sums = uniq[inter], acc[inter]
+            if len(ids) == 0:
+                continue
+            c = int(rng.integers(len(ids)))
+            after = (float(sums[c]), int(ids[c]))
+            keep = (sums < after[0]) | ((sums == after[0]) & (ids > after[1]))
+            order = np.lexsort((ids[keep], -sums[keep]))
+            got_ids, got = topk_conjunctive(by_term, n, require=n_terms, after=after)
+            assert np.array_equal(got_ids, ids[keep][order]), trial
+            assert got.tobytes() == sums[keep][order].tobytes(), trial
 
     def test_result_subset_of_any(self, spark, small_corpus_pdf, bm25_index_dir):
         from koncorde_spark.fulltext.query import Bm25Index
@@ -1686,11 +1732,18 @@ class TestHighlight:
         from koncorde_spark.fulltext.query import Bm25Index
 
         idx = Bm25Index(spark, bm25_pos_index_dir)
-        hl = idx.topk_highlight("import return def", 12, window=15).toPandas()
-        tk = idx.topk("import return def", 12).toPandas()
-        assert list(hl["doc_id"]) == list(tk["doc_id"])
-        assert np.allclose(hl["score"], tk["score"], atol=1e-12)
-        assert (hl["snip_hits"] >= 1).all()
+        from koncorde_spark.fulltext.serve import LocalSearcher
+
+        searcher = LocalSearcher(bm25_pos_index_dir)
+        for q in ("import return def", "def function import return"):
+            hl = idx.topk_highlight(q, 12, window=15).toPandas()
+            tk = idx.topk(q, 12).toPandas()
+            # bit-equal on both tiers: highlight ranks with topk's scorer
+            assert list(hl["doc_id"]) == list(tk["doc_id"]), q
+            assert hl["score"].to_numpy().tobytes() == tk["score"].to_numpy().tobytes(), q
+            assert (hl["snip_hits"] >= 1).all()
+            local = [(d, sc) for d, sc, _, _ in searcher.highlight(q, 12, window=15)]
+            assert local == searcher.topk(q, 12), q
 
     def test_serve_parity(self, spark, bm25_pos_index_dir):
         from koncorde_spark.fulltext.query import Bm25Index
@@ -1785,10 +1838,11 @@ class TestMultiField:
 
         idx = Bm25Index(spark, bm25_index_dir)
         mf = MultiFieldSearch(spark, {"content": idx})
-        a = mf.topk("import return def", 12).toPandas()
-        b = idx.topk("import return def", 12).toPandas()
-        assert list(a["doc_id"]) == list(b["doc_id"])
-        assert np.allclose(a["score"], b["score"], atol=1e-12)
+        for q in ("import return def", "def function import return"):
+            a = mf.topk(q, 12).toPandas()
+            b = idx.topk(q, 12).toPandas()
+            assert list(a["doc_id"]) == list(b["doc_id"]), q
+            assert a["score"].to_numpy().tobytes() == b["score"].to_numpy().tobytes(), q
 
     def test_weighted_sum_matches_python_oracle(
         self, spark, small_corpus_pdf, bm25_index_dir, path_index_dir
@@ -1949,19 +2003,26 @@ class TestBooleanSearch:
         from koncorde_spark.fulltext.query import Bm25Index
 
         idx = Bm25Index(spark, bm25_index_dir)
-        a = idx.topk_boolean(must=["import return"], k=12).toPandas()
-        b = idx.topk("import return", 12, mode="all").toPandas()
-        assert list(a["doc_id"]) == list(b["doc_id"])
-        assert np.allclose(a["score"], b["score"], atol=1e-12)
+        for q in ("import return", "import return def"):
+            a = idx.topk_boolean(must=[q], k=12).toPandas()
+            b = idx.topk(q, 12, mode="all").toPandas()
+            assert list(a["doc_id"]) == list(b["doc_id"]), q
+            assert a["score"].to_numpy().tobytes() == b["score"].to_numpy().tobytes(), q
 
     def test_should_only_equals_topk(self, spark, bm25_index_dir):
+        """should=terms scores with topk's scorer: bit-equal on both tiers."""
         from koncorde_spark.fulltext.query import Bm25Index
+        from koncorde_spark.fulltext.serve import LocalSearcher
 
         idx = Bm25Index(spark, bm25_index_dir)
-        a = idx.topk_boolean(should=["import", "return"], k=12).toPandas()
-        b = idx.topk("import return", 12).toPandas()
-        assert list(a["doc_id"]) == list(b["doc_id"])
-        assert np.allclose(a["score"], b["score"], atol=1e-12)
+        searcher = LocalSearcher(bm25_index_dir)
+        for terms in (["import", "return"], ["def", "function", "import", "return"]):
+            q = " ".join(terms)
+            a = idx.topk_boolean(should=terms, k=12).toPandas()
+            b = idx.topk(q, 12).toPandas()
+            assert list(a["doc_id"]) == list(b["doc_id"]), q
+            assert a["score"].to_numpy().tobytes() == b["score"].to_numpy().tobytes(), q
+            assert searcher.topk_boolean(should=terms, k=12) == searcher.topk(q, 12), q
 
     def test_must_not_excludes_and_boost_scales(self, spark, small_corpus_pdf, bm25_index_dir):
         from koncorde_spark.fulltext.query import Bm25Index
@@ -2023,16 +2084,16 @@ class TestBooleanSearch:
         assert idx.topk_boolean(must=["import"], must_not=["import"], k=5).count() == 0
 
     def test_kernel_fuzz_vs_brute(self):
-        """Boolean kernel vs per-doc python brute over random corpora:
+        """The boolean per-shard body (serve.boolean_shard, over encoded
+        postings rows) vs per-doc python brute over random corpora:
         eligibility gates (all-must, none-of-must_not) and boosted score
         sums must agree exactly."""
         import random
 
-        from koncorde_spark.fulltext.highlight import boolean_topk_shard
+        from koncorde_spark.fulltext.serve import boolean_shard
 
         rng = random.Random(23)
         vocab = list("abcdef")
-        occ = TestProximitySearch._occ
 
         for trial in range(200):
             docs = {
@@ -2048,22 +2109,27 @@ class TestBooleanSearch:
             if not score_terms:
                 continue
             boosts = {t: rng.choice([0.5, 1.0, 2.0]) for t in score_terms}
-            per = {t: occ(self, docs, t) for t in set(score_terms + must_not)}
-            if any(len(per[t].doc_ids) == 0 for t in must):
+            rows = {"term": [], "df": [], "doc_ids": [], "tfs": []}
+            for t in sorted(set(score_terms + must_not)):
+                has = [d for d in sorted(docs) if t in docs[d]]
+                if has:
+                    rows["term"].append(t)
+                    rows["df"].append(len(has))
+                    rows["doc_ids"].append(delta_encode(np.array(has, np.uint64)))
+                    rows["tfs"].append(varint_encode(
+                        np.array([docs[d].count(t) for d in has], np.uint64)
+                    ))
+            if any(t not in rows["term"] for t in must):
                 continue
-            dl_ids = np.array(sorted(docs), np.int64)
-            dl_vals = np.array([len(docs[d]) for d in sorted(docs)], np.float64)
+            dl = (
+                np.array(sorted(docs), np.int64),
+                np.array([len(docs[d]) for d in sorted(docs)], np.float64),
+            )
             k1, b, avgdl = 1.2, 0.75, 9.0
             idfs = {t: 0.5 + 0.1 * i for i, t in enumerate(score_terms)}
-            st, si = [], []
-            for t in score_terms:
-                if len(per[t].doc_ids):
-                    st.append(per[t])
-                    si.append(boosts[t] * idfs[t])
-            ids, scores = boolean_topk_shard(
-                [[per[t]] for t in must], st, si,
-                [per[t] for t in must_not if len(per[t].doc_ids)],
-                k1, b, avgdl, dl_ids, dl_vals, 1000,
+            ids, scores = boolean_shard(
+                rows, dl, must, {t: boosts[t] * idfs[t] for t in score_terms},
+                must_not, k1, b, avgdl, 1000, None,
             )
             exp = {}
             for d, toks in docs.items():
@@ -2075,10 +2141,10 @@ class TestBooleanSearch:
                 for t in score_terms:
                     tf = toks.count(t)
                     if tf:
-                        dl = len(toks)
+                        dl_ = len(toks)
                         s += (
                             boosts[t] * idfs[t] * tf * (k1 + 1)
-                            / (tf + k1 * (1 - b + b * dl / avgdl))
+                            / (tf + k1 * (1 - b + b * dl_ / avgdl))
                         )
                 if s > 0:
                     exp[d] = s

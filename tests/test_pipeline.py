@@ -1287,54 +1287,6 @@ class TestStratifiedSample:
         assert lo <= hi
 
 
-class TestBloomDecontamination:
-    def _corpus(self, spark, n=120, contaminated=10):
-        import numpy as np
-
-        rng = np.random.default_rng(11)
-        rows = []
-        for i in range(n):
-            words = " ".join(f"w{rng.integers(0, 500)}" for _ in range(25))
-            rows.append((i, words))
-        # eval = last `contaminated` docs copied verbatim into train
-        ev = [(1000 + j, rows[n - contaminated + j][1]) for j in range(contaminated)]
-        train = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-        test = spark.createDataFrame(pd.DataFrame(ev, columns=["doc_id", "text"]))
-        return train, test
-
-    def test_no_false_negatives_and_exact_pairs(self, spark):
-        train, test = self._corpus(spark)
-        exact = sampling.contamination_pairs(train, test).toPandas()
-        got = sampling.bloom_contamination_pairs(train, test).toPandas()
-        key = ["test_id", "train_id"]
-        assert sorted(map(tuple, got[key].values.tolist())) == sorted(
-            map(tuple, exact[key].values.tolist())
-        )
-        assert len(exact) >= 10  # the planted contaminations all surface
-
-    def test_probable_ids_superset_of_true_colliders(self, spark):
-        train, test = self._corpus(spark)
-        bloom, mb, nh = sampling.build_shingle_bloom(test, fp_rate=0.01)
-        probable = set(
-            int(r["doc_id"])
-            for r in sampling.bloom_probable_ids(train, bloom, mb, nh).collect()
-        )
-        true_pairs = sampling.contamination_pairs(
-            train, test, min_overlap_frac=1e-9
-        ).toPandas()
-        true_ids = set(int(x) for x in true_pairs["train_id"])
-        assert true_ids <= probable  # zero false negatives
-        # FP sanity: probable set stays well below the full corpus
-        assert len(probable) < 120
-
-    def test_bloom_params_formulas(self):
-        m, k = sampling.bloom_params(1000, 0.01)
-        assert 9000 < m < 11000  # ~9.6 bits/item
-        assert 6 <= k <= 8
-        m2, _ = sampling.bloom_params(0, 0.5)
-        assert m2 >= 64
-
-
 @pytest.mark.spark
 class TestMixByTokenBudget:
     def _df(self, spark, n=40):

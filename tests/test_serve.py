@@ -44,7 +44,7 @@ def test_serve_multifield_equals_spark_path(
     spark, small_corpus_pdf, bm25_index_dir, tmp_path_factory
 ):
     """LocalMultiFieldSearcher is rank- and score-identical to the
-    distributed MultiFieldSearch (shared multiterm kernel, same per-field
+    distributed MultiFieldSearch (shared multifield_shard body, same per-field
     statistics and weights)."""
     from koncorde_spark.fulltext.indexer import IndexConfig, build_index
     from koncorde_spark.fulltext.multifield import MultiFieldSearch
@@ -81,19 +81,25 @@ def test_serve_multifield_equals_spark_path(
         assert got == dist, q
 
 
-def test_multiterm_scores_independent_of_row_order():
-    """The multi-term body sorts its rows by term before it accumulates:
-    every permutation of one shard's rows (and both row shapes — the
-    Spark cogroup's pandas frame, the serve tier's column dict) gives
-    bit-identical scores, although adding the same terms in another
-    order changes the bits of some docs' float64 sums."""
+def test_shard_scores_independent_of_row_order():
+    """The boolean and multi-field bodies sort their rows by term before
+    they accumulate: every permutation of one shard's rows (and both row
+    shapes — the Spark cogroup's pandas frame, the serve tier's column
+    dict) gives bytes-equal scores, equal to score_union's sum in
+    canonical term order, although adding the same terms in another order
+    changes the bits of some docs' float64 sums."""
     import itertools
 
     import pandas as pd
 
     from koncorde_spark.fulltext.codecs import delta_encode, varint_encode
-    from koncorde_spark.fulltext.highlight import multiterm_scores
-    from koncorde_spark.fulltext.serve import _occurrences, multiterm_shard
+    from koncorde_spark.fulltext.serve import (
+        boolean_shard,
+        decode_segments,
+        multifield_shard,
+        segment_postings,
+    )
+    from koncorde_spark.fulltext.wand import score_union
 
     rng = np.random.default_rng(7)
     n_docs = 2_000
@@ -110,18 +116,31 @@ def test_multiterm_scores_independent_of_row_order():
     def permuted(order):
         return {c: [v[i] for i in order] for c, v in rows.items()}
 
-    want_ids, want = multiterm_shard(rows, dl, idf, 1.2, 0.75, 97.3, None)
+    def bodies(shaped):
+        return (
+            boolean_shard(shaped, dl, [], idf, [], 1.2, 0.75, 97.3, n_docs, None),
+            multifield_shard(
+                [(shaped, dl, idf, 97.3, 1.0, None), (shaped, dl, idf, 41.5, 3.0, None)],
+                1.2, 0.75, n_docs,
+            ),
+        )
+
+    segs = dict(decode_segments(rows, dl, 1.2, 0.75, 97.3))
+    canon_ids, canon = score_union([segment_postings(segs[t], idf[t]) for t in sorted(idf)])
+    want = bodies(rows)
+    by_id = np.argsort(want[0][0])
+    assert np.array_equal(want[0][0][by_id], canon_ids)
+    assert want[0][1][by_id].tobytes() == canon.tobytes()
     raw_differs = False
     for order in itertools.permutations(range(4)):
         for shaped in (permuted(order), pd.DataFrame(permuted(order))):
-            ids, scores = multiterm_shard(shaped, dl, idf, 1.2, 0.75, 97.3, None)
-            assert np.array_equal(ids, want_ids)
-            assert scores.tobytes() == want.tobytes(), order
-        # the same rows fed to the kernel unsorted: the order shows
-        segs = [_occurrences(permuted([i]), False)[rows["term"][i]][0] for i in order]
-        raw = multiterm_scores(segs, [idf[rows["term"][i]] for i in order],
-                               1.2, 0.75, 97.3, *dl)[1]
-        raw_differs |= raw.tobytes() != want.tobytes()
+            for (ids, scores), (want_ids, want_sc) in zip(bodies(shaped), want):
+                assert np.array_equal(ids, want_ids)
+                assert scores.tobytes() == want_sc.tobytes(), order
+        # the same segments summed unsorted: the order shows
+        terms = [rows["term"][i] for i in order]
+        raw = score_union([segment_postings(segs[t], idf[t]) for t in terms])[1]
+        raw_differs |= raw.tobytes() != canon.tobytes()
     assert raw_differs
 
 
@@ -132,13 +151,9 @@ def test_serve_multifield_single_field_equals_topk(bm25_index_dir):
     s = LocalSearcher(bm25_index_dir)
     mf = LocalMultiFieldSearcher({"content": bm25_index_dir})
     for q, k in QUERIES:
-        got, want = mf.topk(q, k), s.topk(q, k)
-        # scores allclose, not ==: summation ORDER differs (bincount vs
-        # WAND accumulation) — same tolerance as the distributed twin test
-        assert [d for d, _ in got] == [d for d, _ in want], q
-        assert np.allclose(
-            [x for _, x in got], [x for _, x in want], atol=1e-12
-        ), q
+        # bit-equal: both score through decode_segments' tf part and
+        # score_union's canonical-term-order sum
+        assert mf.topk(q, k) == s.topk(q, k), q
 
 
 def test_serve_multifield_validation(bm25_index_dir):

@@ -30,7 +30,11 @@ import random
 import sys
 
 # the checkout this script belongs to, so a copy of the repo measures itself
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# exported too, so Spark's Python workers and child processes import it
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [_ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 from koncorde_spark.normalize import Transformer
 from koncorde_spark.normalize import espresso as esp

@@ -26,7 +26,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # the checkout this script belongs to, so a copy of the repo measures itself
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# exported too, so Spark's Python workers and child processes import it
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [_ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 from bwprobe import cpu_window, probe, read_cpu_stat, single_baseline
 from scaling import run_subprocess

@@ -14,7 +14,11 @@ import sys
 import numpy as np
 
 # the checkout this script belongs to, so a copy of the repo checks itself
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
+# exported too, so Spark's Python workers and child processes import it
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [_ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])
 
 import duckdb
 import pandas as pd
