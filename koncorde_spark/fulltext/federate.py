@@ -93,7 +93,7 @@ class LocalFederatedSearcher:
     """Spark-free serving-tier federation: the same combined-statistics
     rule over LocalSearcher members, rank-identical to federated_topk
     (shared top-k kernels, shared idf arithmetic). Members load once;
-    per-query cost is one pruned postings read per member."""
+    per-query cost is one in-memory postings lookup per member."""
 
     def __init__(self, index_dirs: list[str]):
         from .serve import LocalSearcher

@@ -1392,12 +1392,14 @@ def compact_index(
     shard's postings (grouped by xxhash64(term) bucket) against the
     shard's dlpack, decoded once per worker via the module-level cache.
 
-    READER-REOPEN CONTRACT: a ``Bm25Index``/``LocalSearcher`` opened
-    BEFORE a compaction must be re-opened after it — its DataFrames hold
-    the pre-swap parquet file listing (the catalog refresh clears the shared
-    status cache for NEW reads, but an existing InMemoryFileIndex keeps
-    its snapshot), so the next query raises FileNotFoundException on the
-    replaced fragments. Lucene's IndexReader has the same rule.
+    READER-REOPEN CONTRACT: a ``Bm25Index`` opened BEFORE a compaction
+    must be re-opened after it — its DataFrames hold the pre-swap parquet
+    file listing (the catalog refresh clears the shared status cache for
+    NEW reads, but an existing InMemoryFileIndex keeps its snapshot), so
+    the next query raises FileNotFoundException on the replaced
+    fragments. Lucene's IndexReader has the same rule. A
+    ``LocalSearcher`` holds its postings in memory from open, so it keeps
+    serving its pre-compaction snapshot until it is re-opened.
     """
     meta, config, _, _ = _open_for_update(spark, out_dir)
     fp = config.fingerprint()

@@ -34,7 +34,6 @@ from .indexer import _decode_dlpack_ctx, read_meta
 from .serve import (
     boolean_plan,
     boolean_shard,
-    decode_segments,
     highlight_shard,
     idf_for,
     match_ids,
@@ -43,13 +42,13 @@ from .serve import (
     phrase_shard,
     postings_columns,
     require_positions,
-    segment_postings,
+    shard_postings,
     vocab_fuzzy,
     vocab_prefix,
     wand_topk,
 )
 from .tokenizer import tokenize_text
-from .wand import TermPostings, check_after_cursor, score_union
+from .wand import check_after_cursor, score_union
 
 import re as _re
 
@@ -113,32 +112,6 @@ def parse_expansion_query(query: str, marker: str, kind: str, expand) -> list[st
         else:
             literals.extend(tokenize_text(tok))
     return sorted(set(literals) | set(expanded))
-
-
-def _decode_shard_postings(
-    post_pdf: pd.DataFrame,
-    pack_pdf: pd.DataFrame,
-    idf_map: dict[str, float],
-    k1: float,
-    b: float,
-    avgdl: float,
-    tombstones: np.ndarray | None = None,
-    cache_ctx: tuple[str, dict[int, int]] | None = None,
-    allowed: np.ndarray | None = None,
-) -> dict[str, list[TermPostings]]:
-    """One shard's postings rows as per-term TermPostings LISTS (one per
-    segment row — serve.decode_segments, scored by serve.segment_postings),
-    in canonical term order. Shared by every top-k-family plan: in
-    topk_many each segment is decoded once for the whole batch.
-
-    ``cache_ctx`` = (index_dir, {shard: dlpack lineage_xor}): enables the
-    worker-global decoded-dlpack cache for this shard. ``tombstones`` /
-    ``allowed`` (sorted doc_ids): see decode_segments."""
-    dl = _decode_dlpack_ctx(pack_pdf, cache_ctx)
-    out: dict[str, list[TermPostings]] = {}
-    for term, seg in decode_segments(post_pdf, dl, k1, b, avgdl, tombstones, allowed):
-        out.setdefault(term, []).append(segment_postings(seg, idf_map[term]))
-    return out
 
 
 def _cogroup(posts: DataFrame, packs: DataFrame, schema: T.StructType, body) -> DataFrame:
@@ -252,14 +225,19 @@ class Bm25Index:
         return _cogroup(posts, self.dlpack if packs is None else packs, schema, body)
 
     def _decoder(self, idf_map: dict[str, float]):
-        """_decode_shard_postings bound to this handle's statistics,
-        tombstones and dlpack cache keys — a closure that ships to
-        executors without the handle."""
-        m = self.meta
-        return partial(
-            _decode_shard_postings, idf_map=idf_map, k1=m["k1"], b=m["b"],
-            avgdl=m["avgdl"], tombstones=self.tombstones, cache_ctx=self._cache_ctx,
-        )
+        """serve.shard_postings over a shard's (rows, pack), bound to this
+        handle's statistics, tombstones and worker-cached dlpack decode
+        (``allowed``: sorted eligible doc_ids of a filtered search) — a
+        closure that ships to executors without the handle."""
+        m, ctx = self.meta, self._cache_ctx
+        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
+
+        def decode(rows: pd.DataFrame, pack: pd.DataFrame, allowed=None):
+            return shard_postings(
+                rows, _decode_dlpack_ctx(pack, ctx), idf_map, k1, b, avgdl, tomb, allowed
+            )
+
+        return decode
 
     def topk(
         self, query: str, k: int = 10, mode: str = "any",

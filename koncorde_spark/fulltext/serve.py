@@ -2,14 +2,15 @@
 per-shard implementation of every search operator.
 
 Per-shard bodies live here and nowhere else: the segment decode
-(``decode_segments`` / ``segment_postings``), the any/all top-k dispatch
-(``wand_topk``), the count set arithmetic (``match_ids``), the boolean,
-phrase, highlight and multi-field bodies (``*_shard``), the Levenshtein
-DP and the vocabulary scans. Every scored body but phrase takes each
-entry's score from ``_segment``'s tf part times the term's idf
-(``segment_postings``) and sums a doc's entries in canonical term order
-(``score_union`` / ``wand_topk``), so a doc scores the same bits in
-every operator. Each body takes ONE shard's postings rows — a pandas
+(``decode_segments`` / ``segment_postings``, keyed by term in
+``shard_postings`` — the top-k family's input), the any/all top-k
+dispatch (``wand_topk``), the count set arithmetic (``match_ids``), the
+boolean, phrase, highlight and multi-field bodies (``*_shard``), the
+Levenshtein DP and the vocabulary scans. Every scored body but phrase
+takes each entry's score from ``_segment``'s tf part times the term's
+idf (``segment_postings``) and sums a doc's entries in canonical term
+order (``score_union`` / ``wand_topk``), so a doc scores the same bits
+in every operator. Each body takes ONE shard's postings rows — a pandas
 frame inside a Spark cogroup, a column dict here — sorts them by term
 and returns that shard's (ids, scores), plus snippets for highlight.
 ``Bm25Index`` (query.py) and ``MultiFieldSearch`` (multifield.py) only
@@ -19,16 +20,18 @@ the dlpack and the global sort-limit. ``LocalSearcher`` and
 tiers are bit-identical by construction. Postings are decoded through
 this module's ``delta_decode`` / ``varint_decode`` names.
 
-The distributed job (indexer.py) builds the index; serving top-k queries
-does not need a Spark job at all — a query touches only the posting rows
-of its terms. LocalSearcher reads those rows straight from the postings
-parquet with pyarrow (a dataset filter on ``term``; a shard's file is
-term-sorted, but stays one row group until it outgrows the writer's
-128 MB row-group size, so the filter drops rows after the read rather
-than pruning row groups). At cluster scale this is the "searcher" tier:
-each searcher process maps a subset of shard directories; here one
-process serves all shards. p50/p95 latencies are milliseconds (vs ~1s
-for a Spark job round-trip).
+The distributed job (indexer.py) builds the index; serving queries does
+not need a Spark job at all — a query touches only the posting rows of its
+terms. LocalSearcher reads the postings once at open into one Arrow table
+sorted by (term, shard) and answers a lookup with ``searchsorted`` over
+the sorted term column, so a query costs O(its terms' rows), never a
+scan. The encoded postings stay in memory for the handle's lifetime
+(the ``pos`` column too on a positional index): RSS grows with the
+encoded postings size, and a handle serves the snapshot it opened —
+re-open it to see an append, delete or compaction. At cluster scale
+this is the "searcher" tier: each searcher process maps a subset of
+shard directories; here one process serves all shards. p50/p95
+latencies are milliseconds (vs ~1s for a Spark job round-trip).
 """
 
 from __future__ import annotations
@@ -82,8 +85,8 @@ def _rows_by_term(rows, cols: tuple[str, ...]) -> list[tuple]:
     """One shard's postings rows as ``(term, *cols)`` tuples in canonical
     TERM order (absent columns read None). A doc's float64 score is a sum
     in concatenation order, and rows arrive in shuffle-fetch order (Spark,
-    different between two jobs) or file order (serve), so every body sorts
-    before it accumulates. The sort is stable; segments of one term are
+    different between two jobs), so every body sorts before it
+    accumulates. The sort is stable; segments of one term are
     doc-disjoint, so their relative order never changes a score."""
     n = len(rows["term"])
     recs = list(zip(*(rows[c] if c in rows else [None] * n for c in ("term", *cols))))
@@ -153,10 +156,30 @@ def decode_segments(
 
 def segment_postings(seg: tuple, idf: float) -> TermPostings:
     """A decoded segment scored for one idf: scores = idf·tfpart. Every
-    caller goes through here, so cached and uncached scoring round
+    scored body goes through here, so every operator rounds
     identically."""
     ids, tfpart = seg
     return TermPostings(ids, idf * tfpart)
+
+
+def shard_postings(
+    rows,
+    dl: tuple[np.ndarray, np.ndarray],
+    idf: dict[str, float],
+    k1: float,
+    b: float,
+    avgdl: float,
+    tombstones: np.ndarray | None = None,
+    allowed: np.ndarray | None = None,
+) -> dict[str, list[TermPostings]]:
+    """One shard's "tf" rows as per-term TermPostings LISTS (one per
+    segment row, decode_segments scored by segment_postings), in
+    canonical term order — the input of wand_topk on both tiers, and of
+    every query of a topk_many batch (each segment decoded once)."""
+    out: dict[str, list[TermPostings]] = {}
+    for term, seg in decode_segments(rows, dl, k1, b, avgdl, tombstones, allowed):
+        out.setdefault(term, []).append(segment_postings(seg, idf[term]))
+    return out
 
 
 def wand_topk(
@@ -439,23 +462,22 @@ class LocalSearcher:
         self.meta = read_meta(index_dir)
         # refuse mixed statistics (crash between terms swap + meta write)
         check_stats_consistency(index_dir, self.meta)
-        self._postings = ds.dataset(
-            os.path.join(index_dir, "postings"), format="parquet", partitioning="hive"
+        # every postings row, read once and sorted by (term, shard) — the
+        # columns of the widest kind this index can serve ("pos" only on a
+        # positional index); _shard_rows looks terms up in _terms with
+        # searchsorted. The sort is stable: a (term, shard)'s segments
+        # keep their file order.
+        cols = postings_columns("pos" if self.meta.get("positions") else "tf")
+        self._postings = (
+            ds.dataset(os.path.join(index_dir, "postings"), format="parquet", partitioning="hive")
+            .to_table(columns=["shard", *cols])
+            .sort_by([("term", "ascending"), ("shard", "ascending")])
         )
+        self._terms = self._postings["term"].to_numpy(zero_copy_only=False)
         # term → global df (small: one row per distinct term)
         tbl = ds.dataset(os.path.join(index_dir, "terms"), format="parquet").to_table()
         self._df = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
         self._tombstones = _local_tombstones(index_dir)
-        # decoded term-segment cache: term → [(shard, segment)], segments as
-        # decode_segments returns them (tombstones applied) — everything
-        # idf-INDEPENDENT, so a query scores them with its own idf through
-        # segment_postings, exactly the uncached arithmetic. Bounded by
-        # _SEG_CACHE_MAX_TERMS and _SEG_CACHE_MAX_ENTRIES; _seg_entries is
-        # the running count of decoded entries it holds. The cache is
-        # PER-HANDLE state — a reopened searcher (the reader-reopen
-        # contract after append/compact) starts empty.
-        self._seg_cache: dict[str, list[tuple]] = {}
-        self._seg_entries = 0
         # per-shard doc-length packs, decoded once
         pack = ds.dataset(
             os.path.join(index_dir, "dlpack"), format="parquet"
@@ -475,16 +497,18 @@ class LocalSearcher:
         """{shard: {column: values}} of the postings rows of ``terms``,
         with exactly the ``kind`` columns of postings_columns — the serve
         tier's side of the Spark shard cogroup."""
+        keys = np.asarray(sorted(set(terms)), dtype=object)
+        lo = np.searchsorted(self._terms, keys, "left")
+        hi = np.searchsorted(self._terms, keys, "right")
+        tbl = self._postings.take(
+            np.concatenate([np.arange(a, z) for a, z in zip(lo, hi)] + [np.empty(0, np.int64)])
+        )
+        shards = tbl["shard"].to_numpy()
         cols = postings_columns(kind)
-        tbl = self._postings.to_table(
-            filter=ds.field("term").isin(terms), columns=["shard", *cols]
-        ).to_pydict()
-        out: dict[int, dict] = {}
-        for i, shard in enumerate(tbl["shard"]):
-            rows = out.setdefault(int(shard), {c: [] for c in cols})
-            for c in cols:
-                rows[c].append(tbl[c][i])
-        return out
+        return {
+            int(s): tbl.filter(shards == s).select(cols).to_pydict()
+            for s in np.unique(shards)
+        }
 
     def topk(
         self, query: str, k: int = 10, mode: str = "any",
@@ -517,45 +541,6 @@ class LocalSearcher:
         hits = self._topk_with_idf(idf, k, stats=stats)
         return hits, stats
 
-    # cache budget: decoded segments for this many DISTINCT terms AND at
-    # most this many decoded posting entries across them (16 B/entry:
-    # int64 ids + float64 tfpart) — a term cap alone would let a few
-    # stopword-grade terms pin GBs. FIFO eviction that NEVER evicts the
-    # terms of the query currently executing (evicting a warm term
-    # mid-query would silently drop its postings from scoring).
-    _SEG_CACHE_MAX_TERMS = 1024
-    _SEG_CACHE_MAX_ENTRIES = 16_000_000  # ≈ 256 MB decoded
-
-    def _ensure_segments(self, terms: list[str]) -> None:
-        """Decode (once) the postings segments of any ``terms`` missing
-        from the per-handle cache, with decode_segments — the Spark
-        decode's segment function."""
-        missing = [t for t in terms if t not in self._seg_cache]
-        if not missing:
-            return
-        m = self.meta
-        for t in missing:
-            self._seg_cache[t] = []  # absent-from-postings terms cache []
-        for shard, rows in self._shard_rows(missing, "tf").items():
-            for term, seg in decode_segments(
-                rows, self._dl[shard], m["k1"], m["b"], m["avgdl"], self._tombstones,
-            ):
-                self._seg_cache[term].append((shard, seg))
-                self._seg_entries += len(seg[0])
-
-        def over_budget():
-            return (
-                len(self._seg_cache) > self._SEG_CACHE_MAX_TERMS
-                or self._seg_entries > self._SEG_CACHE_MAX_ENTRIES
-            )
-
-        if over_budget():
-            protected = set(terms)
-            for t in [t for t in self._seg_cache if t not in protected]:
-                if not over_budget():
-                    break
-                self._seg_entries -= sum(len(seg[0]) for _, seg in self._seg_cache.pop(t))
-
     def _topk_with_idf(
         self,
         idf: dict[str, float],
@@ -569,20 +554,18 @@ class LocalSearcher:
         Bm25Index._shard_topk_frame). Conjunctive ``require`` is the full
         injected vocabulary size, so a member missing a term contributes
         nothing in mode='all'."""
-        self._ensure_segments(list(idf))
-        by_shard: dict[int, dict[str, list[TermPostings]]] = {}
-        # canonical term order, as decode_segments hands it to the Spark tier
-        for term in sorted(idf):
-            for shard, seg in self._seg_cache.get(term, ()):
-                by_shard.setdefault(shard, {}).setdefault(term, []).append(
-                    segment_postings(seg, idf[term])
-                )
+        m = self.meta
         after_ = check_after_cursor(after) if after is not None else None
         require = len(idf) if mode == "all" else None
-        # every matching entry may be tombstoned (terms keeps its df until
-        # compaction) — by_shard then ends empty and so does the answer
         return _global_topk(
-            [wand_topk(by_term, k, require, after_, stats) for by_term in by_shard.values()],
+            [
+                wand_topk(
+                    shard_postings(rows, self._dl[shard], idf, m["k1"], m["b"],
+                                   m["avgdl"], self._tombstones),
+                    k, require, after_, stats,
+                )
+                for shard, rows in self._shard_rows(list(idf), "tf").items()
+            ],
             k,
         )
 

@@ -116,9 +116,3 @@ def count_tokens_arrow(texts: pd.Series) -> np.ndarray:
         zero_copy_only=False
     ).astype(np.int64)
 
-
-def term_frequencies(tokens: list[str]) -> tuple[np.ndarray, np.ndarray]:
-    """(unique_terms, counts) for one document's token list."""
-    arr = np.asarray(tokens, dtype=object)
-    terms, counts = np.unique(arr, return_counts=True)
-    return terms, counts

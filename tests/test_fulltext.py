@@ -415,7 +415,7 @@ class TestMultiSegmentDecode:
         import pandas as pd
 
         from koncorde_spark.fulltext.codecs import delta_encode, varint_encode
-        from koncorde_spark.fulltext.query import _decode_shard_postings
+        from koncorde_spark.fulltext.serve import shard_postings
 
         def seg(ids, tfs):
             return {
@@ -427,18 +427,8 @@ class TestMultiSegmentDecode:
             }
 
         post_pdf = pd.DataFrame([seg([1, 5], [2, 1]), seg([3, 9], [1, 4])])
-        all_ids = np.array([1, 3, 5, 9], dtype=np.uint64)
-        pack_pdf = pd.DataFrame(
-            [{
-                "shard": 0,
-                "n": 4,
-                "doc_ids": delta_encode(all_ids),
-                "dls": varint_encode(np.array([10, 10, 10, 10], dtype=np.uint64)),
-            }]
-        )
-        by_term = _decode_shard_postings(
-            post_pdf, pack_pdf, {"hot": 1.0}, 1.2, 0.75, 10.0
-        )
+        dl = (np.array([1, 3, 5, 9], dtype=np.int64), np.full(4, 10.0))
+        by_term = shard_postings(post_pdf, dl, {"hot": 1.0}, 1.2, 0.75, 10.0)
         assert len(by_term["hot"]) == 2  # both segments survive
         ids, scores = topk_disjunctive(
             [tp for segs in by_term.values() for tp in segs], 10

@@ -163,62 +163,68 @@ def test_serve_multifield_validation(bm25_index_dir):
         LocalMultiFieldSearcher({})
 
 
-def test_serve_segment_cache_repeats_identical(bm25_index_dir):
-    """The per-handle decoded-segment cache must be invisible: a repeated
-    query returns tuple-identical hits (scores bit-equal — the cache
-    stores the idf-independent tf-part, so per-query arithmetic is the
-    same fl ops), the cache actually populates, and mixed warm/cold term
-    sets (one cached term + one new term) still match a fresh handle."""
+def test_serve_repeats_identical(bm25_index_dir):
+    """A handle keeps no per-query state: a repeated query returns
+    tuple-identical hits (scores bit-equal), a query sharing one term
+    with an earlier one equals a fresh handle's answer, and so does the
+    conjunctive path."""
     s = LocalSearcher(bm25_index_dir)
     first = s.topk("import return", 10)
-    assert s._seg_cache  # populated by the first query
+    assert first
     assert s.topk("import return", 10) == first
-    # 'import' is warm, 'def' cold — must equal a fresh handle's answer
+    # 'import' was looked up before, 'def' was not
     mixed = s.topk("import def", 10)
     assert mixed == LocalSearcher(bm25_index_dir).topk("import def", 10)
-    # conjunctive path rides the same cache
     assert s.topk("import return", 10, mode="all") == LocalSearcher(
         bm25_index_dir
     ).topk("import return", 10, mode="all")
 
 
-def test_serve_segment_cache_eviction_never_breaks_current_query(bm25_index_dir):
-    """Under a tiny cache budget every query still scores ALL its terms:
-    eviction must never drop a term of the query being executed."""
-    s = LocalSearcher(bm25_index_dir)
-    s._SEG_CACHE_MAX_TERMS = 1  # force eviction pressure on every query
-    fresh = LocalSearcher(bm25_index_dir)
-    for q in ("import return", "def function import", "import ident_00001 return"):
-        assert s.topk(q, 10) == fresh.topk(q, 10), q
-    assert len(s._seg_cache) >= 1
+@pytest.mark.spark
+def test_serve_handle_keeps_its_snapshot(spark, small_corpus_pdf, tmp_path_factory):
+    """A LocalSearcher opened before delete_docs + compact_index +
+    append_index keeps answering from the index it opened (every operator
+    tuple-equal to its answers before the writes), while a fresh handle
+    sees the new state — the appended docs counted, the deletes gone — and
+    agrees with a fresh Bm25Index."""
+    from koncorde_spark.fulltext.indexer import (
+        IndexConfig, append_index, build_index, compact_index, delete_docs,
+    )
+    from koncorde_spark.fulltext.query import Bm25Index
 
+    d = str(tmp_path_factory.mktemp("snapidx"))
+    build_index(
+        spark, spark.createDataFrame(small_corpus_pdf.iloc[:200]), d,
+        IndexConfig(n_shards=3, positions=True), resume=False,
+    )
+    old = LocalSearcher(d)
 
-def test_serve_segment_cache_running_count_matches_recount(bm25_index_dir):
-    """The cache's running entry count (_seg_entries, updated on insert
-    and on eviction) equals a fresh recount after every query of a random
-    sequence that crosses BOTH caps — the term cap on runs of mid-df
-    terms, the entry cap on runs of hot ones — and every answer equals a
-    fresh handle's."""
-    s = LocalSearcher(bm25_index_dir)
-    s._SEG_CACHE_MAX_TERMS = 8
-    s._SEG_CACHE_MAX_ENTRIES = 1500
-    fresh = LocalSearcher(bm25_index_dir)
-    by_df = sorted(s._df, key=lambda t: (-s._df[t], t))
-    hot, mid = by_df[:20], by_df[200:240]
-    rng = np.random.default_rng(5)
-    fired = {"terms": 0, "entries": 0}
-    for i in range(80):
-        pool = hot if (i // 10) % 2 else mid
-        q = " ".join(rng.choice(pool, size=int(rng.integers(1, 4)), replace=False))
-        before = set(s._seg_cache)
-        assert s.topk(q, 10) == fresh.topk(q, 10), q
-        assert s._seg_entries == sum(
-            len(seg[0]) for segs in s._seg_cache.values() for _, seg in segs
-        )
-        if before - set(s._seg_cache):
-            # an eviction stopped at the first cap it satisfied both
-            full = len(s._seg_cache) == s._SEG_CACHE_MAX_TERMS
-            fired["terms" if full else "entries"] += 1
-        assert len(s._seg_cache) <= s._SEG_CACHE_MAX_TERMS
-        assert s._seg_entries <= s._SEG_CACHE_MAX_ENTRIES
-    assert fired["terms"] and fired["entries"], fired
+    def answers(s):
+        return [
+            s.topk("import return", 10),
+            s.topk("def ident_00000 function", 10, mode="all"),
+            s.count("import return"),
+            s.topk_boolean(must=["import"], should=["return"], must_not=["def"], k=10),
+            s.phrase("import ident_00000", 10),
+            s.highlight("import return def", 10, window=6),
+            s.topk_prefix("ident_0000* return", 10),
+        ]
+
+    before = answers(old)
+    victims = [d_ for d_, _ in before[0][:3]]
+    assert delete_docs(spark, d, victims) == 3
+    compact_index(spark, d)
+    append_index(spark, spark.createDataFrame(small_corpus_pdf.iloc[200:]), d)
+
+    assert answers(old) == before
+    fresh = LocalSearcher(d)
+    assert fresh.meta["n_docs"] == old.meta["n_docs"] + 100 - 3
+    after = answers(fresh)
+    assert after != before
+    assert not set(victims) & {d_ for d_, _ in after[0]}
+    idx = Bm25Index(spark, d)
+    for q in ("import return", "def function"):
+        dist = [(int(r["doc_id"]), float(r["score"])) for r in idx.topk(q, 10).collect()]
+        assert fresh.topk(q, 10) == dist, q
+    assert fresh.count("import return") == idx.count("import return")
+    idx.close()

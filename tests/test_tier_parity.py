@@ -98,3 +98,52 @@ def test_tiers_bit_identical(spark, parity_index):
     same(_rows(idx.topk_prefix("ident_0000* return", 8)), loc.topk_prefix("ident_0000* return", 8))
     same(_rows(idx.topk_fuzzy("imprt~ retur~", 8)), loc.topk_fuzzy("imprt~ retur~", 8))
     assert checked >= 15  # the comparisons above saw hits, not empty lists
+
+
+@pytest.mark.spark
+def test_shard_rows_equal_term_filter_scan(spark, parity_index):
+    """LocalSearcher._shard_rows (a searchsorted lookup into the postings
+    held in memory) returns exactly the rows of a pyarrow
+    ``term IN (terms)`` scan of the postings dataset, per shard and per
+    column kind — also for absent, duplicated, unsorted and empty term
+    lists, and for terms owning several segments per shard."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    from koncorde_spark.fulltext.serve import LocalSearcher, postings_columns
+
+    d, _ = parity_index
+    loc = LocalSearcher(d)
+    postings = ds.dataset(f"{d}/postings", format="parquet", partitioning="hive")
+    post = pd.read_parquet(f"{d}/postings", columns=["term", "shard"])
+    multi = sorted(set(post.loc[post.duplicated(["term", "shard"]), "term"]))[:5]
+    vocab = sorted(loc._df)
+    term_lists = [
+        [],
+        ["missingterm_zzz"],
+        ["import", "import", "return"],
+        ["return", "def", "import"],
+        ["zzz_absent", "import", "aaa_absent", "import"],
+        vocab[:1] + vocab[-1:],
+        multi + ["missingterm_zzz"] + multi[:2],
+        vocab[::7],
+    ]
+
+    def canon(by_shard, cols):
+        return {
+            int(s): sorted(zip(*(rows[c] for c in cols)), key=lambda r: (r[0], r[2]))
+            for s, rows in by_shard.items()
+        }
+
+    for kind in ("match", "tf", "pos"):
+        cols = postings_columns(kind)
+        for terms in term_lists:
+            tbl = postings.to_table(
+                filter=ds.field("term").isin(pa.array(terms, pa.string())),
+                columns=["shard", *cols],
+            ).to_pandas()
+            want = canon({s: g.to_dict("list") for s, g in tbl.groupby("shard")}, cols)
+            got = loc._shard_rows(terms, kind)
+            assert all(list(rows) == cols for rows in got.values())
+            assert canon(got, cols) == want, (kind, terms)
+    assert multi  # the lists above reach terms with several segments per shard
