@@ -18,6 +18,13 @@ the union of per-shard candidates is tiny (shards × k rows) before the
 single global sort-limit. Statistics combination reads only the terms
 tables' rows for the query terms.
 
+One plan serves both tiers: ``federated_topk`` checks the mode and the
+members' (k1, b) agreement, combines the statistics, asks each member
+for its injected-idf per-shard top-k (serve.SearchOperators._shard_topk)
+and makes one cut across all of them with the members' own ``_cut`` —
+a DataFrame over Bm25Index members, a list over LocalSearcher members
+(``LocalFederatedSearcher``). Counting needs no (k1, b) agreement.
+
 Assumes member indexes hold DISJOINT document sets (internal doc ids are
 content-address-derived, so a doc indexed twice would collide — the
 caller owns partitioning, as with time-partitioned indices).
@@ -25,14 +32,7 @@ caller owns partitioning, as with time-partitioned indices).
 
 from __future__ import annotations
 
-from functools import reduce
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .query import TOPK_SCHEMA, Bm25Index
-from .tokenizer import tokenize_text
-from .wand import bm25_idf
+from .serve import check_mode, query_idf
 
 
 def combined_stats(members, q_terms: list[str]) -> tuple[int, dict[str, int]]:
@@ -49,51 +49,43 @@ def combined_stats(members, q_terms: list[str]) -> tuple[int, dict[str, int]]:
 
 
 def federated_topk(
-    indexes: list[Bm25Index],
+    indexes: list,
     query: str,
     k: int = 10,
     mode: str = "any",
     after: tuple[float, int] | None = None,
-) -> DataFrame:
+):
     """Global top-k over all member indexes under combined statistics.
-    Same contract as Bm25Index.topk (modes, search_after cursor, ties by
-    ascending internal doc_id)."""
+    Same contract as topk (modes, search_after cursor, ties by ascending
+    internal doc_id). Members are Bm25Index (a DataFrame comes back) or
+    LocalSearcher handles (a list of (doc_id, score)): each member's
+    injected-idf per-shard top-k, one cut across all of them."""
     if not indexes:
         raise ValueError("federated_topk needs at least one index")
-    if mode not in ("any", "all"):
-        raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
+    check_mode(mode)
     k1b = {(float(ix.meta["k1"]), float(ix.meta["b"])) for ix in indexes}
     if len(k1b) != 1:
         raise ValueError(f"member indexes disagree on BM25 constants: {k1b}")
-    spark = indexes[0].spark
-    q_terms = sorted(set(tokenize_text(query)))
-    if not q_terms:
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    n_docs, dfs = combined_stats(indexes, q_terms)
-    idf_map = {t: float(bm25_idf(n_docs, df)) for t, df in dfs.items()}
-    if not idf_map or (mode == "all" and len(idf_map) < len(q_terms)):
-        return spark.createDataFrame([], TOPK_SCHEMA)
-    require = len(idf_map) if mode == "all" else None
-    parts = [
-        ix._shard_topk_frame(idf_map, k, require, after) for ix in indexes
-    ]
-    union = reduce(DataFrame.unionByName, parts)
-    return union.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    n_docs = sum(int(ix.meta["n_docs"]) for ix in indexes)
+    idf = query_idf(query, mode, lambda ts: combined_stats(indexes, ts)[1], n_docs)
+    if idf is None:
+        return indexes[0]._empty()
+    return indexes[0]._cut([ix._shard_topk(idf, k, mode, after) for ix in indexes], k)
 
 
 def federated_count(indexes: list, query: str, mode: str = "any") -> int:
     """totalHits across member indexes: members hold disjoint docs, so
-    counts add — one count job per member, no data movement."""
+    counts add — one count per member, no data movement, no (k1, b)
+    agreement needed (count does not score)."""
     if not indexes:
         raise ValueError("federated_count needs at least one index")
     return sum(int(ix.count(query, mode=mode)) for ix in indexes)
 
 
 class LocalFederatedSearcher:
-    """Spark-free serving-tier federation: the same combined-statistics
-    rule over LocalSearcher members, rank-identical to federated_topk
-    (shared top-k kernels, shared idf arithmetic). Members load once;
-    per-query cost is one in-memory postings lookup per member."""
+    """Spark-free serving-tier federation: federated_topk / federated_count
+    over LocalSearcher members. Members load once; per-query cost is one
+    in-memory postings lookup per member."""
 
     def __init__(self, index_dirs: list[str]):
         from .serve import LocalSearcher
@@ -102,18 +94,6 @@ class LocalFederatedSearcher:
             raise ValueError("LocalFederatedSearcher needs at least one index")
         self.members = [LocalSearcher(d) for d in index_dirs]
 
-    def _check_constants(self) -> None:
-        # deferred to scoring calls: count() is scoring-free and must be
-        # reachable on mixed-constant members, matching the Spark tier
-        # (federated_count does no constants check either)
-        k1b = {
-            (float(m.meta["k1"]), float(m.meta["b"])) for m in self.members
-        }
-        if len(k1b) != 1:
-            raise ValueError(
-                f"member indexes disagree on BM25 constants: {k1b}"
-            )
-
     def topk(
         self,
         query: str,
@@ -121,25 +101,10 @@ class LocalFederatedSearcher:
         mode: str = "any",
         after: tuple[float, int] | None = None,
     ) -> list[tuple[int, float]]:
-        if mode not in ("any", "all"):
-            raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
-        self._check_constants()
-        q_terms = sorted(set(tokenize_text(query)))
-        if not q_terms:
-            return []
-        n_docs, dfs = combined_stats(self.members, q_terms)
-        if not dfs or (mode == "all" and len(dfs) < len(q_terms)):
-            return []
-        idf_map = {t: float(bm25_idf(n_docs, df)) for t, df in dfs.items()}
-        rows: list[tuple[int, float]] = []
-        for m in self.members:
-            rows.extend(m._topk_with_idf(idf_map, k, mode, after))
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        return rows[:k]
+        return federated_topk(self.members, query, k, mode, after)
 
     def count(self, query: str, mode: str = "any") -> int:
-        """totalHits across members (disjoint doc sets — counts add)."""
-        return sum(int(m.count(query, mode=mode)) for m in self.members)
+        return federated_count(self.members, query, mode)
 
 
 def bm25_federated_sql(

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from .indexer import _decode_dlpack
 from .query import TOPK_SCHEMA, Bm25Index, _cogroup, _top
-from .serve import idf_for, multifield_shard, postings_columns
+from .serve import field_constants, idf_for, multifield_shard, postings_columns
 from .tokenizer import tokenize_text
 
 
@@ -47,7 +47,7 @@ class MultiFieldSearch:
     """Weighted-sum search over ``{field_name: Bm25Index}``.
 
     All field indexes must share n_shards (the shard co-location
-    invariant) and k1/b (one scoring family)."""
+    invariant) and k1/b (one scoring family): serve.field_constants."""
 
     def __init__(
         self,
@@ -55,23 +55,12 @@ class MultiFieldSearch:
         indexes: dict[str, Bm25Index],
         weights: dict[str, float] | None = None,
     ):
-        if not indexes:
-            raise ValueError("at least one field index is required")
         self.spark = spark
         self.indexes = dict(sorted(indexes.items()))
         self.weights = {
             f: float((weights or {}).get(f, 1.0)) for f in self.indexes
         }
-        shards = {idx.meta["n_shards"] for idx in self.indexes.values()}
-        if len(shards) != 1:
-            raise ValueError(
-                f"field indexes disagree on n_shards ({sorted(shards)}) — "
-                "doc→shard co-location requires one shared value"
-            )
-        kb = {(idx.meta["k1"], idx.meta["b"]) for idx in self.indexes.values()}
-        if len(kb) != 1:
-            raise ValueError(f"field indexes disagree on (k1, b): {sorted(kb)}")
-        (self.k1, self.b), = kb
+        self.k1, self.b = field_constants([idx.meta for idx in self.indexes.values()])
 
     def topk(self, query: str, k: int = 10) -> DataFrame:
         toks = sorted(set(tokenize_text(query)))

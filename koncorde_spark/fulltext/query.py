@@ -11,17 +11,23 @@ given global N/avgdl/df, which ride in as broadcast literals), so the
 heavy stage parallelizes by shard with no shuffle of postings bytes beyond
 the term-pruned scan itself.
 
-This module only builds plans: which terms and ``postings_columns`` to
-scan, the one shard cogroup (``_cogroup`` / ``Bm25Index._per_shard``) and
-the global cut. Every per-shard body — segment decode, top-k, count set
-arithmetic, boolean, phrase, highlight — is owned by serve.py and shared
-with the Spark-free serve tier.
+``Bm25Index`` is the Spark tier of serve.SearchOperators, which writes
+every top-k operator's plan once (topk, prefix, fuzzy, boolean, phrase,
+highlight and the injected-idf per-shard top-k federation cuts). This
+module supplies only that class's three primitives — the pruned scan of
+``postings_columns`` cogrouped with the dlpack (``_scan`` over
+``_per_shard`` / ``_cogroup``), the global sort-limit (``_cut`` /
+``_top``) and the empty DataFrame — plus the operators that exist on
+this tier alone: count / matching_ids, the distributed vocabulary
+fallbacks of expand_prefix / expand_fuzzy / suggest, and topk_filtered,
+collapse_topk, topk_many and topk_rescored. Every per-shard body is
+owned by serve.py.
 """
 
 from __future__ import annotations
 
 import os
-from functools import partial
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -32,29 +38,18 @@ from pyspark.sql import types as T
 from .codecs import delta_decode, delta_encode
 from .indexer import _decode_dlpack_ctx, read_meta
 from .serve import (
-    boolean_plan,
-    boolean_shard,
-    highlight_shard,
+    SearchOperators,
     idf_for,
     match_ids,
     match_terms,
-    phrase_plan,
-    phrase_shard,
     postings_columns,
-    require_positions,
-    shard_postings,
+    query_idf,
     vocab_fuzzy,
     vocab_prefix,
     wand_topk,
 )
 from .tokenizer import tokenize_text
-from .wand import check_after_cursor, score_union
-
-import re as _re
-
-# the part before '*' in a prefix query must itself be a single canonical
-# token (4-place tokenizer invariant: [a-z0-9_]+ on lowercased text)
-_PREFIX_RE = _re.compile(r"[a-z0-9_]+")
+from .wand import score_union
 
 HIGHLIGHT_SCHEMA = T.StructType(
     [
@@ -93,25 +88,8 @@ ELIG_SCHEMA = T.StructType(
 
 _PD_DTYPES = {T.LongType: "int64", T.DoubleType: "float64", T.StringType: "object"}
 
-
-def parse_expansion_query(query: str, marker: str, kind: str, expand) -> list[str]:
-    """Sorted deduped term set for a query mixing literal tokens with
-    trailing-``marker`` expansion terms — THE shared grammar of
-    topk_prefix/topk_fuzzy on both tiers (one implementation so the two
-    tiers can never drift on what they accept)."""
-    literals, expanded = [], []
-    for tok in query.split():
-        if tok.endswith(marker) and len(tok) > 1:
-            base = tok[:-1].lower()
-            if not _PREFIX_RE.fullmatch(base):
-                raise ValueError(
-                    f"invalid {kind} {tok!r}: the part before {marker!r} must "
-                    "be a single token ([a-z0-9_]+)"
-                )
-            expanded.extend(expand(base))
-        else:
-            literals.extend(tokenize_text(tok))
-    return sorted(set(literals) | set(expanded))
+# the output rows SearchOperators names, plus topk_many's (Spark only)
+_SCHEMAS = {"topk": TOPK_SCHEMA, "highlight": HIGHLIGHT_SCHEMA, "topk_many": TOPK_MANY_SCHEMA}
 
 
 def _cogroup(posts: DataFrame, packs: DataFrame, schema: T.StructType, body) -> DataFrame:
@@ -137,8 +115,9 @@ def _top(frame: DataFrame, k: int) -> DataFrame:
     return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
-class Bm25Index:
-    """Handle to a built index directory."""
+class Bm25Index(SearchOperators):
+    """Handle to a built index directory: SearchOperators over Spark
+    plans, answering with DataFrames."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -191,7 +170,9 @@ class Bm25Index:
             except Exception:  # session already stopped — nothing to free
                 pass
 
-    def _df_for(self, q_terms: list[str]) -> dict[str, int]:
+    def _terms_local_dict(self) -> dict | None:
+        """The driver-side {term: df} map when the vocabulary is at most
+        TERMS_LOCAL_MAX terms (pulled once, on first use), else None."""
         if self._terms_local is None:
             # n_terms is carried in meta.json by the index build; fall back
             # to one count() job for indexes built before it was recorded
@@ -205,12 +186,16 @@ class Bm25Index:
                 )
             else:
                 self._terms_local = False
-        if self._terms_local is not False:
-            tl = self._terms_local
+        return self._terms_local if self._terms_local is not False else None
+
+    def _df_for(self, q_terms: list[str]) -> dict[str, int]:
+        if not q_terms:
+            return {}
+        tl = self._terms_local_dict()
+        if tl is not None:
             return {t: tl[t] for t in q_terms if t in tl}
         rows = self.terms.where(F.col("term").isin(q_terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
-
 
     def _per_shard(
         self, terms, kind: str, schema: T.StructType, body, packs: DataFrame | None = None,
@@ -224,73 +209,21 @@ class Bm25Index:
         )
         return _cogroup(posts, self.dlpack if packs is None else packs, schema, body)
 
-    def _decoder(self, idf_map: dict[str, float]):
-        """serve.shard_postings over a shard's (rows, pack), bound to this
-        handle's statistics, tombstones and worker-cached dlpack decode
-        (``allowed``: sorted eligible doc_ids of a filtered search) — a
-        closure that ships to executors without the handle."""
-        m, ctx = self.meta, self._cache_ctx
-        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
-
-        def decode(rows: pd.DataFrame, pack: pd.DataFrame, allowed=None):
-            return shard_postings(
-                rows, _decode_dlpack_ctx(pack, ctx), idf_map, k1, b, avgdl, tomb, allowed
-            )
-
-        return decode
-
-    def topk(
-        self, query: str, k: int = 10, mode: str = "any",
-        after: tuple[float, int] | None = None,
-    ) -> DataFrame:
-        """Top-k (doc_id, score) for a free-text query, rank-deterministic.
-
-        ``mode``: "any" (default) ranks docs containing any query term
-        (disjunctive, every entry scored); "all" restricts to docs containing
-        EVERY query term (conjunctive, intersection-driven — cost bounded
-        by the rarest term's postings). Scores are mode-independent: a doc
-        in the "all" result carries exactly its "any" score.
-
-        ``after``: optional (score, doc_id) search-after cursor — the last
-        row of the previous page in this engine's (score desc, doc_id asc)
-        total order. The result is exactly the next k ranks: each shard
-        keeps a k-deep heap over docs strictly after the cursor, so page
-        depth never grows the heap (Elasticsearch's search_after contract,
-        not from+size). doc_id is the INTERNAL id returned by this method."""
-        if mode not in ("any", "all"):
-            raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
-        q_terms = sorted(set(tokenize_text(query)))
-        if not q_terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        # global df per query term (driver-side dict probe for small
-        # vocabularies; a tiny distributed lookup otherwise)
-        idf_map = idf_for(self._df_for, q_terms, self.meta["n_docs"])
-        if not idf_map or (mode == "all" and len(idf_map) < len(q_terms)):
-            # conjunctive with a term absent from the global vocabulary can
-            # match nothing — skip the job entirely
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        require = len(idf_map) if mode == "all" else None
-        return _top(self._shard_topk_frame(idf_map, k, require, after), k)
-
-    def _shard_topk_frame(
-        self,
-        idf_map: dict[str, float],
-        k: int,
-        require: int | None = None,
-        after: tuple[float, int] | None = None,
-    ) -> DataFrame:
-        """Per-shard top-k candidates (no global cut) with an INJECTED idf
-        map — the building block topk() and federated search share. The
-        caller owns the idf statistics: federation passes combined-corpus
-        idf while this index's own corpus avgdl normalizes document
-        length. ``require`` non-None switches to conjunctive semantics
-        with that many required terms."""
-        decode = self._decoder(idf_map)
-        after_ = check_after_cursor(after) if after is not None else None
+    def _scan(self, terms, kind: str, body, out: str = "topk") -> DataFrame:
+        """SearchOperators' per-shard scan: _per_shard with the shard's
+        dlpack decoded through the worker-side cache, rows in the ``out``
+        schema."""
+        ctx = self._cache_ctx
         return self._per_shard(
-            idf_map, "tf", TOPK_SCHEMA,
-            lambda rows, pack: wand_topk(decode(rows, pack), k, require, after_),
+            terms, kind, _SCHEMAS[out],
+            lambda rows, pack: body(rows, _decode_dlpack_ctx(pack, ctx)),
         )
+
+    def _cut(self, parts: list[DataFrame], k: int) -> DataFrame:
+        return _top(reduce(DataFrame.unionByName, parts), k)
+
+    def _empty(self, out: str = "topk") -> DataFrame:
+        return self.spark.createDataFrame([], _SCHEMAS[out])
 
     def collapse_topk(
         self, query: str, groups: DataFrame, k: int = 10,
@@ -307,7 +240,6 @@ class Bm25Index:
         hash-agg (max_by, map-side combinable) shrinks to a row per group
         before the tiny global top-k sort. Returns (group, doc_id, score)
         ordered by (score desc, doc_id asc)."""
-        q_terms = sorted(set(tokenize_text(query)))
         out_schema = T.StructType(
             [
                 T.StructField(group_col, groups.schema[group_col].dataType),
@@ -315,14 +247,14 @@ class Bm25Index:
                 T.StructField("score", T.DoubleType()),
             ]
         )
-        idf_map = idf_for(self._df_for, q_terms, self.meta["n_docs"])
-        if not idf_map:
+        idf_map = query_idf(query, "any", self._df_for, self.meta["n_docs"])
+        if idf_map is None:
             return self.spark.createDataFrame([], out_schema)
-        decode = self._decoder(idf_map)
-        scored = self._per_shard(
-            idf_map, "tf", TOPK_SCHEMA,
-            lambda rows, pack: score_union(
-                [tp for segs in decode(rows, pack).values() for tp in segs]
+        postings = self._scored(idf_map)
+        scored = self._scan(
+            idf_map, "tf",
+            lambda rows, dl: score_union(
+                [tp for segs in postings(rows, dl).values() for tp in segs]
             ),
         )
         best = (
@@ -384,17 +316,24 @@ class Bm25Index:
         toks = tokenize_text(term)
         if len(toks) != 1:
             raise ValueError(f"suggest() takes one indexable token, got {term!r}")
-        t = toks[0]
-        lo, hi = len(t) - max_distance, len(t) + max_distance
-        cand = self.terms.where(F.length("term").between(lo, hi)).withColumn(
-            "distance", F.levenshtein(F.col("term"), F.lit(t), max_distance)
-        )
-        # bounded levenshtein returns -1 past the threshold
         return (
-            cand.where((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
-            .select(F.col("term").alias("suggestion"), "df", "distance")
-            .orderBy(F.asc("distance"), F.desc("df"), F.asc("suggestion"))
+            self._fuzzy_frame(toks[0], max_distance)
             .limit(k)
+            .select(F.col("term").alias("suggestion"), "df", "distance")
+        )
+
+    def _fuzzy_frame(self, term: str, max_distance: int) -> DataFrame:
+        """The vocabulary's (term, df, distance) rows within
+        ``max_distance`` edits of ``term`` (taken as given), ordered
+        (distance ASC, df DESC, term ASC) — vocab_fuzzy's contract as one
+        Catalyst scan of the cached terms table."""
+        lo, hi = len(term) - max_distance, len(term) + max_distance
+        return (
+            self.terms.where(F.length("term").between(lo, hi))
+            .withColumn("distance", F.levenshtein(F.col("term"), F.lit(term), max_distance))
+            # bounded levenshtein returns -1 past the threshold
+            .where((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
+            .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
         )
 
     def _match_frame(self, present: list[str], mode: str, schema: T.StructType, emit) -> DataFrame:
@@ -442,13 +381,6 @@ class Bm25Index:
             return self.spark.createDataFrame([], out_schema)
         return self._match_frame(present, mode, out_schema, lambda ids: (ids,))
 
-    def _terms_local_dict(self) -> dict | None:
-        """The driver-side {term: df} map when the vocabulary is small
-        enough (populated lazily by _df_for), else None."""
-        if self._terms_local is None:
-            self._df_for([])  # decide + populate the cache policy
-        return self._terms_local if self._terms_local is not False else None
-
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Vocabulary terms starting with ``prefix``, highest-df first
         (ties by ascending term), capped at ``max_expansions``.
@@ -472,25 +404,6 @@ class Bm25Index:
         )
         return [r["term"] for r in rows]
 
-    def topk_prefix(
-        self, query: str, k: int = 10, max_expansions: int = 50, mode: str = "any"
-    ) -> DataFrame:
-        """Top-k for a query mixing literal terms and trailing-wildcard
-        prefixes ("import ide*"): each prefix expands to its
-        ``max_expansions`` highest-df vocabulary terms (Lucene
-        MultiTermQuery discipline), and the union of literals + expansions
-        is scored as a standard multi-term BM25 — each distinct term
-        contributes its own idf, so results equal a plain topk over the
-        expanded term list (by construction: this method delegates to it).
-        """
-        terms = parse_expansion_query(
-            query, "*", "prefix",
-            lambda b_: self.expand_prefix(b_, max_expansions),
-        )
-        if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        return self.topk(" ".join(terms), k, mode=mode)
-
     def expand_fuzzy(
         self, term: str, max_distance: int = 1, max_expansions: int = 50
     ) -> list[str]:
@@ -505,40 +418,8 @@ class Bm25Index:
         tl = self._terms_local_dict()
         if tl is not None:
             return [t for _, _, t in vocab_fuzzy(tl, term, max_distance)[:max_expansions]]
-        lit = F.lit(term)
-        rows = (
-            self.terms.where(
-                (F.length("term") >= len(term) - max_distance)
-                & (F.length("term") <= len(term) + max_distance)
-            )
-            .withColumn("__dist", F.levenshtein(F.col("term"), lit))
-            .where(F.col("__dist") <= max_distance)
-            .orderBy(F.asc("__dist"), F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .collect()
-        )
+        rows = self._fuzzy_frame(term, max_distance).limit(max_expansions).collect()
         return [r["term"] for r in rows]
-
-    def topk_fuzzy(
-        self,
-        query: str,
-        k: int = 10,
-        max_distance: int = 1,
-        max_expansions: int = 50,
-        mode: str = "any",
-    ) -> DataFrame:
-        """Top-k for a query mixing literal terms and trailing-~ fuzzy
-        terms ("import ideny~"): each fuzzy term expands per
-        expand_fuzzy and the union of literals + expansions is scored as
-        a standard multi-term BM25 (delegates to topk — the same
-        discipline as topk_prefix)."""
-        terms = parse_expansion_query(
-            query, "~", "fuzzy term",
-            lambda b_: self.expand_fuzzy(b_, max_distance, max_expansions),
-        )
-        if not terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        return self.topk(" ".join(terms), k, mode=mode)
 
     def topk_filtered(self, query: str, filters: dict, k: int = 10) -> DataFrame:
         """BM25 top-k restricted to docs whose METADATA matches a koncorde
@@ -568,12 +449,9 @@ class Bm25Index:
         from .. import Koncorde
         from ..spark.percolate import percolate
 
-        q_terms = sorted(set(tokenize_text(query)))
-        if not q_terms:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        idf_map = idf_for(self._df_for, q_terms, self.meta["n_docs"])
-        if not idf_map:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
+        idf_map = query_idf(query, "any", self._df_for, self.meta["n_docs"])
+        if idf_map is None:
+            return self._empty()
 
         # eligibility: percolate the docs METADATA against the one filter
         # (shard rides through keep_cols — no join back to the docs table)
@@ -598,98 +476,15 @@ class Bm25Index:
             "shard",
             "inner",
         )
-        decode = self._decoder(idf_map)
+        postings, ctx = self._scored(idf_map), self._cache_ctx
 
         def body(rows: pd.DataFrame, pack_pdf: pd.DataFrame):
             prow = pack_pdf.iloc[0]
             allowed = delta_decode(bytes(prow["elig_ids"]), int(prow["elig_n"]))
-            return wand_topk(decode(rows, pack_pdf, allowed=allowed.astype(np.int64)), k)
+            dl = _decode_dlpack_ctx(pack_pdf, ctx)
+            return wand_topk(postings(rows, dl, allowed.astype(np.int64)), k)
 
         return _top(self._per_shard(idf_map, "tf", TOPK_SCHEMA, body, packs), k)
-
-    def topk_phrase(self, phrase: str, k: int = 10, slop: int = 0) -> DataFrame:
-        """Exact-phrase top-k over a POSITIONAL index (IndexConfig(
-        positions=True)): docs containing the query token sequence at
-        consecutive offsets, scored by the classic phrase-query recipe
-        (the phrase as one pseudo-term: tf = phrase occurrences, idf =
-        sum of member-term idfs — see phrase.py). ``slop > 0`` switches
-        to ordered greedy-chain proximity (tokens in phrase order within
-        ``len-1+slop`` offsets — phrase.proximity_freqs), same scoring
-        with in-slop occurrence count as tf.
-
-        Plan shape mirrors topk: postings pruned to the phrase's terms
-        (parquet term pushdown), one cogroup with the dlpack per shard
-        (serve.phrase_shard), global sort-limit over ≤ shards·k rows. A
-        phrase term absent from the global vocabulary short-circuits to
-        empty without a job."""
-        require_positions(self.meta, "phrase search")
-        m = self.meta
-        plan = phrase_plan(phrase, self._df_for, m["n_docs"])
-        if plan is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        toks, uniq, idf_sum = plan
-        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
-        dl = partial(_decode_dlpack_ctx, cache_ctx=self._cache_ctx)
-        return _top(self._per_shard(
-            uniq, "pos", TOPK_SCHEMA,
-            lambda rows, pack: phrase_shard(
-                rows, dl(pack), toks, idf_sum, k1, b, avgdl, k, tomb, slop
-            ),
-        ), k)
-
-    def topk_highlight(
-        self, query: str, k: int = 10, window: int = 30
-    ) -> DataFrame:
-        """Top-k with snippet selection over a POSITIONAL index: (doc_id,
-        score, snip_start, snip_hits) where ``[snip_start, snip_start +
-        window)`` is the token-offset window holding the most query-term
-        occurrences (ties → smallest start; see highlight.py). Scores are
-        the standard multi-term BM25 sum — identical to ``topk`` (pinned
-        by tests); terms absent from the vocabulary simply contribute
-        nothing (unlike phrase, which requires all)."""
-        require_positions(self.meta, "highlighting")
-        m = self.meta
-        idf = idf_for(self._df_for, sorted(set(tokenize_text(query))), m["n_docs"])
-        if not idf:
-            return self.spark.createDataFrame([], HIGHLIGHT_SCHEMA)
-        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
-        dl = partial(_decode_dlpack_ctx, cache_ctx=self._cache_ctx)
-        return _top(self._per_shard(
-            idf, "pos", HIGHLIGHT_SCHEMA,
-            lambda rows, pack: highlight_shard(
-                rows, dl(pack), idf, k1, b, avgdl, k, window, tomb
-            ),
-        ), k)
-
-    def topk_boolean(
-        self,
-        must: list[str] | None = None,
-        should: list[str] | None = None,
-        must_not: list[str] | None = None,
-        boosts: dict[str, float] | None = None,
-        k: int = 10,
-    ) -> DataFrame:
-        """Structured boolean top-k (Lucene BooleanQuery semantics):
-        eligible docs contain EVERY must term and NO must_not term; the
-        score is the boost-scaled BM25 sum over must ∪ should terms
-        (must_not never contributes). Clause entries are tokenized, so
-        multi-word strings flatten into their terms; ``boosts`` keys are
-        canonical tokens. One pruned postings scan over all three term
-        sets, per-shard exact evaluation (serve.boolean_shard), global
-        sort-limit."""
-        m = self.meta
-        plan = boolean_plan(must, should, must_not, boosts, self._df_for, m["n_docs"])
-        if plan is None:
-            return self.spark.createDataFrame([], TOPK_SCHEMA)
-        must_t, idf, not_t, scan = plan
-        k1, b, avgdl, tomb = m["k1"], m["b"], m["avgdl"], self.tombstones
-        dl = partial(_decode_dlpack_ctx, cache_ctx=self._cache_ctx)
-        return _top(self._per_shard(
-            scan, "tf", TOPK_SCHEMA,
-            lambda rows, pack: boolean_shard(
-                rows, dl(pack), must_t, idf, not_t, k1, b, avgdl, k, tomb
-            ),
-        ), k)
 
     def topk_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Top-k per query for a BATCH of queries in ONE Spark job.
@@ -711,18 +506,16 @@ class Bm25Index:
             qid: sorted(set(tokenize_text(q))) for qid, q in queries.items()
         }
         all_terms = sorted({t for ts in q_terms.values() for t in ts})
-        if not all_terms:
-            return self.spark.createDataFrame([], TOPK_MANY_SCHEMA)
         idf_map = idf_for(self._df_for, all_terms, self.meta["n_docs"])
         if not idf_map:
-            return self.spark.createDataFrame([], TOPK_MANY_SCHEMA)
+            return self._empty("topk_many")
         q_terms = {
             qid: [t for t in ts if t in idf_map] for qid, ts in q_terms.items()
         }
-        decode = self._decoder(idf_map)
+        postings = self._scored(idf_map)
 
-        def body(rows: pd.DataFrame, pack: pd.DataFrame):
-            by_term = decode(rows, pack)
+        def body(rows: pd.DataFrame, dl):
+            by_term = postings(rows, dl)
             parts = []
             for qid, ts in q_terms.items():
                 ids, scores = wand_topk({t: by_term[t] for t in ts if t in by_term}, k)
@@ -730,7 +523,7 @@ class Bm25Index:
                     parts.append((np.full(len(ids), qid, dtype=object), ids, scores))
             return tuple(np.concatenate(c) for c in zip(*parts)) if parts else None
 
-        per_shard = self._per_shard(idf_map, "tf", TOPK_MANY_SCHEMA, body)
+        per_shard = self._scan(idf_map, "tf", body, "topk_many")
         w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
             per_shard.withColumn("__rn", F.row_number().over(w))

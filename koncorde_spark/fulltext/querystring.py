@@ -199,8 +199,7 @@ def execute_query_string(
         and positional
     ):
         c = clauses[0]
-        run = getattr(searcher, "topk_phrase", None) or searcher.phrase
-        hits = run(c.text, k, slop=c.slop)
+        hits = searcher.topk_phrase(c.text, k, slop=c.slop)
         if c.boost == 1.0:
             return hits
         # a boosted lone phrase keeps its positional exactness; the boost

@@ -13,11 +13,16 @@ order (``score_union`` / ``wand_topk``), so a doc scores the same bits
 in every operator. Each body takes ONE shard's postings rows — a pandas
 frame inside a Spark cogroup, a column dict here — sorts them by term
 and returns that shard's (ids, scores), plus snippets for highlight.
-``Bm25Index`` (query.py) and ``MultiFieldSearch`` (multifield.py) only
-build plans: the pruned scan of ``postings_columns``, the cogroup with
-the dlpack and the global sort-limit. ``LocalSearcher`` and
-``LocalMultiFieldSearcher`` run the same bodies in-process, so the two
-tiers are bit-identical by construction. Postings are decoded through
+
+The plans around those bodies are written once too: ``SearchOperators``
+defines topk, topk_prefix, topk_fuzzy, topk_boolean, topk_phrase
+(alias ``phrase``), topk_highlight (alias ``highlight``) and the
+injected-idf per-shard top-k that federation cuts. ``Bm25Index``
+(query.py, Spark) and ``LocalSearcher`` (here, in-process) inherit them
+and supply only a per-shard scan, a global cut and an empty result, so
+the two tiers are bit-identical by construction. ``MultiFieldSearch``
+and ``LocalMultiFieldSearcher`` share multifield_shard and the
+constructor check ``field_constants``. Postings are decoded through
 this module's ``delta_decode`` / ``varint_decode`` names.
 
 The distributed job (indexer.py) builds the index; serving queries does
@@ -37,6 +42,7 @@ latencies are milliseconds (vs ~1s for a Spark job round-trip).
 from __future__ import annotations
 
 import os
+import re
 
 import numpy as np
 import pyarrow.dataset as ds
@@ -206,11 +212,27 @@ def idf_for(df_for, terms: list[str], n_docs: int) -> dict[str, float]:
     return {t: float(bm25_idf(n_docs, df)) for t, df in df_for(terms).items()}
 
 
+def check_mode(mode: str) -> None:
+    if mode not in ("any", "all"):
+        raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
+
+
+def query_idf(query: str, mode: str, df_for, n_docs: int) -> dict[str, float] | None:
+    """{term: idf} of a free-text query's terms that ``df_for`` finds, or
+    None when nothing can match (no term in the vocabulary; in mode
+    "all", any) — so an empty result costs no scan."""
+    check_mode(mode)
+    q_terms = sorted(set(tokenize_text(query)))
+    idf = idf_for(df_for, q_terms, n_docs)
+    if not idf or (mode == "all" and len(idf) < len(q_terms)):
+        return None
+    return idf
+
+
 def match_terms(query: str, mode: str, df_for) -> list[str] | None:
     """Sorted present terms of a count / matching_ids query, or None when
     nothing can match (no term in the vocabulary; in mode "all", any)."""
-    if mode not in ("any", "all"):
-        raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
+    check_mode(mode)
     toks = sorted(set(tokenize_text(query)))
     dfs = df_for(toks)
     present = [t for t in toks if t in dfs]
@@ -441,6 +463,242 @@ def _global_topk(parts, k: int) -> list[tuple]:
     return list(zip(*(c[order].tolist() for c in cols)))
 
 
+def field_constants(metas: list[dict]) -> tuple[float, float]:
+    """The (k1, b) of a multi-field search's field indexes (their
+    ``meta``s); raises unless there is at least one and they share
+    n_shards (doc→shard co-location) and (k1, b) (one scoring family)."""
+    if not metas:
+        raise ValueError("at least one field index is required")
+    shards = {m["n_shards"] for m in metas}
+    if len(shards) != 1:
+        raise ValueError(
+            f"field indexes disagree on n_shards ({sorted(shards)}) — "
+            "doc→shard co-location requires one shared value"
+        )
+    kb = {(m["k1"], m["b"]) for m in metas}
+    if len(kb) != 1:
+        raise ValueError(f"field indexes disagree on (k1, b): {sorted(kb)}")
+    (kb,) = kb
+    return kb
+
+
+# the part before '*' / '~' in an expansion query must itself be a single
+# canonical token (4-place tokenizer invariant: [a-z0-9_]+ on lowercased text)
+_PREFIX_RE = re.compile(r"[a-z0-9_]+")
+
+
+def parse_expansion_query(query: str, marker: str, kind: str, expand) -> list[str]:
+    """Sorted deduped term set for a query mixing literal tokens with
+    trailing-``marker`` expansion terms — THE grammar of topk_prefix /
+    topk_fuzzy."""
+    literals, expanded = [], []
+    for tok in query.split():
+        if tok.endswith(marker) and len(tok) > 1:
+            base = tok[:-1].lower()
+            if not _PREFIX_RE.fullmatch(base):
+                raise ValueError(
+                    f"invalid {kind} {tok!r}: the part before {marker!r} must "
+                    "be a single token ([a-z0-9_]+)"
+                )
+            expanded.extend(expand(base))
+        else:
+            literals.extend(tokenize_text(tok))
+    return sorted(set(literals) | set(expanded))
+
+
+# ---------------------------------------------------------------------------
+# the operator surface of both tiers
+# ---------------------------------------------------------------------------
+
+
+class SearchOperators:
+    """Every top-k operator's plan, written once for both tiers:
+    tokenize, look up df / idf, short-circuit what cannot match, bind the
+    index statistics into a per-shard body, cut globally.
+
+    A tier (query.Bm25Index on Spark, LocalSearcher here) holds ``meta``,
+    ``tombstones`` (sorted deleted doc_ids) and ``_df_for(terms)``, and
+    supplies three primitives:
+
+    - ``_scan(terms, kind, body, out="topk")`` runs ``body(rows, dl)`` once
+      per shard over the ``postings_columns(kind)`` rows of ``terms``,
+      with ``dl`` that shard's decoded (doc_ids, dls) pack. ``body``
+      returns the shard's columns of the ``out`` rows — "topk": (ids,
+      scores); "highlight": (ids, scores, snip_start, snip_hits) — or
+      None. Returns the tier's per-shard parts.
+    - ``_cut(parts, k)``: the global sort-limit (score DESC, doc_id ASC)
+      over a list of ``_scan`` results — one per federation member.
+    - ``_empty(out="topk")``: the empty result.
+
+    Results are DataFrames on the Spark tier and lists of tuples here.
+    Bodies close over locals, never ``self``: the Spark tier ships them
+    to executors, and a Bm25Index holds a SparkSession."""
+
+    def _bm25(self) -> tuple:
+        """(k1, b, avgdl, tombstones) — what a scored body binds."""
+        m = self.meta
+        return m["k1"], m["b"], m["avgdl"], self.tombstones
+
+    def _search(self, terms, kind: str, body, k: int, out: str = "topk"):
+        return self._cut([self._scan(terms, kind, body, out)], k)
+
+    def _scored(self, idf: dict[str, float]):
+        """serve.shard_postings bound to this index's statistics and
+        tombstones: ``(rows, dl, allowed=None) -> {term: segments}``
+        (``allowed``: sorted eligible doc_ids of a filtered search)."""
+        k1, b, avgdl, tomb = self._bm25()
+        return lambda rows, dl, allowed=None: shard_postings(
+            rows, dl, idf, k1, b, avgdl, tomb, allowed
+        )
+
+    def _shard_topk(
+        self,
+        idf: dict[str, float],
+        k: int,
+        mode: str = "any",
+        after: tuple[float, int] | None = None,
+        stats: dict | None = None,
+    ):
+        """Per-shard top-k parts (no global cut) with an INJECTED idf map —
+        what topk and federation cut. The caller owns the idf statistics
+        (federation passes combined-corpus idf); this index's own avgdl
+        normalizes document length. Mode "all" requires every injected
+        term, so a member missing one contributes nothing. ``stats``
+        collects the in-process kernel's entry counters (profile_topk)."""
+        postings = self._scored(idf)
+        after_ = check_after_cursor(after) if after is not None else None
+        require = len(idf) if mode == "all" else None
+        return self._scan(
+            idf, "tf",
+            lambda rows, dl: wand_topk(postings(rows, dl), k, require, after_, stats),
+        )
+
+    def topk(
+        self, query: str, k: int = 10, mode: str = "any",
+        after: tuple[float, int] | None = None,
+    ):
+        """Top-k (doc_id, score) for a free-text query, rank-deterministic.
+
+        ``mode``: "any" (default) ranks docs containing any query term
+        (disjunctive, every entry scored); "all" restricts to docs containing
+        EVERY query term (conjunctive, intersection-driven — cost bounded
+        by the rarest term's postings). Scores are mode-independent: a doc
+        in the "all" result carries exactly its "any" score.
+
+        ``after``: optional (score, doc_id) search-after cursor — the last
+        row of the previous page in this engine's (score desc, doc_id asc)
+        total order. The result is exactly the next k ranks: each shard
+        keeps a k-deep heap over docs strictly after the cursor, so page
+        depth never grows the heap (Elasticsearch's search_after contract,
+        not from+size). doc_id is the INTERNAL id returned by this method."""
+        idf = query_idf(query, mode, self._df_for, self.meta["n_docs"])
+        if idf is None:
+            return self._empty()
+        return self._cut([self._shard_topk(idf, k, mode, after)], k)
+
+    def topk_prefix(
+        self, query: str, k: int = 10, max_expansions: int = 50, mode: str = "any"
+    ):
+        """Top-k for a query mixing literal terms and trailing-wildcard
+        prefixes ("import ide*"): each prefix expands to its
+        ``max_expansions`` highest-df vocabulary terms (expand_prefix;
+        Lucene MultiTermQuery discipline), and the union of literals +
+        expansions is scored by topk — each distinct term contributes its
+        own idf."""
+        terms = parse_expansion_query(
+            query, "*", "prefix", lambda b_: self.expand_prefix(b_, max_expansions)
+        )
+        return self.topk(" ".join(terms), k, mode=mode)
+
+    def topk_fuzzy(
+        self,
+        query: str,
+        k: int = 10,
+        max_distance: int = 1,
+        max_expansions: int = 50,
+        mode: str = "any",
+    ):
+        """Top-k for a query mixing literal terms and trailing-~ fuzzy
+        terms ("import ideny~"): each fuzzy term expands per expand_fuzzy
+        and the union of literals + expansions is scored by topk (the
+        discipline of topk_prefix)."""
+        terms = parse_expansion_query(
+            query, "~", "fuzzy term",
+            lambda b_: self.expand_fuzzy(b_, max_distance, max_expansions),
+        )
+        return self.topk(" ".join(terms), k, mode=mode)
+
+    def topk_boolean(
+        self,
+        must: list[str] | None = None,
+        should: list[str] | None = None,
+        must_not: list[str] | None = None,
+        boosts: dict[str, float] | None = None,
+        k: int = 10,
+    ):
+        """Structured boolean top-k (Lucene BooleanQuery semantics):
+        eligible docs contain EVERY must term and NO must_not term; the
+        score is the boost-scaled BM25 sum over must ∪ should terms
+        (must_not never contributes). Clause entries are tokenized, so
+        multi-word strings flatten into their terms; ``boosts`` keys are
+        canonical tokens. One scan over all three term sets, per-shard
+        exact evaluation (boolean_shard), global cut."""
+        plan = boolean_plan(must, should, must_not, boosts, self._df_for, self.meta["n_docs"])
+        if plan is None:
+            return self._empty()
+        must_t, idf, not_t, scan = plan
+        k1, b, avgdl, tomb = self._bm25()
+        return self._search(
+            scan, "tf",
+            lambda rows, dl: boolean_shard(rows, dl, must_t, idf, not_t, k1, b, avgdl, k, tomb),
+            k,
+        )
+
+    def topk_phrase(self, phrase: str, k: int = 10, slop: int = 0):
+        """Exact-phrase top-k over a POSITIONAL index (IndexConfig(
+        positions=True)): docs containing the query token sequence at
+        consecutive offsets, scored by the classic phrase-query recipe
+        (the phrase as one pseudo-term: tf = phrase occurrences, idf =
+        sum of member-term idfs — see phrase.py). ``slop > 0`` switches
+        to ordered greedy-chain proximity (tokens in phrase order within
+        ``len-1+slop`` offsets — phrase.proximity_freqs), same scoring
+        with in-slop occurrence count as tf. A phrase term absent from
+        the vocabulary short-circuits to empty without a scan."""
+        require_positions(self.meta, "phrase search")
+        plan = phrase_plan(phrase, self._df_for, self.meta["n_docs"])
+        if plan is None:
+            return self._empty()
+        toks, uniq, idf_sum = plan
+        k1, b, avgdl, tomb = self._bm25()
+        return self._search(
+            uniq, "pos",
+            lambda rows, dl: phrase_shard(rows, dl, toks, idf_sum, k1, b, avgdl, k, tomb, slop),
+            k,
+        )
+
+    phrase = topk_phrase
+
+    def topk_highlight(self, query: str, k: int = 10, window: int = 30):
+        """Top-k with snippet selection over a POSITIONAL index: (doc_id,
+        score, snip_start, snip_hits) where ``[snip_start, snip_start +
+        window)`` is the token-offset window holding the most query-term
+        occurrences (ties → smallest start; see highlight.py). Scores are
+        topk's; terms absent from the vocabulary simply contribute
+        nothing (unlike phrase, which requires all)."""
+        require_positions(self.meta, "highlighting")
+        idf = query_idf(query, "any", self._df_for, self.meta["n_docs"])
+        if idf is None:
+            return self._empty("highlight")
+        k1, b, avgdl, tomb = self._bm25()
+        return self._search(
+            idf, "pos",
+            lambda rows, dl: highlight_shard(rows, dl, idf, k1, b, avgdl, k, window, tomb),
+            k, "highlight",
+        )
+
+    highlight = topk_highlight
+
+
 # ---------------------------------------------------------------------------
 # serve tier
 # ---------------------------------------------------------------------------
@@ -454,7 +712,10 @@ def _local_tombstones(index_dir: str) -> "np.ndarray":
     return np.unique(np.asarray(tbl["doc_id"].to_pylist(), dtype=np.int64))
 
 
-class LocalSearcher:
+class LocalSearcher(SearchOperators):
+    """The Spark-free tier: SearchOperators over postings held in memory,
+    answering with lists of tuples."""
+
     def __init__(self, index_dir: str):
         from .indexer import check_stats_consistency
 
@@ -477,7 +738,7 @@ class LocalSearcher:
         # term → global df (small: one row per distinct term)
         tbl = ds.dataset(os.path.join(index_dir, "terms"), format="parquet").to_table()
         self._df = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
-        self._tombstones = _local_tombstones(index_dir)
+        self.tombstones = _local_tombstones(index_dir)
         # per-shard doc-length packs, decoded once
         pack = ds.dataset(
             os.path.join(index_dir, "dlpack"), format="parquet"
@@ -493,7 +754,7 @@ class LocalSearcher:
         combined_stats treats both tiers uniformly."""
         return {t: int(self._df[t]) for t in q_terms if t in self._df}
 
-    def _shard_rows(self, terms: list[str], kind: str) -> dict[int, dict]:
+    def _shard_rows(self, terms, kind: str) -> dict[int, dict]:
         """{shard: {column: values}} of the postings rows of ``terms``,
         with exactly the ``kind`` columns of postings_columns — the serve
         tier's side of the Spark shard cogroup."""
@@ -510,22 +771,15 @@ class LocalSearcher:
             for s in np.unique(shards)
         }
 
-    def topk(
-        self, query: str, k: int = 10, mode: str = "any",
-        after: tuple[float, int] | None = None,
-    ) -> list[tuple[int, float]]:
-        """Top-k (doc_id, score), ties broken by ascending doc_id —
-        rank-identical to the distributed Bm25Index.topk path (both
-        modes share wand_topk). ``after``: (score, doc_id) search-after
-        cursor, same contract as Bm25Index.topk — returns the next k
-        ranks strictly after it."""
-        if mode not in ("any", "all"):
-            raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
-        q_terms = sorted(set(tokenize_text(query)))
-        idf = idf_for(self._df_for, q_terms, self.meta["n_docs"])
-        if not idf or (mode == "all" and len(idf) < len(q_terms)):
-            return []
-        return self._topk_with_idf(idf, k, mode, after)
+    def _scan(self, terms, kind: str, body, out: str = "topk") -> list:
+        dl = self._dl
+        return [body(rows, dl[shard]) for shard, rows in self._shard_rows(terms, kind).items()]
+
+    def _cut(self, parts: list, k: int) -> list[tuple]:
+        return _global_topk([p for shards in parts for p in shards], k)
+
+    def _empty(self, out: str = "topk") -> list:
+        return []
 
     def profile_topk(
         self, query: str, k: int = 10
@@ -533,61 +787,11 @@ class LocalSearcher:
         """topk plus the kernel's measured entry counters (see
         wand.topk_disjunctive ``stats``): how many postings entries the
         query scored, per process rather than per claim."""
-        q_terms = sorted(set(tokenize_text(query)))
-        idf = idf_for(self._df_for, q_terms, self.meta["n_docs"])
-        if not idf:
+        idf = query_idf(query, "any", self._df_for, self.meta["n_docs"])
+        if idf is None:
             return [], {}
         stats: dict = {}
-        hits = self._topk_with_idf(idf, k, stats=stats)
-        return hits, stats
-
-    def _topk_with_idf(
-        self,
-        idf: dict[str, float],
-        k: int,
-        mode: str = "any",
-        after: tuple[float, int] | None = None,
-        stats: dict | None = None,
-    ) -> list[tuple[int, float]]:
-        """topk with an INJECTED idf map (federation passes combined-corpus
-        idf; this member's own avgdl normalizes length — same contract as
-        Bm25Index._shard_topk_frame). Conjunctive ``require`` is the full
-        injected vocabulary size, so a member missing a term contributes
-        nothing in mode='all'."""
-        m = self.meta
-        after_ = check_after_cursor(after) if after is not None else None
-        require = len(idf) if mode == "all" else None
-        return _global_topk(
-            [
-                wand_topk(
-                    shard_postings(rows, self._dl[shard], idf, m["k1"], m["b"],
-                                   m["avgdl"], self._tombstones),
-                    k, require, after_, stats,
-                )
-                for shard, rows in self._shard_rows(list(idf), "tf").items()
-            ],
-            k,
-        )
-
-    def highlight(
-        self, query: str, k: int = 10, window: int = 30
-    ) -> list[tuple[int, float, int, int]]:
-        """Top-k with snippets over a positional index — rank- and
-        window-identical to Bm25Index.topk_highlight (highlight_shard).
-        Returns (doc_id, score, snip_start, snip_hits) tuples."""
-        require_positions(self.meta, "highlighting")
-        m = self.meta
-        idf = idf_for(self._df_for, sorted(set(tokenize_text(query))), m["n_docs"])
-        if not idf:
-            return []
-        return _global_topk(
-            [
-                highlight_shard(rows, self._dl[shard], idf, m["k1"], m["b"],
-                                m["avgdl"], k, window, self._tombstones)
-                for shard, rows in self._shard_rows(list(idf), "pos").items()
-            ],
-            k,
-        )
+        return self._cut([self._shard_topk(idf, k, stats=stats)], k), stats
 
     def count(self, query: str, mode: str = "any") -> int:
         """totalHits twin of Bm25Index.count (match_ids)."""
@@ -595,32 +799,8 @@ class LocalSearcher:
         if present is None:
             return 0
         return sum(
-            len(match_ids(rows, mode, len(present), self._tombstones))
+            len(match_ids(rows, mode, len(present), self.tombstones))
             for rows in self._shard_rows(present, "match").values()
-        )
-
-    def topk_boolean(
-        self,
-        must: list[str] | None = None,
-        should: list[str] | None = None,
-        must_not: list[str] | None = None,
-        boosts: dict[str, float] | None = None,
-        k: int = 10,
-    ) -> list[tuple[int, float]]:
-        """Structured boolean top-k — rank-identical to
-        Bm25Index.topk_boolean (boolean_shard)."""
-        m = self.meta
-        plan = boolean_plan(must, should, must_not, boosts, self._df_for, m["n_docs"])
-        if plan is None:
-            return []
-        must_t, idf, not_t, scan = plan
-        return _global_topk(
-            [
-                boolean_shard(rows, self._dl[shard], must_t, idf, not_t,
-                              m["k1"], m["b"], m["avgdl"], k, self._tombstones)
-                for shard, rows in self._shard_rows(scan, "tf").items()
-            ],
-            k,
         )
 
     def expand_fuzzy(
@@ -631,26 +811,6 @@ class LocalSearcher:
         Bm25Index.expand_fuzzy (vocab_fuzzy)."""
         hits = vocab_fuzzy(self._df, term, max_distance)
         return [t for _, _, t in hits[:max_expansions]]
-
-    def topk_fuzzy(
-        self,
-        query: str,
-        k: int = 10,
-        max_distance: int = 1,
-        max_expansions: int = 50,
-        mode: str = "any",
-    ) -> list[tuple[int, float]]:
-        """Fuzzy top-k, rank-identical to Bm25Index.topk_fuzzy (same
-        expansion contract, then the shared topk path)."""
-        from .query import parse_expansion_query
-
-        terms = parse_expansion_query(
-            query, "~", "fuzzy term",
-            lambda b_: self.expand_fuzzy(b_, max_distance, max_expansions),
-        )
-        if not terms:
-            return []
-        return self.topk(" ".join(terms), k, mode=mode)
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Vocabulary terms starting with ``prefix``, (df DESC, term ASC)
@@ -670,75 +830,28 @@ class LocalSearcher:
         hits = vocab_fuzzy(self._df, toks[0], max_distance)
         return [(t, -ndf, d) for d, ndf, t in hits[:k]]
 
-    def topk_prefix(
-        self, query: str, k: int = 10, max_expansions: int = 50, mode: str = "any"
-    ) -> list[tuple[int, float]]:
-        """Wildcard-prefix top-k, rank-identical to Bm25Index.topk_prefix
-        (same expansion contract, then the shared topk path)."""
-        from .query import parse_expansion_query
-
-        terms = parse_expansion_query(
-            query, "*", "prefix",
-            lambda b_: self.expand_prefix(b_, max_expansions),
-        )
-        if not terms:
-            return []
-        return self.topk(" ".join(terms), k, mode=mode)
-
-    def phrase(
-        self, phrase: str, k: int = 10, slop: int = 0
-    ) -> list[tuple[int, float]]:
-        """Exact-phrase (or, with ``slop > 0``, greedy-chain proximity)
-        top-k over a positional index — rank-identical to
-        Bm25Index.topk_phrase (phrase_shard)."""
-        require_positions(self.meta, "phrase search")
-        m = self.meta
-        plan = phrase_plan(phrase, self._df_for, m["n_docs"])
-        if plan is None:
-            return []
-        toks, uniq, idf_sum = plan
-        return _global_topk(
-            [
-                phrase_shard(rows, self._dl[shard], toks, idf_sum, m["k1"],
-                             m["b"], m["avgdl"], k, self._tombstones, slop)
-                for shard, rows in self._shard_rows(uniq, "pos").items()
-            ],
-            k,
-        )
-
 
 class LocalMultiFieldSearcher:
     """Spark-free twin of multifield.MultiFieldSearch.
 
-    Same invariants (shared n_shards → doc→shard co-location across field
-    indexes; one (k1, b) family), same per-shard body (multifield_shard)
-    scoring each field with its OWN statistics, weight-scaled and summed
-    per doc within a shard — so ranks and scores are identical to the
-    distributed path by construction (pinned in tests/test_serve.py)."""
+    Same invariants (field_constants), same per-shard body
+    (multifield_shard) scoring each field with its OWN statistics,
+    weight-scaled and summed per doc within a shard — so ranks and scores
+    are identical to the distributed path by construction (pinned in
+    tests/test_serve.py)."""
 
     def __init__(
         self,
         index_dirs: dict[str, str],
         weights: dict[str, float] | None = None,
     ):
-        if not index_dirs:
-            raise ValueError("at least one field index is required")
         self.searchers = {
             f: LocalSearcher(d) for f, d in sorted(index_dirs.items())
         }
         self.weights = {
             f: float((weights or {}).get(f, 1.0)) for f in self.searchers
         }
-        shards = {s.meta["n_shards"] for s in self.searchers.values()}
-        if len(shards) != 1:
-            raise ValueError(
-                f"field indexes disagree on n_shards ({sorted(shards)}) — "
-                "doc→shard co-location requires one shared value"
-            )
-        kb = {(s.meta["k1"], s.meta["b"]) for s in self.searchers.values()}
-        if len(kb) != 1:
-            raise ValueError(f"field indexes disagree on (k1, b): {sorted(kb)}")
-        (self.k1, self.b), = kb
+        self.k1, self.b = field_constants([s.meta for s in self.searchers.values()])
 
     def topk(self, query: str, k: int = 10) -> list[tuple[int, float]]:
         toks = sorted(set(tokenize_text(query)))
@@ -752,7 +865,7 @@ class LocalMultiFieldSearcher:
             for shard, rows in s._shard_rows(list(idf), "tf").items():
                 per_shard.setdefault(shard, []).append(
                     (rows, s._dl[shard], idf, float(s.meta["avgdl"]),
-                     self.weights[f], s._tombstones)
+                     self.weights[f], s.tombstones)
                 )
         return _global_topk(
             [multifield_shard(fields, self.k1, self.b, k) for fields in per_shard.values()],

@@ -113,9 +113,9 @@ def topk_conjunctive(
 
 def score_union(terms: list[TermPostings]) -> tuple[np.ndarray, np.ndarray]:
     """EVERY (doc_id, score) in the union of the given postings, doc_ids
-    sorted — no top-k cut. ``np.add.at`` adds each doc's entries in
-    concatenation order, so the float64 sums are fixed by the order of
-    ``terms``. The disjunctive kernel cuts this; the collapse/grouping
+    sorted — no top-k cut. ``np.bincount`` adds each doc's entries to
+    0.0 in concatenation order (the bits of an ``np.add.at`` loop), so
+    the float64 sums are fixed by the order of ``terms``. The disjunctive kernel cuts this; the collapse/grouping
     collector needs the full matching set (the per-group best can rank
     arbitrarily deep globally), so this is the honest per-shard cost of
     field collapsing; downstream the rows shrink to one per group before
@@ -126,9 +126,7 @@ def score_union(terms: list[TermPostings]) -> tuple[np.ndarray, np.ndarray]:
     ids = np.concatenate([t.doc_ids for t in terms])
     scores = np.concatenate([t.scores for t in terms])
     uniq, inv = np.unique(ids, return_inverse=True)
-    acc = np.zeros(len(uniq), dtype=np.float64)
-    np.add.at(acc, inv, scores)
-    return uniq, acc
+    return uniq, np.bincount(inv, weights=scores, minlength=len(uniq))
 
 
 def topk_disjunctive(

@@ -137,6 +137,54 @@ class TestWand:
             assert list(zip(ids.tolist(), scores.tolist())) == brute[start:start + 25]
 
 
+def _add_at_union(terms):
+    """score_union as it was written with ``np.add.at`` (the reference)."""
+    terms = [t for t in terms if len(t.doc_ids)]
+    ids = np.concatenate([t.doc_ids for t in terms])
+    uniq, inv = np.unique(ids, return_inverse=True)
+    acc = np.zeros(len(uniq), dtype=np.float64)
+    np.add.at(acc, inv, np.concatenate([t.scores for t in terms]))
+    return uniq, acc
+
+
+class TestScoreUnionBincount:
+    @settings(max_examples=40, deadline=None)
+    @given(
+        seed=st.integers(0, 2**32 - 1),
+        n_entries=st.sampled_from([10, 1_000, 300_000]),
+        n_terms=st.integers(1, 6),
+    )
+    def test_bytes_equal_add_at(self, seed, n_entries, n_terms):
+        """score_union's np.bincount sums are the bytes of the np.add.at
+        form: both add a doc's entries to 0.0 in concatenation order. The
+        scores span six decades, so any other order would flip low bits;
+        search-after pages through topk_disjunctive match the reference
+        cut bit for bit too."""
+        from koncorde_spark.fulltext.wand import score_union
+
+        rng = np.random.default_rng(seed)
+        universe = max(2, n_entries // n_terms)
+        terms = []
+        for _ in range(n_terms):
+            cnt = int(rng.integers(0, universe + 1))  # empty terms too
+            ids = np.sort(rng.choice(universe, cnt, replace=False)).astype(np.int64)
+            terms.append(TermPostings(ids, rng.uniform(0.1, 1, cnt) * 10 ** rng.uniform(-3, 3, cnt)))
+        if not any(len(t.doc_ids) for t in terms):
+            assert len(score_union(terms)[0]) == 0
+            return
+        want_ids, want = _add_at_union(terms)
+        got_ids, got = score_union(terms)
+        assert np.array_equal(got_ids, want_ids)
+        assert got.tobytes() == want.tobytes()
+        order = np.lexsort((want_ids, -want))
+        for c in rng.integers(0, len(order), 3):
+            after = (float(want[order[c]]), int(want_ids[order[c]]))
+            ids, scores = topk_disjunctive(terms, 7, after=after)
+            rest = order[c + 1:c + 8]
+            assert np.array_equal(ids, want_ids[rest])
+            assert scores.tobytes() == want[rest].tobytes()
+
+
 class TestIndexConfigFingerprint:
     # IndexConfig().fingerprint() and IndexConfig(positions=True)
     # .fingerprint() of indexes written while the config still carried

@@ -54,7 +54,7 @@ def test_index_shape(spark, parity_index):
     d, _ = parity_index
     post = pd.read_parquet(f"{d}/postings", columns=["term", "shard"])
     assert post.duplicated(["term", "shard"]).any()  # two segments somewhere
-    assert len(LocalSearcher(d)._tombstones) == 5
+    assert len(LocalSearcher(d).tombstones) == 5
 
 
 @pytest.mark.spark
@@ -147,3 +147,62 @@ def test_shard_rows_equal_term_filter_scan(spark, parity_index):
             assert all(list(rows) == cols for rows in got.values())
             assert canon(got, cols) == want, (kind, terms)
     assert multi  # the lists above reach terms with several segments per shard
+
+
+def test_tiers_share_one_operator_surface():
+    """Both tiers answer every shared top-k operator under the same name,
+    signature and defaults, and neither defines its own copy: the plans
+    live once, in serve.SearchOperators."""
+    import inspect
+
+    from koncorde_spark.fulltext.query import Bm25Index
+    from koncorde_spark.fulltext.serve import LocalSearcher
+
+    ops = (
+        "topk", "topk_prefix", "topk_fuzzy", "topk_boolean", "topk_phrase",
+        "phrase", "topk_highlight", "highlight", "_shard_topk",
+    )
+    for name in ops:
+        spark_sig = inspect.signature(getattr(Bm25Index, name))
+        serve_sig = inspect.signature(getattr(LocalSearcher, name))
+        assert spark_sig.parameters == serve_sig.parameters, name
+        assert name not in vars(Bm25Index) and name not in vars(LocalSearcher), name
+
+
+@pytest.mark.spark
+def test_distributed_vocabulary_matches_driver_dict(spark, parity_index, monkeypatch):
+    """A vocabulary above TERMS_LOCAL_MAX keeps df lookups and expansions
+    in Spark (_df_for's term-filter job; the Catalyst expand_prefix,
+    expand_fuzzy and suggest scans). Every answer equals the driver-dict
+    path's and LocalSearcher's; expand_fuzzy takes its term as given."""
+    from koncorde_spark.fulltext.query import Bm25Index
+    from koncorde_spark.fulltext.serve import LocalSearcher
+
+    d, _ = parity_index
+    dist, local, loc = Bm25Index(spark, d), Bm25Index(spark, d), LocalSearcher(d)
+    monkeypatch.setattr(dist, "TERMS_LOCAL_MAX", 0)
+    assert dist._terms_local_dict() is None and local._terms_local_dict()
+
+    def agree(run, conv=_rows):
+        want = run(loc)
+        assert want, "the comparison saw an empty answer"
+        assert conv(run(dist)) == conv(run(local)) == want
+
+    for q in ("import return", "def ident_00000 function", "zzz_absent import"):
+        for mode in ("any", "all"):
+            if mode == "any" or "zzz" not in q:
+                agree(lambda s: s.topk(q, 9, mode=mode))
+    agree(lambda s: s.topk_prefix("ident_0000* return", 8))
+    agree(lambda s: s.topk_prefix("ident_000* impor*", 8, mode="all"))
+    agree(lambda s: s.topk_fuzzy("imprt~ retur~", 8))
+    agree(lambda s: s.topk_fuzzy("ident_0001~ def", 8, max_distance=2, max_expansions=5))
+    same = lambda x: x  # noqa: E731
+    agree(lambda s: s.expand_prefix("ident_00", 20), same)
+    agree(lambda s: s.expand_fuzzy("ident_00012", 2, 30), same)
+    agree(lambda s: s.expand_fuzzy("Imprt", 2, 30), same)
+    agree(
+        lambda s: s.suggest("ident_0001", 2, 7),
+        lambda r: r if isinstance(r, list) else [tuple(x) for x in r.collect()],
+    )
+    dist.close()
+    local.close()
