@@ -807,7 +807,6 @@ def _q_bm25_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     text_idx = Bm25Index(spark, text_dir)
     mf = MultiFieldSearch(
-        spark,
         {"content": text_idx, "path": Bm25Index(spark, path_dir)},
         weights={"content": 1.0, "path": BM25_FIELDS_PATH_WEIGHT},
     )

@@ -17,6 +17,7 @@ __all__ = [
     # heavier entry points live in their modules:
     # indexer.build_index / append_index / delete_docs / compact_index /
     #   maybe_compact
-    # query.Bm25Index  multifield.MultiFieldSearch  serve.LocalSearcher
+    # query.Bm25Index  serve.LocalSearcher  multifield.MultiFieldSearch (over
+    #   either tier's handles)
     # substring.trigram_corpus / substring_search / regex_search
 ]

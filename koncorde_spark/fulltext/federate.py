@@ -18,8 +18,9 @@ the union of per-shard candidates is tiny (shards × k rows) before the
 single global sort-limit. Statistics combination reads only the terms
 tables' rows for the query terms.
 
-One plan serves both tiers: ``federated_topk`` checks the mode and the
-members' (k1, b) agreement, combines the statistics, asks each member
+One plan serves both tiers: ``federated_topk`` checks that the members
+are of one tier (serve.one_tier), the mode and the members' (k1, b)
+agreement, combines the statistics, asks each member
 for its injected-idf per-shard top-k (serve.SearchOperators._shard_topk)
 and makes one cut across all of them with the members' own ``_cut`` —
 a DataFrame over Bm25Index members, a list over LocalSearcher members
@@ -32,7 +33,7 @@ caller owns partitioning, as with time-partitioned indices).
 
 from __future__ import annotations
 
-from .serve import check_mode, query_idf
+from .serve import check_mode, one_tier, query_idf
 
 
 def combined_stats(members, q_terms: list[str]) -> tuple[int, dict[str, int]]:
@@ -58,10 +59,11 @@ def federated_topk(
     """Global top-k over all member indexes under combined statistics.
     Same contract as topk (modes, search_after cursor, ties by ascending
     internal doc_id). Members are Bm25Index (a DataFrame comes back) or
-    LocalSearcher handles (a list of (doc_id, score)): each member's
-    injected-idf per-shard top-k, one cut across all of them."""
+    LocalSearcher handles (a list of (doc_id, score)), never a mix: each
+    member's injected-idf per-shard top-k, one cut across all of them."""
     if not indexes:
         raise ValueError("federated_topk needs at least one index")
+    one_tier(indexes)
     check_mode(mode)
     k1b = {(float(ix.meta["k1"]), float(ix.meta["b"])) for ix in indexes}
     if len(k1b) != 1:

@@ -12,16 +12,19 @@ heavy stage parallelizes by shard with no shuffle of postings bytes beyond
 the term-pruned scan itself.
 
 ``Bm25Index`` is the Spark tier of serve.SearchOperators, which writes
-every top-k operator's plan once (topk, prefix, fuzzy, boolean, phrase,
-highlight and the injected-idf per-shard top-k federation cuts). This
-module supplies only that class's three primitives — the pruned scan of
-``postings_columns`` cogrouped with the dlpack (``_scan`` over
-``_per_shard`` / ``_cogroup``), the global sort-limit (``_cut`` /
-``_top``) and the empty DataFrame — plus the operators that exist on
-this tier alone: count / matching_ids, the distributed vocabulary
-fallbacks of expand_prefix / expand_fuzzy / suggest, and topk_filtered,
-collapse_topk, topk_many and topk_rescored. Every per-shard body is
-owned by serve.py.
+every top-k operator's plan and count once (topk, count, prefix, fuzzy,
+boolean, phrase, highlight and the injected-idf per-shard top-k
+federation cuts); multifield.MultiFieldSearch runs on the same
+primitives. This module supplies only those primitives — one scan over
+a list of members (``_scan_members``: the union of their pruned scans
+of ``postings_columns``, member-tagged and grouped by shard through
+``_cogroup``, with the union of their dlpacks unless the scan is
+"match"), the global sort-limit (``_cut`` / ``_top``), the count sum
+(``_total``) and the empty DataFrame — plus the operators that exist
+on this tier alone: matching_ids (one "match" ``_scan``), the
+distributed vocabulary fallbacks of expand_prefix / expand_fuzzy /
+suggest, and topk_filtered, collapse_topk, topk_many and
+topk_rescored. Every per-shard body is owned by serve.py.
 """
 
 from __future__ import annotations
@@ -41,7 +44,6 @@ from .serve import (
     SearchOperators,
     idf_for,
     match_ids,
-    match_terms,
     postings_columns,
     query_idf,
     vocab_fuzzy,
@@ -88,26 +90,40 @@ ELIG_SCHEMA = T.StructType(
 
 _PD_DTYPES = {T.LongType: "int64", T.DoubleType: "float64", T.StringType: "object"}
 
-# the output rows SearchOperators names, plus topk_many's (Spark only)
-_SCHEMAS = {"topk": TOPK_SCHEMA, "highlight": HIGHLIGHT_SCHEMA, "topk_many": TOPK_MANY_SCHEMA}
+# the output rows SearchOperators names, plus matching_ids' and topk_many's
+# (Spark only)
+_SCHEMAS = {
+    "topk": TOPK_SCHEMA,
+    "highlight": HIGHLIGHT_SCHEMA,
+    "count": T.StructType([T.StructField("n", T.LongType())]),
+    "ids": T.StructType([T.StructField("doc_id", T.LongType())]),
+    "topk_many": TOPK_MANY_SCHEMA,
+}
 
 
-def _cogroup(posts: DataFrame, packs: DataFrame, schema: T.StructType, body) -> DataFrame:
-    """The one shard cogroup of every search plan: ``body(rows, pack)``
-    runs once per shard on that shard's postings rows and pack row(s), and
+def _cogroup(posts: DataFrame, packs: DataFrame | None, schema: T.StructType, body) -> DataFrame:
+    """The one shard grouping of every search plan: ``body(rows, pack)``
+    runs once per shard on that shard's postings rows and pack row(s) —
+    ``pack`` None when ``packs`` is (a plain groupBy, no dlpack read) — and
     returns a tuple of columns in ``schema`` order, or None for no rows."""
     names = schema.names
     empty = {f.name: pd.Series(dtype=_PD_DTYPES[type(f.dataType)]) for f in schema.fields}
 
-    def cogrouped(rows: pd.DataFrame, pack: pd.DataFrame) -> pd.DataFrame:
-        out = body(rows, pack) if len(rows) and len(pack) else None
+    def frame(out) -> pd.DataFrame:
         return pd.DataFrame(empty if out is None else dict(zip(names, out)))
 
-    return (
-        posts.groupBy("shard")
-        .cogroup(packs.groupBy("shard"))
-        .applyInPandas(lambda pl, pr: cogrouped(pl, pr), schema=schema)
+    by_shard = posts.groupBy("shard")
+    if packs is None:
+        return by_shard.applyInPandas(lambda rows: frame(body(rows, None)), schema=schema)
+    return by_shard.cogroup(packs.groupBy("shard")).applyInPandas(
+        lambda rows, pack: frame(body(rows, pack) if len(rows) and len(pack) else None),
+        schema=schema,
     )
+
+
+def _by_member(frame: pd.DataFrame, n: int) -> list[pd.DataFrame]:
+    """One shard's rows of a member-tagged scan, split per member ordinal."""
+    return [frame] if n == 1 else [frame[frame["member"] == i] for i in range(n)]
 
 
 def _top(frame: DataFrame, k: int) -> DataFrame:
@@ -197,30 +213,44 @@ class Bm25Index(SearchOperators):
         rows = self.terms.where(F.col("term").isin(q_terms)).collect()
         return {r["term"]: int(r["df"]) for r in rows}
 
-    def _per_shard(
-        self, terms, kind: str, schema: T.StructType, body, packs: DataFrame | None = None,
-    ) -> DataFrame:
-        """One pruned postings scan over ``terms`` — exactly the ``kind``
+    def _postings(self, terms, kind: str) -> DataFrame:
+        """The pruned postings scan of ``terms``: exactly the ``kind``
         columns of serve.postings_columns, so a positional index's ``pos``
-        never ships to a non-positional operator — cogrouped by shard with
-        the dlpack (or ``packs``); see _cogroup."""
-        posts = self.postings.where(F.col("term").isin(list(terms))).select(
+        never ships to a non-positional operator."""
+        return self.postings.where(F.col("term").isin(list(terms))).select(
             "shard", *postings_columns(kind)
         )
-        return _cogroup(posts, self.dlpack if packs is None else packs, schema, body)
 
-    def _scan(self, terms, kind: str, body, out: str = "topk") -> DataFrame:
-        """SearchOperators' per-shard scan: _per_shard with the shard's
-        dlpack decoded through the worker-side cache, rows in the ``out``
-        schema."""
-        ctx = self._cache_ctx
-        return self._per_shard(
-            terms, kind, _SCHEMAS[out],
-            lambda rows, pack: body(rows, _decode_dlpack_ctx(pack, ctx)),
-        )
+    def _scan_members(self, members, kind: str, body, out: str = "topk") -> DataFrame:
+        """SearchOperators' scan: the union of the members' pruned postings
+        scans, each row tagged with its member ordinal, cogrouped by shard
+        with the union of their dlpacks — or, for a "match" scan, grouped
+        by shard with no dlpack. Each member's pack decodes through the
+        worker-side cache under that member's own lineage (_cache_ctx)."""
+        n = len(members)
+        posts = reduce(DataFrame.unionByName, [
+            ix._postings(terms, kind).withColumn("member", F.lit(i))
+            for i, (ix, terms) in enumerate(members)
+        ])
+        if kind == "match":
+            return _cogroup(posts, None, _SCHEMAS[out], lambda rows, _: body(
+                [(r, None) if len(r) else None for r in _by_member(rows, n)]
+            ))
+        packs = reduce(DataFrame.unionByName, [
+            ix.dlpack.select("shard", "n", "doc_ids", "dls").withColumn("member", F.lit(i))
+            for i, (ix, _) in enumerate(members)
+        ])
+        ctxs = [ix._cache_ctx for ix, _ in members]
+        return _cogroup(posts, packs, _SCHEMAS[out], lambda rows, pack: body([
+            (r, _decode_dlpack_ctx(p, ctx)) if len(r) and len(p) else None
+            for r, p, ctx in zip(_by_member(rows, n), _by_member(pack, n), ctxs)
+        ]))
 
     def _cut(self, parts: list[DataFrame], k: int) -> DataFrame:
         return _top(reduce(DataFrame.unionByName, parts), k)
+
+    def _total(self, part: DataFrame) -> int:
+        return int(part.agg(F.sum("n")).first()[0] or 0)
 
     def _empty(self, out: str = "topk") -> DataFrame:
         return self.spark.createDataFrame([], _SCHEMAS[out])
@@ -336,38 +366,6 @@ class Bm25Index(SearchOperators):
             .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
         )
 
-    def _match_frame(self, present: list[str], mode: str, schema: T.StructType, emit) -> DataFrame:
-        """serve.match_ids per shard over the ``present`` terms (one pruned
-        "match" scan, no dlpack), each shard's ids emitted as the
-        ``emit(ids)`` columns of ``schema``."""
-        need, tomb, names = len(present), self.tombstones, schema.names
-        posts = self.postings.where(F.col("term").isin(present)).select(
-            "shard", *postings_columns("match")
-        )
-        return posts.groupBy("shard").applyInPandas(
-            lambda _, pdf: pd.DataFrame(
-                dict(zip(names, emit(match_ids(pdf, mode, need, tomb))))
-            ),
-            schema=schema,
-        )
-
-    def count(self, query: str, mode: str = "any") -> int:
-        """Number of live documents matching the query — "any": union of
-        the terms' posting lists; "all": intersection — without scoring
-        or a top-k cut (the searcher's totalHits). Tombstones excluded.
-        One pruned postings scan; per-shard vectorized set arithmetic;
-        counts sum across shards (doc-disjoint by construction)."""
-        present = match_terms(query, mode, self._df_for)
-        if present is None:
-            return 0
-        schema = T.StructType([T.StructField("n", T.LongType())])
-        rows = (
-            self._match_frame(present, mode, schema, lambda ids: ([len(ids)],))
-            .agg(F.sum("n").alias("n"))
-            .collect()
-        )
-        return int(rows[0]["n"] or 0)
-
     def matching_ids(self, query: str, mode: str = "any") -> DataFrame:
         """FILTER-context query: every live doc matching the query, as a
         DataFrame of internal doc_ids — no scoring, no top-k cut. The
@@ -375,11 +373,11 @@ class Bm25Index(SearchOperators):
         metadata and ORDER BY any column), boolean filters feeding other
         jobs, and set arithmetic between queries. Same per-shard
         vectorized union/intersection as count(), emitting the ids."""
-        out_schema = T.StructType([T.StructField("doc_id", T.LongType())])
-        present = match_terms(query, mode, self._df_for)
-        if present is None:
-            return self.spark.createDataFrame([], out_schema)
-        return self._match_frame(present, mode, out_schema, lambda ids: (ids,))
+        idf = query_idf(query, mode, self._df_for, self.meta["n_docs"])
+        if idf is None:
+            return self._empty("ids")
+        need, tomb = len(idf), self.tombstones
+        return self._scan(idf, "match", lambda rows, _: (match_ids(rows, mode, need, tomb),), "ids")
 
     def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
         """Vocabulary terms starting with ``prefix``, highest-df first
@@ -484,7 +482,7 @@ class Bm25Index(SearchOperators):
             dl = _decode_dlpack_ctx(pack_pdf, ctx)
             return wand_topk(postings(rows, dl, allowed.astype(np.int64)), k)
 
-        return _top(self._per_shard(idf_map, "tf", TOPK_SCHEMA, body, packs), k)
+        return _top(_cogroup(self._postings(idf_map, "tf"), packs, TOPK_SCHEMA, body), k)
 
     def topk_many(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """Top-k per query for a BATCH of queries in ONE Spark job.

@@ -15,15 +15,17 @@ frame inside a Spark cogroup, a column dict here — sorts them by term
 and returns that shard's (ids, scores), plus snippets for highlight.
 
 The plans around those bodies are written once too: ``SearchOperators``
-defines topk, topk_prefix, topk_fuzzy, topk_boolean, topk_phrase
-(alias ``phrase``), topk_highlight (alias ``highlight``) and the
-injected-idf per-shard top-k that federation cuts. ``Bm25Index``
-(query.py, Spark) and ``LocalSearcher`` (here, in-process) inherit them
-and supply only a per-shard scan, a global cut and an empty result, so
-the two tiers are bit-identical by construction. ``MultiFieldSearch``
-and ``LocalMultiFieldSearcher`` share multifield_shard and the
-constructor check ``field_constants``. Postings are decoded through
-this module's ``delta_decode`` / ``varint_decode`` names.
+defines topk, count, topk_prefix, topk_fuzzy, topk_boolean,
+topk_phrase (alias ``phrase``), topk_highlight (alias ``highlight``)
+and the injected-idf per-shard top-k that federation cuts.
+``Bm25Index`` (query.py, Spark) and ``LocalSearcher`` (here,
+in-process) inherit them and supply only one scan over a list of
+``(index, terms)`` members (``_scan_members``; ``_scan`` is its
+one-member case), a global cut, a count sum and an empty result, so
+the two tiers are bit-identical by construction. The one
+multifield.MultiFieldSearch plan runs on either tier through the same
+primitives. Postings are decoded through this module's
+``delta_decode`` / ``varint_decode`` names.
 
 The distributed job (indexer.py) builds the index; serving queries does
 not need a Spark job at all — a query touches only the posting rows of its
@@ -227,18 +229,6 @@ def query_idf(query: str, mode: str, df_for, n_docs: int) -> dict[str, float] | 
     if not idf or (mode == "all" and len(idf) < len(q_terms)):
         return None
     return idf
-
-
-def match_terms(query: str, mode: str, df_for) -> list[str] | None:
-    """Sorted present terms of a count / matching_ids query, or None when
-    nothing can match (no term in the vocabulary; in mode "all", any)."""
-    check_mode(mode)
-    toks = sorted(set(tokenize_text(query)))
-    dfs = df_for(toks)
-    present = [t for t in toks if t in dfs]
-    if not present or (mode == "all" and len(present) < len(toks)):
-        return None
-    return present
 
 
 def match_ids(rows, mode: str, need: int, tombstones: np.ndarray) -> np.ndarray:
@@ -463,23 +453,13 @@ def _global_topk(parts, k: int) -> list[tuple]:
     return list(zip(*(c[order].tolist() for c in cols)))
 
 
-def field_constants(metas: list[dict]) -> tuple[float, float]:
-    """The (k1, b) of a multi-field search's field indexes (their
-    ``meta``s); raises unless there is at least one and they share
-    n_shards (doc→shard co-location) and (k1, b) (one scoring family)."""
-    if not metas:
-        raise ValueError("at least one field index is required")
-    shards = {m["n_shards"] for m in metas}
-    if len(shards) != 1:
-        raise ValueError(
-            f"field indexes disagree on n_shards ({sorted(shards)}) — "
-            "doc→shard co-location requires one shared value"
-        )
-    kb = {(m["k1"], m["b"]) for m in metas}
-    if len(kb) != 1:
-        raise ValueError(f"field indexes disagree on (k1, b): {sorted(kb)}")
-    (kb,) = kb
-    return kb
+def one_tier(indexes) -> None:
+    """Raise unless the ``indexes`` of a federation or a multi-field
+    search are all of one tier (Bm25Index or LocalSearcher): a plan scans
+    and cuts every member's parts with the first member's primitives."""
+    tiers = sorted({type(ix).__name__ for ix in indexes})
+    if len(tiers) > 1:
+        raise ValueError(f"members mix search tiers ({', '.join(tiers)}) — use one tier")
 
 
 # the part before '*' / '~' in an expansion query must itself be a single
@@ -518,21 +498,30 @@ class SearchOperators:
 
     A tier (query.Bm25Index on Spark, LocalSearcher here) holds ``meta``,
     ``tombstones`` (sorted deleted doc_ids) and ``_df_for(terms)``, and
-    supplies three primitives:
+    supplies its primitives:
 
-    - ``_scan(terms, kind, body, out="topk")`` runs ``body(rows, dl)`` once
-      per shard over the ``postings_columns(kind)`` rows of ``terms``,
-      with ``dl`` that shard's decoded (doc_ids, dls) pack. ``body``
-      returns the shard's columns of the ``out`` rows — "topk": (ids,
-      scores); "highlight": (ids, scores, snip_start, snip_hits) — or
-      None. Returns the tier's per-shard parts.
+    - ``_scan_members(members, kind, body, out="topk")``: ``members`` is
+      a list of ``(index, terms)`` of this tier sharing n_shards. Per
+      shard, ``body`` gets one ``(rows, dl)`` or None per member: the
+      ``postings_columns(kind)`` rows of that member's ``terms`` and the
+      member's decoded (doc_ids, dls) pack of the shard — None for a
+      "match" scan, which reads no doc lengths. ``body`` returns the
+      shard's columns of the ``out`` rows — "topk": (ids, scores);
+      "highlight": (ids, scores, snip_start, snip_hits); "count": (n,);
+      "ids": (ids,) — or None. Returns the tier's per-shard parts.
     - ``_cut(parts, k)``: the global sort-limit (score DESC, doc_id ASC)
-      over a list of ``_scan`` results — one per federation member.
+      over a list of scans — one per federation member.
+    - ``_total(part)``: the sum of a "count" scan's per-shard counts.
     - ``_empty(out="topk")``: the empty result.
 
     Results are DataFrames on the Spark tier and lists of tuples here.
     Bodies close over locals, never ``self``: the Spark tier ships them
     to executors, and a Bm25Index holds a SparkSession."""
+
+    def _scan(self, terms, kind: str, body, out: str = "topk"):
+        """The one-member scan: ``body(rows, dl)`` per shard holding rows
+        of ``terms``."""
+        return self._scan_members([(self, terms)], kind, lambda parts: body(*parts[0]), out)
 
     def _bm25(self) -> tuple:
         """(k1, b, avgdl, tombstones) — what a scored body binds."""
@@ -595,6 +584,20 @@ class SearchOperators:
         if idf is None:
             return self._empty()
         return self._cut([self._shard_topk(idf, k, mode, after)], k)
+
+    def count(self, query: str, mode: str = "any") -> int:
+        """Number of live documents matching the query — "any": union of
+        the terms' posting lists; "all": intersection — without scoring
+        or a top-k cut (the searcher's totalHits). One "match" scan (no
+        doc lengths), per-shard set arithmetic (match_ids), counts summed
+        across shards (doc-disjoint by construction)."""
+        idf = query_idf(query, mode, self._df_for, self.meta["n_docs"])
+        if idf is None:
+            return 0
+        need, tomb = len(idf), self.tombstones
+        return self._total(self._scan(
+            idf, "match", lambda rows, _: ([len(match_ids(rows, mode, need, tomb))],), "count"
+        ))
 
     def topk_prefix(
         self, query: str, k: int = 10, max_expansions: int = 50, mode: str = "any"
@@ -771,12 +774,27 @@ class LocalSearcher(SearchOperators):
             for s in np.unique(shards)
         }
 
-    def _scan(self, terms, kind: str, body, out: str = "topk") -> list:
-        dl = self._dl
-        return [body(rows, dl[shard]) for shard, rows in self._shard_rows(terms, kind).items()]
+    def _scan_members(self, members, kind: str, body, out: str = "topk") -> list:
+        """Each member's _shard_rows with its decoded pack of the shard
+        (no pack for "match"); one body call per shard any member holds."""
+        scans = [
+            (ix._shard_rows(terms, kind), None if kind == "match" else ix._dl)
+            for ix, terms in members
+        ]
+        shards = sorted({s for rows, _ in scans for s in rows})
+        return [
+            body([
+                (rows[s], dl if dl is None else dl[s]) if s in rows else None
+                for rows, dl in scans
+            ])
+            for s in shards
+        ]
 
     def _cut(self, parts: list, k: int) -> list[tuple]:
         return _global_topk([p for shards in parts for p in shards], k)
+
+    def _total(self, part: list) -> int:
+        return sum(int(p[0][0]) for p in part)
 
     def _empty(self, out: str = "topk") -> list:
         return []
@@ -792,16 +810,6 @@ class LocalSearcher(SearchOperators):
             return [], {}
         stats: dict = {}
         return self._cut([self._shard_topk(idf, k, stats=stats)], k), stats
-
-    def count(self, query: str, mode: str = "any") -> int:
-        """totalHits twin of Bm25Index.count (match_ids)."""
-        present = match_terms(query, mode, self._df_for)
-        if present is None:
-            return 0
-        return sum(
-            len(match_ids(rows, mode, len(present), self.tombstones))
-            for rows in self._shard_rows(present, "match").values()
-        )
 
     def expand_fuzzy(
         self, term: str, max_distance: int = 1, max_expansions: int = 50
@@ -830,44 +838,3 @@ class LocalSearcher(SearchOperators):
         hits = vocab_fuzzy(self._df, toks[0], max_distance)
         return [(t, -ndf, d) for d, ndf, t in hits[:k]]
 
-
-class LocalMultiFieldSearcher:
-    """Spark-free twin of multifield.MultiFieldSearch.
-
-    Same invariants (field_constants), same per-shard body
-    (multifield_shard) scoring each field with its OWN statistics,
-    weight-scaled and summed per doc within a shard — so ranks and scores
-    are identical to the distributed path by construction (pinned in
-    tests/test_serve.py)."""
-
-    def __init__(
-        self,
-        index_dirs: dict[str, str],
-        weights: dict[str, float] | None = None,
-    ):
-        self.searchers = {
-            f: LocalSearcher(d) for f, d in sorted(index_dirs.items())
-        }
-        self.weights = {
-            f: float((weights or {}).get(f, 1.0)) for f in self.searchers
-        }
-        self.k1, self.b = field_constants([s.meta for s in self.searchers.values()])
-
-    def topk(self, query: str, k: int = 10) -> list[tuple[int, float]]:
-        toks = sorted(set(tokenize_text(query)))
-        if not toks:
-            return []
-        per_shard: dict[int, list[tuple]] = {}
-        for f, s in self.searchers.items():
-            idf = idf_for(s._df_for, toks, s.meta["n_docs"])
-            if not idf:
-                continue
-            for shard, rows in s._shard_rows(list(idf), "tf").items():
-                per_shard.setdefault(shard, []).append(
-                    (rows, s._dl[shard], idf, float(s.meta["avgdl"]),
-                     self.weights[f], s.tombstones)
-                )
-        return _global_topk(
-            [multifield_shard(fields, self.k1, self.b, k) for fields in per_shard.values()],
-            k,
-        )

@@ -232,3 +232,15 @@ def test_mixed_constants_count_ok_topk_rejected_locally(
     assert lf.count("import") == n_spark > 0
     with pytest.raises(ValueError, match="constants"):
         lf.topk("import", 5)
+
+
+@pytest.mark.spark
+def test_federated_rejects_mixed_tiers(fed_members):
+    """A member list mixing Bm25Index and LocalSearcher raises at the
+    call, naming both tiers — not later inside one tier's cut."""
+    from koncorde_spark.fulltext.serve import LocalSearcher
+
+    _, (a, b) = fed_members
+    for members in ([a, LocalSearcher(b.index_dir)], [LocalSearcher(a.index_dir), b]):
+        with pytest.raises(ValueError, match="mix search tiers.*Bm25Index.*LocalSearcher"):
+            federated_topk(members, Q, 5)

@@ -1875,7 +1875,7 @@ class TestMultiField:
         from koncorde_spark.fulltext.query import Bm25Index
 
         idx = Bm25Index(spark, bm25_index_dir)
-        mf = MultiFieldSearch(spark, {"content": idx})
+        mf = MultiFieldSearch({"content": idx})
         for q in ("import return def", "def function import return"):
             a = mf.topk(q, 12).toPandas()
             b = idx.topk(q, 12).toPandas()
@@ -1891,7 +1891,6 @@ class TestMultiField:
 
         w_path = 3.0
         mf = MultiFieldSearch(
-            spark,
             {"content": Bm25Index(spark, bm25_index_dir),
              "path": Bm25Index(spark, path_index_dir)},
             weights={"content": 1.0, "path": w_path},
@@ -1923,7 +1922,6 @@ class TestMultiField:
 
         ci = Bm25Index(spark, bm25_index_dir)
         mf = MultiFieldSearch(
-            spark,
             {"content": ci, "path": Bm25Index(spark, path_index_dir)},
             weights={"content": 1.0, "path": 0.0},
         )
@@ -1946,14 +1944,31 @@ class TestMultiField:
                     IndexConfig(n_shards=2), resume=False)
         with pytest.raises(ValueError, match="n_shards"):
             MultiFieldSearch(
-                spark,
                 {"a": Bm25Index(spark, bm25_index_dir),
                  "b": Bm25Index(spark, other)},
             )
         with pytest.raises(ValueError, match="at least one"):
-            MultiFieldSearch(spark, {})
-        mf = MultiFieldSearch(spark, {"a": Bm25Index(spark, bm25_index_dir)})
+            MultiFieldSearch({})
+        mf = MultiFieldSearch({"a": Bm25Index(spark, bm25_index_dir)})
         assert mf.topk("", 5).count() == 0
+
+    def test_weights_validated(self, spark, bm25_index_dir, path_index_dir):
+        """A weight for no field (a typo would score that field at 1.0)
+        and a non-finite weight (NaN poisons every score) raise at the
+        constructor."""
+        from koncorde_spark.fulltext.multifield import MultiFieldSearch
+        from koncorde_spark.fulltext.query import Bm25Index
+
+        fields = {"content": Bm25Index(spark, bm25_index_dir),
+                  "path": Bm25Index(spark, path_index_dir)}
+        with pytest.raises(ValueError, match=r"name no field: \['pth'\]"):
+            MultiFieldSearch(fields, weights={"pth": 3.0})
+        for w in (float("nan"), float("inf"), -float("inf")):
+            with pytest.raises(ValueError, match="finite"):
+                MultiFieldSearch(fields, weights={"path": w})
+        assert MultiFieldSearch(fields, weights={"path": 3.0}).weights == {
+            "content": 1.0, "path": 3.0,
+        }
 
 
 class TestFuzzySearch:

@@ -169,10 +169,33 @@ def test_multifield_plan_pushes_terms_per_field(spark, bm25_index_dir):
     from koncorde_spark.fulltext.query import Bm25Index
 
     idx = Bm25Index(spark, bm25_index_dir)
-    mf = MultiFieldSearch(spark, {"a": idx, "b": idx})
+    mf = MultiFieldSearch({"a": idx, "b": idx})
     plan = executed_plan(mf.topk("import return", 5))
     assert len(re.findall(r"PushedFilters: \[In\(term", plan)) >= 2, plan
     assert "TakeOrderedAndProject" in plan, plan
+
+
+@pytest.mark.spark
+def test_count_plans_scan_no_dlpack(spark, bm25_index_dir, monkeypatch):
+    """count and matching_ids run one "match" scan: the term-pruned
+    postings (doc ids only, no tfs) grouped by shard, with no dlpack
+    read and no cogroup — counting needs no doc lengths."""
+    from koncorde_spark.fulltext.query import Bm25Index
+
+    idx = Bm25Index(spark, bm25_index_dir)
+    frames = []
+    monkeypatch.setattr(idx, "_total", lambda part: frames.append(part) or 0)
+    for mode in ("any", "all"):
+        idx.count("import return", mode=mode)
+        frames.append(idx.matching_ids("import return", mode=mode))
+    assert len(frames) == 4
+    for df in frames:
+        plan = executed_plan(df)
+        assert re.search(r"PushedFilters: \[In\(term", plan), plan
+        assert "dlpack" not in plan and "InMemoryTableScan" not in plan, plan
+        assert "CoGroup" not in plan and "FlatMapGroupsInPandas" in plan, plan
+        m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
+        assert m and "tfs" not in m.group(1), plan
 
 
 @pytest.mark.spark

@@ -43,13 +43,12 @@ def test_serve_equals_spark_path(spark, bm25_index_dir):
 def test_serve_multifield_equals_spark_path(
     spark, small_corpus_pdf, bm25_index_dir, tmp_path_factory
 ):
-    """LocalMultiFieldSearcher is rank- and score-identical to the
-    distributed MultiFieldSearch (shared multifield_shard body, same per-field
-    statistics and weights)."""
+    """MultiFieldSearch over LocalSearcher fields is rank- and
+    score-identical to it over Bm25Index fields (one plan, shared
+    multifield_shard body, same per-field statistics and weights)."""
     from koncorde_spark.fulltext.indexer import IndexConfig, build_index
     from koncorde_spark.fulltext.multifield import MultiFieldSearch
     from koncorde_spark.fulltext.query import Bm25Index
-    from koncorde_spark.fulltext.serve import LocalMultiFieldSearcher
 
     path_dir = str(tmp_path_factory.mktemp("mfservepath"))
     pdf = small_corpus_pdf.copy()
@@ -59,13 +58,13 @@ def test_serve_multifield_equals_spark_path(
 
     weights = {"content": 1.0, "path": 3.0}
     mf = MultiFieldSearch(
-        spark,
         {"content": Bm25Index(spark, bm25_index_dir),
          "path": Bm25Index(spark, path_dir)},
         weights=weights,
     )
-    local = LocalMultiFieldSearcher(
-        {"content": bm25_index_dir, "path": path_dir}, weights=weights
+    local = MultiFieldSearch(
+        {"content": LocalSearcher(bm25_index_dir), "path": LocalSearcher(path_dir)},
+        weights=weights,
     )
     for q, k in [
         ("import src_00007 py", 15),
@@ -79,6 +78,18 @@ def test_serve_multifield_equals_spark_path(
         ]
         got = local.topk(q, k)
         assert got == dist, q
+
+
+@pytest.mark.spark
+def test_multifield_rejects_mixed_tiers(spark, bm25_index_dir):
+    """Fields mixing Bm25Index and LocalSearcher raise at the
+    constructor, naming both tiers."""
+    from koncorde_spark.fulltext.multifield import MultiFieldSearch
+    from koncorde_spark.fulltext.query import Bm25Index
+
+    with pytest.raises(ValueError, match="mix search tiers.*Bm25Index.*LocalSearcher"):
+        MultiFieldSearch({"content": LocalSearcher(bm25_index_dir),
+                          "path": Bm25Index(spark, bm25_index_dir)})
 
 
 def test_shard_scores_independent_of_row_order():
@@ -146,10 +157,10 @@ def test_shard_scores_independent_of_row_order():
 
 def test_serve_multifield_single_field_equals_topk(bm25_index_dir):
     """One field at weight 1.0 degenerates to plain topk."""
-    from koncorde_spark.fulltext.serve import LocalMultiFieldSearcher
+    from koncorde_spark.fulltext.multifield import MultiFieldSearch
 
     s = LocalSearcher(bm25_index_dir)
-    mf = LocalMultiFieldSearcher({"content": bm25_index_dir})
+    mf = MultiFieldSearch({"content": s})
     for q, k in QUERIES:
         # bit-equal: both score through decode_segments' tf part and
         # score_union's canonical-term-order sum
@@ -157,10 +168,15 @@ def test_serve_multifield_single_field_equals_topk(bm25_index_dir):
 
 
 def test_serve_multifield_validation(bm25_index_dir):
-    from koncorde_spark.fulltext.serve import LocalMultiFieldSearcher
+    from koncorde_spark.fulltext.multifield import MultiFieldSearch
 
     with pytest.raises(ValueError, match="at least one"):
-        LocalMultiFieldSearcher({})
+        MultiFieldSearch({})
+    s = LocalSearcher(bm25_index_dir)
+    with pytest.raises(ValueError, match=r"name no field: \['pth'\]"):
+        MultiFieldSearch({"content": s, "path": s}, weights={"pth": 3.0})
+    with pytest.raises(ValueError, match="finite"):
+        MultiFieldSearch({"content": s, "path": s}, weights={"path": float("nan")})
 
 
 def test_serve_repeats_identical(bm25_index_dir):

@@ -59,6 +59,7 @@ def test_index_shape(spark, parity_index):
 
 @pytest.mark.spark
 def test_tiers_bit_identical(spark, parity_index):
+    from koncorde_spark.fulltext.multifield import MultiFieldSearch
     from koncorde_spark.fulltext.query import Bm25Index
     from koncorde_spark.fulltext.serve import LocalSearcher
 
@@ -97,7 +98,13 @@ def test_tiers_bit_identical(spark, parity_index):
 
     same(_rows(idx.topk_prefix("ident_0000* return", 8)), loc.topk_prefix("ident_0000* return", 8))
     same(_rows(idx.topk_fuzzy("imprt~ retur~", 8)), loc.topk_fuzzy("imprt~ retur~", 8))
-    assert checked >= 15  # the comparisons above saw hits, not empty lists
+
+    weights = {"a": 1.0, "b": 2.5}
+    mf_dist = MultiFieldSearch({"a": idx, "b": idx}, weights)
+    mf_loc = MultiFieldSearch({"a": loc, "b": loc}, weights)
+    for q in ("import return", "def ident_00000 function"):
+        same(_rows(mf_dist.topk(q, 9)), mf_loc.topk(q, 9))
+    assert checked >= 17  # the comparisons above saw hits, not empty lists
 
 
 @pytest.mark.spark
@@ -150,8 +157,9 @@ def test_shard_rows_equal_term_filter_scan(spark, parity_index):
 
 
 def test_tiers_share_one_operator_surface():
-    """Both tiers answer every shared top-k operator under the same name,
+    """Both tiers answer every shared operator under the same name,
     signature and defaults, and neither defines its own copy: the plans
+    (and the one-member ``_scan`` over each tier's ``_scan_members``)
     live once, in serve.SearchOperators."""
     import inspect
 
@@ -159,8 +167,8 @@ def test_tiers_share_one_operator_surface():
     from koncorde_spark.fulltext.serve import LocalSearcher
 
     ops = (
-        "topk", "topk_prefix", "topk_fuzzy", "topk_boolean", "topk_phrase",
-        "phrase", "topk_highlight", "highlight", "_shard_topk",
+        "topk", "count", "topk_prefix", "topk_fuzzy", "topk_boolean", "topk_phrase",
+        "phrase", "topk_highlight", "highlight", "_shard_topk", "_scan",
     )
     for name in ops:
         spark_sig = inspect.signature(getattr(Bm25Index, name))
