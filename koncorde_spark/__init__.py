@@ -20,6 +20,8 @@ Public surface:
 
 from __future__ import annotations
 
+import sys
+
 from .engine.builder import FilterEngine
 from .errors import KoncordeError, KoncordeParseError
 from .geo.geopoint import convert_distance, convert_geopoint
@@ -121,3 +123,14 @@ class Koncorde:
 
     convert_distance = staticmethod(convert_distance)
     convert_geopoint = staticmethod(convert_geopoint)
+
+
+# In a PySpark worker process only (its task set-up marks SparkFiles before
+# any task imports this package; the driver keeps stock imports): stop each
+# task from re-reading the worker's zip archive directories — see
+# spark/_worker_imports.py.
+_spark_files = sys.modules.get("pyspark.core.files")
+if _spark_files is not None and _spark_files.SparkFiles._is_running_on_worker:
+    from .spark._worker_imports import install as _install_worker_imports
+
+    _install_worker_imports()

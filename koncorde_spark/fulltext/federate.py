@@ -18,9 +18,9 @@ the union of per-shard candidates is tiny (shards × k rows) before the
 single global sort-limit. Statistics combination reads only the terms
 tables' rows for the query terms.
 
-One plan serves both tiers: ``federated_topk`` checks that the members
-are of one tier (serve.one_tier), the mode and the members' (k1, b)
-agreement, combines the statistics, asks each member
+One plan serves both tiers: ``federated_topk`` checks the mode and that
+the members are of one tier and agree on (k1, b) (serve.check_members),
+combines the statistics, asks each member
 for its injected-idf per-shard top-k (serve.SearchOperators._shard_topk)
 and makes one cut across all of them with the members' own ``_cut`` —
 a DataFrame over Bm25Index members, a list over LocalSearcher members
@@ -33,7 +33,7 @@ caller owns partitioning, as with time-partitioned indices).
 
 from __future__ import annotations
 
-from .serve import check_mode, one_tier, query_idf
+from .serve import check_members, check_mode, query_idf
 
 
 def combined_stats(members, q_terms: list[str]) -> tuple[int, dict[str, int]]:
@@ -63,11 +63,8 @@ def federated_topk(
     member's injected-idf per-shard top-k, one cut across all of them."""
     if not indexes:
         raise ValueError("federated_topk needs at least one index")
-    one_tier(indexes)
+    check_members(indexes)
     check_mode(mode)
-    k1b = {(float(ix.meta["k1"]), float(ix.meta["b"])) for ix in indexes}
-    if len(k1b) != 1:
-        raise ValueError(f"member indexes disagree on BM25 constants: {k1b}")
     n_docs = sum(int(ix.meta["n_docs"]) for ix in indexes)
     idf = query_idf(query, mode, lambda ts: combined_stats(indexes, ts)[1], n_docs)
     if idf is None:

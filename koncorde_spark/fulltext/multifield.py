@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import math
 
-from .serve import idf_for, multifield_shard, one_tier
+from .serve import check_members, idf_for, multifield_shard
 from .tokenizer import tokenize_text
 
 
@@ -60,11 +60,7 @@ class MultiFieldSearch:
                 f"field indexes disagree on n_shards ({sorted(shards)}) — "
                 "doc→shard co-location requires one shared value"
             )
-        kb = {(m["k1"], m["b"]) for m in metas}
-        if len(kb) != 1:
-            raise ValueError(f"field indexes disagree on (k1, b): {sorted(kb)}")
-        ((self.k1, self.b),) = kb
-        one_tier(self.indexes.values())
+        self.k1, self.b = check_members(self.indexes.values())
         weights = weights or {}
         unknown = sorted(set(weights) - set(self.indexes))
         if unknown:

@@ -453,13 +453,18 @@ def _global_topk(parts, k: int) -> list[tuple]:
     return list(zip(*(c[order].tolist() for c in cols)))
 
 
-def one_tier(indexes) -> None:
-    """Raise unless the ``indexes`` of a federation or a multi-field
-    search are all of one tier (Bm25Index or LocalSearcher): a plan scans
-    and cuts every member's parts with the first member's primitives."""
+def check_members(indexes) -> tuple[float, float]:
+    """The member-list rule of a federation's top-k and of a multi-field
+    search: every member is of one tier (Bm25Index or LocalSearcher) — a
+    plan scans and cuts every member's parts with the first member's
+    primitives — and all share the BM25 constants, returned as (k1, b)."""
     tiers = sorted({type(ix).__name__ for ix in indexes})
     if len(tiers) > 1:
         raise ValueError(f"members mix search tiers ({', '.join(tiers)}) — use one tier")
+    k1b = sorted({(float(ix.meta["k1"]), float(ix.meta["b"])) for ix in indexes})
+    if len(k1b) != 1:
+        raise ValueError(f"members disagree on BM25 constants (k1, b): {k1b}")
+    return k1b[0]
 
 
 # the part before '*' / '~' in an expansion query must itself be a single

@@ -6,6 +6,11 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def pytest_configure(config):
+    config.addinivalue_line("markers", "spark: runs jobs on the session's local Spark")
+    config.addinivalue_line("markers", "slow: runs a spark-submit job of its own")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from koncorde_spark.spark import get_spark

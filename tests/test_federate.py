@@ -182,7 +182,7 @@ def test_federated_rejects_mixed_constants(spark, small_corpus_pdf, tmp_path):
         out2, IndexConfig(n_shards=2), resume=False,
     )
     b = Bm25Index(spark, out2)
-    with pytest.raises(ValueError, match="constants"):
+    with pytest.raises(ValueError, match=r"members disagree on BM25 constants \(k1, b\)"):
         federated_topk([a, b], Q, 5)
 
 
@@ -215,6 +215,7 @@ def test_mixed_constants_count_ok_topk_rejected_locally(
         federated_count,
     )
     from koncorde_spark.fulltext.indexer import IndexConfig, build_index
+    from koncorde_spark.fulltext.multifield import MultiFieldSearch
     from koncorde_spark.fulltext.query import Bm25Index
 
     dirs = []
@@ -230,8 +231,11 @@ def test_mixed_constants_count_ok_topk_rejected_locally(
     lf = LocalFederatedSearcher(dirs)
     n_spark = federated_count(members, "import")
     assert lf.count("import") == n_spark > 0
-    with pytest.raises(ValueError, match="constants"):
-        lf.topk("import", 5)
+    # federation and multi-field search share one member-list rule
+    for scored in (lambda: lf.topk("import", 5),
+                   lambda: MultiFieldSearch(dict(zip("ab", lf.members)))):
+        with pytest.raises(ValueError, match=r"members disagree on BM25 constants \(k1, b\)"):
+            scored()
 
 
 @pytest.mark.spark
