@@ -68,7 +68,7 @@ def federated_topk(
     n_docs = sum(int(ix.meta["n_docs"]) for ix in indexes)
     idf = query_idf(query, mode, lambda ts: combined_stats(indexes, ts)[1], n_docs)
     if idf is None:
-        return indexes[0]._empty()
+        return indexes[0]._result()
     return indexes[0]._cut([ix._shard_topk(idf, k, mode, after) for ix in indexes], k)
 
 

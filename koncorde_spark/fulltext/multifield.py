@@ -83,7 +83,7 @@ class MultiFieldSearch:
                 members.append((ix, idf))
                 params.append((idf, float(ix.meta["avgdl"]), self.weights[f], ix.tombstones))
         if not members:
-            return first._empty()
+            return first._result()
         k1, b = self.k1, self.b
 
         def fields(parts):

@@ -14,23 +14,25 @@ the term-pruned scan itself.
 ``Bm25Index`` is the Spark tier of serve.SearchOperators, which writes
 every top-k operator's plan and count once (topk, count, prefix, fuzzy,
 boolean, phrase, highlight and the injected-idf per-shard top-k
-federation cuts); multifield.MultiFieldSearch runs on the same
-primitives. This module supplies only those primitives — one scan over
-a list of members (``_scan_members``: the union of their pruned scans
-of ``postings_columns``, member-tagged and grouped by shard through
-``_cogroup``, with the union of their dlpacks unless the scan is
-"match"), the global sort-limit (``_cut`` / ``_top``), the count sum
-(``_total``) and the empty DataFrame — plus the operators that exist
-on this tier alone: matching_ids (one "match" ``_scan``), the
-distributed vocabulary fallbacks of expand_prefix / expand_fuzzy /
-suggest, and topk_filtered, collapse_topk, topk_many and
-topk_rescored. Every per-shard body is owned by serve.py.
+federation cuts) and the vocabulary operators (_df_for, expand_prefix,
+expand_fuzzy, suggest); multifield.MultiFieldSearch runs on the same
+primitives. This module supplies only those primitives — the
+vocabulary (``_vocab``: a driver-side serve.Vocabulary up to
+TERMS_LOCAL_MAX terms, else ``SparkVocabulary``'s Catalyst scans of the
+terms table), one scan over a list of members (``_scan_members``: the
+union of their pruned scans of ``postings_columns``, member-tagged and
+grouped by shard through ``_cogroup``, with the union of their dlpacks
+unless the scan is "match"), the global sort-limit (``_cut`` /
+``_top``), the count sum (``_total``) and a DataFrame of result rows
+(``_result``) — plus the operators that exist on this tier alone:
+matching_ids (one "match" ``_scan``), topk_filtered, collapse_topk,
+topk_many and topk_rescored. Every per-shard body is owned by serve.py.
 """
 
 from __future__ import annotations
 
 import os
-from functools import reduce
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
@@ -42,12 +44,11 @@ from .codecs import delta_decode, delta_encode
 from .indexer import _decode_dlpack_ctx, read_meta
 from .serve import (
     SearchOperators,
+    Vocabulary,
     idf_for,
     match_ids,
     postings_columns,
     query_idf,
-    vocab_fuzzy,
-    vocab_prefix,
     wand_topk,
 )
 from .tokenizer import tokenize_text
@@ -97,6 +98,11 @@ _SCHEMAS = {
     "highlight": HIGHLIGHT_SCHEMA,
     "count": T.StructType([T.StructField("n", T.LongType())]),
     "ids": T.StructType([T.StructField("doc_id", T.LongType())]),
+    "suggest": T.StructType([
+        T.StructField("suggestion", T.StringType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("distance", T.IntegerType()),
+    ]),
     "topk_many": TOPK_MANY_SCHEMA,
 }
 
@@ -131,6 +137,48 @@ def _top(frame: DataFrame, k: int) -> DataFrame:
     return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+class SparkVocabulary:
+    """serve.Vocabulary's df / prefix / fuzzy as Catalyst scans of a
+    cached terms table — one small job each, for a vocabulary too large
+    for the driver. The terms files are unsorted groupBy output, so no
+    scan prunes a row group."""
+
+    def __init__(self, terms: DataFrame):
+        self.terms = terms
+
+    def df(self, terms) -> dict[str, int]:
+        rows = self.terms.where(F.col("term").isin(list(terms))).collect()
+        found = {r["term"]: int(r["df"]) for r in rows}
+        return {t: found[t] for t in terms if t in found}
+
+    def prefix(self, prefix: str, cap: int) -> list[str]:
+        rows = (
+            self.terms.where(F.col("term").startswith(prefix))
+            .orderBy(F.desc("df"), F.asc("term"))
+            .limit(cap)
+            .collect()
+        )
+        return [r["term"] for r in rows]
+
+    def fuzzy(self, term: str, max_distance: int, cap: int) -> list[tuple[str, int, int]]:
+        """The length band |len(t) - len(term)| <= d (a lower bound on
+        edit distance) prunes before the JVM-side bounded
+        ``levenshtein(l, r, threshold)``, which short-circuits rows past
+        the budget."""
+        lo, hi = len(term) - max_distance, len(term) + max_distance
+        rows = (
+            self.terms.where(F.length("term").between(lo, hi))
+            .withColumn("distance", F.levenshtein(F.col("term"), F.lit(term), max_distance))
+            # bounded levenshtein returns -1 past the threshold
+            .where((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
+            .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
+            .limit(cap)
+            .select("term", "df", "distance")
+            .collect()
+        )
+        return [tuple(r) for r in rows]
+
+
 class Bm25Index(SearchOperators):
     """Handle to a built index directory: SearchOperators over Spark
     plans, answering with DataFrames."""
@@ -149,10 +197,6 @@ class Bm25Index(SearchOperators):
         # per-shard packed doc lengths: one row per shard, cached — avoids
         # reshuffling the docs table on every query
         self.dlpack = spark.read.parquet(os.path.join(index_dir, "dlpack")).cache()
-        # term → df lookup, pulled to the driver once when the vocabulary
-        # is small enough (a dict probe replaces one Spark job per query);
-        # None = not yet decided, False = too large, stay distributed
-        self._terms_local: dict | None | bool = None
         # deleted doc ids (sorted), shipped to executors inside the query
         # closures; empty for indexes without deletes
         from .indexer import _read_manifests, read_tombstones
@@ -175,6 +219,21 @@ class Bm25Index(SearchOperators):
     # beyond it df lookups stay distributed (the 10^12-file regime)
     TERMS_LOCAL_MAX = 5_000_000
 
+    @cached_property
+    def _vocab(self) -> Vocabulary | SparkVocabulary:
+        """SearchOperators' vocabulary, chosen on first use: the cached
+        terms table pulled to the driver once as a serve.Vocabulary when
+        it holds at most TERMS_LOCAL_MAX terms (no Spark job per lookup),
+        else Catalyst scans of that table."""
+        # n_terms is carried in meta.json by the index build; fall back
+        # to one count() job for indexes built before it was recorded
+        n_terms = self.meta.get("n_terms")
+        if n_terms is None:
+            n_terms = self.terms.count()
+        if n_terms > self.TERMS_LOCAL_MAX:
+            return SparkVocabulary(self.terms)
+        return Vocabulary(self.terms.toArrow())
+
     def close(self) -> None:
         """Release this handle's executor-side caches (terms, dlpack).
         Call before discarding a handle — e.g. when re-opening after a
@@ -185,33 +244,6 @@ class Bm25Index(SearchOperators):
                 df.unpersist()
             except Exception:  # session already stopped — nothing to free
                 pass
-
-    def _terms_local_dict(self) -> dict | None:
-        """The driver-side {term: df} map when the vocabulary is at most
-        TERMS_LOCAL_MAX terms (pulled once, on first use), else None."""
-        if self._terms_local is None:
-            # n_terms is carried in meta.json by the index build; fall back
-            # to one count() job for indexes built before it was recorded
-            n_terms = self.meta.get("n_terms")
-            if n_terms is None:
-                n_terms = self.terms.count()
-            if n_terms <= self.TERMS_LOCAL_MAX:
-                pdf = self.terms.toPandas()
-                self._terms_local = dict(
-                    zip(pdf["term"].tolist(), pdf["df"].astype(int).tolist())
-                )
-            else:
-                self._terms_local = False
-        return self._terms_local if self._terms_local is not False else None
-
-    def _df_for(self, q_terms: list[str]) -> dict[str, int]:
-        if not q_terms:
-            return {}
-        tl = self._terms_local_dict()
-        if tl is not None:
-            return {t: tl[t] for t in q_terms if t in tl}
-        rows = self.terms.where(F.col("term").isin(q_terms)).collect()
-        return {r["term"]: int(r["df"]) for r in rows}
 
     def _postings(self, terms, kind: str) -> DataFrame:
         """The pruned postings scan of ``terms``: exactly the ``kind``
@@ -252,8 +284,8 @@ class Bm25Index(SearchOperators):
     def _total(self, part: DataFrame) -> int:
         return int(part.agg(F.sum("n")).first()[0] or 0)
 
-    def _empty(self, out: str = "topk") -> DataFrame:
-        return self.spark.createDataFrame([], _SCHEMAS[out])
+    def _result(self, out: str = "topk", rows=()) -> DataFrame:
+        return self.spark.createDataFrame(list(rows), _SCHEMAS[out])
 
     def collapse_topk(
         self, query: str, groups: DataFrame, k: int = 10,
@@ -333,39 +365,6 @@ class Bm25Index(SearchOperators):
         )
         return _top(rescored, k)
 
-    def suggest(
-        self, term: str, max_distance: int = 2, k: int = 5,
-    ) -> DataFrame:
-        """Did-you-mean term suggester: vocabulary terms within
-        ``max_distance`` Levenshtein edits of ``term``, ranked by
-        (distance asc, df desc, term asc), top ``k``. The candidate scan
-        is pruned by the length band |len(t) - len(term)| <= d (a lower
-        bound on edit distance) before the expensive levenshtein, and the
-        JVM-side bounded `levenshtein(l, r, threshold)` short-circuits
-        rows past the budget — one pass over the terms table, no Python."""
-        toks = tokenize_text(term)
-        if len(toks) != 1:
-            raise ValueError(f"suggest() takes one indexable token, got {term!r}")
-        return (
-            self._fuzzy_frame(toks[0], max_distance)
-            .limit(k)
-            .select(F.col("term").alias("suggestion"), "df", "distance")
-        )
-
-    def _fuzzy_frame(self, term: str, max_distance: int) -> DataFrame:
-        """The vocabulary's (term, df, distance) rows within
-        ``max_distance`` edits of ``term`` (taken as given), ordered
-        (distance ASC, df DESC, term ASC) — vocab_fuzzy's contract as one
-        Catalyst scan of the cached terms table."""
-        lo, hi = len(term) - max_distance, len(term) + max_distance
-        return (
-            self.terms.where(F.length("term").between(lo, hi))
-            .withColumn("distance", F.levenshtein(F.col("term"), F.lit(term), max_distance))
-            # bounded levenshtein returns -1 past the threshold
-            .where((F.col("distance") >= 0) & (F.col("distance") <= max_distance))
-            .orderBy(F.asc("distance"), F.desc("df"), F.asc("term"))
-        )
-
     def matching_ids(self, query: str, mode: str = "any") -> DataFrame:
         """FILTER-context query: every live doc matching the query, as a
         DataFrame of internal doc_ids — no scoring, no top-k cut. The
@@ -375,49 +374,9 @@ class Bm25Index(SearchOperators):
         vectorized union/intersection as count(), emitting the ids."""
         idf = query_idf(query, mode, self._df_for, self.meta["n_docs"])
         if idf is None:
-            return self._empty("ids")
+            return self._result("ids")
         need, tomb = len(idf), self.tombstones
         return self._scan(idf, "match", lambda rows, _: (match_ids(rows, mode, need, tomb),), "ids")
-
-    def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
-        """Vocabulary terms starting with ``prefix``, highest-df first
-        (ties by ascending term), capped at ``max_expansions``.
-
-        When the vocabulary is driver-cached (_df_for's TERMS_LOCAL_MAX
-        policy — the same dict every query's df lookup probes), the
-        expansion is serve.vocab_prefix with NO Spark job; large
-        vocabularies fall back to one tiny job over the cached terms table
-        (a Catalyst StartsWith filter over every terms row: the terms files
-        are unsorted groupBy output, so no row group is pruned). The (df DESC,
-        term ASC) cap is the deterministic contract the SQL oracle
-        reproduces verbatim — identical on both paths by construction."""
-        tl = self._terms_local_dict()
-        if tl is not None:
-            return vocab_prefix(tl, prefix, max_expansions)
-        rows = (
-            self.terms.where(F.col("term").startswith(prefix))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .collect()
-        )
-        return [r["term"] for r in rows]
-
-    def expand_fuzzy(
-        self, term: str, max_distance: int = 1, max_expansions: int = 50
-    ) -> list[str]:
-        """Vocabulary terms within ``max_distance`` edits of ``term``
-        (Levenshtein), ordered closest-first then highest-df (ties by
-        ascending term), capped at ``max_expansions`` — the Lucene
-        FuzzyQuery rewrite contract. When the vocabulary is driver-cached
-        (the _df_for dict), serve.vocab_fuzzy runs in-process with NO
-        Spark job; large vocabularies keep the one job over the cached
-        terms table with a JVM-side levenshtein + length pre-filter
-        (|len difference| > d can never match)."""
-        tl = self._terms_local_dict()
-        if tl is not None:
-            return [t for _, _, t in vocab_fuzzy(tl, term, max_distance)[:max_expansions]]
-        rows = self._fuzzy_frame(term, max_distance).limit(max_expansions).collect()
-        return [r["term"] for r in rows]
 
     def topk_filtered(self, query: str, filters: dict, k: int = 10) -> DataFrame:
         """BM25 top-k restricted to docs whose METADATA matches a koncorde
@@ -449,7 +408,7 @@ class Bm25Index(SearchOperators):
 
         idf_map = query_idf(query, "any", self._df_for, self.meta["n_docs"])
         if idf_map is None:
-            return self._empty()
+            return self._result()
 
         # eligibility: percolate the docs METADATA against the one filter
         # (shard rides through keep_cols — no join back to the docs table)
@@ -506,7 +465,7 @@ class Bm25Index(SearchOperators):
         all_terms = sorted({t for ts in q_terms.values() for t in ts})
         idf_map = idf_for(self._df_for, all_terms, self.meta["n_docs"])
         if not idf_map:
-            return self._empty("topk_many")
+            return self._result("topk_many")
         q_terms = {
             qid: [t for t in ts if t in idf_map] for qid, ts in q_terms.items()
         }

@@ -6,23 +6,26 @@ Per-shard bodies live here and nowhere else: the segment decode
 ``shard_postings`` — the top-k family's input), the any/all top-k
 dispatch (``wand_topk``), the count set arithmetic (``match_ids``), the
 boolean, phrase, highlight and multi-field bodies (``*_shard``), the
-Levenshtein DP and the vocabulary scans. Every scored body but phrase
-takes each entry's score from ``_segment``'s tf part times the term's
-idf (``segment_postings``) and sums a doc's entries in canonical term
-order (``score_union`` / ``wand_topk``), so a doc scores the same bits
-in every operator. Each body takes ONE shard's postings rows — a pandas
+Levenshtein DP and the in-memory ``Vocabulary``. Every scored body but
+phrase takes each entry's score from ``_segment``'s tf part times the
+term's idf (``segment_postings``) and sums a doc's entries in canonical
+term order (``score_union`` / ``wand_topk``), so a doc scores the same
+bits in every operator. Each body takes ONE shard's postings rows — a pandas
 frame inside a Spark cogroup, a column dict here — sorts them by term
 and returns that shard's (ids, scores), plus snippets for highlight.
 
 The plans around those bodies are written once too: ``SearchOperators``
 defines topk, count, topk_prefix, topk_fuzzy, topk_boolean,
-topk_phrase (alias ``phrase``), topk_highlight (alias ``highlight``)
-and the injected-idf per-shard top-k that federation cuts.
+topk_phrase (alias ``phrase``), topk_highlight (alias ``highlight``),
+the injected-idf per-shard top-k that federation cuts, and the
+vocabulary operators _df_for, expand_prefix, expand_fuzzy and suggest.
 ``Bm25Index`` (query.py, Spark) and ``LocalSearcher`` (here,
-in-process) inherit them and supply only one scan over a list of
-``(index, terms)`` members (``_scan_members``; ``_scan`` is its
-one-member case), a global cut, a count sum and an empty result, so
-the two tiers are bit-identical by construction. The one
+in-process) inherit them and supply only a vocabulary (``_vocab``: a
+term-sorted ``Vocabulary``, or Catalyst scans for a Spark vocabulary
+above TERMS_LOCAL_MAX terms), one scan over a list of ``(index,
+terms)`` members (``_scan_members``; ``_scan`` is its one-member case),
+a global cut, a count sum and a result of given rows, so the two tiers
+are bit-identical by construction. The one
 multifield.MultiFieldSearch plan runs on either tier through the same
 primitives. Postings are decoded through this module's
 ``delta_decode`` / ``varint_decode`` names.
@@ -45,8 +48,10 @@ from __future__ import annotations
 
 import os
 import re
+import sys
 
 import numpy as np
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 
 from .codecs import delta_decode, varint_decode
@@ -417,28 +422,60 @@ def _levenshtein_capped(a: str, b: str, cap: int) -> int | None:
     return prev[lb] if prev[lb] <= cap else None
 
 
-def vocab_prefix(vocab: dict, prefix: str, max_expansions: int) -> list[str]:
-    """In-memory prefix expansion of a {term: df} vocabulary: (df DESC,
-    term ASC), capped — the contract the SQL oracle reproduces."""
-    hits = [(t, df) for t, df in vocab.items() if t.startswith(prefix)]
-    hits.sort(key=lambda x: (-x[1], x[0]))
-    return [t for t, _ in hits[:max_expansions]]
+class Vocabulary:
+    """An index vocabulary held in memory as term-sorted (term, df)
+    arrays: exact df lookup, prefix expansion and fuzzy expansion — the
+    ``_vocab`` of LocalSearcher, and of a Bm25Index whose vocabulary is
+    small enough to pull to the driver. Built from an Arrow table with
+    ``term`` and ``df`` columns (Arrow sorts strings by UTF-8 bytes,
+    which is code-point order, so Python's ``<`` agrees with it)."""
+
+    def __init__(self, table):
+        table = table.select(["term", "df"]).sort_by("term")
+        self.terms = table["term"].to_numpy(zero_copy_only=False)
+        self.dfs = table["df"].to_numpy().astype(np.int64)
+        self._lens = pc.utf8_length(table["term"]).to_numpy()
+        self._df = dict(zip(self.terms.tolist(), self.dfs.tolist()))
+
+    def df(self, terms) -> dict[str, int]:
+        """{term: df} of the ``terms`` in the vocabulary, in ``terms``
+        order."""
+        return {t: self._df[t] for t in terms if t in self._df}
+
+    def prefix(self, prefix: str, cap: int) -> list[str]:
+        """The first ``cap`` terms starting with ``prefix`` by (df DESC,
+        term ASC): one searchsorted range of the sorted terms (Lucene's
+        terms index), from ``prefix`` to the least string above all its
+        extensions."""
+        lo = np.searchsorted(self.terms, prefix)
+        stem = prefix.rstrip(chr(sys.maxunicode))
+        hi = (
+            np.searchsorted(self.terms, stem[:-1] + chr(ord(stem[-1]) + 1))
+            if stem else len(self.terms)
+        )
+        order = np.argsort(-self.dfs[lo:hi], kind="stable")[:cap]
+        return self.terms[lo:hi][order].tolist()
+
+    def fuzzy(self, term: str, max_distance: int, cap: int) -> list[tuple[str, int, int]]:
+        """The first ``cap`` (term, df, distance) within ``max_distance``
+        edits of ``term`` by (distance ASC, df DESC, term ASC). The length
+        band is a lower bound on the edit distance, so the DP runs on the
+        band only."""
+        band = np.flatnonzero(np.abs(self._lens - len(term)) <= max_distance)
+        hits = []
+        for t, df in zip(self.terms[band].tolist(), self.dfs[band].tolist()):
+            d = _levenshtein_capped(term, t, max_distance)
+            if d is not None:
+                hits.append((d, -df, t))
+        hits.sort()
+        return [(t, -ndf, d) for d, ndf, t in hits[:cap]]
 
 
-def vocab_fuzzy(vocab: dict, term: str, max_distance: int) -> list[tuple]:
-    """(distance, -df, term) for the vocabulary terms within
-    ``max_distance`` edits of ``term``, sorted — closest first, then
-    highest df, then term. The length band is a lower bound on the edit
-    distance, so it skips the DP for most terms."""
-    hits = []
-    for t, df in vocab.items():
-        if abs(len(t) - len(term)) > max_distance:
-            continue
-        d = _levenshtein_capped(term, t, max_distance)
-        if d is not None:
-            hits.append((d, -df, t))
-    hits.sort()
-    return hits
+def check_cap(n: int, name: str) -> int:
+    """``n`` if it is a valid result cap (>= 0), else ValueError."""
+    if n < 0:
+        raise ValueError(f"{name} must be >= 0, got {n}")
+    return n
 
 
 def _global_topk(parts, k: int) -> list[tuple]:
@@ -499,11 +536,18 @@ def parse_expansion_query(query: str, marker: str, kind: str, expand) -> list[st
 class SearchOperators:
     """Every top-k operator's plan, written once for both tiers:
     tokenize, look up df / idf, short-circuit what cannot match, bind the
-    index statistics into a per-shard body, cut globally.
+    index statistics into a per-shard body, cut globally — and the
+    vocabulary operators (_df_for, expand_prefix, expand_fuzzy, suggest).
 
-    A tier (query.Bm25Index on Spark, LocalSearcher here) holds ``meta``,
-    ``tombstones`` (sorted deleted doc_ids) and ``_df_for(terms)``, and
-    supplies its primitives:
+    A tier (query.Bm25Index on Spark, LocalSearcher here) holds ``meta``
+    and ``tombstones`` (sorted deleted doc_ids), and supplies its
+    primitives:
+
+    - ``_vocab``: the vocabulary — ``df(terms)`` ({term: df} of the
+      present terms, in ``terms`` order), ``prefix(prefix, cap)`` and
+      ``fuzzy(term, max_distance, cap)`` with Vocabulary's contracts. A
+      Vocabulary on both tiers, or query.SparkVocabulary's Catalyst
+      scans when a Bm25Index has more than TERMS_LOCAL_MAX terms.
 
     - ``_scan_members(members, kind, body, out="topk")``: ``members`` is
       a list of ``(index, terms)`` of this tier sharing n_shards. Per
@@ -517,11 +561,44 @@ class SearchOperators:
     - ``_cut(parts, k)``: the global sort-limit (score DESC, doc_id ASC)
       over a list of scans — one per federation member.
     - ``_total(part)``: the sum of a "count" scan's per-shard counts.
-    - ``_empty(out="topk")``: the empty result.
+    - ``_result(out="topk", rows=())``: a result of ``out`` rows given
+      as tuples — the empty result by default; suggest's
+      (suggestion, df, distance) rows.
 
     Results are DataFrames on the Spark tier and lists of tuples here.
     Bodies close over locals, never ``self``: the Spark tier ships them
     to executors, and a Bm25Index holds a SparkSession."""
+
+    def _df_for(self, terms) -> dict[str, int]:
+        """{term: global df} of the ``terms`` in the vocabulary, in
+        ``terms`` order — also federation's per-member statistic."""
+        return self._vocab.df(terms) if terms else {}
+
+    def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
+        """Vocabulary terms starting with ``prefix``, highest df first
+        (ties by ascending term), capped at ``max_expansions`` — the
+        deterministic contract the SQL oracle reproduces."""
+        return self._vocab.prefix(prefix, check_cap(max_expansions, "max_expansions"))
+
+    def expand_fuzzy(
+        self, term: str, max_distance: int = 1, max_expansions: int = 50
+    ) -> list[str]:
+        """Vocabulary terms within ``max_distance`` Levenshtein edits of
+        ``term`` (taken as given), closest first, then highest df, then
+        ascending term, capped at ``max_expansions`` — the Lucene
+        FuzzyQuery rewrite contract."""
+        cap = check_cap(max_expansions, "max_expansions")
+        return [t for t, _, _ in self._vocab.fuzzy(term, max_distance, cap)]
+
+    def suggest(self, term: str, max_distance: int = 2, k: int = 5):
+        """Did-you-mean term suggester: (suggestion, df, distance) rows of
+        the vocabulary terms within ``max_distance`` edits of ``term`` (one
+        indexable token), ranked (distance ASC, df DESC, term ASC), top
+        ``k``."""
+        toks = tokenize_text(term)
+        if len(toks) != 1:
+            raise ValueError(f"suggest() takes one indexable token, got {term!r}")
+        return self._result("suggest", self._vocab.fuzzy(toks[0], max_distance, check_cap(k, "k")))
 
     def _scan(self, terms, kind: str, body, out: str = "topk"):
         """The one-member scan: ``body(rows, dl)`` per shard holding rows
@@ -587,7 +664,7 @@ class SearchOperators:
         not from+size). doc_id is the INTERNAL id returned by this method."""
         idf = query_idf(query, mode, self._df_for, self.meta["n_docs"])
         if idf is None:
-            return self._empty()
+            return self._result()
         return self._cut([self._shard_topk(idf, k, mode, after)], k)
 
     def count(self, query: str, mode: str = "any") -> int:
@@ -653,7 +730,7 @@ class SearchOperators:
         exact evaluation (boolean_shard), global cut."""
         plan = boolean_plan(must, should, must_not, boosts, self._df_for, self.meta["n_docs"])
         if plan is None:
-            return self._empty()
+            return self._result()
         must_t, idf, not_t, scan = plan
         k1, b, avgdl, tomb = self._bm25()
         return self._search(
@@ -675,7 +752,7 @@ class SearchOperators:
         require_positions(self.meta, "phrase search")
         plan = phrase_plan(phrase, self._df_for, self.meta["n_docs"])
         if plan is None:
-            return self._empty()
+            return self._result()
         toks, uniq, idf_sum = plan
         k1, b, avgdl, tomb = self._bm25()
         return self._search(
@@ -696,7 +773,7 @@ class SearchOperators:
         require_positions(self.meta, "highlighting")
         idf = query_idf(query, "any", self._df_for, self.meta["n_docs"])
         if idf is None:
-            return self._empty("highlight")
+            return self._result("highlight")
         k1, b, avgdl, tomb = self._bm25()
         return self._search(
             idf, "pos",
@@ -743,9 +820,9 @@ class LocalSearcher(SearchOperators):
             .sort_by([("term", "ascending"), ("shard", "ascending")])
         )
         self._terms = self._postings["term"].to_numpy(zero_copy_only=False)
-        # term → global df (small: one row per distinct term)
-        tbl = ds.dataset(os.path.join(index_dir, "terms"), format="parquet").to_table()
-        self._df = dict(zip(tbl["term"].to_pylist(), tbl["df"].to_pylist()))
+        self._vocab = Vocabulary(
+            ds.dataset(os.path.join(index_dir, "terms"), format="parquet").to_table()
+        )
         self.tombstones = _local_tombstones(index_dir)
         # per-shard doc-length packs, decoded once
         pack = ds.dataset(
@@ -755,12 +832,6 @@ class LocalSearcher(SearchOperators):
             int(shard): _decode_dlpack(pack.iloc[[i]], None)
             for i, shard in enumerate(pack["shard"])
         }
-
-    def _df_for(self, q_terms: list[str]) -> dict[str, int]:
-        """term → global df for the present query terms — the same
-        accessor contract as Bm25Index._df_for, so federation's
-        combined_stats treats both tiers uniformly."""
-        return {t: int(self._df[t]) for t in q_terms if t in self._df}
 
     def _shard_rows(self, terms, kind: str) -> dict[int, dict]:
         """{shard: {column: values}} of the postings rows of ``terms``,
@@ -801,8 +872,8 @@ class LocalSearcher(SearchOperators):
     def _total(self, part: list) -> int:
         return sum(int(p[0][0]) for p in part)
 
-    def _empty(self, out: str = "topk") -> list:
-        return []
+    def _result(self, out: str = "topk", rows=()) -> list:
+        return list(rows)
 
     def profile_topk(
         self, query: str, k: int = 10
@@ -815,31 +886,3 @@ class LocalSearcher(SearchOperators):
             return [], {}
         stats: dict = {}
         return self._cut([self._shard_topk(idf, k, stats=stats)], k), stats
-
-    def expand_fuzzy(
-        self, term: str, max_distance: int = 1, max_expansions: int = 50
-    ) -> list[str]:
-        """Vocabulary terms within ``max_distance`` edits, (distance ASC,
-        df DESC, term ASC) capped — same contract as
-        Bm25Index.expand_fuzzy (vocab_fuzzy)."""
-        hits = vocab_fuzzy(self._df, term, max_distance)
-        return [t for _, _, t in hits[:max_expansions]]
-
-    def expand_prefix(self, prefix: str, max_expansions: int = 50) -> list[str]:
-        """Vocabulary terms starting with ``prefix``, (df DESC, term ASC)
-        capped — the same deterministic contract as Bm25Index.expand_prefix
-        (vocab_prefix over the already-loaded term dict)."""
-        return vocab_prefix(self._df, prefix, max_expansions)
-
-    def suggest(
-        self, term: str, max_distance: int = 2, k: int = 5
-    ) -> list[tuple[str, int, int]]:
-        """Did-you-mean suggester: (suggestion, df, distance) tuples
-        within ``max_distance`` edits, ranked (distance ASC, df DESC,
-        term ASC), top k — row-identical to Bm25Index.suggest."""
-        toks = tokenize_text(term)
-        if len(toks) != 1:
-            raise ValueError(f"suggest() takes one indexable token, got {term!r}")
-        hits = vocab_fuzzy(self._df, toks[0], max_distance)
-        return [(t, -ndf, d) for d, ndf, t in hits[:k]]
-

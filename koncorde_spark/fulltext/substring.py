@@ -27,13 +27,12 @@ from __future__ import annotations
 import warnings
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .codecs import delta_decode
 from .indexer import sql_doc_id_col
+from .serve import match_ids
 
 # pandas warns when str.contains gets a pattern with groups; matching
 # intent here is a plain boolean test, groups are incidental
@@ -141,37 +140,13 @@ def candidates(index, pattern: str) -> DataFrame:
 
 def _candidates_for_tokens(index, toks: list[str]) -> DataFrame:
     """All-required doc-set intersection for an explicit trigram-token
-    set (every token must already exist in the vocabulary)."""
-    need = len(toks)
-
-    def per_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        per_term: dict[str, list[np.ndarray]] = {}
-        for term, blob, df_ in zip(pdf["term"], pdf["doc_ids"], pdf["df"]):
-            per_term.setdefault(term, []).append(
-                delta_decode(bytes(blob), int(df_)).astype(np.int64)
-            )
-        if len(per_term) < need:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        sets = sorted(
-            (np.concatenate(v) if len(v) > 1 else v[0] for v in per_term.values()),
-            key=len,
-        )
-        cand = np.sort(sets[0])
-        for ids in sets[1:]:
-            if len(cand) == 0:
-                break
-            ids = np.sort(ids)
-            at = np.searchsorted(ids, cand)
-            cand = cand[ids[np.minimum(at, len(ids) - 1)] == cand]
-        return pd.DataFrame({"doc_id": cand})
-
-    relevant = index.postings.where(F.col("term").isin(toks)).select(
-        "term", "shard", "df", "doc_ids"
-    )
-    return relevant.groupBy("shard").applyInPandas(
-        lambda _, pdf: per_shard(pdf), schema=CANDIDATES_SCHEMA
+    set (every token must already exist in the vocabulary): one "match"
+    scan, serve.match_ids per shard. Tombstones are not applied — the
+    verification pass reads the corpus, not the index."""
+    need, no_tombstones = len(toks), np.empty(0, np.int64)
+    return index._scan(
+        toks, "match",
+        lambda rows, _: (match_ids(rows, "all", need, no_tombstones),), "ids",
     )
 
 

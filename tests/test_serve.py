@@ -244,3 +244,46 @@ def test_serve_handle_keeps_its_snapshot(spark, small_corpus_pdf, tmp_path_facto
         assert fresh.topk(q, 10) == dist, q
     assert fresh.count("import return") == idx.count("import return")
     idx.close()
+
+
+def test_vocabulary_prefix_range_equals_linear_scan():
+    """Vocabulary.prefix (one searchsorted range of the term-sorted
+    vocabulary) returns what a linear ``startswith`` scan ranked by
+    (df DESC, term ASC) returns, for random vocabularies: the empty
+    prefix, a prefix equal to a whole term, prefixes before the first and
+    past the last term, and caps of 0, 1 and more than the hits. The
+    alphabet holds a non-ASCII letter and the largest code point, whose
+    prefixes have no one-character successor."""
+    import pyarrow as pa
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from koncorde_spark.fulltext.serve import Vocabulary
+
+    def linear(vocab, prefix, cap):
+        hits = [(t, df) for t, df in vocab.items() if t.startswith(prefix)]
+        hits.sort(key=lambda h: (-h[1], h[0]))
+        return [t for t, _ in hits[:cap]]
+
+    words = st.text("0_abzé\U0010ffff", max_size=5)
+
+    @settings(max_examples=300, deadline=None)
+    @given(
+        st.dictionaries(words.filter(bool), st.integers(1, 4), max_size=25),
+        words, st.integers(0, 30), st.data(),
+    )
+    def check(vocab, prefix, cap, data):
+        v = Vocabulary(pa.table({
+            "term": pa.array(list(vocab), pa.string()),
+            "df": pa.array(list(vocab.values()), pa.int64()),
+        }))
+        terms = sorted(vocab)
+        prefixes = [prefix, "", "/", "\U0010ffff" * 6]  # "/" < "0": before every term
+        if terms:
+            whole = data.draw(st.sampled_from(terms))
+            prefixes += [whole, whole[:-1], terms[0], terms[-1], terms[-1] + "a"]
+        for p in prefixes:
+            for c in (0, 1, cap, len(vocab) + 1):
+                assert v.prefix(p, c) == linear(vocab, p, c), (p, c)
+
+    check()

@@ -124,7 +124,7 @@ def test_shard_rows_equal_term_filter_scan(spark, parity_index):
     postings = ds.dataset(f"{d}/postings", format="parquet", partitioning="hive")
     post = pd.read_parquet(f"{d}/postings", columns=["term", "shard"])
     multi = sorted(set(post.loc[post.duplicated(["term", "shard"]), "term"]))[:5]
-    vocab = sorted(loc._df)
+    vocab = loc._vocab.terms.tolist()
     term_lists = [
         [],
         ["missingterm_zzz"],
@@ -159,8 +159,9 @@ def test_shard_rows_equal_term_filter_scan(spark, parity_index):
 def test_tiers_share_one_operator_surface():
     """Both tiers answer every shared operator under the same name,
     signature and defaults, and neither defines its own copy: the plans
-    (and the one-member ``_scan`` over each tier's ``_scan_members``)
-    live once, in serve.SearchOperators."""
+    (and the one-member ``_scan`` over each tier's ``_scan_members``, and
+    the vocabulary operators over each tier's ``_vocab``) live once, in
+    serve.SearchOperators."""
     import inspect
 
     from koncorde_spark.fulltext.query import Bm25Index
@@ -169,6 +170,7 @@ def test_tiers_share_one_operator_surface():
     ops = (
         "topk", "count", "topk_prefix", "topk_fuzzy", "topk_boolean", "topk_phrase",
         "phrase", "topk_highlight", "highlight", "_shard_topk", "_scan",
+        "_df_for", "expand_prefix", "expand_fuzzy", "suggest",
     )
     for name in ops:
         spark_sig = inspect.signature(getattr(Bm25Index, name))
@@ -180,16 +182,17 @@ def test_tiers_share_one_operator_surface():
 @pytest.mark.spark
 def test_distributed_vocabulary_matches_driver_dict(spark, parity_index, monkeypatch):
     """A vocabulary above TERMS_LOCAL_MAX keeps df lookups and expansions
-    in Spark (_df_for's term-filter job; the Catalyst expand_prefix,
-    expand_fuzzy and suggest scans). Every answer equals the driver-dict
-    path's and LocalSearcher's; expand_fuzzy takes its term as given."""
-    from koncorde_spark.fulltext.query import Bm25Index
-    from koncorde_spark.fulltext.serve import LocalSearcher
+    in Spark (SparkVocabulary: the term-filter job and the Catalyst
+    prefix and fuzzy scans). Every answer equals the driver-side
+    Vocabulary's and LocalSearcher's; expand_fuzzy takes its term as
+    given. suggest's DataFrame has one schema on both Spark paths."""
+    from koncorde_spark.fulltext.query import Bm25Index, SparkVocabulary
+    from koncorde_spark.fulltext.serve import LocalSearcher, Vocabulary
 
     d, _ = parity_index
     dist, local, loc = Bm25Index(spark, d), Bm25Index(spark, d), LocalSearcher(d)
     monkeypatch.setattr(dist, "TERMS_LOCAL_MAX", 0)
-    assert dist._terms_local_dict() is None and local._terms_local_dict()
+    assert isinstance(dist._vocab, SparkVocabulary) and isinstance(local._vocab, Vocabulary)
 
     def agree(run, conv=_rows):
         want = run(loc)
@@ -212,5 +215,36 @@ def test_distributed_vocabulary_matches_driver_dict(spark, parity_index, monkeyp
         lambda s: s.suggest("ident_0001", 2, 7),
         lambda r: r if isinstance(r, list) else [tuple(x) for x in r.collect()],
     )
+    for s in (dist, local):
+        for k in (7, 0):
+            fields = s.suggest("ident_0001", 2, k).schema.fields
+            assert [(f.name, f.dataType.simpleString()) for f in fields] == [
+                ("suggestion", "string"), ("df", "bigint"), ("distance", "int"),
+            ]
+    dist.close()
+    local.close()
+
+
+@pytest.mark.spark
+def test_vocabulary_operators_reject_negative_caps(spark, parity_index, monkeypatch):
+    """A negative max_expansions / k raises one ValueError on both tiers
+    and both Bm25Index vocabulary paths — not a silent ``hits[:-1]`` on
+    one path and a Spark AnalysisException on another."""
+    from koncorde_spark.fulltext.query import Bm25Index
+    from koncorde_spark.fulltext.serve import LocalSearcher
+
+    d, _ = parity_index
+    dist, local = Bm25Index(spark, d), Bm25Index(spark, d)
+    monkeypatch.setattr(dist, "TERMS_LOCAL_MAX", 0)
+    for s in (LocalSearcher(d), local, dist):
+        with pytest.raises(ValueError, match=r"max_expansions must be >= 0, got -1"):
+            s.expand_prefix("ident_00", -1)
+        with pytest.raises(ValueError, match=r"max_expansions must be >= 0, got -1"):
+            s.expand_fuzzy("ident_00012", 2, -1)
+        with pytest.raises(ValueError, match=r"k must be >= 0, got -1"):
+            s.suggest("ident_0001", 2, -1)
+        with pytest.raises(ValueError, match=r"max_expansions must be >= 0, got -2"):
+            s.topk_prefix("ident_0000* return", 8, max_expansions=-2)
+        assert s.expand_prefix("ident_00", 0) == [] and s.expand_fuzzy("import", 1, 0) == []
     dist.close()
     local.close()
